@@ -3,24 +3,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // AQE stays ON (the default): a full-set A/B at sf0.1 measured
-      // 328.7 s with it vs 379.8 s without — its runtime broadcast
-      // conversion and partition coalescing earn the replanning
-      // overhead even at fixture scale (q141 4.1→7.8 s without it).
-      // Only the short-lived iterative-round plans (q76's finding)
-      // lose under AQE, and those queries disable it on their own
-      // Tuned session clones.
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     // Warm-up: JIT + codegen + filesystem metadata, so the first measured
     // query isn't charged for session startup.
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -70,19 +54,6 @@ object Bench {
       java.lang.management.ManagementFactory
         .getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadAvg
-    // Scaling-signal context for the driver's low-core/high-core ratio
-    // (VERDICT r13 #4, option b): at fixture SFs every tracked query
-    // sits on fixed floors (streaming micro-batch commits, lakehouse
-    // commit protocol, per-query job scheduling), so per-query times are
-    // near-flat in the core count — ≈1 ratios measure the floors, not a
-    // harness that ignores $SPARK_GRAFT_CPUS (it is honored above:
-    // master=local[cpus], shuffle.partitions=cpus). A/B measured this
-    // round: size-first AQE coalescing (parallelismFirst=false) LOSES at
-    // fixture scale (q50 2.7→7.0 s), so partitions stay parallelism-first.
-    System.err.println(s"[bench] note: cpus=$cpus honored " +
-      "(master+shuffle.partitions); sub-second/fixed-floor queries " +
-      "dominate at this SF, so low-core vs high-core ratios ≈1 are " +
-      "expected — they measure per-query floors, not serial operators")
     def timeOnce(name: String, fn: (SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()

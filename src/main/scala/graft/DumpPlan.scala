@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch tool (not part of the driver contract): writes
   * `.explain("formatted")` of named queries to files for the
   * optimization-round plan evidence (`plans/r13/<query>_<tag>.txt`).
@@ -11,15 +9,8 @@ object DumpPlan {
   def main(args: Array[String]): Unit = {
     val outDir = args(0)
     val tag = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.configure(spark)
+    val spark = graft.core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- args.drop(2)) {

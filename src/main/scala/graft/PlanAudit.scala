@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scratch audit: flag unintended cartesian/nested-loop joins in query
   * plans. Bounded scalar broadcasts (1-row aggregates crossJoined back)
   * legitimately plan as BroadcastNestedLoopJoin — the audit prints them
@@ -17,13 +15,8 @@ import org.apache.spark.sql.SparkSession
   * reads the cached blocks once). */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.configure(spark)
+    val spark = graft.core.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val dir = "/root/testdata/sf0.001"
     val prefixes = if (args.nonEmpty) args.toSeq else Seq("q2")
     val names = SparkEntry.queries.keys.toSeq.sorted

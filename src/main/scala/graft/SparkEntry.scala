@@ -16,8 +16,9 @@ object SparkEntry {
       EventQueries.specs ++ StreamQueries.specs ++ AnalyticsQueries.specs ++
       ExtQueries.specs
 
-  /** Session invariants the engine depends on, applied defensively in case
-    * the driver's session was built without them:
+  /** Session invariants the engine depends on. [[graft.core.Sessions]]
+    * applies them when it builds a session; each query applies them again
+    * in case the caller's session was built without them:
     * - ANSI off: pandas `errors='coerce'` fidelity (junk cast → NULL, not
     *   an exception) — SURVEY §7.4 risk 3.
     * - UTC: oracle timestamp parity.

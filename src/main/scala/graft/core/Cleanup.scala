@@ -55,7 +55,7 @@ object Cleanup {
   }
 
   /** Run `body` (a query constructor) recording its tracked persists. */
-  def track(body: => DataFrame): (DataFrame, Seq[DataFrame]) = {
+  def track[T](body: => T): (T, Seq[DataFrame]) = {
     val outer = tracking.get()
     val buf = new ArrayBuffer[DataFrame]
     tracking.set(buf)

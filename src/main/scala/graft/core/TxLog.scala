@@ -723,10 +723,12 @@ object TxLog {
             // write-time guard (ADVICE r13): reads trust the recorded
             // types, so an append changing an existing column's TYPE
             // would commit files misread under them — refuse with the
-            // remedy instead of silently keeping the prior type
+            // remedy instead of silently keeping the prior type. Nested
+            // nullability is not a type change: file-source reads are
+            // nullable under any recorded schema.
             val priorTypes = prior.fields.map(f => f.name -> f.dataType).toMap
-            val drift = schema.fields.filter(f =>
-              priorTypes.get(f.name).exists(_ != f.dataType))
+            val drift = schema.fields.filter(f => priorTypes.get(f.name)
+              .exists(t => !DataType.equalsIgnoreNullability(t, f.dataType)))
             require(drift.isEmpty,
               s"append to $dir changes existing column type(s): " +
                 drift.map(f =>

@@ -263,8 +263,24 @@ object F1Pipeline {
     * switch-over entry point for a user of the reference. */
   def run(spark: org.apache.spark.sql.SparkSession, csvPath: String,
       outDir: String, refYear: Int = 2026): Unit =
-    buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear)
-      .foreach { case (t, df) => graft.core.Sinks.parquet(df, s"$outDir/$t") }
+    buildAndWrite(spark, csvPath, refYear) { (t, df) =>
+      graft.core.Sinks.parquet(df, s"$outDir/$t")
+    }
+
+  /** Build every table from the CSV at `csvPath` and hand each to
+    * `write`. The persists made while building (PrefixSum's pinned
+    * inputs) are released after the LAST write, not the first: a PitStop
+    * input recomputed between writes would resample its range boundaries
+    * and shift `pitsId`. And they are released at all because the cache
+    * matches a CSV scan by plan, not content: a later run over a new file
+    * at the same path would otherwise read the old rows. */
+  private def buildAndWrite(spark: org.apache.spark.sql.SparkSession,
+      csvPath: String, refYear: Int)(write: (String, DataFrame) => Unit): Unit = {
+    val (tables, persisted) = graft.core.Cleanup.track(
+      buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear))
+    try tables.foreach { case (t, df) => write(t, df) }
+    finally persisted.foreach(_.unpersist())
+  }
 
   /** Natural key per star table — the upsert-guard join keys for
     * [[runIncremental]] (same keys the builders dedup on). */
@@ -308,31 +324,29 @@ object F1Pipeline {
     */
   def runIncremental(spark: org.apache.spark.sql.SparkSession,
       csvPath: String, outDir: String, loadDate: String,
-      refYear: Int = 2026): Unit = {
-    buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear)
-      .foreach { case (t, df) =>
-        val path = s"$outDir/$t"
-        val keys = naturalKeys(t)
-        val hPath = new org.apache.hadoop.fs.Path(path)
-        // the PATH's filesystem, not the default one: outDir is object
-        // storage (s3a/abfs) in the deployment this method argues for,
-        // and FileSystem.get(conf) would throw "Wrong FS" there
-        val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val fresh =
-          if (fs.exists(hPath)) {
-            // explicit schema: skips inference listing AND keeps a
-            // zero-row table readable (the CircuitLocation stub's first
-            // append writes no data files — inference would throw)
-            val existingSchema = org.apache.spark.sql.types.StructType(
-              df.schema.fields :+ org.apache.spark.sql.types.StructField(
-                "load_date", org.apache.spark.sql.types.DateType))
-            val existingKeys = spark.read.schema(existingSchema).parquet(path)
-              .select(keys.map(col): _*)
-            df.join(existingKeys, keys, "left_anti")
-          } else df
-        fresh.withColumn("load_date", lit(loadDate).cast("date"))
-          .write.mode(org.apache.spark.sql.SaveMode.Append)
-          .partitionBy("load_date").parquet(path)
-      }
-  }
+      refYear: Int = 2026): Unit =
+    buildAndWrite(spark, csvPath, refYear) { (t, df) =>
+      val path = s"$outDir/$t"
+      val keys = naturalKeys(t)
+      val hPath = new org.apache.hadoop.fs.Path(path)
+      // the PATH's filesystem, not the default one: outDir is object
+      // storage (s3a/abfs) in the deployment this method argues for,
+      // and FileSystem.get(conf) would throw "Wrong FS" there
+      val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val fresh =
+        if (fs.exists(hPath)) {
+          // explicit schema: skips inference listing AND keeps a
+          // zero-row table readable (the CircuitLocation stub's first
+          // append writes no data files — inference would throw)
+          val existingSchema = org.apache.spark.sql.types.StructType(
+            df.schema.fields :+ org.apache.spark.sql.types.StructField(
+              "load_date", org.apache.spark.sql.types.DateType))
+          val existingKeys = spark.read.schema(existingSchema).parquet(path)
+            .select(keys.map(col): _*)
+          df.join(existingKeys, keys, "left_anti")
+        } else df
+      fresh.withColumn("load_date", lit(loadDate).cast("date"))
+        .write.mode(org.apache.spark.sql.SaveMode.Append)
+        .partitionBy("load_date").parquet(path)
+    }
 }

@@ -24,12 +24,9 @@ import org.apache.spark.sql.types.IntegerType
   * predicate — filters, join residuals, CASE arms. The queries that ship
   * in this repo write the banded form explicitly (they cannot assume the
   * driver's session carries extensions); the rule makes the fast form
-  * automatic for sessions built with [[GraftExtensions]]:
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-  * }}}
+  * automatic for sessions built with [[GraftExtensions]]: every
+  * [[graft.core.Sessions]] session, or any session whose
+  * `spark.sql.extensions` conf names `graft.plans.GraftExtensions`.
   */
 object BandedLevenshteinRule extends Rule[LogicalPlan] {
 

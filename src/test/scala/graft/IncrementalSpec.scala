@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.etl.F1Pipeline
 
@@ -53,5 +53,22 @@ class IncrementalSpec extends AnyFunSuite {
     // driverId 1 (day 1), 2 dropped (null dob), 3 (day 2).
     assert(d.select("driverId").collect().map(_.getInt(0)).sorted.toSeq
       == Seq(1, 3))
+  }
+
+  test("a drop delivered at the previous drop's path is read afresh") {
+    // Day 2's rows overwrite day 1's CSV: nothing day 1's run cached
+    // (PitStop's pinned prefix-sum input) may answer day 2's run.
+    val dir = Files.createTempDirectory("f1inc_same").toString
+    val csv = F1Fixture.writeCsv(F1Fixture.fixtureRows.take(3))
+    F1Pipeline.runIncremental(spark, csv, dir, "2026-08-01")
+    Files.copy(Paths.get(F1Fixture.writeCsv(F1Fixture.fixtureRows.drop(2))),
+      Paths.get(csv), StandardCopyOption.REPLACE_EXISTING)
+    F1Pipeline.runIncremental(spark, csv, dir, "2026-08-02")
+    // day 1 held race 100 (r1, r2) and race 101 (r3); day 2 adds race 102
+    val appended = spark.read.parquet(s"$dir/PitStop")
+      .filter("load_date = date'2026-08-02'")
+      .select("race_id", "driver_id", "stop_number").collect()
+      .map(r => (r.getInt(0), r.getInt(1), r.getInt(2))).toSeq
+    assert(appended == Seq((102, 3, 1)))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, StructType}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Output-boundary invariants swept over EVERY declared query against the
@@ -29,10 +30,18 @@ class OutputSchemaSpec extends AnyFunSuite {
 
   private val sfDir = "/root/testdata/sf0.001"
 
-  // the walk is SHARED with the SchemaProbe dev tool — gate and probe
-  // must agree on what counts as an offender
-  private def decimalPaths(dt: org.apache.spark.sql.types.DataType,
-      path: String): Seq[String] = SchemaProbe.decimalPaths(dt, path)
+  /** Paths of every DecimalType inside `dt`, nested types included. */
+  private def decimalPaths(dt: DataType, path: String): Seq[String] =
+    dt match {
+      case _: DecimalType => Seq(path)
+      case s: StructType =>
+        s.fields.toSeq.flatMap(f => decimalPaths(f.dataType, s"$path.${f.name}"))
+      case a: ArrayType => decimalPaths(a.elementType, s"$path[]")
+      case m: MapType =>
+        decimalPaths(m.keyType, s"$path.key") ++
+          decimalPaths(m.valueType, s"$path.value")
+      case _ => Seq.empty
+    }
 
   // one build per query, shared by both sweeps
   private lazy val built: Seq[(String, org.apache.spark.sql.DataFrame)] = {

@@ -1,0 +1,37 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import scala.util.matching.Regex
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Source-shape guards, in the style of DocsSpec: the engine ships four
+  * mains and builds every session in one factory. A one-off probe main,
+  * or a hand-built session whose config drifts from the one every result
+  * was checked under, is a red test instead of a review finding. */
+class SourceGuardSpec extends AnyFunSuite {
+
+  private val root = Paths.get("src/main/scala")
+
+  private lazy val sources: Seq[(String, String)] = {
+    val walk = Files.walk(root)
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala"))
+      .map(p => root.relativize(p).toString -> Files.readString(p)).toSeq
+    finally walk.close()
+  }
+
+  private def filesMatching(re: Regex): Seq[String] =
+    sources.collect { case (f, text) if re.findFirstIn(text).isDefined => f }
+      .sorted
+
+  test("src/main has exactly four mains: Bench, Verify, DumpPlan, PlanAudit") {
+    assert(filesMatching("""\bdef\s+main\s*\(|\bextends\s+App\b""".r) ==
+      Seq("graft/Bench.scala", "graft/DumpPlan.scala",
+        "graft/PlanAudit.scala", "graft/Verify.scala"))
+  }
+
+  test("SparkSession.builder appears only in core/Sessions.scala") {
+    assert(filesMatching("""SparkSession\s*\.\s*builder\b""".r) ==
+      Seq("graft/core/Sessions.scala"))
+  }
+}

@@ -2,27 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared local session for unit specs (small in-memory frames). */
+/** Shared local session for unit specs (small in-memory frames): the
+  * engine's one session shape at two cores. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // the full engine extensions (native functions, as-of strategy,
-      // txlog SQL DML resolution rule) — the documented one-line setup
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    // specs exercise Text/Vectors helpers directly (not only through
-    // SparkEntry.configure), and those now resolve the graft_* native
-    // functions by name
-    graft.functions.GraftFunctions.register(s)
-    s
-  }
+  lazy val spark: SparkSession = graft.core.Sessions.local(2)
 }

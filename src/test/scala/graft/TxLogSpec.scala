@@ -1483,4 +1483,26 @@ class TxLogSpec extends AnyFunSuite {
       s"refusal must name the missing feature: ${e.getMessage}")
     TxLog.drop(t)
   }
+
+  test("append type-drift guard ignores nested nullability but refuses " +
+      "a real type change") {
+    val t = java.nio.file.Files.createTempDirectory("txlog_drift_").toString
+    TxLog.drop(t)
+    // a struct built from a literal records a NOT NULL field ...
+    TxLog.create(Seq(1L).toDF("id").select(col("id"),
+      struct(lit(1L).as("a")).as("s")), t)
+    // ... the same struct built from a column carries a nullable one
+    val nullable = Seq((2L, Option(2L))).toDF("id", "a")
+      .select(col("id"), struct(col("a")).as("s"))
+    assert(nullable.schema("s").dataType != TxLog.tableSchema(t).get("s").dataType)
+    TxLog.append(nullable, t)
+    assert(TxLog.read(spark, t).select("s.a").as[Long].collect().sorted
+      .toSeq == Seq(1L, 2L))
+    val e = intercept[IllegalArgumentException] {
+      TxLog.append(Seq((3L, "x")).toDF("id", "a")
+        .select(col("id"), struct(col("a")).as("s")), t)
+    }
+    assert(e.getMessage.contains("changes existing column type"), e.getMessage)
+    TxLog.drop(t)
+  }
 }
