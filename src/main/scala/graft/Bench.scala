@@ -19,7 +19,7 @@ object Bench {
     }
     // Pre-build the persisted memo artifacts (LSH candidate pairs,
     // cluster labels, PQ codebook, kNN graph, ANN indexes) OUTSIDE the
-    // timed loop: ArtifactMemo builds run eagerly at DataFrame
+    // timed loop: `core.Memo.dir` builds run eagerly at DataFrame
     // CONSTRUCTION, so whichever consumer runs first alphabetically
     // used to pay the whole build — per-query numbers depended on run
     // order, and BENCH_r10's q89/q92 block was unexplainable without

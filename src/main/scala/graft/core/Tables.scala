@@ -17,42 +17,26 @@ object Tables {
   val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
     "part", "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Corpus-table schemas, memoized per (canonical path, file-metadata
-    * fingerprint) — a bare `spark.read.parquet(path)` runs a SPARK JOB
-    * per load just to infer the schema (ParquetFileFormat.inferSchema →
-    * mergeSchemasInParallel, even with mergeSchema off; stack-sampled
-    * in optimization r14), and queries call [[load]] 1–5 times each.
-    * Passing the memoized schema skips that job entirely. This is
-    * METADATA caching (what a catalog/metastore does), not result
-    * caching: every fresh JVM re-reads footers on first touch, and the
-    * fingerprint (name/size/mtime of the data files — filesystem
-    * metadata only, ~1 ms) invalidates the entry when a test fixture
-    * regenerates a table at the same path. */
-  private val schemaMemo =
-    scala.collection.concurrent.TrieMap.empty[(String, String), StructType]
+  /** The session confs that change what parquet schema inference
+    * returns for the same files. */
+  private val inferenceConfs = Seq("spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp")
 
-  private def dirFingerprint(path: java.nio.file.Path): String =
-    try {
-      if (!java.nio.file.Files.exists(path)) s"absent:$path"
-      else if (java.nio.file.Files.isRegularFile(path))
-        s"${java.nio.file.Files.size(path)}:" +
-          java.nio.file.Files.getLastModifiedTime(path).toMillis
-      else {
-        val s = java.nio.file.Files.list(path)
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.map(p => s"${p.getFileName}:" +
-              (try s"${java.nio.file.Files.size(p)}:" +
-                java.nio.file.Files.getLastModifiedTime(p).toMillis
-               catch { case _: Throwable => "?" }))
-            .toSeq.sorted.mkString(",")
-        } finally s.close()
-      }
-    } catch { case _: Throwable => s"unreadable:$path" }
-
+  /** Parquet schemas, memoized in [[Memo]] per (canonical path, the
+    * session's [[inferenceConfs]]) — a bare `spark.read.parquet(path)`
+    * runs a SPARK JOB per load just to infer the schema
+    * (ParquetFileFormat.inferSchema → mergeSchemasInParallel, even with
+    * mergeSchema off; stack-sampled in optimization r14), and queries
+    * call [[load]] 1–5 times each. Passing the memoized schema skips
+    * that job entirely. This is METADATA caching (what a catalog does),
+    * not result caching: the file fingerprint invalidates the entry when
+    * a fixture regenerates a table at the same path. The key holds only
+    * the inference confs, not the whole conf, so a `Tuned.session` clone
+    * shares its parent's entry. */
   private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
     val p = java.nio.file.Paths.get(path).toAbsolutePath.normalize()
-    schemaMemo.getOrElseUpdate((p.toString, dirFingerprint(p)),
+    Memo(("schema", p.toString, inferenceConfs.map(spark.conf.get)), p)(
       spark.read.parquet(path).schema)
   }
 

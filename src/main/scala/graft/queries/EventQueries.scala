@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Cleanup.PersistTrackedOps
-import graft.core.Tables
+import graft.core.{Scratch, Tables}
 
 /** Time-series operators over `events` — the join/window families Spark
   * gives for free that the reference's semantics imply but never exercise

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Cleanup.PersistTrackedOps
-import graft.core.{Sinks, Stable, Tables}
+import graft.core.{Scratch, Sinks, Stable, Tables}
 
 /** Round-7 extension surface: the storage-layout mechanics a 100 TB
   * deployment leans on daily (bucketed co-located joins, partition-pruned
@@ -1269,7 +1269,7 @@ object ExtQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        Scratch.dropCk(ck)
+        Scratch.release(ck)
         s.table(mem).orderBy("shard")
       },
       Some("""WITH b AS (SELECT doc_id,
@@ -1657,7 +1657,7 @@ object ExtQueries {
         import s.implicits._
         val out = shardDir(dir)
         graft.sources.BlobShards.pack(wavMedia(s, dir), out)
-        val idxDir = out + "_idx"
+        val idxDir = Scratch.dir("shardsidx", dir)
         val meta = s.read
           .format(classOf[graft.sources.BlobShardDataSource].getName)
           .option("path", out).load()
@@ -2074,7 +2074,7 @@ object ExtQueries {
           .groupBy(col("lang"), expr("n_chars DIV 10").as("band"))
           .agg(min(col("doc_id")).as("doc_id"))
           .select("doc_id")
-        val out = raw + "_curated"
+        val out = Scratch.dir("curated", dir)
         graft.sources.BlobShards.pack(
           gated.join(kept, "doc_id")
             .select(col("doc_id"),
@@ -2888,8 +2888,7 @@ object ExtQueries {
     // so the round trip itself is under the hash.
     QuerySpec("q371_jdbc_parallel_source",
       (s, dir) => {
-        val dbRoot = java.nio.file.Files
-          .createTempDirectory("graft_jdbcsrc_").toString
+        val dbRoot = Scratch.tmp("graft_jdbcsrc_")
         val url = s"jdbc:derby:$dbRoot/db;create=true"
         val cust = Tables.load(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"), col("c_acctbal"))
@@ -3178,7 +3177,7 @@ object ExtQueries {
       (s, dir) => {
         import graft.core.TxLog
         val base = Scratch.dir("txcl", dir)
-        val clone = base + "_branch"
+        val clone = Scratch.dir("txclbranch", dir)
         TxLog.drop(base); TxLog.drop(clone)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"),
@@ -3611,7 +3610,7 @@ object ExtQueries {
             .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
             .start()
           q.awaitTermination()
-          Scratch.dropCk(ck)
+          Scratch.release(ck)
           s.table(mem)
         }
         Seq(("full_tail", Map.empty[String, String]),
@@ -3830,7 +3829,7 @@ object ExtQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        Scratch.dropCk(ck)
+        Scratch.release(ck)
         s.table(mem)
           .groupBy(col("_change_type").as("change_type"),
             col("_commit_version").as("commit_version"))

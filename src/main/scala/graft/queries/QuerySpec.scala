@@ -10,85 +10,3 @@ final case class QuerySpec(
     name: String,
     fn: (SparkSession, String) => DataFrame,
     oracle: Option[String] = None)
-
-/** Per-process scratch roots for queries that build side tables
-  * (TxLog tables, partitioned/bucketed writes, materialized views).
-  * Keyed by (prefix, corpus dir) for within-process reuse AND by the
-  * process id: two concurrent drivers gating the same corpus would
-  * otherwise race on one directory while one of them is deleting log
-  * entries (ADVICE r9 on q404/q405 — the hashCode-only path). */
-object Scratch {
-  /** Scratch root: a RAM-backed tmpfs when the box has one (the
-    * lakehouse demos' per-commit filesystem round-trips and the
-    * streaming queries' checkpoint IO are pure harness overhead at
-    * fixture scale — VERDICT r12 #6; hard links and atomic moves work
-    * identically on tmpfs, so no protocol spec weakens), else the JVM
-    * temp dir. Override with -Dgraft.scratch.dir. */
-  private val root: String = sys.props.get("graft.scratch.dir")
-    .orElse(Some("/dev/shm").filter { p =>
-      val f = new java.io.File(p); f.isDirectory && f.canWrite })
-    .getOrElse(System.getProperty("java.io.tmpdir"))
-
-  def dir(prefix: String, corpusDir: String): String =
-    new java.io.File(root,
-      s"graft_${prefix}_${Integer.toHexString(corpusDir.hashCode)}_p" +
-        ProcessHandle.current().pid()).toString
-
-  /** A fresh unique directory under the scratch root — the
-    * `Files.createTempDirectory` drop-in for streaming checkpoints and
-    * sink dirs, so they land on the tmpfs too. */
-  def tmp(prefix: String): String = {
-    val r = new java.io.File(root)
-    r.mkdirs()
-    java.nio.file.Files.createTempDirectory(r.toPath, prefix).toString
-  }
-
-  private val ckDirs =
-    new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  sys.addShutdownHook {
-    ckDirs.forEach { d =>
-      try {
-        val s = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-        try {
-          import scala.jdk.CollectionConverters._
-          s.iterator().asScala.toSeq.reverse
-            .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-        } finally s.close()
-      } catch { case _: Throwable => () }
-    }
-  }
-
-  /** Fresh checkpoint dir on the scratch tmpfs for a bounded stream.
-    * Spark's IMPLICIT temp checkpoint lands on `java.io.tmpdir` — a
-    * disk filesystem here — and pays disk fsync latency in every WAL
-    * commit and state-store commit; measured on a warm single-batch
-    * windowed aggregation at sf0.1: 0.97–1.11 s (/tmp) → 0.84–1.01 s
-    * (tmpfs) per run. Callers [[dropCk]] right after the bounded query
-    * terminates (Spark deletes ITS implicit dir on query stop, and
-    * these live in RAM — a long multi-query run must not accumulate
-    * them; ADVICE r13); the JVM-exit hook stays as the backstop for
-    * abnormal exits. NOT for restartable streams: a checkpoint that
-    * must survive the query (replay/restart specs) manages its own
-    * durable dir. */
-  def streamCk(): String = {
-    val d = tmp("graft_ck_")
-    ckDirs.add(d)
-    d
-  }
-
-  /** Eagerly delete a [[streamCk]] dir once its bounded stream has
-    * terminated (and deregister it from the exit hook). Best-effort —
-    * a failure leaves it to the hook. */
-  def dropCk(d: String): Unit = {
-    ckDirs.remove(d)
-    try {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(d))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toSeq.reverse
-          .foreach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-      } finally s.close()
-    } catch { case _: Throwable => () }
-  }
-}

@@ -3,7 +3,7 @@ package graft.queries
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.core.Cleanup.PersistTrackedOps
-import graft.core.Tables
+import graft.core.{Memo, Tables}
 import graft.functions.Text
 
 /** LLM-data-pipeline text operators over `documents` (driver mandate:
@@ -113,7 +113,7 @@ object TextQueries {
     candidatesFromSig(minhashSig(docs))
 
   /** Persisted minhash-LSH candidate-pair artifact (see
-    * [[ArtifactMemo]]): a dozen queries (near-dup clustering, PageRank,
+    * [[Memo.dir]]): a dozen queries (near-dup clustering, PageRank,
     * BFS, k-core, triangles, leakage/contamination audits) consume the
     * IDENTICAL pair set — the near-dup index a production pipeline
     * builds nightly and serves. Built once per corpus fingerprint;
@@ -121,7 +121,7 @@ object TextQueries {
     * hash-gated every run. */
   private def candidatePairs(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(ArtifactMemo.dir(dir, "documents", "mh_cand") { t =>
+    s.read.parquet(Memo.dir(dir, "documents", "mh_cand") { t =>
       graft.core.Sinks.parquet(
         minhashCandidates(Tables.load(s, dir, "documents")), s"$t/pairs")
     } + "/pairs")
@@ -133,7 +133,7 @@ object TextQueries {
     * documented phase switch); consumers read (node, cid). */
   private def minhashLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    s.read.parquet(ArtifactMemo.dir(dir, "documents", "mh_labels") { t =>
+    s.read.parquet(Memo.dir(dir, "documents", "mh_labels") { t =>
       val fwd = candidatePairs(s, dir)
         .select(col("doc_a").as("src"), col("doc_b").as("dst"))
       val ns = graft.core.Tuned.session(s,

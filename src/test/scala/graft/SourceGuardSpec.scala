@@ -6,9 +6,11 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-shape guards, in the style of DocsSpec: the engine ships four
-  * mains and builds every session in one factory. A one-off probe main,
-  * or a hand-built session whose config drifts from the one every result
-  * was checked under, is a red test instead of a review finding. */
+  * mains, builds every session in one factory, and keeps every memo and
+  * every exit-time cleanup in `core/Memo.scala`. A one-off probe main, a
+  * hand-built session whose config drifts from the one every result was
+  * checked under, or a private memo with its own staleness rule is a red
+  * test instead of a review finding. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -33,5 +35,17 @@ class SourceGuardSpec extends AnyFunSuite {
   test("SparkSession.builder appears only in core/Sessions.scala") {
     assert(filesMatching("""SparkSession\s*\.\s*builder\b""".r) ==
       Seq("graft/core/Sessions.scala"))
+  }
+
+  test("exit hooks appear only in core/Memo.scala") {
+    assert(filesMatching("""\baddShutdownHook\b""".r) ==
+      Seq("graft/core/Memo.scala"))
+    assert(filesMatching("""\bdeleteOnExit\b""".r).toSet
+      .subsetOf(Set("graft/core/Memo.scala")))
+  }
+
+  test("memo maps and retire queues appear only in core/Memo.scala") {
+    assert(filesMatching("""\b(TrieMap|ConcurrentLinkedQueue)\b""".r).toSet
+      .subsetOf(Set("graft/core/Memo.scala")))
   }
 }
