@@ -21,9 +21,8 @@ import org.apache.spark.storage.StorageLevel
   * construction is single-threaded). The wrapper then arms a one-shot
   * [[QueryExecutionListener]]: the FIRST Dataset action that completes on
   * the session (success or failure) unpersists the tracked frames and
-  * unregisters the listener. Construction-time actions (k-means rounds,
-  * prefix-sum offset collection) happen before arming, so they can't
-  * trigger early cleanup.
+  * unregisters the listener. Construction-time actions (k-means rounds)
+  * happen before arming, so they can't trigger early cleanup.
   *
   * Sharp edge, documented: if several tracked queries run CONCURRENTLY on
   * one session, an action from one can release another's cache early —

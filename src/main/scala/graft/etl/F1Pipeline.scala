@@ -178,7 +178,7 @@ object F1Pipeline {
           Scalars.toDoubleOrNull(col("duration")).as("duration"),
           col("milliseconds_pitstops"))
         .withColumn("__one", lit(1L)),
-      Seq("race_id", "driver_id", "stop_number"), "__one", "pitsId", 32)
+      Seq("race_id", "driver_id", "stop_number"), "__one", "pitsId")
       .drop("__one")
       .orderBy("race_id", "driver_id", "stop_number")
 
@@ -268,12 +268,10 @@ object F1Pipeline {
     }
 
   /** Build every table from the CSV at `csvPath` and hand each to
-    * `write`. The persists made while building (PrefixSum's pinned
-    * inputs) are released after the LAST write, not the first: a PitStop
-    * input recomputed between writes would resample its range boundaries
-    * and shift `pitsId`. And they are released at all because the cache
-    * matches a CSV scan by plan, not content: a later run over a new file
-    * at the same path would otherwise read the old rows. */
+    * `write`. The persists made while building (PrefixSum's input) are
+    * released after the LAST write, because the cache matches a CSV scan
+    * by plan, not content: a later run over a new file at the same path
+    * would otherwise read the old rows. */
   private def buildAndWrite(spark: org.apache.spark.sql.SparkSession,
       csvPath: String, refYear: Int)(write: (String, DataFrame) => Unit): Unit = {
     val (tables, persisted) = graft.core.Cleanup.track(

@@ -1,6 +1,5 @@
 package graft.ops
 
-import graft.core.Cleanup.PersistTrackedOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +14,7 @@ import org.apache.spark.sql.functions._
   *
   *  1. reduce to VALUE GRAIN: `groupBy(group, value).count()` — one keyed
   *     shuffle, the only pass over the corpus;
-  *  2. rank the value grain with a range-partitioned [[PrefixSum]] over the
+  *  2. rank the value grain with the distributed [[PrefixSum]] over the
   *     (group, value) total order (per-group rank = global cumsum − group
   *     offset, the q219 trick — a group holding half the corpus still
   *     ranks in parallel);
@@ -41,40 +40,32 @@ object Quantiles {
     * `groupCols` empty → one global row.
     */
   def quantileCont(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      outs: Seq[(String, Double)], numParts: Int = 32,
+      outs: Seq[(String, Double)],
       countCol: Option[String] = None): DataFrame = {
     require(outs.nonEmpty, "at least one percentile requested")
     val keyCols = groupCols :+ valueCol
     // 1. value grain — the only corpus-scale shuffle. PrefixSum.cumsum
-    // persists its input before the range-sampling job, so the grain
-    // computes once (measured on q43 at sf0.1: the unpersisted grain
-    // re-ran the full scan+shuffle once for the sampler and once for
-    // the real exchange — the ~0.4 s×4 duplicated job cluster)
+    // persists its input, so the grain computes once for its boundary
+    // and offset subqueries and its scan (and for `__qn` below)
     val vg = df.filter(col(valueCol).isNotNull)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__qcnt"))
-    // 2. ranks via the range-partitioned distributed prefix sum
-    val cum0 = PrefixSum.cumsum(vg, keyCols, "__qcnt", "__qcum", numParts)
-    val gagg = Seq(min(col("__qcum") - col("__qcnt")).as("__qoff"),
-      sum(col("__qcnt")).as("__qn"))
+    // 2. ranks via the distributed prefix sum
+    val cum = PrefixSum.cumsum(vg, keyCols, "__qcnt", "__qcum")
     // grouped form: the group-grain frame broadcasts back on the keys.
-    // GLOBAL form: the frame is ONE row — collected eagerly (metadata-
-    // scale driver read, the q387 bounds precedent) and inlined as
-    // literals, so the plan carries NO join at all (a constant-key
-    // equi join constant-folds back into a nested loop, tripping the
-    // engine-wide no-nested-loop plan pins).
+    // GLOBAL form: one group whose ranks start at the first row (offset
+    // 0), its size a scalar subquery over the value grain — so the plan
+    // carries NO join (a constant-key equi join constant-folds back into
+    // a nested loop, tripping the engine-wide no-nested-loop plan pins).
+    // On empty input `__qn` is NULL: no row is a candidate and every
+    // percentile reads NULL, as `percentile` does.
     val ranked = (if (groupCols.nonEmpty) {
-      val grp = cum0.groupBy(groupCols.map(col): _*)
-        .agg(gagg.head, gagg.tail: _*)
-      cum0.join(broadcast(grp), groupCols)
-    } else {
-      val cum = cum0.persistTracked()
-      val hd = cum.agg(gagg.head, gagg.tail: _*).head()
-      if (hd.isNullAt(1)) // empty input: no non-NULL values anywhere
-        cum.limit(0).withColumn("__qoff", lit(0L)).withColumn("__qn", lit(0L))
-      else cum.withColumn("__qoff", lit(hd.getLong(0)))
-        .withColumn("__qn", lit(hd.getLong(1)))
-    })
+      val grp = cum.groupBy(groupCols.map(col): _*)
+        .agg(min(col("__qcum") - col("__qcnt")).as("__qoff"),
+          sum(col("__qcnt")).as("__qn"))
+      cum.join(broadcast(grp), groupCols)
+    } else cum.withColumn("__qoff", lit(0L))
+      .withColumn("__qn", vg.agg(sum(col("__qcnt"))).scalar()))
       // this value covers per-group ranks [__qlo, __qhi] (1-based)
       .withColumn("__qhi", col("__qcum") - col("__qoff"))
       .withColumn("__qlo", col("__qhi") - col("__qcnt") + 1L)

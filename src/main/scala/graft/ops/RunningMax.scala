@@ -1,8 +1,6 @@
 package graft.ops
 
-import graft.core.Cleanup.PersistTrackedOps
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distributed exclusive running maximum — max of `valueCol` over all
@@ -11,17 +9,14 @@ import org.apache.spark.sql.functions._
   * [[PrefixSum]]: `Window.orderBy` with no partition key is the operator
   * that never finishes at 100 TB).
   *
-  * Same two-phase shape as PrefixSum, with max as the monoid:
-  *  1. range-partition on the key,
-  *  2. per-partition exclusive window max (parallel),
-  *  3. per-partition totals → exclusive running max over the
-  *     O(numPartitions)-row totals frame, broadcast back, combined with
-  *     `greatest` (which skips NULLs, so "no predecessor" stays NULL).
+  * It is PrefixSum's ordered scan with max as the monoid: an exclusive
+  * per-range window max, combined with the exclusive running max of the
+  * earlier ranges' maxima by `greatest` (which skips NULLs, so "no
+  * predecessor" stays NULL).
   *
   * The canonical consumer is the 2-D skyline / Pareto frontier: sort by
   * x, a point survives iff its y beats every smaller-x point's y — i.e.
-  * y > exclusive-running-max(y). Result is a pure function of (key
-  * order, values); partition boundaries affect only layout.
+  * y > exclusive-running-max(y).
   */
 object RunningMax {
 
@@ -30,24 +25,6 @@ object RunningMax {
     * row exists. The tuple `keyCols` must be unique (it defines the
     * total order); `valueCol` must be orderable. */
   def cummaxExclusive(df: DataFrame, keyCols: Seq[String], valueCol: String,
-      out: String, numParts: Int = 32): DataFrame = {
-    // One evaluation of spark_partition_id, pinned by the persist: the
-    // ranged exchange samples boundaries per execution (see PrefixSum).
-    val ranged = df.repartitionByRange(numParts, keyCols.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-    val wLocal = Window.partitionBy("__pid").orderBy(keyCols.map(col): _*)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val local = ranged
-      .withColumn("__local", max(col(valueCol)).over(wLocal))
-      .persistTracked()
-    val wOff = Window.orderBy("__pid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy("__pid")
-      .agg(max(col(valueCol)).as("__tot"))
-      .withColumn("__off", max(col("__tot")).over(wOff))
-      .select("__pid", "__off")
-    local.join(broadcast(offsets), "__pid")
-      .withColumn(out, greatest(col("__local"), col("__off")))
-      .drop("__pid", "__local", "__off")
-  }
+      out: String): DataFrame =
+    PrefixSum.scan(df, keyCols, valueCol, out, max, -1L)(greatest(_, _))
 }

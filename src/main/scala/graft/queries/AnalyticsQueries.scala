@@ -182,7 +182,7 @@ object AnalyticsQueries {
     // cross the budget — the deterministic streaming-pack rule
     // shard = floor(tokens_before_this_doc / budget) is monotone, so
     // shards are contiguous doc_id ranges). The running total is
-    // `ops.PrefixSum.cumsum` — range-partitioned two-phase prefix sum,
+    // `ops.PrefixSum.cumsum` — a per-range scan plus range offsets,
     // NOT a single-task global window, so the pack scales with the
     // corpus. Oracle uses the windowed SQL form (fine at oracle scale).
     QuerySpec("q85_token_shards",
@@ -588,7 +588,7 @@ object AnalyticsQueries {
           .select(col("o_orderkey"), col("o_totalprice"))
           .withColumn("__one", lit(1L))
         val rk = graft.ops.PrefixSum.cumsum(base,
-          Seq("o_totalprice", "o_orderkey"), "__one", "rk", 32)
+          Seq("o_totalprice", "o_orderkey"), "__one", "rk")
         val n = rk.agg(count(lit(1)).as("n"))
         rk.crossJoin(broadcast(n))
           .select(col("o_totalprice"),
@@ -924,7 +924,7 @@ object AnalyticsQueries {
           .agg(sum(col("l_extendedprice").cast("decimal(18,2)")).as("r"))
         val tot = rev.agg(sum(col("r")).as("t"))
         val cum = graft.ops.PrefixSum.cumsum(
-          rev.withColumn("negr", -col("r")), Seq("negr", "pk"), "r", "cum", 32)
+          rev.withColumn("negr", -col("r")), Seq("negr", "pk"), "r", "cum")
         val pct = lit(100.0) * col("cum") / col("t")
         cum.crossJoin(broadcast(tot))
           .select(col("pk"), col("r"),
@@ -1501,7 +1501,7 @@ object AnalyticsQueries {
     // least one). The naive form is an O(n²) self-join; the scale form
     // is: collapse to price grain (max size per price), then one
     // distributed EXCLUSIVE running max over price order
-    // ([[graft.ops.RunningMax]] — range-partitioned two-phase, no
+    // ([[graft.ops.RunningMax]] — PrefixSum's ordered scan with max, no
     // single-task global window), and a price-grain broadcast join
     // back. A part survives iff it has its price's max size AND that
     // size strictly beats the running max over all cheaper prices.
@@ -1924,7 +1924,7 @@ object AnalyticsQueries {
           .select(col("event_type"), col("value"), col("event_id"))
           .withColumn("__one", lit(1L))
         val cum = graft.ops.PrefixSum.cumsum(base,
-          Seq("event_type", "value", "event_id"), "__one", "cum", 32)
+          Seq("event_type", "value", "event_id"), "__one", "cum")
         val grp = cum.groupBy("event_type")
           .agg(min(col("cum")).as("g0"), count(lit(1)).as("n"))
         cum.join(broadcast(grp), "event_type")
@@ -1963,7 +1963,7 @@ object AnalyticsQueries {
             col("doc_id"),
             graft.functions.Text.tokenCount(col("text")).cast("long").as("w"))
         val cum = graft.ops.PrefixSum.cumsum(base,
-          Seq("lang", "v", "doc_id"), "w", "cw", 32)
+          Seq("lang", "v", "doc_id"), "w", "cw")
         val grp = cum.groupBy("lang")
           .agg(min(col("cw") - col("w")).as("g0"), sum(col("w")).as("tw"))
         cum.join(broadcast(grp), "lang")
@@ -2209,9 +2209,9 @@ object AnalyticsQueries {
         val ranked = PrefixSum.cumsum(
           PrefixSum.cumsum(
             PrefixSum.cumsum(rfm,
-              Seq("recency_days", "o_custkey"), "one", "r_rank", 32),
-            Seq("negf", "o_custkey"), "one", "f_rank", 32),
-          Seq("negm", "o_custkey"), "one", "m_rank", 32)
+              Seq("recency_days", "o_custkey"), "one", "r_rank"),
+            Seq("negf", "o_custkey"), "one", "f_rank"),
+          Seq("negm", "o_custkey"), "one", "m_rank")
           .persistTracked()
         val n = ranked.agg(count(lit(1)).as("n_cust"))
         ranked.crossJoin(broadcast(n))
@@ -2739,7 +2739,7 @@ object AnalyticsQueries {
           .agg(sum(round(col("o_totalprice"), 2).cast("decimal(18,2)"))
             .as("rev"))
           .withColumn("one", lit(1L))
-        val rk = PrefixSum.cumsum(rev, Seq("rev", "o_custkey"), "one", "i", 32)
+        val rk = PrefixSum.cumsum(rev, Seq("rev", "o_custkey"), "one", "i")
           .persistTracked()
         val tot = rk.agg(count(lit(1)).as("n"), sum(col("rev")).as("srev"),
           sum(col("i").cast("decimal(18,0)") * col("rev")).as("sirev"))
@@ -2785,11 +2785,11 @@ object AnalyticsQueries {
     // order values. The trick that makes the argmax hash-stable: never
     // compare the double ECDF difference — maximize the cross-
     // multiplied |cca·nb − ccb·na| (all longs, exact), divide by na·nb
-    // ONCE at the end. ECDFs come from two CHAINED PrefixSum cumsums
-    // over the value-grain count table (the q312 collision fix is what
-    // permits chaining); at 100 TB that is a range-partitioned scan,
-    // not a single-reducer window — the oracle uses the window, so the
-    // gate again proves the distributed form equals it.
+    // ONCE at the end. That difference is itself a running sum, of
+    // ca·nb − cb·na over the value-grain count table, so ONE PrefixSum
+    // gives it; at 100 TB that is a range-partitioned scan, not a
+    // single-reducer window — the oracle uses two windows, so the gate
+    // again proves the distributed form equals it.
     QuerySpec("q324_ks_two_sample",
       (s, dir) => {
         val a = Tables.load(s, dir, "orders")
@@ -2800,15 +2800,13 @@ object AnalyticsQueries {
             when(col("o_orderpriority") === "5-LOW", 1L).otherwise(0L)
               .as("ib"))
           .persistTracked()
+        val n = a.agg(sum(col("ia")).as("na"), sum(col("ib")).as("nb"))
         val vg = a.groupBy("v")
           .agg(sum(col("ia")).as("ca"), sum(col("ib")).as("cb"))
-        val cum = PrefixSum.cumsum(
-          PrefixSum.cumsum(vg, Seq("v"), "ca", "cca", 32),
-          Seq("v"), "cb", "ccb", 32)
-        val n = a.agg(sum(col("ia")).as("na"), sum(col("ib")).as("nb"))
-        cum.crossJoin(broadcast(n))
-          .select(col("v").as("at_value"),
-            abs(col("cca") * col("nb") - col("ccb") * col("na")).as("ks_num"),
+          .crossJoin(broadcast(n))
+          .withColumn("d", col("ca") * col("nb") - col("cb") * col("na"))
+        PrefixSum.cumsum(vg, Seq("v"), "d", "cd")
+          .select(col("v").as("at_value"), abs(col("cd")).as("ks_num"),
             col("na"), col("nb"))
           .orderBy(desc("ks_num"), col("at_value"))
           .limit(1)
@@ -2952,8 +2950,8 @@ object AnalyticsQueries {
           .withColumn("one", lit(1L))
           .withColumn("lab", when(col("label"), 1L).otherwise(0L))
         val rk = PrefixSum.cumsum(
-          PrefixSum.cumsum(d, Seq("negs", "doc_id"), "one", "k", 32),
-          Seq("negs", "doc_id"), "lab", "cum_pos", 32)
+          PrefixSum.cumsum(d, Seq("negs", "doc_id"), "one", "k"),
+          Seq("negs", "doc_id"), "lab", "cum_pos")
         rk.agg(
             count(lit(1)).as("n"),
             sum(col("lab")).as("np"),
@@ -3550,7 +3548,7 @@ object AnalyticsQueries {
             col("o_orderkey"))
           .withColumn("__one", lit(1L))
         val cum = graft.ops.PrefixSum.cumsum(base,
-          Seq("treated", "y", "o_orderkey"), "__one", "cum", 32)
+          Seq("treated", "y", "o_orderkey"), "__one", "cum")
         val grp = cum.groupBy("treated")
           .agg(min(col("cum")).as("g0"), count(lit(1)).as("n"))
         val qs = Seq(0.10, 0.25, 0.50, 0.75, 0.90)
@@ -3803,7 +3801,7 @@ object AnalyticsQueries {
           .select(col("event_type"), col("value"), col("event_id"))
           .withColumn("__one", lit(1L))
         val cum = graft.ops.PrefixSum.cumsum(base,
-          Seq("event_type", "value", "event_id"), "__one", "cum", 32)
+          Seq("event_type", "value", "event_id"), "__one", "cum")
         val grp = cum.groupBy("event_type")
           .agg(min(col("cum")).as("g0"), count(lit(1)).as("n"))
         val zr = sqrt(col("n").cast("double")) * 1.96

@@ -453,7 +453,7 @@ object EventQueries {
           .select(expr("(unix_micros(p_ts) - unix_micros(c_ts)) DIV 1000000")
             .as("lag_s"))
         val g = lags.groupBy("lag_s").agg(count(lit(1)).as("cnt"))
-        val c = graft.ops.PrefixSum.cumsum(g, "lag_s", "cnt", "cum", 32)
+        val c = graft.ops.PrefixSum.cumsum(g, "lag_s", "cnt", "cum")
         val tot = c.agg(max(col("cum")).as("n"))
         val t50 = expr("(n + 1) DIV 2")
         val t90 = expr("(9 * n + 9) DIV 10")
@@ -1152,7 +1152,7 @@ object EventQueries {
         val conv = lat.filter(col("latency_s").isNotNull)
           .withColumn("__one", lit(1L))
         val cum = graft.ops.PrefixSum.cumsum(conv,
-          Seq("latency_s", "event_id"), "__one", "rk", 32)
+          Seq("latency_s", "event_id"), "__one", "rk")
         val nn = lat.agg(count(lit(1)).as("n_signups"),
           count(col("latency_s")).as("n_converted"))
         cum.crossJoin(broadcast(nn)) // 1-row totals frame

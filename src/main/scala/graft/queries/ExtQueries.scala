@@ -846,7 +846,7 @@ object ExtQueries {
         val tk = docs.select(col("doc_id"),
           explode(graft.functions.Text.tokens(lower(col("text")))).as("w"))
         val dfx = tk.groupBy("w").agg(count(lit(1)).as("c"))
-        val v = graft.ops.PrefixSum.cumsum(dfx, "w", "c", "hi", 32)
+        val v = graft.ops.PrefixSum.cumsum(dfx, "w", "c", "hi")
           .select(col("w").as("neg_token"),
             (col("hi") - col("c")).as("lo"), col("hi"))
           .persistTracked()
@@ -1459,7 +1459,7 @@ object ExtQueries {
             when(col("event_type") === "purchase", 1L).otherwise(0L).as("pos"))
         val g = b.groupBy("v")
           .agg(count(lit(1)).as("cnt"), sum(col("pos")).as("npos"))
-        val c = graft.ops.PrefixSum.cumsum(g, "v", "cnt", "hi", 32)
+        val c = graft.ops.PrefixSum.cumsum(g, "v", "cnt", "hi")
         c.agg(
             sum(col("npos") * (lit(2L) * (col("hi") - col("cnt") + 1) +
               col("cnt") - 1)).as("r2"),
@@ -1717,7 +1717,7 @@ object ExtQueries {
         val base = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("n_chars")).withColumn("__one", lit(1L))
         def layout(name: String, keys: Seq[String]) =
-          graft.ops.PrefixSum.cumsum(base, keys, "__one", "rk", 32)
+          graft.ops.PrefixSum.cumsum(base, keys, "__one", "rk")
             .select(lit(name).as("layout"),
               floor((col("rk") - 1) / 32).cast("int").as("file_id"),
               col("n_chars"))
@@ -1846,7 +1846,7 @@ object ExtQueries {
           .withColumn("z", call_function("graft_zorder2", col("x"), col("y")))
           .withColumn("__one", lit(1L))
         def layout(name: String, keys: Seq[String]) =
-          graft.ops.PrefixSum.cumsum(nodes, keys, "__one", "rk", 32)
+          graft.ops.PrefixSum.cumsum(nodes, keys, "__one", "rk")
             .select(lit(name).as("layout"),
               floor((col("rk") - 1) / 32).cast("int").as("file_id"),
               col("x"), col("y"))
@@ -2716,7 +2716,7 @@ object ExtQueries {
           .withColumn("hc", call_function("graft_hilbert2", col("x"), col("y")))
           .withColumn("__one", lit(1L))
         def layout(name: String, keys: Seq[String]) =
-          graft.ops.PrefixSum.cumsum(nodes, keys, "__one", "rk", 32)
+          graft.ops.PrefixSum.cumsum(nodes, keys, "__one", "rk")
             .select(lit(name).as("layout"),
               floor((col("rk") - 1) / 32).cast("int").as("file_id"),
               col("x"), col("y"))

@@ -859,9 +859,8 @@ object TextQueries {
     // division) and split it into 4 phases of EQUAL TOKEN BUDGET, not
     // equal doc count — the schedule a curriculum-ordered pretraining
     // run consumes. The global cumulative token count comes from the
-    // distributed PrefixSum (range partition + per-partition window +
-    // broadcast offsets — NO single-reducer global window, the q113/q125
-    // rule); the phase is then pure integer arithmetic against the 1-row
+    // distributed PrefixSum (per-range window + range offsets — NO
+    // single-reducer global window, the q113/q125 rule); the phase is then pure integer arithmetic against the 1-row
     // total. All-integer → exact on both engines.
     QuerySpec("q150_curriculum",
       (s, dir) => {
@@ -870,7 +869,7 @@ object TextQueries {
             size(Text.tokens(lower(col("text")))).cast("long").as("n_tok"))
           .withColumn("diff", expr("n_chars DIV n_tok"))
         val cum = graft.ops.PrefixSum.cumsum(
-          base, Seq("diff", "doc_id"), "n_tok", "cum", 32)
+          base, Seq("diff", "doc_id"), "n_tok", "cum")
         val total = base.agg(sum(col("n_tok")).as("total"))
         cum.crossJoin(broadcast(total))
           .select(col("doc_id"), col("diff"), col("n_tok"), col("cum"),
@@ -2101,7 +2100,7 @@ object TextQueries {
               .as("ep_hash"))
           .withColumn("__one", lit(1L))
         graft.ops.PrefixSum.cumsum(keyed, Seq("ep_hash", "doc_id"),
-            "__one", "pos", 32)
+            "__one", "pos")
           .select(col("doc_id"), expr("(pos - 1) div 64").as("shard"),
             expr("(pos - 1) % 64").as("pos_in_shard"))
           .orderBy("shard", "pos_in_shard")
@@ -2447,7 +2446,7 @@ object TextQueries {
               .when(col("n_tok") < 76, 2).otherwise(3))
           .withColumn("__one", lit(1L))
         val cum = graft.ops.PrefixSum.cumsum(base, Seq("bucket", "doc_id"),
-          "__one", "cum", 32)
+          "__one", "cum")
         val offs = cum.groupBy("bucket").agg(min(col("cum")).as("b0"))
         cum.join(broadcast(offs), "bucket")
           .select(col("doc_id"), col("n_tok"), col("bucket"),
@@ -2640,7 +2639,7 @@ object TextQueries {
           .withColumn("negc", -col("cnt"))
           .withColumn("__one", lit(1L))
         val ranked = graft.ops.PrefixSum.cumsum(vocab, Seq("negc", "t"),
-          "__one", "rnk", 32)
+          "__one", "rnk")
         val xy = ranked.select(
           round(log(col("rnk").cast("double")), 6).cast("decimal(12,6)").as("x"),
           round(log(col("cnt").cast("double")), 6).cast("decimal(12,6)").as("y"))
@@ -2986,7 +2985,7 @@ object TextQueries {
           // no mixed ±0.0 ordering divergence.
           .withColumn("negq", -col("qual"))
         graft.ops.PrefixSum
-          .cumsum(base, Seq("negq", "doc_id"), "n_tokens", "cum_tokens", 32)
+          .cumsum(base, Seq("negq", "doc_id"), "n_tokens", "cum_tokens")
           .filter(col("cum_tokens") <= 20000)
           .select(col("doc_id"), col("qual"),
             col("n_tokens").cast("int").as("n_tokens"), col("cum_tokens"))
@@ -4527,7 +4526,7 @@ object TextQueries {
           .withColumn("negp", -col("p"))
           .withColumn("one", lit(1L))
         val ranked = graft.ops.PrefixSum.cumsum(scored,
-          Seq("negp", "doc_id"), "one", "rk", 32)
+          Seq("negp", "doc_id"), "one", "rk")
         val nn = ranked.agg(count(lit(1)).as("n"), sum("pos").as("np"))
         val w = org.apache.spark.sql.expressions.Window.orderBy("decile")
           .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
@@ -4580,7 +4579,7 @@ object TextQueries {
       (s, dir) => {
         val w = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("n_chars").cast("long").as("w"))
-        val c = graft.ops.PrefixSum.cumsum(w, "doc_id", "w", "cw", 32)
+        val c = graft.ops.PrefixSum.cumsum(w, "doc_id", "w", "cw")
           .select(col("doc_id"), col("w"),
             (col("cw") - col("w")).as("lo"), (col("cw") - 1).as("hi"))
         val tot = w.agg(sum(col("w")).as("tw"))

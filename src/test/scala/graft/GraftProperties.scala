@@ -106,9 +106,10 @@ object GraftProperties extends Properties("graft") {
     }
 
   // PrefixSum must equal the single-partition window cumsum regardless of
-  // how the range partitioner splits the keys (4 partitions over ≤40 keys
-  // forces multi-partition paths; sparse unique keys — the op orders by
-  // key value, not by key density).
+  // how the boundaries split the keys (the 2-core test session derives 16
+  // ranges, and a sample smaller than 20 × ranges is spread over all of
+  // them, so ≤40 keys take the multi-range path; sparse unique keys — the
+  // op orders by key value, not by key density).
   private val cumsumGen: Gen[List[(Long, Long)]] =
     Gen.listOfN(40, for {
       k <- Gen.choose(-100000L, 100000L)
@@ -119,10 +120,47 @@ object GraftProperties extends Properties("graft") {
   property("PrefixSum.cumsum equals the global window cumsum") =
     forAll(cumsumGen) { rows =>
       val df = rows.toDF("k", "v")
-      val got = graft.ops.PrefixSum.cumsum(df, "k", "v", "c", numParts = 4)
+      val got = graft.ops.PrefixSum.cumsum(df, "k", "v", "c")
         .select("k", "c").orderBy("k").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       var acc = 0L
       val want = rows.sortBy(_._1).map { case (k, v) => acc += v; (k, acc) }
+      got == want
+    }
+
+  // The scan's boundaries and range ids depend only on the data: the
+  // same frame collected again after its cached input is dropped, and
+  // the same scan over the input in any partition layout, give the
+  // sequential cumsum.
+  property("PrefixSum.cumsum survives a recompute and any input layout") =
+    forAll(cumsumGen) { rows =>
+      val df = rows.toDF("k", "v")
+      def sums(in: org.apache.spark.sql.DataFrame) =
+        graft.ops.PrefixSum.cumsum(in, "k", "v", "c").select("k", "c")
+          .orderBy("k")
+      def read(out: org.apache.spark.sql.DataFrame) =
+        out.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val frame = sums(df)
+      val first = read(frame)
+      spark.catalog.clearCache()
+      val again = read(frame)
+      val layouts = Seq(1, 3, 7).map(k => read(sums(df.repartition(k))))
+      var acc = 0L
+      val want = rows.sortBy(_._1).map { case (k, v) => acc += v; (k, acc) }
+      first == want && (again +: layouts).forall(_ == first)
+    }
+
+  property("PrefixSum.cumsum of decimal(18,2) is the exact running sum") =
+    forAll(Gen.listOfN(40, for {
+      k <- Gen.choose(-100000L, 100000L)
+      cents <- Gen.choose(-10000000000L, 10000000000L)
+    } yield (k, cents)).map(_.distinctBy(_._1)).suchThat(_.nonEmpty)) { rows =>
+      val df = rows.map { case (k, c) => (k, BigDecimal(c, 2)) }.toDF("k", "v")
+        .withColumn("v", col("v").cast("decimal(18,2)"))
+      val got = graft.ops.PrefixSum.cumsum(df, "k", "v", "c")
+        .select("k", "c").orderBy("k").collect()
+        .map(r => (r.getLong(0), BigDecimal(r.getDecimal(1)))).toSeq
+      val want = rows.sortBy(_._1).scanLeft((0L, BigDecimal(0))) {
+        case ((_, acc), (k, c)) => (k, acc + BigDecimal(c, 2)) }.tail
       got == want
     }
 
@@ -300,7 +338,7 @@ object GraftProperties extends Properties("graft") {
     } yield (h, id, v)).map(_.distinctBy(t => (t._1, t._2)))
       .suchThat(_.nonEmpty)) { rows =>
       val df = rows.toDF("h", "id", "v")
-      val got = graft.ops.PrefixSum.cumsum(df, Seq("h", "id"), "v", "cs", 4)
+      val got = graft.ops.PrefixSum.cumsum(df, Seq("h", "id"), "v", "cs")
         .select("h", "id", "cs")
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
       spark.catalog.clearCache()
@@ -371,10 +409,21 @@ object GraftProperties extends Properties("graft") {
     forAll(qRowsGen) { case (rows, p) =>
       val df = rows.toDF("g", "v")
       val got = graft.ops.Quantiles
-        .quantileCont(df, Seq("g"), "v", Seq("q" -> p), numParts = 3)
+        .quantileCont(df, Seq("g"), "v", Seq("q" -> p))
         .orderBy("g").collect().map(r => (r.getInt(0), r.getDouble(1)))
       val want = df.groupBy("g").agg(expr(s"percentile(v, ${p}d)").as("q"))
         .orderBy("g").collect().map(r => (r.getInt(0), r.getDouble(1)))
+      got.toSeq == want.toSeq
+    }
+
+  // The global form on input with no non-NULL value: no candidate row,
+  // so every percentile is NULL, as Spark's `percentile` returns.
+  property("Quantiles.quantileCont global, empty or all-NULL == percentile") =
+    forAll(Gen.choose(0, 5), Gen.oneOf(0.0, 0.37, 0.5, 1.0)) { (n, p) =>
+      val df = Seq.fill(n)(Option.empty[Double]).toDF("v")
+      val got = graft.ops.Quantiles
+        .quantileCont(df, Nil, "v", Seq("q" -> p)).collect()
+      val want = df.agg(expr(s"percentile(v, ${p}d)").as("q")).collect()
       got.toSeq == want.toSeq
     }
 

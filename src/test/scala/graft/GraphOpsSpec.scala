@@ -75,13 +75,13 @@ class GraphOpsSpec extends AnyFunSuite {
   }
 
   test("RunningMax.cummaxExclusive matches the sequential definition") {
-    // Random-ish values over a unique key, 4 range partitions so the
-    // cross-partition offset path is really exercised; compare against
-    // the single-partition global-window form of the same definition.
+    // Random-ish values over a unique key, over the 16 ranges the 2-core
+    // test session derives, so the cross-range offset path is really
+    // exercised; compare against the sequential form of the definition.
     val rows = (1 to 200).map(i => (i.toLong, ((i * 37) % 89).toLong))
     val df = rows.toDF("k", "v")
     val got = graft.ops.RunningMax
-      .cummaxExclusive(df, Seq("k"), "v", "cm", numParts = 4)
+      .cummaxExclusive(df, Seq("k"), "v", "cm")
       .select("k", "cm").as[(Long, Option[Long])].collect().toMap
     var best = Option.empty[Long]
     rows.foreach { case (k, v) =>

@@ -26,8 +26,7 @@ class QuantilesSpec extends AnyFunSuite {
 
   test("grouped quantileCont == Spark percentile, all percentages") {
     val got = graft.ops.Quantiles
-      .quantileCont(df, Seq("g"), "v", ps, numParts = 4,
-        countCol = Some("n"))
+      .quantileCont(df, Seq("g"), "v", ps, countCol = Some("n"))
       .orderBy("g").collect()
     val want = df.groupBy("g").agg(
         ps.map { case (nm, p) =>
@@ -50,8 +49,7 @@ class QuantilesSpec extends AnyFunSuite {
 
   test("global (ungrouped) quantileCont == Spark percentile") {
     val got = graft.ops.Quantiles
-      .quantileCont(df, Nil, "v", Seq("med" -> 0.5, "p75" -> 0.75),
-        numParts = 4)
+      .quantileCont(df, Nil, "v", Seq("med" -> 0.5, "p75" -> 0.75))
       .collect().head
     val want = df.agg(expr("percentile(v, 0.5d)"),
       expr("percentile(v, 0.75d)")).collect().head
@@ -62,7 +60,7 @@ class QuantilesSpec extends AnyFunSuite {
   test("single-row group: every percentile is the value itself") {
     val got = graft.ops.Quantiles
       .quantileCont(df.filter($"g" === "c"), Seq("g"), "v",
-        Seq("p37" -> 0.37), numParts = 4)
+        Seq("p37" -> 0.37))
       .collect().head
     assert(got.getDouble(1) === 42.0)
   }
@@ -70,8 +68,7 @@ class QuantilesSpec extends AnyFunSuite {
   test("integral column interpolates in double like percentile") {
     val ints = Seq(("x", 1L), ("x", 2L), ("x", 100L)).toDF("g", "v")
     val got = graft.ops.Quantiles
-      .quantileCont(ints, Seq("g"), "v", Seq("p50" -> 0.5, "p75" -> 0.75),
-        numParts = 2)
+      .quantileCont(ints, Seq("g"), "v", Seq("p50" -> 0.5, "p75" -> 0.75))
       .collect().head
     val want = ints.groupBy("g")
       .agg(expr("percentile(v, 0.5d)"), expr("percentile(v, 0.75d)"))
