@@ -9,8 +9,11 @@ import graft.ops.{Dedup, Scalars}
   * never-loaded CircuitLocation stub), with the *intended* per-table
   * semantics documented in SURVEY §2 (not the bugs — §7.4 risk 7). A user
   * of the reference runs exactly this shape daily; here each table is one
-  * lazy DataFrame lineage (scan-share + column pruning via Catalyst)
-  * instead of 16 separate CSV re-reads and per-row Python loops.
+  * lazy DataFrame lineage over the CSV. Each table's write scans the CSV
+  * itself, pruned by Catalyst to that table's columns (a build reads the
+  * file ~15 times, once per populated table), and [[run]] and
+  * [[runIncremental]] run the 16 writes concurrently, the way the
+  * reference's `CompleteETL` DAG runs its table tasks side by side.
   *
   * Dedup fidelity (SURVEY §2.3): the reference sorts by key and keeps the
   * first-seen row, i.e. first in *file order* among equal keys. The
@@ -256,28 +259,73 @@ object F1Pipeline {
   }
 
   /** The reference's entire daily job in one call (every DAG in
-    * `airflow/dags/` re-expressed): read the wide CSV once, build all 16
-    * tables, write each as parquet under `outDir/<Table>`. Overwrite mode
-    * subsumes the reference's hand-run `DELETE FROM` resets
-    * (`DDL Final.sql:338-352`); rerunning is idempotent. This is the
-    * switch-over entry point for a user of the reference. */
+    * `airflow/dags/` re-expressed): build all 16 tables from the wide
+    * CSV and write each as parquet under `outDir/<Table>`, concurrently.
+    * Overwrite mode subsumes the reference's hand-run `DELETE FROM`
+    * resets (`DDL Final.sql:338-352`); rerunning is idempotent. This is
+    * the switch-over entry point for a user of the reference. */
   def run(spark: org.apache.spark.sql.SparkSession, csvPath: String,
       outDir: String, refYear: Int = 2026): Unit =
     buildAndWrite(spark, csvPath, refYear) { (t, df) =>
       graft.core.Sinks.parquet(df, s"$outDir/$t")
     }
 
-  /** Build every table from the CSV at `csvPath` and hand each to
-    * `write`. The persists made while building (PrefixSum's input) are
-    * released after the LAST write, because the cache matches a CSV scan
-    * by plan, not content: a later run over a new file at the same path
-    * would otherwise read the old rows. */
+  /** Build every table from the CSV at `csvPath` on the calling thread,
+    * then hand each to `write` on a pool of min(16, the context's default
+    * parallelism) threads, so the tables' small jobs run side by side
+    * instead of one table after another. `PitStop` goes first: its
+    * ordered scan is the longest chain of jobs. Every write runs under a
+    * copy of the caller's Spark local properties (job tags, job group,
+    * scheduler pool), so its jobs are attributed as the caller's own.
+    *
+    * If writes fail, the others still run to the end (a partial
+    * [[runIncremental]] converges on re-run through its anti-join guard);
+    * then the first failure in write order is thrown, naming its table,
+    * with the rest attached as suppressed. No pool thread outlives the
+    * call. The persists made while building (PrefixSum's input) are
+    * released after every write has returned, because the cache matches
+    * a CSV scan by plan, not content: a later run over a new file at the
+    * same path would otherwise read the old rows. */
   private def buildAndWrite(spark: org.apache.spark.sql.SparkSession,
       csvPath: String, refYear: Int)(write: (String, DataFrame) => Unit): Unit = {
     val (tables, persisted) = graft.core.Cleanup.track(
       buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear))
-    try tables.foreach { case (t, df) => write(t, df) }
+    val order = "PitStop" +: tables.keys.filter(_ != "PitStop").toSeq.sorted
+    try writeConcurrently(spark.sparkContext, order.map(t => t -> tables(t)), write)
     finally persisted.foreach(_.unpersist())
+  }
+
+  private def writeConcurrently(sc: org.apache.spark.SparkContext,
+      tables: Seq[(String, DataFrame)], write: (String, DataFrame) => Unit): Unit = {
+    val props = copyOf(org.apache.spark.GraftContextBridge.localProperties(sc))
+    val next = new java.util.concurrent.atomic.AtomicInteger
+    val failed = new Array[Throwable](tables.size)
+    val pool = Seq.tabulate(math.min(tables.size, sc.defaultParallelism)) { i =>
+      new Thread(() => {
+        var k = next.getAndIncrement()
+        while (k < tables.size) {
+          val (t, df) = tables(k)
+          // a fresh copy per write: the write's SQL execution id goes in it
+          org.apache.spark.GraftContextBridge.setLocalProperties(sc, copyOf(props))
+          try write(t, df) catch { case e: Throwable => failed(k) = e }
+          k = next.getAndIncrement()
+        }
+      }, s"F1Pipeline-write-$i")
+    }
+    try pool.foreach(_.start())
+    finally pool.foreach(_.join())
+    val errors = tables.indices.filter(failed(_) != null).map(k =>
+      new RuntimeException(s"F1Pipeline: writing ${tables(k)._1} failed: " +
+        failed(k).getMessage, failed(k)))
+    errors.headOption.foreach { e => errors.tail.foreach(e.addSuppressed); throw e }
+  }
+
+  /** A detached copy, defaults included (a thread's inherited local
+    * properties sit in the defaults of an empty `Properties`). */
+  private def copyOf(p: java.util.Properties): java.util.Properties = {
+    val c = new java.util.Properties
+    p.stringPropertyNames.forEach(k => c.setProperty(k, p.getProperty(k)))
+    c
   }
 
   /** Natural key per star table — the upsert-guard join keys for

@@ -58,7 +58,7 @@ object Quantiles {
     // carries NO join (a constant-key equi join constant-folds back into
     // a nested loop, tripping the engine-wide no-nested-loop plan pins).
     // On empty input `__qn` is NULL: no row is a candidate and every
-    // percentile reads NULL, as `percentile` does.
+    // percentile reads NULL, as `percentile` does; the count reads 0.
     val ranked = (if (groupCols.nonEmpty) {
       val grp = cum.groupBy(groupCols.map(col): _*)
         .agg(min(col("__qcum") - col("__qcnt")).as("__qoff"),
@@ -94,7 +94,8 @@ object Quantiles {
           + (h - floor(h).cast("double")) * col(s"__qv1_$nm"))
         .as(nm)
     }
-    val cnt = countCol.map(c => col("__qn").as(c)).toSeq
+    val n = if (groupCols.nonEmpty) col("__qn") else coalesce(col("__qn"), lit(0L))
+    val cnt = countCol.map(c => n.as(c)).toSeq
     sel.select(groupCols.map(col) ++ outCols ++ cnt: _*)
   }
 }

@@ -417,13 +417,16 @@ object GraftProperties extends Properties("graft") {
     }
 
   // The global form on input with no non-NULL value: no candidate row,
-  // so every percentile is NULL, as Spark's `percentile` returns.
+  // so every percentile is NULL, as Spark's `percentile` returns, and the
+  // requested non-NULL count is 0, as `count(v)` returns.
   property("Quantiles.quantileCont global, empty or all-NULL == percentile") =
     forAll(Gen.choose(0, 5), Gen.oneOf(0.0, 0.37, 0.5, 1.0)) { (n, p) =>
       val df = Seq.fill(n)(Option.empty[Double]).toDF("v")
       val got = graft.ops.Quantiles
-        .quantileCont(df, Nil, "v", Seq("q" -> p)).collect()
-      val want = df.agg(expr(s"percentile(v, ${p}d)").as("q")).collect()
+        .quantileCont(df, Nil, "v", Seq("q" -> p), countCol = Some("n"))
+        .collect()
+      val want = df.agg(expr(s"percentile(v, ${p}d)").as("q"),
+        count(col("v")).as("n")).collect()
       got.toSeq == want.toSeq
     }
 
