@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, Scalars}
 
+import scala.util.control.NonFatal
+
 /** The reference's full ETL surface: one wide denormalized CSV → the 16
   * star-schema tables of `DDL Final.sql` (15 populated + the declared-but-
   * never-loaded CircuitLocation stub), with the *intended* per-table
@@ -276,13 +278,17 @@ object F1Pipeline {
     * instead of one table after another. `PitStop` goes first: its
     * ordered scan is the longest chain of jobs. Every write runs under a
     * copy of the caller's Spark local properties (job tags, job group,
-    * scheduler pool), so its jobs are attributed as the caller's own.
+    * scheduler pool), so its jobs are attributed as the caller's own,
+    * plus a job tag of its own.
     *
     * If writes fail, the others still run to the end (a partial
-    * [[runIncremental]] converges on re-run through its anti-join guard);
-    * then the first failure in write order is thrown, naming its table,
-    * with the rest attached as suppressed. No pool thread outlives the
-    * call. The persists made while building (PrefixSum's input) are
+    * [[runIncremental]] converges on re-run through its anti-join guard).
+    * A failed write's remaining jobs (found by its own tag) are cancelled
+    * and waited for, so no job of the call is active when it returns.
+    * Then the first failure in write order is thrown, naming its table,
+    * with the rest attached as suppressed; a fatal error is rethrown as
+    * it is. No pool thread outlives the call, even if the caller is
+    * interrupted. The persists made while building (PrefixSum's input) are
     * released after every write has returned, because the cache matches
     * a CSV scan by plan, not content: a later run over a new file at the
     * same path would otherwise read the old rows. */
@@ -297,7 +303,9 @@ object F1Pipeline {
 
   private def writeConcurrently(sc: org.apache.spark.SparkContext,
       tables: Seq[(String, DataFrame)], write: (String, DataFrame) => Unit): Unit = {
-    val props = copyOf(org.apache.spark.GraftContextBridge.localProperties(sc))
+    val bridge = org.apache.spark.GraftContextBridge
+    val props = copyOf(bridge.localProperties(sc))
+    val call = java.util.UUID.randomUUID()
     val next = new java.util.concurrent.atomic.AtomicInteger
     val failed = new Array[Throwable](tables.size)
     val pool = Seq.tabulate(math.min(tables.size, sc.defaultParallelism)) { i =>
@@ -305,19 +313,40 @@ object F1Pipeline {
         var k = next.getAndIncrement()
         while (k < tables.size) {
           val (t, df) = tables(k)
+          val tag = s"F1Pipeline-$call-$t"
           // a fresh copy per write: the write's SQL execution id goes in it
-          org.apache.spark.GraftContextBridge.setLocalProperties(sc, copyOf(props))
-          try write(t, df) catch { case e: Throwable => failed(k) = e }
+          bridge.setLocalProperties(sc, copyOf(props))
+          sc.addJobTag(tag)
+          try write(t, df) catch { case e: Throwable =>
+            failed(k) = e
+            // adaptive execution cancels a failed query's other stage jobs
+            // without waiting for them: end them before the call can return
+            try bridge.cancelJobsWithTagAndWait(sc, tag, s"writing $t failed")
+            catch { case NonFatal(c) => e.addSuppressed(c) }
+          }
           k = next.getAndIncrement()
         }
       }, s"F1Pipeline-write-$i")
     }
     try pool.foreach(_.start())
-    finally pool.foreach(_.join())
-    val errors = tables.indices.filter(failed(_) != null).map(k =>
+    finally joinAll(pool)
+    failed.find(e => e != null && !NonFatal(e)).foreach(e => throw e)
+    val named = tables.indices.filter(failed(_) != null).map(k =>
       new RuntimeException(s"F1Pipeline: writing ${tables(k)._1} failed: " +
         failed(k).getMessage, failed(k)))
-    errors.headOption.foreach { e => errors.tail.foreach(e.addSuppressed); throw e }
+    named.headOption.foreach { e => named.tail.foreach(e.addSuppressed); throw e }
+  }
+
+  /** Join every thread, even if the caller is interrupted meanwhile (the
+    * build's persists must outlive every write); the interrupt is
+    * restored once all have ended. */
+  private def joinAll(threads: Seq[Thread]): Unit = {
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread.interrupt()
   }
 
   /** A detached copy, defaults included (a thread's inherited local

@@ -7,16 +7,16 @@ Run from the repository root:
     python3 tools/perf_ab.py --workload f1_etl --seeds 21-30
     python3 tools/perf_ab.py --workload lakehouse_ops --seeds 5,6,7 --base HEAD~1
 
-Each pair runs `python3 perfbench/run.py --workload W --seed S --seconds X
---trace T` once in a checkout of the base commit (extracted with `git
-archive`: the committed files only, as the benchmark itself runs them) and
-once in the working tree, the base first in even pairs and the working
-tree first in odd ones. It prints, per end-to-end metric of
-BENCHMARK.json, each side's median and quartiles, the median difference
-and how many pairs the working tree won; then one line per run with its
-cycle counts (the record's `kinds`), `peak_rss_mb` and `steal_share`.
-`--json FILE` also writes every run's figures. The tool only invokes
-perfbench/run.py and changes nothing under perfbench/.
+Each pair runs the BENCHMARK.json command, `python3 perfbench/run.py
+--workload W --seed S --seconds X --trace 0`, once in a checkout of the
+base commit (extracted with `git archive`: the committed files only, as
+the benchmark itself runs them) and once in the working tree, the base
+first in even pairs and the working tree first in odd ones. It prints, per
+end-to-end metric of BENCHMARK.json, each side's median and quartiles, the
+median difference and how many pairs the working tree won; then one line
+per run with its cycle counts (the record's `kinds`), `peak_rss_mb` and
+`steal_share`. The tool only invokes perfbench/run.py and changes nothing
+under perfbench/.
 """
 import argparse
 import json
@@ -66,10 +66,9 @@ def base_checkout(rev, work):
     return path, commit
 
 
-def run_once(checkout, workload, seed, seconds, trace):
+def run_once(checkout, workload, seed, seconds):
     cmd = ["python3", "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds),
-           "--trace", str(trace)]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     t0 = time.time()
     p = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE,
                        stderr=subprocess.PIPE, text=True,
@@ -127,11 +126,9 @@ def main(argv=None):
                     help="the commit to compare against (default HEAD)")
     ap.add_argument("--seconds", type=float, default=None,
                     help="default: run_seconds of BENCHMARK.json")
-    ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--work", default=None,
                     help="where the base checkout goes (default: a new "
                          "temporary directory); reused across calls")
-    ap.add_argument("--json", default=None, help="also write every run here")
     a = ap.parse_args(argv)
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         bench = json.load(f)
@@ -145,8 +142,7 @@ def main(argv=None):
         order = ["base", "change"] if i % 2 == 0 else ["change", "base"]
         pair = {"pair": i, "seed": seed, "first": order[0]}
         for side in order:
-            pair[side] = run_once(sides[side], a.workload, seed, seconds,
-                                  a.trace)
+            pair[side] = run_once(sides[side], a.workload, seed, seconds)
             r = pair[side]
             sys.stderr.write(
                 f"[perf_ab] pair {i} seed {seed} {side}: "
@@ -157,7 +153,7 @@ def main(argv=None):
         runs.append(pair)
     table = summarize(runs, bench["end_to_end"])
     print(f"workload {a.workload}: base {commit[:12]} vs working tree, "
-          f"{len(runs)} pairs, --seconds {seconds:g} --trace {a.trace}")
+          f"{len(runs)} pairs, --seconds {seconds:g} --trace 0")
     print(f"{'metric':<12} {'base q1/median/q3':>26} "
           f"{'change q1/median/q3':>26} {'median diff':>12} {'wins':>6}")
     for t in table:
@@ -178,11 +174,6 @@ def main(argv=None):
                   f"{r['first'] == side!s:<6} {x['correct']!s:<8} "
                   f"{m.get('op_p50_s', 0):>8.3f} {m.get('peak_rss_mb', 0):>12.0f} "
                   f"{x['steal_share'] or 0:>12.3f}  {json.dumps(x['kinds'])}")
-    if a.json:
-        with open(a.json, "w") as f:
-            json.dump({"workload": a.workload, "base": commit,
-                       "seconds": seconds, "trace": a.trace, "runs": runs,
-                       "summary": table}, f, indent=1)
 
 
 if __name__ == "__main__":
