@@ -36,12 +36,16 @@ object Cleanup {
 
   /** Persist `df` and register it for release after the enclosing
     * tracked query's first terminal action. Outside [[track]] this is
-    * just persist (caller owns the lifetime). */
+    * just persist (caller owns the lifetime). Only a persist this call
+    * creates is registered: the cache matches frames by plan, so when
+    * another caller already cached an equal frame, releasing it here
+    * would drop that caller's cache entry. */
   def persisted(df: DataFrame,
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK): DataFrame = {
+    val fresh = df.storageLevel == StorageLevel.NONE
     df.persist(level)
     val buf = tracking.get()
-    if (buf != null) buf += df
+    if (buf != null && fresh) buf += df
     df
   }
 

@@ -400,7 +400,8 @@ object TxLog {
   private def maybeCheckpoint(dir: String, v: Int): Unit =
     if (v > 0 && v % CheckpointInterval == 0)
       try checkpoint(dir, Some(v)): Unit
-      catch { case _: Throwable => () } // best-effort; never fails a commit
+      catch { // best-effort; never fails a commit
+        case scala.util.control.NonFatal(_) => () }
 
   /** Live data files at `asOf` (default: latest), by checkpointed log
     * replay. */
@@ -625,8 +626,7 @@ object TxLog {
     }.toMap
 
   /** ALL per-file zone maps at once: file → (col → [min, max]) from
-    * the log's add lines — the connector's plan-time pruning input
-    * ([[graft.sources.TxLogDataSource]] reads it once per scan). */
+    * the log's add lines (pruning reads them through [[fileMetas]]). */
   def fileStatsAll(dir: String,
       asOf: Option[Int] = None): Map[String, Map[String, (Long, Long)]] =
     state(dir, asOf).live.values.map { l =>
@@ -634,22 +634,18 @@ object TxLog {
       f -> stats
     }.toMap
 
-  /** ONE log fold serving every pruning consumer at once: the ordered
-    * live-file list plus all three per-file metadata maps (long zone
-    * maps, string zone maps, partition values). The per-map accessors
-    * above each replay the log themselves — a filtered catalog scan
-    * calling all of them (review r12) paid five folds where this pays
-    * one. */
-  def pruneBundle(dir: String, asOf: Option[Int] = None)
-      : (Seq[String], Map[String, Map[String, (Long, Long)]],
-         Map[String, Map[String, (String, String)]],
-         Map[String, Map[String, String]]) = {
-    val parsed = state(dir, asOf).live.values.toSeq.map(parseAdd)
-    (parsed.map(_._1),
-      parsed.map(p => p._1 -> p._3).toMap,
-      parsed.map(p => p._1 -> p._4).toMap,
-      parsed.map(p => p._1 -> p._2).toMap)
-  }
+  /** The live files at `asOf` with their recorded pruning metadata
+    * ([[FilePrune.FileMeta]]), in log order, from ONE log fold — the
+    * input of every [[FilePrune]] caller. */
+  private[graft] def fileMetas(dir: String, asOf: Option[Int] = None)
+      : Seq[(String, FilePrune.FileMeta)] =
+    metasOf(state(dir, asOf))
+
+  private def metasOf(st: LogState): Seq[(String, FilePrune.FileMeta)] =
+    st.live.toSeq.map { case (f, l) =>
+      val (_, pv, zm, sm) = parseAdd(l)
+      f -> FilePrune.FileMeta(pv, zm, sm)
+    }
 
   /** ALL per-file STRING zone maps (binary UTF8 [min, max]) — the
     * string-column counterpart of [[fileStatsAll]], written by
@@ -677,12 +673,12 @@ object TxLog {
     * Returns (kept, total live) so callers can assert real pruning. */
   def pruneSnapshot(dir: String, statsCol: String, lo: Long, hi: Long,
       asOf: Option[Int] = None): (Seq[String], Int) = {
-    val live = snapshot(dir, asOf)
-    val stats = fileStats(dir, statsCol, asOf)
-    val kept = live.filter { f =>
-      stats.get(f).forall { case (fLo, fHi) => fLo <= hi && lo <= fHi }
-    }
-    (kept, live.size)
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
+    val c = UnresolvedAttribute.quoted(statsCol)
+    val files = fileMetas(dir, asOf)
+    (FilePrune.surviving(files, Seq(GreaterThanOrEqual(c, Literal(lo)),
+      LessThanOrEqual(c, Literal(hi)))), files.size)
   }
 
   /** CREATE (version 0) — refuses on an existing table. */
@@ -1628,16 +1624,11 @@ object TxLog {
     * or footer IO. Returns (kept, total live). */
   def prunePartitions(dir: String, filter: Map[String, String],
       asOf: Option[Int] = None): (Seq[String], Int) = {
-    val live = snapshot(dir, asOf)
-    val pv = partitionValues(dir, asOf)
-    val kept = live.filter { f =>
-      val vals = pv.getOrElse(f, Map.empty)
-      // a recorded sentinel (null OR "" — the dynamic-partition writer
-      // conflates them) yields no information: conservative keep
-      filter.forall { case (c, v) =>
-        vals.get(c).filter(_ != MetaSurvive.NullPartition).forall(_ == v) }
-    }
-    (kept, live.size)
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{EqualTo, Literal}
+    val files = fileMetas(dir, asOf)
+    (FilePrune.surviving(files, filter.toSeq.map { case (c, v) =>
+      EqualTo(UnresolvedAttribute.quoted(c), Literal(v)) }), files.size)
   }
 
   /** Partition-pruned read: scan ONLY the files whose log-recorded
@@ -1996,13 +1987,6 @@ object TxLog {
     } finally { freshP.unpersist(): Unit }
   }
 
-  /** Live files holding at least one row surviving `matcher` — found
-    * in ONE distributed scan over the whole live set via
-    * `_metadata.file_name` (per-file probe jobs would be 100k
-    * driver-sequential jobs on a 100k-file table; this is one job,
-    * and only the matching FILE NAME list reaches the driver). At
-    * real scale the scan itself is first pruned by log-resident
-    * zone maps ([[pruneSnapshot]]) — the protocol is unchanged. */
   /** Writer-side metadata pruning: split the live set into
     * (PROVEN-all-match, candidate) file lists for a DML predicate —
     * pure log metadata, zero data IO. A file lands in neither list
@@ -2012,187 +1996,29 @@ object TxLog {
     * (the Delta partition-aligned DELETE fast path: drop the file from
     * the log, no read, no rewrite). On a 100 TB date-partitioned table
     * `DELETE WHERE day = X` must be O(that partition's metadata), not
-    * a full-table probe scan. Unparseable/unrecognized predicates
-    * degrade to (nothing proven, all live candidates). */
+    * a full-table probe scan. The walk is [[FilePrune]]; a predicate
+    * that does not convert degrades to (nothing proven, all live
+    * candidates). */
   private def classifyByPredicate(st: LogState,
       pred: org.apache.spark.sql.Column): (Seq[String], Seq[String]) = {
-    val all = st.live.keys.toSeq
     val expr =
       try Some(org.apache.spark.sql.GraftSqlBridge.exprOf(pred))
       catch { case scala.util.control.NonFatal(_) => None }
-    expr match {
-      case None => (Seq.empty, all)
-      case Some(e) =>
-        val n = MetaSurvive.normalize(e)
-        val metas = st.live.toSeq.map { case (f, l) =>
-          val (_, pv, zm, sm) = parseAdd(l)
-          f -> MetaSurvive.FileMeta(pv, zm, sm)
-        }
-        val surviving = metas.filter { case (_, m) =>
-          MetaSurvive.survives(m, n) }
-        val (proven, candidates) = surviving.partition { case (_, m) =>
-          MetaSurvive.provesAll(m, n) }
-        (proven.map(_._1), candidates.map(_._1))
-    }
+    // the recorded schema types the Column API's unresolved attributes
+    val types = st.schemaJson.toSeq.flatMap(j =>
+      org.apache.spark.sql.types.DataType.fromJson(j)
+        .asInstanceOf[org.apache.spark.sql.types.StructType].fields)
+      .map(f => f.name -> f.dataType).toMap
+    expr.fold((Seq.empty[String], st.live.keys.toSeq))(
+      FilePrune.classify(metasOf(st), _, types))
   }
 
-  /** The expression walk behind [[classifyByPredicate]] — the
-    * writer-side twin of the catalog scan's
-    * [[graft.sources.TxLogFileIndex]] survival walk, extended to match
-    * UNRESOLVED attributes (the Column API's `col("x") === 5` never
-    * passes an analyzer) and to PROVE full-file matches. Three-valued
-    * and conservative: any unrecognized shape survives and proves
-    * nothing. */
-  private object MetaSurvive {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions._
-    import org.apache.spark.unsafe.types.UTF8String
-
-    /** Spark's dynamic-partition rendering of NULL **and empty-string**
-      * values: a recorded sentinel is AMBIGUOUS (null or ""), so it
-      * yields no information — never prune on it, never prove with it. */
-    val NullPartition = "__HIVE_DEFAULT_PARTITION__"
-
-    final case class FileMeta(pv: Map[String, String],
-        zm: Map[String, (Long, Long)], sm: Map[String, (String, String)])
-
-    private object AttrName {
-      def unapply(e: Expression): Option[String] = e match {
-        case a: AttributeReference => Some(a.name)
-        case u: UnresolvedAttribute => Some(u.nameParts.last)
-        case _ => None
-      }
-    }
-
-    /** The Column DSL never builds binary comparison nodes — `=== < >
-      * && isin` all arrive as catalyst `UnresolvedFunction` calls that
-      * only the analyzer would rewrite. Fold the fixed arithmetic of
-      * this walk back into real nodes; anything unrecognized stays
-      * as-is (the walk treats it conservatively). */
-    def normalize(e: Expression): Expression = e match {
-      case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-          if f.nameParts.size == 1 && !f.isDistinct =>
-        val args = f.arguments.map(normalize)
-        (f.nameParts.head.toLowerCase(java.util.Locale.ROOT), args) match {
-          case ("=" | "==", Seq(l, r)) => EqualTo(l, r)
-          case ("<", Seq(l, r)) => LessThan(l, r)
-          case ("<=", Seq(l, r)) => LessThanOrEqual(l, r)
-          case (">", Seq(l, r)) => GreaterThan(l, r)
-          case (">=", Seq(l, r)) => GreaterThanOrEqual(l, r)
-          case ("and", Seq(l, r)) => And(l, r)
-          case ("or", Seq(l, r)) => Or(l, r)
-          case ("in", v +: rest) if rest.nonEmpty => In(v, rest)
-          case ("isnull", Seq(v)) => IsNull(v)
-          case ("isnotnull", Seq(v)) => IsNotNull(v)
-          case _ => f
-        }
-      case other => other.mapChildren(normalize)
-    }
-
-    /** `cast(col AS string)` renderings that are injective on their
-      * type — the only values partition-marker equality may use. */
-    private def render(v: Any): Option[String] = v match {
-      case null => None
-      case u: UTF8String => Some(u.toString)
-      case s: String => Some(s)
-      case l: Long => Some(l.toString)
-      case i: Int => Some(i.toString)
-      case s: Short => Some(s.toString)
-      case b: Byte => Some(b.toString)
-      case b: Boolean => Some(b.toString)
-      case _ => None
-    }
-
-    private def asLong(v: Any): Option[Long] = v match {
-      case l: Long => Some(l)
-      case i: Int => Some(i.toLong)
-      case s: Short => Some(s.toLong)
-      case b: Byte => Some(b.toLong)
-      case _ => None
-    }
-
-    private def asU8(v: Any): Option[UTF8String] = v match {
-      case u: UTF8String => Some(u)
-      case s: String => Some(UTF8String.fromString(s))
-      case _ => None
-    }
-
-    private def eqSurvives(m: FileMeta, c: String, v: Any): Boolean = {
-      val zone = for { x <- asLong(v); (lo, hi) <- m.zm.get(c) }
-        yield lo <= x && x <= hi
-      val str = asU8(v).flatMap { u =>
-        m.sm.get(c).map { case (lo, hi) =>
-          UTF8String.fromString(lo).compareTo(u) <= 0 &&
-            u.compareTo(UTF8String.fromString(hi)) <= 0 }
-      }
-      val part = for {
-        s <- render(v); p <- m.pv.get(c) if p != NullPartition
-      } yield p == s
-      zone.getOrElse(true) && str.getOrElse(true) && part.getOrElse(true)
-    }
-
-    private def boundSurvives(m: FileMeta, c: String)
-        (pred: (Long, Long, Long) => Boolean)(v: Any): Boolean = {
-      val long = for { x <- asLong(v); (lo, hi) <- m.zm.get(c) }
-        yield pred(lo, hi, x)
-      val str = asU8(v).flatMap { u =>
-        m.sm.get(c).map { case (lo, hi) =>
-          pred(UTF8String.fromString(lo).compareTo(u).sign.toLong,
-            UTF8String.fromString(hi).compareTo(u).sign.toLong, 0L) }
-      }
-      long.orElse(str).getOrElse(true)
-    }
-
-    /** Can the file hold a row where `e` is TRUE? */
-    def survives(m: FileMeta, e: Expression): Boolean = e match {
-      case And(l, r) => survives(m, l) && survives(m, r)
-      case Or(l, r) => survives(m, l) || survives(m, r)
-      case EqualTo(AttrName(c), Literal(v, _)) => eqSurvives(m, c, v)
-      case EqualTo(Literal(v, _), AttrName(c)) => eqSurvives(m, c, v)
-      case In(AttrName(c), vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.isEmpty ||
-          vs.exists { case Literal(v, _) => eqSurvives(m, c, v) }
-      case GreaterThan(AttrName(c), Literal(v, _)) =>
-        boundSurvives(m, c)((_, hi, x) => hi > x)(v)
-      case GreaterThanOrEqual(AttrName(c), Literal(v, _)) =>
-        boundSurvives(m, c)((_, hi, x) => hi >= x)(v)
-      case LessThan(AttrName(c), Literal(v, _)) =>
-        boundSurvives(m, c)((lo, _, x) => lo < x)(v)
-      case LessThanOrEqual(AttrName(c), Literal(v, _)) =>
-        boundSurvives(m, c)((lo, _, x) => lo <= x)(v)
-      case GreaterThan(Literal(v, _), AttrName(c)) => // v > col ≡ col < v
-        boundSurvives(m, c)((lo, _, x) => lo < x)(v)
-      case GreaterThanOrEqual(Literal(v, _), AttrName(c)) =>
-        boundSurvives(m, c)((lo, _, x) => lo <= x)(v)
-      case LessThan(Literal(v, _), AttrName(c)) =>
-        boundSurvives(m, c)((_, hi, x) => hi > x)(v)
-      case LessThanOrEqual(Literal(v, _), AttrName(c)) =>
-        boundSurvives(m, c)((_, hi, x) => hi >= x)(v)
-      case IsNull(AttrName(c)) =>
-        // a non-sentinel recorded partition value means NO nulls
-        m.pv.get(c).forall(_ == NullPartition)
-      case _ => true
-    }
-
-    /** Is `e` provably TRUE for EVERY row of the file? Partition-value
-      * equality only — the single per-file fact strong enough to prove
-      * universally. Never proves through a sentinel (null vs "" is
-      * ambiguous) and never through a non-injective rendering. */
-    def provesAll(m: FileMeta, e: Expression): Boolean = e match {
-      case And(l, r) => provesAll(m, l) && provesAll(m, r)
-      case Or(l, r) => provesAll(m, l) || provesAll(m, r)
-      case EqualTo(AttrName(c), Literal(v, _)) => provedEq(m, c, v)
-      case EqualTo(Literal(v, _), AttrName(c)) => provedEq(m, c, v)
-      case In(AttrName(c), vs) if vs.forall(_.isInstanceOf[Literal]) =>
-        vs.exists { case Literal(v, _) => provedEq(m, c, v) }
-      case _ => false
-    }
-
-    private def provedEq(m: FileMeta, c: String, v: Any): Boolean =
-      render(v).exists(s =>
-        m.pv.get(c).exists(p => p != NullPartition && p == s))
-  }
-
+  /** Live files holding at least one row surviving `matcher` — found
+    * in ONE distributed scan over the whole live set via
+    * `_metadata.file_name` (per-file probe jobs would be 100k
+    * driver-sequential jobs on a 100k-file table; this is one job,
+    * and only the matching FILE NAME list reaches the driver). The
+    * DML writers first narrow `live` with [[classifyByPredicate]]. */
   private def affectedFiles(spark: SparkSession, dir: String,
       live: Seq[String], matcher: DataFrame => DataFrame): Seq[String] = {
     import org.apache.spark.sql.functions.col

@@ -65,7 +65,7 @@ class TxLogDmlRule(spark: SparkSession) extends Rule[LogicalPlan] {
                 Some((l.output, fi.dir))
               case _ => None
             }
-          case rr: graft.sources.TxLogRowRelation =>
+          case rr: graft.sources.TxLogRelation =>
             require(!rr.pinned,
               "cannot run DML against a versionAsOf/timestampAsOf snapshot")
             Some((l.output, rr.dir))
@@ -477,7 +477,7 @@ object TxLogDml {
       // RELATION cache (where the frozen FileIndex lives) needs the
       // session-catalog invalidation
       GraftSqlBridge.invalidateRelationCache(spark)
-    } catch { case _: Throwable => () }
+    } catch { case scala.util.control.NonFatal(_) => () }
 
   private[plans] def rowAction(tgt: Seq[Attribute],
       a: MergeAction): TxLogRowAction = a match {

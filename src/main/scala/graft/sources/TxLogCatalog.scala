@@ -53,7 +53,8 @@ class TxLogCatalog extends TableCatalog
       .foldLeft(new File(base))(new File(_, _)).toString
 
   private def exists(dir: String): Boolean =
-    try TxLog.currentVersion(dir) >= 0 catch { case _: Throwable => false }
+    try TxLog.currentVersion(dir) >= 0
+    catch { case scala.util.control.NonFatal(_) => false }
 
   override def listTables(namespace: Array[String]): Array[Identifier] = {
     val nsDir = namespace.foldLeft(new File(base))(new File(_, _))
@@ -525,7 +526,9 @@ class TxLogTable(val dir: String, ident: String,
   * filters; the engine re-expresses them as the one predicate its
   * replaceWhere machinery prunes, probes, and validates with.
   * Unsupported shapes REFUSE loudly — a silently-widened overwrite
-  * scope would delete rows the statement never named. */
+  * scope would delete rows the statement never named. [[TxLogRelation]]
+  * converts its pushed filters the same way for file pruning, where a
+  * filter that does not convert keeps every file. */
 private[sources] object TxLogFilterColumns {
   import org.apache.spark.sql.functions.{col, lit, not}
   import org.apache.spark.sql.sources._
@@ -791,12 +794,11 @@ class TxLogDataWriter(dir: String, stem: String,
   override def close(): Unit = ()
 }
 
-/** Column-pruning scan builder → [[V1Scan]] with log-resident stats.
-  * Filters are left to Spark's post-scan evaluation (the V1 relation
-  * path re-evaluates everything); plan-time FILE pruning on zone maps
-  * belongs to the path-based connector's [[TxLogFileIndex]] — a
-  * catalog read of a DV-bearing table must stay on the merge-on-read
-  * plan anyway. */
+/** Column- and filter-pushing scan builder → [[V1Scan]] with
+  * log-resident stats. The scan is a [[TxLogRelation]] over the
+  * merge-on-read plan (a catalog read of a DV-bearing table must stay on
+  * it anyway), pruning files on the pushed filters; Spark still
+  * re-evaluates every row. */
 class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
     asOf: Option[Int] = None,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
@@ -817,8 +819,8 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
 
   /** Filters are accepted for PLAN-TIME FILE PRUNING on the
     * log-resident zone maps / partition values (the same
-    * [[TxLogZoneMaps]] tests the path connector's FileIndex applies) —
-    * and ALL of them are returned as residual, so Spark re-evaluates
+    * [[graft.core.FilePrune]] walk the path connector's FileIndex runs)
+    * — and ALL of them are returned as residual, so Spark re-evaluates
     * every row exactly as before: pruning can only skip files that
     * provably hold no match. */
   override def pushFilters(
@@ -836,8 +838,8 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
 
     override def toV1TableScan[T <: BaseRelation with TableScan](
         context: SQLContext): T =
-      new TxLogCatalogRelation(context, dir, required, asOf, pushed)
-        .asInstanceOf[T]
+      new TxLogRelation(context, dir, asOf, required = Some(required),
+        pushed = pushed).asInstanceOf[T]
 
     /** `readStream.table("lake.t")` — the engine routes here when the
       * table declares MICRO_BATCH_READ. */
@@ -991,52 +993,5 @@ object TxLogMicroBatchStream {
       pushedAggregate = None,
       partitionFilters = Seq.empty,
       dataFilters = Seq.empty).toBatch
-  }
-}
-
-/** The V1 leg of the catalog scan: the DV-correct [[TxLog.read]] plan,
-  * pruned to the pushed columns — and to the pushed FILTERS' surviving
-  * files via the log-resident zone maps ([[TxLogZoneMaps]], shared
-  * with the path connector), so by-name reads skip the same file IO
-  * path reads do. [[TxLogSourceIO]] records kept/total for the spec. */
-class TxLogCatalogRelation(override val sqlContext: SQLContext,
-    dir: String, required: StructType, asOf: Option[Int] = None,
-    filters: Array[org.apache.spark.sql.sources.Filter] = Array.empty)
-    extends BaseRelation with TableScan {
-  override def schema: StructType = required
-  override def needConversion: Boolean = false
-  override def buildScan(): org.apache.spark.rdd.RDD[org.apache.spark.sql.Row] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val spark = sqlContext.sparkSession
-    // PIN the version once and thread it through every read below: the
-    // prune decision and the read must see the SAME snapshot — with
-    // asOf=None re-resolved per call, a commit landing between them
-    // intersects a stale kept-list with a new live set (review r12 #1:
-    // a concurrent OPTIMIZE made a matching scan return 0 rows)
-    val version = asOf.getOrElse(TxLog.currentVersion(dir))
-    val zones = new TxLogZoneMaps(dir, version) // one fold: live + maps
-    val live = zones.live
-    val kept =
-      if (filters.isEmpty || live.isEmpty) live
-      else live.filter(f =>
-        filters.forall(TxLogFilterPrune.survives(zones, f, _)))
-    TxLogSourceIO.lastKept.set(kept.size)
-    TxLogSourceIO.lastTotal.set(live.size)
-    val base =
-      if (live.isEmpty) TxLog.read(spark, dir, Some(version))
-      else if (kept.isEmpty) TxLog.read(spark, dir, Some(version)).limit(0)
-      else if (kept.size == live.size) TxLog.read(spark, dir, Some(version))
-      else TxLog.readPruned(spark, dir, kept, Some(version))
-    // the recorded union schema can name a column NO live file carries
-    // anymore (the last file holding it was deleted whole, without a
-    // rewrite) — null-backfill instead of failing the scan (review
-    // r11 #2.6, Delta's behavior)
-    val have = base.columns.toSet
-    val df = base.select(required.fields.toIndexedSeq.map { f =>
-      if (have(f.name)) col(f.name)
-      else lit(null).cast(f.dataType).as(f.name)
-    }: _*)
-    df.queryExecution.toRdd
-      .asInstanceOf[org.apache.spark.rdd.RDD[org.apache.spark.sql.Row]]
   }
 }

@@ -2,18 +2,17 @@ package graft.sources
 
 import java.io.File
 
-import graft.core.TxLog
+import graft.core.{FilePrune, TxLog}
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Row, SQLContext}
+import org.apache.spark.sql.{GraftSqlBridge, Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd, AttributeReference, EqualTo => CEqualTo, Expression, GreaterThan => CGt, GreaterThanOrEqual => CGe, LessThan => CLt, LessThanOrEqual => CLe, Literal, Or => COr}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, TableScan}
 import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `spark.read.format("txlog")` — the transaction-log table format
   * ([[graft.core.TxLog]]) as a first-class Spark data source, the same
@@ -32,18 +31,20 @@ import org.apache.spark.unsafe.types.UTF8String
   * with the stock parquet [[ParquetFileFormat]] — so the scan IS a
   * native vectorized parquet scan with column pruning, predicate
   * pushdown, and whole-stage codegen, and the connector's work is pure
-  * PLAN-TIME file pruning:
+  * PLAN-TIME file pruning: the scan's data filters go through
+  * [[graft.core.FilePrune]], the one walk every txlog scan and DML
+  * statement shares, which tests them against log-resident ZONE MAPS
+  * (`add`-line min/max) and PARTITION VALUES (`p:` markers) before any
+  * footer IO. A literal prunes only when its type is one the writer
+  * rendered exactly (integral or string against zone maps; integral,
+  * string or boolean against partition markers); DATE, TIMESTAMP,
+  * decimal and floating-point literals keep every file.
   *
-  *   - log-resident ZONE MAPS (`add`-line min/max triples —
-  *     [[TxLog.fileStatsAll]]) prune files against the scan's data
-  *     filters before any footer IO;
-  *   - log-resident PARTITION VALUES (`p:` markers) prune on equality
-  *     the same way.
-  *
-  * A snapshot carrying outstanding DELETION VECTORS (or an emptied
-  * table) falls back to a row-level relation wrapping the merge-on-read
-  * [[TxLog.read]] plan — correct on every snapshot, while the common
-  * DV-free path keeps the native scan.
+  * A snapshot carrying outstanding DELETION VECTORS (or an emptied or
+  * column-mapped table) falls back to [[TxLogRelation]], which wraps the
+  * merge-on-read [[TxLog.read]] plan and prunes through the same walk —
+  * correct on every snapshot, while the common DV-free path keeps the
+  * native scan.
   *
   * WRITE path (`CreatableRelationProvider`):
   * `df.write.format("txlog").mode(m).save(dir)` maps onto the
@@ -147,8 +148,7 @@ class TxLogDataSource extends RelationProvider
       parameters.get("startingVersion").map(_.trim.toInt).getOrElse(0),
       parameters.get("ignoreChanges").exists(_.trim.toBoolean),
       parameters.get("readChangeFeed").exists(_.trim.toBoolean),
-      parameters.get("maxVersionsPerTrigger").map(_.trim.toInt),
-      Some(metadataPath))
+      parameters.get("maxVersionsPerTrigger").map(_.trim.toInt))
   }
   override def shortName(): String = "txlog"
 
@@ -185,7 +185,8 @@ class TxLogDataSource extends RelationProvider
         TxLog.versionAt(dir, TxLogDataSource.parseInstant(ts))))
     val spark = sqlContext.sparkSession
     val version = asOf.getOrElse(TxLog.currentVersion(dir))
-    val live = TxLog.snapshot(dir, Some(version))
+    val files = TxLog.fileMetas(dir, Some(version))
+    val live = files.map(_._1)
     // `pinned` records whether the USER time-traveled (versionAsOf /
     // timestampAsOf) — the DML rule must refuse mutations through a
     // pinned relation, and `version == currentVersion` cannot tell
@@ -196,7 +197,7 @@ class TxLogDataSource extends RelationProvider
         // wraps TxLog.read's logical projection; a HadoopFsRelation
         // over the raw files would surface storage names
         TxLog.columnMapping(dir, Some(version)).active)
-      new TxLogRowRelation(sqlContext, dir, Some(version),
+      new TxLogRelation(sqlContext, dir, Some(version),
         pinned = asOf.isDefined)
     else {
       // union schema over the live files (commits may evolve the schema
@@ -207,8 +208,7 @@ class TxLogDataSource extends RelationProvider
         spark.read.option("mergeSchema", "true")
           .parquet(live.map(f => s"$dir/$f"): _*).schema)
       HadoopFsRelation(
-        location = new TxLogFileIndex(dir, version, live,
-          pinned = asOf.isDefined),
+        location = new TxLogFileIndex(dir, files, pinned = asOf.isDefined),
         partitionSchema = new StructType(),
         dataSchema = dataSchema,
         bucketSpec = None,
@@ -269,7 +269,7 @@ private[graft] object TxLogOffsets {
     * transaction later publishes, those rows would be permanently
     * skipped (review r11 #2). The stream waits below it instead; an
     * operator decides a dead transaction with [[TxLog.abortTx]]. */
-  def decidedThrough(dir: String, base: Int, hi: Int): Int = {
+  private def decidedThrough(dir: String, base: Int, hi: Int): Int = {
     var v = base + 1
     while (v <= hi && !TxLog.versionUndecided(dir, v)) v += 1
     v - 1
@@ -343,8 +343,7 @@ object TxLogDataSource {
   * skipping it. */
 class TxLogStreamSource(sqlContext: SQLContext, dir: String,
     declaredSchema: StructType, startingVersion: Int, ignoreChanges: Boolean,
-    readChangeFeed: Boolean = false, maxVersionsPerTrigger: Option[Int] = None,
-    metadataPath: Option[String] = None)
+    readChangeFeed: Boolean = false, maxVersionsPerTrigger: Option[Int] = None)
     extends org.apache.spark.sql.execution.streaming.Source
     with org.apache.spark.sql.connector.read.streaming
       .SupportsTriggerAvailableNow {
@@ -364,9 +363,7 @@ class TxLogStreamSource(sqlContext: SQLContext, dir: String,
   // gap (NOTES r10): AvailableNow + maxVersionsPerTrigger now DRAINS
   // the whole backlog in capped batches instead of stopping at the
   // first capped offer, and the engine-provided start offset makes a
-  // capped offer below the checkpoint structurally impossible — the
-  // hand-rolled checkpoint-parsing recovery in [[recoveredBase]] stays
-  // only as the legacy-path guard for direct getOffset callers. ----
+  // capped offer below the checkpoint structurally impossible. ----
 
   /** Drain target snapshotted by [[prepareForTriggerAvailableNow]]:
     * Trigger.AvailableNow stops at the table state observed at query
@@ -374,7 +371,7 @@ class TxLogStreamSource(sqlContext: SQLContext, dir: String,
     * (processing-time / one-shot triggers). */
   @volatile private var availableNowTarget: Int = Int.MaxValue
 
-  private def versionOfV2(o: OffsetV2): Int = o match {
+  private def versionOf(o: OffsetV2): Int = o match {
     case LongOffset(v) => v.toInt
     case other => other.json().trim.toInt
   }
@@ -410,78 +407,19 @@ class TxLogStreamSource(sqlContext: SQLContext, dir: String,
   override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
     // a FRESH stream has no checkpointed offset — the engine passes
     // null, not initialOffset() (the KafkaSource contract)
-    val base = if (start == null) startingVersion - 1 else versionOfV2(start)
+    val base = if (start == null) startingVersion - 1 else versionOf(start)
     TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
       case Some(v) => LongOffset(v.toLong)
       case None => start
     }
   }
 
-  private def decidedThrough(base: Int, hi: Int): Int =
-    TxLogOffsets.decidedThrough(dir, base, hi)
-
-  /** Rate-limit base recovered from the checkpoint's offset log at
-    * construction. A capped `getOffset` must NEVER fall below an
-    * offset the engine already recorded — on a restart whose last
-    * batch committed, the engine calls getOffset without any getBatch,
-    * and a below-checkpoint offer would re-emit versions a downstream
-    * sink already processed (an exactly-once break) or regress the
-    * offset log. Absent/unparseable checkpoint state → `None`, and the
-    * FIRST offer runs uncapped (safe: ≥ any committed offset); a fresh
-    * stream's offsets dir is empty, so its first batch IS capped from
-    * `startingVersion`. */
-  private val recoveredBase: Option[Int] = metadataPath.flatMap { mp =>
-    try {
-      // metadataPath = <checkpoint>/sources/<i> → offsets live two up
-      val od = new File(new File(mp).getParentFile.getParentFile, "offsets")
-      val fs = Option(od.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isFile && f.getName.forall(_.isDigit))
-      if (fs.isEmpty) Some(startingVersion - 1) // fresh stream
-      else {
-        // v1 offset file: line 1 "v1", line 2 batch metadata, line 3+
-        // one offset json per source in index order — ours is the bare
-        // version number at the index metadataPath ends with
-        val idx = new File(mp).getName.toIntOption.getOrElse(0)
-        val latest = fs.maxBy(_.getName.toLong)
-        val lines = new String(
-          java.nio.file.Files.readAllBytes(latest.toPath), "UTF-8")
-          .linesIterator.toSeq
-        lines.drop(2 + idx).headOption.flatMap(_.trim.toIntOption)
-        // parse failure → None → uncapped first offer, never a regression
-      }
-    } catch { case _: Throwable => None }
-  }
-
-  /** Highest version this instance has offered/delivered — the moving
-    * base of the rate-limit window once batches flow. */
-  @volatile private var deliveredThrough: Int =
-    recoveredBase.getOrElse(Int.MinValue)
-
-  /** LEGACY offer path (engines/tests driving the bare v1 contract —
-    * an admission-control engine calls [[latestOffset]] instead, with
-    * the checkpointed start offset supplied): with
-    * `maxVersionsPerTrigger = n`, each micro-batch covers at most n
-    * commits, and the cap never falls below the recovered checkpoint
-    * base. */
-  override def getOffset: Option[Offset] = {
-    val cur = TxLog.currentVersion(dir)
-    val base = if (deliveredThrough == Int.MinValue) startingVersion - 1
-      else deliveredThrough
-    // cap the scan window before walking it (see latestOffset)
-    val scanHi = maxVersionsPerTrigger match {
-      case Some(n) if deliveredThrough != Int.MinValue =>
-        math.min(cur, deliveredThrough + math.max(n, 1))
-      case _ => cur // no cap, or no safe base — never offer below a checkpoint
-    }
-    val v = decidedThrough(math.min(base, cur), scanHi)
-    if (v < math.max(startingVersion, 0)) return None
-    Some(LongOffset(v.toLong))
-  }
-
-  private def versionOf(o: Offset): Int = o match {
-    case LongOffset(v) => v.toInt
-    case other => other.json().trim.toInt
-  }
+  /** The bare v1 offer path: never called, because the engine tests for
+    * `SupportsAdmissionControl` before `Source` and calls [[latestOffset]]
+    * (KafkaSource refuses it the same way). */
+  override def getOffset: Option[Offset] =
+    throw new UnsupportedOperationException(
+      "TxLogStreamSource supports admission control; use latestOffset")
 
   override def getBatch(start: Option[Offset], end: Offset)
       : org.apache.spark.sql.DataFrame = {
@@ -493,7 +431,6 @@ class TxLogStreamSource(sqlContext: SQLContext, dir: String,
     require(!TxLog.columnMapping(dir, Some(to)).active,
       s"stream of $dir hit a RENAME/DROP COLUMN at or before version " +
         s"$to — restart consumers against the new schema in batch mode")
-    deliveredThrough = math.max(deliveredThrough, to)
     val spark0 = sqlContext.sparkSession
     // CDF mode: the batch IS the change feed of the version interval —
     // deletes are first-class rows, so the append-only guard and
@@ -567,135 +504,16 @@ object TxLogSourceIO {
   val lastTotal = new java.util.concurrent.atomic.AtomicInteger(0)
 }
 
-/** The log-resident file statistics of one frozen snapshot, with the
-  * conservative three-valued survival tests shared by BOTH pruning
-  * fronts: the path connector's [[TxLogFileIndex]] (catalyst
-  * `Expression` filters) and the catalog scan's
-  * [[TxLogCatalogRelation]] (`sources.Filter` pushdown) — one
-  * implementation, so the two read paths cannot drift. Only
-  * provably-false files drop; any unrecognized shape keeps the file
-  * (the parquet scan re-evaluates every filter). */
-private[sources] class TxLogZoneMaps(dir: String, version: Int) {
-  // ONE log fold feeds everything (review r12: the three per-map
-  // accessors each replayed the log themselves)
-  private val bundle = TxLog.pruneBundle(dir, Some(version))
-  /** The snapshot's live files, log order. */
-  val live: Seq[String] = bundle._1
-  val stats: Map[String, Map[String, (Long, Long)]] = bundle._2
-  val strStats: Map[String, Map[String, (String, String)]] = bundle._3
-  val pvals: Map[String, Map[String, String]] = bundle._4
-
-  private def asLong(v: Any): Option[Long] = v match {
-    case l: Long => Some(l)
-    case i: Int => Some(i.toLong)
-    case s: Short => Some(s.toLong)
-    case b: Byte => Some(b.toLong)
-    case _ => None
-  }
-
-  /** String literals arrive as UTF8String (catalyst) or String (source
-    * filters); zone bounds compare in UTF8 BINARY order either way —
-    * the order the stats writer used. */
-  private def asU8(v: Any): Option[UTF8String] = v match {
-    case u: UTF8String => Some(u)
-    case s: String => Some(UTF8String.fromString(s))
-    case _ => None
-  }
-
-  /** Recorded partition values are `cast(col AS string)` renderings —
-    * integral/boolean/string literals render identically, so they all
-    * prune; fractional types are excluded (formatting divergence risk
-    * — conservative keep). */
-  private def asPartStr(v: Any): Option[String] = v match {
-    case u: UTF8String => Some(u.toString)
-    case s: String => Some(s)
-    case l: Long => Some(l.toString)
-    case i: Int => Some(i.toString)
-    case s: Short => Some(s.toString)
-    case b: Byte => Some(b.toString)
-    case b: Boolean => Some(b.toString)
-    case _ => None
-  }
-
-  /** Equality survives if the zone map's [lo, hi] contains the value,
-    * or the recorded partition value matches; no recorded metadata →
-    * conservative keep. Partition pruning fires for any primitive
-    * literal (VERDICT r12 #1: the string-only check left declared
-    * integer partition columns unpruned). */
-  def eqSurvives(file: String, col: String, v: Any): Boolean = {
-    val zone = for {
-      x <- asLong(v)
-      (lo, hi) <- stats.getOrElse(file, Map.empty).get(col)
-    } yield lo <= x && x <= hi
-    val strZone = asU8(v).flatMap { u =>
-      strStats.getOrElse(file, Map.empty).get(col).map { case (lo, hi) =>
-        UTF8String.fromString(lo).compareTo(u) <= 0 &&
-          u.compareTo(UTF8String.fromString(hi)) <= 0
-      }
-    }
-    // a recorded __HIVE_DEFAULT_PARTITION__ is AMBIGUOUS (the dynamic
-    // partition writer renders BOTH null and "" as the sentinel) — it
-    // yields no information, so never prune on it: `WHERE c = ''` must
-    // still reach the rows that really hold empty strings
-    val part = asPartStr(v).flatMap(s =>
-      pvals.getOrElse(file, Map.empty).get(col)
-        .filter(_ != "__HIVE_DEFAULT_PARTITION__").map(_ == s))
-    zone.getOrElse(true) && strZone.getOrElse(true) && part.getOrElse(true)
-  }
-
-  /** Range bound check against the long zone maps, or the string zone
-    * maps when the literal is a string — `pred(loCmp, hiCmp)` receives
-    * compareTo signs in the string case, so one rule serves both. */
-  def boundSurvives(file: String, col: String)
-      (pred: (Long, Long, Long) => Boolean)(v: Any): Boolean = {
-    val long = for {
-      x <- asLong(v)
-      (lo, hi) <- stats.getOrElse(file, Map.empty).get(col)
-    } yield pred(lo, hi, x)
-    val str = asU8(v).flatMap { u =>
-      strStats.getOrElse(file, Map.empty).get(col).map { case (lo, hi) =>
-        pred(UTF8String.fromString(lo).compareTo(u).sign.toLong,
-          UTF8String.fromString(hi).compareTo(u).sign.toLong, 0L)
-      }
-    }
-    long.orElse(str).getOrElse(true)
-  }
-}
-
-/** [[org.apache.spark.sql.sources.Filter]]-side survival walk (the
-  * catalog scan's pushdown front of [[TxLogZoneMaps]]). */
-private[sources] object TxLogFilterPrune {
-  import org.apache.spark.sql.sources._
-
-  def survives(z: TxLogZoneMaps, file: String, f: Filter): Boolean =
-    f match {
-      case And(l, r) => survives(z, file, l) && survives(z, file, r)
-      case Or(l, r) => survives(z, file, l) || survives(z, file, r)
-      case EqualTo(c, v) => z.eqSurvives(file, c, v)
-      case In(c, vs) => vs.isEmpty || vs.exists(v => z.eqSurvives(file, c, v))
-      case GreaterThan(c, v) =>
-        z.boundSurvives(file, c)((lo, hi, x) => hi > x)(v)
-      case GreaterThanOrEqual(c, v) =>
-        z.boundSurvives(file, c)((lo, hi, x) => hi >= x)(v)
-      case LessThan(c, v) =>
-        z.boundSurvives(file, c)((lo, hi, x) => lo < x)(v)
-      case LessThanOrEqual(c, v) =>
-        z.boundSurvives(file, c)((lo, hi, x) => lo <= x)(v)
-      case _ => true
-    }
-}
-
 /** The snapshot's live files as a [[FileIndex]], with `listFiles`
-  * applying log-resident zone maps and partition values against the
-  * scan's data filters — Delta's `TahoeFileIndex` shape. The snapshot
-  * is FROZEN at construction (file list, stats, partition values), so
-  * a concurrent commit cannot tear this scan. */
-class TxLogFileIndex(val dir: String, version: Int, live: Seq[String],
-    val pinned: Boolean = false)
+  * keeping the files [[FilePrune]] cannot rule out against the scan's
+  * data filters — Delta's `TahoeFileIndex` shape. The snapshot is
+  * FROZEN at construction (file list and recorded metadata), so a
+  * concurrent commit cannot tear this scan. */
+class TxLogFileIndex private[graft] (val dir: String,
+    files: Seq[(String, FilePrune.FileMeta)], val pinned: Boolean = false)
     extends FileIndex {
 
-  private val zones = new TxLogZoneMaps(dir, version)
-  private val statuses: Seq[(String, FileStatus)] = live.map { f =>
+  private val statuses: Seq[(String, FileStatus)] = files.map { case (f, _) =>
     val file = new File(dir, f)
     f -> new FileStatus(file.length(), false, 1, 64 << 20,
       file.lastModified(), new Path(file.toURI))
@@ -710,49 +528,12 @@ class TxLogFileIndex(val dir: String, version: Int, live: Seq[String],
 
   override def listFiles(partitionFilters: Seq[Expression],
       dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
-    val kept = statuses.filter { case (name, _) =>
-      dataFilters.forall(survives(name, _))
-    }
+    val keep = FilePrune.surviving(files, dataFilters).toSet
+    val kept = statuses.filter { case (name, _) => keep(name) }
     TxLogSourceIO.lastKept.set(kept.size)
     TxLogSourceIO.lastTotal.set(statuses.size)
     Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
   }
-
-  /** Can `file` hold a row satisfying `e`? Conservative three-valued
-    * pruning: only provably-false files drop; any unrecognized shape
-    * keeps the file (the parquet scan re-evaluates every filter). */
-  private def survives(file: String, e: Expression): Boolean = e match {
-    case CAnd(l, r) => survives(file, l) && survives(file, r)
-    case COr(l, r) => survives(file, l) || survives(file, r)
-    case CEqualTo(a: AttributeReference, Literal(v, _)) =>
-      eqSurvives(file, a.name, v)
-    case CEqualTo(Literal(v, _), a: AttributeReference) =>
-      eqSurvives(file, a.name, v)
-    case CGt(a: AttributeReference, Literal(v, _)) =>
-      boundSurvives(file, a.name)((lo, hi, x) => hi > x)(v)
-    case CGe(a: AttributeReference, Literal(v, _)) =>
-      boundSurvives(file, a.name)((lo, hi, x) => hi >= x)(v)
-    case CLt(a: AttributeReference, Literal(v, _)) =>
-      boundSurvives(file, a.name)((lo, hi, x) => lo < x)(v)
-    case CLe(a: AttributeReference, Literal(v, _)) =>
-      boundSurvives(file, a.name)((lo, hi, x) => lo <= x)(v)
-    case CGt(Literal(v, _), a: AttributeReference) => // v > col ≡ col < v
-      boundSurvives(file, a.name)((lo, hi, x) => lo < x)(v)
-    case CGe(Literal(v, _), a: AttributeReference) =>
-      boundSurvives(file, a.name)((lo, hi, x) => lo <= x)(v)
-    case CLt(Literal(v, _), a: AttributeReference) =>
-      boundSurvives(file, a.name)((lo, hi, x) => hi > x)(v)
-    case CLe(Literal(v, _), a: AttributeReference) =>
-      boundSurvives(file, a.name)((lo, hi, x) => hi >= x)(v)
-    case _ => true
-  }
-
-  private def eqSurvives(file: String, col: String, v: Any): Boolean =
-    zones.eqSurvives(file, col, v)
-
-  private def boundSurvives(file: String, col: String)
-      (pred: (Long, Long, Long) => Boolean)(v: Any): Boolean =
-    zones.boundSurvives(file, col)(pred)(v)
 }
 
 /** `option("history", "true")`: the table's commit history as a
@@ -777,7 +558,7 @@ class TxLogHistoryRelation(override val sqlContext: SQLContext,
 
 /** The change data feed as a relation (`option("readChangeFeed",
   * "true")`): wraps [[TxLog.changeFeed]] behind a pruned row scan, the
-  * same execution shape as [[TxLogRowRelation]] — filters re-evaluated
+  * same execution shape as [[TxLogRelation]] — filters re-evaluated
   * by Spark, column pruning honored (a consumer reading only keys +
   * `_change_type` never materializes the wide columns). */
 class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
@@ -802,51 +583,67 @@ class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
   }
 }
 
-/** Fallback relation for DV-bearing, emptied, or COLUMN-MAPPED
-  * snapshots: wraps the merge-on-read [[TxLog.read]] plan (parquet
-  * scan anti-joined against the deletion-vector frame, physical names
-  * projected back to logical) behind a pruned row scan. Filters do
-  * double duty: they prune FILES through the log-resident zone maps
-  * (the same [[TxLogFilterPrune]] walk the catalog scan runs) and
-  * re-apply on the wrapped frame so Catalyst pushes them into the
-  * parquet scan — Spark still re-evaluates every row above (the DSv1
-  * contract), so an untranslatable filter only costs the skipped
-  * pushdown, never correctness. */
-class TxLogRowRelation(override val sqlContext: SQLContext,
-    val dir: String, val asOf: Option[Int], val pinned: Boolean = false)
-    extends BaseRelation with PrunedFilteredScan {
+/** The merge-on-read relation: wraps the DV-correct [[TxLog.read]] plan
+  * (parquet scan anti-joined against the deletion-vector frame, physical
+  * names projected back to logical). It serves two readers:
+  *   - the path connector's fallback for DV-bearing, emptied or
+  *     COLUMN-MAPPED snapshots, as a [[PrunedFilteredScan]];
+  *   - the catalog's V1 scan ([[TxLogV1ScanBuilder]]), as a [[TableScan]]
+  *     over the pushed columns `required` and filters `pushed`.
+  * Filters do double duty: they prune FILES through [[FilePrune]] and
+  * re-apply on the wrapped frame so Catalyst pushes them into the parquet
+  * scan. Spark still re-evaluates every row above (the DSv1 contract), so
+  * a filter that does not convert keeps every file and costs only the
+  * skipped pushdown, never correctness. [[TxLogSourceIO]] records
+  * kept/total. */
+class TxLogRelation private[graft] (override val sqlContext: SQLContext,
+    val dir: String, val asOf: Option[Int], val pinned: Boolean = false,
+    required: Option[StructType] = None, pushed: Array[Filter] = Array.empty)
+    extends BaseRelation with PrunedFilteredScan with TableScan {
+  import org.apache.spark.sql.functions.{col, lit}
 
   private def spark: SparkSession = sqlContext.sparkSession
-  override lazy val schema: StructType = TxLog.read(spark, dir, asOf).schema
+  override lazy val schema: StructType =
+    required.getOrElse(TxLog.read(spark, dir, asOf).schema)
 
   // rows come straight out of the wrapped plan's execution — already
   // InternalRow, no Row re-conversion
   override def needConversion: Boolean = false
 
+  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, pushed)
+
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    // pin the version once: prune decision and read must see the SAME
-    // snapshot (the catalog relation learned this in review r12 #1)
+    // pin the version once: the prune decision and the read must see the
+    // SAME snapshot — a commit landing between them would intersect a
+    // stale kept-list with a new live set (review r12 #1: a concurrent
+    // OPTIMIZE made a matching scan return 0 rows)
     val version = asOf.getOrElse(TxLog.currentVersion(dir))
-    val zones = new TxLogZoneMaps(dir, version)
-    val live = zones.live
-    val kept =
-      if (filters.isEmpty || live.isEmpty) live
-      else live.filter(f =>
-        filters.forall(TxLogFilterPrune.survives(zones, f, _)))
+    val files = TxLog.fileMetas(dir, Some(version))
+    val preds = filters.flatMap(f =>
+      scala.util.Try(f -> TxLogFilterColumns.toColumn(f)).toOption)
+    val kept = FilePrune.surviving(files,
+      preds.toSeq.map(p => GraftSqlBridge.exprOf(p._2)),
+      schema.fields.map(f => f.name -> f.dataType).toMap)
+    TxLogSourceIO.lastKept.set(kept.size)
+    TxLogSourceIO.lastTotal.set(files.size)
     val base =
-      if (live.isEmpty || kept.size == live.size)
-        TxLog.read(spark, dir, Some(version))
-      else if (kept.isEmpty)
-        TxLog.read(spark, dir, Some(version)).limit(0)
+      if (kept.size == files.size) TxLog.read(spark, dir, Some(version))
+      else if (kept.isEmpty) TxLog.read(spark, dir, Some(version)).limit(0)
       else TxLog.readPruned(spark, dir, kept, Some(version))
-    val filtered = filters
-      .flatMap(f => scala.util.Try(TxLogFilterColumns.toColumn(f)).toOption)
-      .foldLeft(base)(_ filter _)
-    val pruned =
-      if (requiredColumns.isEmpty) filtered
-      else filtered.select(requiredColumns
-        .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-    pruned.queryExecution.toRdd.asInstanceOf[RDD[Row]]
+    // the recorded union schema can name a column NO live file carries
+    // anymore (the last file holding it was deleted whole, without a
+    // rewrite) — such filters stay with Spark, and the column reads as
+    // null instead of failing the scan (review r11 #2.6, Delta's behavior)
+    val have = base.columns.toSet
+    val filtered = preds.collect {
+      case (f, c) if f.references.forall(have) => c
+    }.foldLeft(base)(_ filter _)
+    // an empty projection (count(*)) keeps one narrow column
+    val cols = if (requiredColumns.isEmpty) schema.fieldNames.take(1)
+      else requiredColumns
+    filtered.select(cols.toIndexedSeq.map { c =>
+      if (have(c)) col(c) else lit(null).cast(schema(c).dataType).as(c)
+    }: _*).queryExecution.toRdd.asInstanceOf[RDD[Row]]
   }
 }

@@ -112,6 +112,22 @@ class F1WriteSpec extends AnyFunSuite {
     assertTablesEqualFixture(inc)
   }
 
+  test("run releases only the persists it made: a caller's cached frame of the same CSV stays cached") {
+    val csv = freshCsv
+    val (mine, cached) = graft.core.Cleanup.track(F1Pipeline.buildAll(
+      graft.core.Tables.csv(spark, csv, graft.etl.F1Schema.wide), refYear = 2026))
+    try {
+      mine.values.foreach(_.collect())
+      val jobs = (1 to 2).map { _ =>
+        val out = Files.createTempDirectory("f1write_cached").toString
+        watched(F1Pipeline.run(spark, csv, out)).total
+      }
+      assert(jobs(0) == jobs(1), s"jobs per run over a cached CSV: $jobs")
+      assert(cached.nonEmpty && cached.forall(_.storageLevel !=
+        org.apache.spark.storage.StorageLevel.NONE), "the caller's cache")
+    } finally cached.foreach(_.unpersist())
+  }
+
   test("a failed write names its table; the others land and nothing is left running or cached") {
     val csv = freshCsv
     val out = Files.createTempDirectory("f1write_fail").toString

@@ -6,8 +6,9 @@ import scala.util.matching.Regex
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-shape guards, in the style of DocsSpec: the engine ships four
-  * mains, builds every session in one factory, and keeps every memo and
-  * every exit-time cleanup in `core/Memo.scala`. A one-off probe main, a
+  * mains, builds every session in one factory, keeps every memo and
+  * every exit-time cleanup in `core/Memo.scala`, and prunes txlog files
+  * from log metadata in one walk, `core/FilePrune.scala`. A one-off probe main, a
   * hand-built session whose config drifts from the one every result was
   * checked under, or a private memo with its own staleness rule is a red
   * test instead of a review finding. */
@@ -42,6 +43,11 @@ class SourceGuardSpec extends AnyFunSuite {
       Seq("graft/core/Memo.scala"))
     assert(filesMatching("""\bdeleteOnExit\b""".r).toSet
       .subsetOf(Set("graft/core/Memo.scala")))
+  }
+
+  test("txlog file-pruning walks appear only in core/FilePrune.scala") {
+    assert(filesMatching("""\bdef\s+(eqSurvives|boundSurvives|survives)\b""".r)
+      == Seq("graft/core/FilePrune.scala"))
   }
 
   test("memo maps and retire queues appear only in core/Memo.scala") {
