@@ -1,5 +1,6 @@
 package graft
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{AnalyticsQueries, EventQueries, ExtQueries, QuerySpec, RefQueries, TextQueries, VectorQueries}
 import graft.streaming.StreamQueries
@@ -26,7 +27,7 @@ object SparkEntry {
     *   loader converts; DuckDB truncates identically). */
   private[graft] def configure(s: SparkSession): Unit = {
     def trySet(k: String, v: String): Unit =
-      try s.conf.set(k, v) catch { case _: Throwable => () }
+      try s.conf.set(k, v) catch { case NonFatal(_) => () }
     trySet("spark.sql.ansi.enabled", "false")
     trySet("spark.sql.session.timeZone", "UTC")
     trySet("spark.sql.legacy.parquet.nanosAsLong", "true")

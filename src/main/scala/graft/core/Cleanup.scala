@@ -1,6 +1,7 @@
 package graft.core
 
 import scala.collection.mutable.ArrayBuffer
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
@@ -76,8 +77,8 @@ object Cleanup {
     val listener = new QueryExecutionListener {
       private val done = new java.util.concurrent.atomic.AtomicBoolean(false)
       private def fire(): Unit = if (done.compareAndSet(false, true)) {
-        dfs.foreach(d => try d.unpersist() catch { case _: Throwable => () })
-        try lm.unregister(this) catch { case _: Throwable => () }
+        dfs.foreach(d => try d.unpersist() catch { case NonFatal(_) => () })
+        try lm.unregister(this) catch { case NonFatal(_) => () }
       }
       override def onSuccess(funcName: String, qe: QueryExecution,
           durationNs: Long): Unit = fire()

@@ -1,5 +1,6 @@
 package graft.core
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Per-phase conf tuning WITHOUT mutating the shared session (VERDICT r04
@@ -21,7 +22,7 @@ object Tuned {
     // before applying this phase's overrides.
     s.conf.getAll.foreach { case (k, v) =>
       if (ns.conf.isModifiable(k) && !ns.conf.getOption(k).contains(v))
-        try ns.conf.set(k, v) catch { case _: Throwable => () }
+        try ns.conf.set(k, v) catch { case NonFatal(_) => () }
     }
     overrides.foreach { case (k, v) => ns.conf.set(k, v) }
     // Session-scoped FUNCTION registrations don't transfer either: a

@@ -45,7 +45,7 @@ object TxLog {
   /** Default vacuum file-age guard (Delta's 7-day tombstone retention):
     * files younger than this are never vacuum victims, so a concurrent
     * writer's staged-but-uncommitted files (moved into the table dir by
-    * [[stage]] BEFORE its commit lands) cannot be deleted out from
+    * [[stageBatch]] BEFORE its commit lands) cannot be deleted out from
     * under it. */
   val DefaultVacuumMinAgeMs: Long = 7L * 24 * 3600 * 1000
 
@@ -93,29 +93,12 @@ object TxLog {
     * and takes the next slot instead of failing the whole job. Strict
     * optimistic concurrency stays for every commit that READ state to
     * decide what to write (replace/upsert/delete/optimize/restore and
-    * the multi-table claims): those must conflict. `mkLines` re-derives
-    * the commit lines per attempt, so a racing schema evolution folds
-    * into the recorded union schema. */
-  private def claimAppendRetrying(spark: SparkSession, dir: String,
-      staged: Seq[String], mkLines: () => Seq[String],
-      maxRetries: Int = 20): Int = {
-    var attempt = 0
-    while (true) {
-      val v = currentVersion(dir) + 1
-      appendRaceHook()
-      try return claimVersion(dir, v, mkLines())
-      catch {
-        case e: java.util.ConcurrentModificationException =>
-          attempt += 1
-          if (attempt > maxRetries) throw e
-          validateStaged(spark, dir, staged)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The txn-marked variant ([[appendIdempotent]] /
-    * [[commitStagedIdempotent]]): the marker is re-checked on EVERY
+    * the multi-table claims): those must conflict. The union schema
+    * with `schema` is re-derived per attempt, so a racing schema
+    * evolution folds in.
+    *
+    * With a `txn` marker ([[appendIdempotent]] /
+    * [[commitStagedIdempotent]]) the marker is re-checked on EVERY
     * attempt, AFTER reading the claim target — the race may be against
     * a replica of THIS batch (two speculative drivers), and a check
     * done only before the loop leaves a window where the replica's
@@ -126,28 +109,34 @@ object TxLog {
     * racing for OUR slot makes the atomic claim fail — the retry then
     * sees its marker. On detection the duplicate staging is deleted
     * and the replay contract (-1) holds. */
-  private def claimTxnRetrying(spark: SparkSession, dir: String,
-      staged: Seq[String], app: String, txnId: Long,
-      mkLines: () => Seq[String], maxRetries: Int = 20): Int = {
+  private def claimAppendRetrying(spark: SparkSession, dir: String,
+      staged: Seq[String], lines: Seq[String],
+      schema: org.apache.spark.sql.types.StructType,
+      txn: Option[(String, Long)] = None, maxRetries: Int = 20): Int = {
     var attempt = 0
     while (true) {
       val v = currentVersion(dir) + 1
-      if (txnSeen(dir, app, txnId)) {
-        staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      if (txn.exists { case (app, id) => txnSeen(dir, app, id) }) {
+        unstage(dir, staged)
         return -1
       }
       appendRaceHook()
-      try return claimVersion(dir, v,
-        mkLines() :+ s"txn\t$app\t$txnId")
+      try return claimVersion(dir, v, lines ++ schemaLineOf(schema, dir) ++
+        txn.map { case (app, id) => s"txn\t$app\t$id" })
       catch {
         case e: java.util.ConcurrentModificationException =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          validateStaged(spark, dir, staged)
+          validateStaged(spark, dir, staged, layoutOf(dir))
       }
     }
     throw new IllegalStateException("unreachable")
   }
+
+  /** Delete staged files no commit references (a refused or replayed
+    * batch). */
+  private[graft] def unstage(dir: String, staged: Seq[String]): Unit =
+    staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
 
   /** Highest committed version, or -1 for an uninitialized table.
     * Checkpoint files count: a log whose raw entries were truncated
@@ -415,112 +404,193 @@ object TxLog {
     claimVersion(dir, expected + 1,
       removes.map(f => s"remove\t$f") ++ adds.map(f => s"add\t$f"))
 
-  /** Stage `df` as uniquely-named parquet files in the table directory
-    * (INVISIBLE until a commit references them); returns their names.
-    * On a column-mapped table the frame writes under PHYSICAL storage
-    * names ([[toPhysicalDf]]) — every writer inherits the mapping. */
+  /** Stage `df` under the table's layout, validated against its CHECK
+    * constraints, as uniquely-named parquet files in the table
+    * directory (INVISIBLE until a commit references them); returns
+    * their names. See [[stageBatch]]. */
   def stage(df: DataFrame, dir: String): Seq[String] =
-    stage(df, dir, useMapping = true)
+    stageBatch(df, dir)._1
 
-  private def stage(df: DataFrame, dir: String,
-      useMapping: Boolean): Seq[String] = {
+  /** What a staged batch writes under, read from ONE log fold: the
+    * declared partition and stats columns, the column mapping, the
+    * recorded (logical) column names and the active CHECK constraints
+    * (name, SQL). A CREATE/REPLACE definition stages under its NEW
+    * layout instead ([[stageForDefinition]]). */
+  private[graft] final case class Layout(partCols: Seq[String],
+      statsCols: Seq[String], mapping: ColMap, logical: Set[String],
+      constraints: Seq[(String, String)])
+
+  private val NoLayout =
+    Layout(Seq.empty, Seq.empty, ColMap(Map.empty, Set.empty), Set.empty,
+      Seq.empty)
+
+  private def layoutOf(dir: String): Layout =
+    if (currentVersion(dir) < 0) NoLayout else layoutOf(state(dir, None))
+
+  private def layoutOf(st: LogState): Layout =
+    Layout(st.props.get(PartitionColsProp).toSeq.flatMap(decodeCols),
+      st.props.get(StatsColsProp).toSeq.flatMap(decodeCols),
+      colMapOf(st.props), st.schemaJson.toSeq.flatMap(j =>
+        org.apache.spark.sql.types.DataType.fromJson(j)
+          .asInstanceOf[org.apache.spark.sql.types.StructType].fieldNames)
+        .toSet,
+      st.cons.toSeq)
+
+  /** THE staging path: every writer turns a frame into table files and
+    * finished add lines here, in one order.
+    *
+    *   1. One temp-dir write. With partition columns it is Spark's
+    *      dynamic-partition writer (`partitionBy`) over SHADOW string
+    *      copies of those columns, so every file is partition-value
+    *      PURE while the REAL columns stay in the data (Iceberg's
+    *      choice — reads stay plain scans) and the shadow directory
+    *      layout is where the values are recovered from; otherwise a
+    *      plain write. `arrange` lets OPTIMIZE impose its layout
+    *      (range-partition on the shadows and a cluster key, sorted
+    *      within) before the writer: a child already sorted on the
+    *      shadow prefix satisfies the writer's required ordering, so the
+    *      secondary order survives into the files. On a column-mapped
+    *      table the frame writes under PHYSICAL storage names
+    *      ([[toPhysicalDf]]).
+    *   2. Move each file into the table dir under a unique name.
+    *   3. [[addLines]]: `p:` markers, CHECK validation, zone maps.
+    *
+    * `layout` defaults to the table's own, read once for the batch.
+    * `checks` are extra (condition, message) pairs every staged row
+    * must satisfy, validated in the same pass as the constraints.
+    * Returns (staged names, add lines). */
+  private[graft] def stageBatch(df: DataFrame, dir: String,
+      layout: Option[Layout] = None, extraStats: Seq[String] = Seq.empty,
+      checks: Seq[(org.apache.spark.sql.Column, String)] = Seq.empty,
+      arrange: (DataFrame, Seq[String]) => DataFrame = (d, _) => d)
+      : (Seq[String], Seq[String]) = {
+    import org.apache.spark.sql.functions.col
+    val lay = layout.getOrElse(layoutOf(dir))
     new File(dir).mkdirs()
     val tmp = Files.createTempDirectory(Paths.get(dir), ".stage-")
-    (if (useMapping) toPhysicalDf(df, dir) else df)
-      .write.mode("overwrite").parquet(tmp.toString)
-    val parts = Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.endsWith(".parquet") && !f.getName.startsWith("."))
-      .sortBy(_.getName)
-    val names = parts.zipWithIndex.map { case (f, i) =>
-      val name = s"part-${java.util.UUID.randomUUID().toString.take(8)}-$i.parquet"
-      Files.move(f.toPath, Paths.get(dir, name),
-        StandardCopyOption.ATOMIC_MOVE)
-      name
-    }.toSeq
-    // clear the staging litter (crc/_SUCCESS); data files already moved
-    Option(tmp.toFile.listFiles()).getOrElse(Array.empty)
-      .foreach(f => Files.deleteIfExists(f.toPath))
-    Files.deleteIfExists(tmp)
-    names
-  }
-
-  /** Stage + commit with FILE STATISTICS: each add line carries the
-    * staged file's min/max of every column in `statsCols` as trailing
-    * `<col>\t<min>\t<max>` triples — the log-resident zone maps that
-    * let [[pruneSnapshot]] skip files at PLAN time, the way
-    * Delta/Iceberg store per-file column bounds. Stats columns must be
-    * integral (bounds are exact longs). The bounds come from a
-    * post-stage read here; a production writer takes them from the
-    * parquet footer it just wrote, for free. Older/statless add lines
-    * parse fine everywhere (the name is always field 1). */
-  def appendWithStats(spark: SparkSession, df: DataFrame, dir: String,
-      statsCol: String): Int =
-    appendWithStats(spark, df, dir, Seq(statsCol))
-
-  /** Multi-column form: one add line carries one triple PER stats
-    * column, so [[pruneSnapshot]] skips on any of them — the layout
-    * payoff of [[optimize]]'s z-order clustering. */
-  def appendWithStats(spark: SparkSession, df: DataFrame, dir: String,
-      statsCols: Seq[String]): Int = {
-    // DECLARED stats columns union with the explicit request — a
-    // caller asking for extra bounds never drops the table's own
-    val cols = (statsCols ++ statsColumns(dir)).distinct
-    val declared = partitionColumns(dir)
-    if (declared.nonEmpty) {
-      // declared layout wins: partition-pure files whose add lines
-      // carry BOTH `p:` markers and the zone-map triples (parseAdd
-      // consumes marker fields order-independently)
-      val (staged, pLines) = stagePartitioned(spark, df, dir, declared)
-      val statM = statMarkersFor(spark, dir, staged, cols)
-      val full = staged.zip(pLines).map { case (n, l) =>
-        (l +: statM.getOrElse(n, Seq.empty)).mkString("\t") }
-      return claimAppendRetrying(spark, dir, staged,
-        () => full ++ schemaLine(df, dir))
+    val shadows = lay.partCols.map(c => s"__p_$c")
+    // partition columns are rename-proof, so the shadow references
+    // still bind after the physical-name projection
+    val dup = lay.partCols.zip(shadows).foldLeft(toPhysicalDf(df, lay)) {
+      case (d, (c, s)) => d.withColumn(s, col(c).cast("string"))
     }
-    val staged = stageEnforced(df, dir)
-    // bounds are content properties of the staged files — computed once;
-    // only the schema union re-derives per retry attempt
-    val statLines = statAddLines(spark, dir, staged, cols)
-    claimAppendRetrying(spark, dir, staged,
-      () => statLines ++ schemaLine(df, dir))
+    val w = arrange(dup, shadows).write.mode("overwrite")
+    (if (shadows.isEmpty) w else w.partitionBy(shadows: _*))
+      .parquet(tmp.toString)
+    // each data file sits under one `__p_c=<escaped value>` dir per
+    // partition column; Spark's path escaping is the same %xx scheme
+    def leaves(d: File, vals: Map[String, String])
+        : Seq[(File, Map[String, String])] =
+      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
+        case f if f.isDirectory && f.getName.contains("=") =>
+          val Array(k, v) = f.getName.split("=", 2)
+          leaves(f, vals + (k.stripPrefix("__p_") -> unescapeVal(v)))
+        case f if f.isFile && f.getName.endsWith(".parquet")
+            && !f.getName.startsWith(".") => Seq(f -> vals)
+        case _ => Seq.empty
+      }
+    val named = leaves(tmp.toFile, Map.empty).sortBy(_._1.getPath)
+      .zipWithIndex.map { case ((f, vals), i) =>
+        val name = s"part-${java.util.UUID.randomUUID().toString.take(8)}-$i.parquet"
+        Files.move(f.toPath, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
+        (name, vals)
+      }
+    drop(tmp.toString) // staging litter (empty partition dirs, _SUCCESS)
+    (named.map(_._1),
+      addLines(df.sparkSession, dir, lay, named, extraStats, checks))
   }
 
-  /** Add lines with per-file min/max triples for `statsCols`, computed
-    * in ONE distributed scan over the staged files (a per-file agg job
-    * each would be n driver-sequential jobs on an n-file batch); only
-    * the file-grain bounds map reaches the driver. */
-  private def statAddLines(spark: SparkSession, dir: String,
-      staged: Seq[String], statsCols: Seq[String]): Seq[String] = {
-    val markers = statMarkersFor(spark, dir, staged, statsCols)
-    staged.map { f =>
-      (s"add\t$f" +: markers.getOrElse(new File(f).getName, Seq.empty))
-        .mkString("\t")
+  /** Finished add lines for `files` — (name, partition values) already
+    * in the table dir: `p:` markers for the layout's partition columns,
+    * then the CHECK validation ([[validateStaged]]: a violating batch
+    * is deleted and refused), then zone-map markers for the layout's
+    * stats columns plus `extraStats`. The tail of [[stageBatch]],
+    * shared with executor-staged streaming epochs
+    * ([[commitStagedIdempotent]]) and [[convert]]. */
+  private def addLines(spark: SparkSession, dir: String, lay: Layout,
+      files: Seq[(String, Map[String, String])],
+      extraStats: Seq[String] = Seq.empty,
+      checks: Seq[(org.apache.spark.sql.Column, String)] = Seq.empty)
+      : Seq[String] = {
+    val names = files.map(_._1)
+    validateStaged(spark, dir, names, lay, checks)
+    val zm = statMarkersFor(spark, dir, names,
+      (extraStats ++ lay.statsCols).distinct)
+    // a file reported without a column's value stays unmarked for it
+    // (a made-up marker would prune rows away); staged leaves always
+    // carry every value — a NULL is Spark's default-partition sentinel
+    files.map { case (f, vals) =>
+      ((s"add\t$f" +: lay.partCols.flatMap(c => vals.get(c).map(v =>
+          s"p:${escapeVal(c)}=${escapeVal(v)}"))) ++
+        zm.getOrElse(new File(f).getName, Seq.empty)).mkString("\t")
     }
   }
 
-  /** The marker FIELDS of [[statAddLines]] keyed by staged basename —
-    * for writers that must compose them with other per-file fields on
-    * one add line (a partitioned table's `p:` markers). */
+  /** Reject (delete + throw) `staged` files holding any row that
+    * violates an active constraint of `lay` or one of `checks` — a
+    * deterministic re-read of exactly what would commit, so the
+    * incoming frame executes ONCE (ADVICE r10: validating the frame
+    * before staging ran it twice, and a nondeterministic source could
+    * pass yet stage different rows). One pass over the staged files for
+    * every condition; NULL evaluations violate. */
+  private def validateStaged(spark: SparkSession, dir: String,
+      staged: Seq[String], lay: Layout,
+      checks: Seq[(org.apache.spark.sql.Column, String)] = Seq.empty): Unit = {
+    import org.apache.spark.sql.functions.expr
+    val cons =
+      if (lay.constraints.isEmpty) Seq.empty
+      else Seq(lay.constraints.map { case (_, sql) => expr(sql) }
+        .reduce(_ && _) -> ("CHECK constraint violated by the incoming " +
+          s"batch (active constraints: ${lay.constraints.map(_._1).mkString(", ")})"))
+    val all = cons ++ checks
+    if (staged.isEmpty || all.isEmpty) return
+    // TRUE marks the condition a row violates (not TRUE: false or NULL)
+    val violated = all.map { case (c, _) => !c || c.isNull }
+    // constraint texts bind LOGICAL names; staged files store physical.
+    // Staged files come from ONE write — identical schemas
+    val hit = logicalizeStaged(
+        spark.read.parquet(staged.map(f => s"$dir/$f"): _*), lay)
+      .filter(violated.reduce(_ || _))
+      .select(violated: _*).limit(1).collect().headOption
+    hit.foreach { r =>
+      unstage(dir, staged)
+      throw new IllegalArgumentException(
+        all(violated.indices.find(r.getBoolean).get)._2)
+    }
+  }
+
+  /** Zone-map marker FIELDS per staged basename for `statsCols0`,
+    * computed in ONE distributed scan over the staged files (a per-file
+    * agg job each would be n driver-sequential jobs on an n-file
+    * batch); only the file-grain bounds reach the driver. Only bounds
+    * [[FilePrune]] can use are recorded: exact long triples for
+    * byte/short/int/long columns and `s:` markers (binary UTF8 order)
+    * for string columns. Any other type stays statless — the
+    * conservative always-kept shape (a DATE bound would cast to NULL,
+    * and TIMESTAMP, floating-point and decimal literals never prune). */
   private def statMarkersFor(spark: SparkSession, dir: String,
       staged: Seq[String], statsCols0: Seq[String])
       : Map[String, Seq[String]] = {
     import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.types._
     if (statsCols0.isEmpty || staged.isEmpty) return Map.empty
     val src = spark.read.parquet(staged.map(f => s"$dir/$f"): _*)
     // a declared stats column missing from this batch's schema (a
     // narrow pre-evolution write) stays statless — conservative keep
-    val statsCols = statsCols0.filter(c => src.schema.exists(_.name == c))
+    val isStr: Map[String, Boolean] = statsCols0.flatMap(c =>
+      src.schema.find(_.name == c).map(_.dataType).collect {
+        case StringType => c -> true
+        case ByteType | ShortType | IntegerType | LongType => c -> false
+      }).toMap
+    val statsCols = statsCols0.filter(isStr.contains)
     if (statsCols.isEmpty) return Map.empty
-    // type-aware bounds: string columns get `s:` markers in binary UTF8
-    // order (what Spark's min/max over strings IS); everything else is
-    // cast to the exact-long triples [[pruneSnapshot]] consumes
-    val isStr = statsCols.map(c => c ->
-      (src.schema(c).dataType == org.apache.spark.sql.types.StringType)
-    ).toMap
     val aggs = statsCols.flatMap(c => Seq(
       min(if (isStr(c)) col(c) else col(c).cast("long")).as(s"mn_$c"),
       max(if (isStr(c)) col(c) else col(c).cast("long")).as(s"mx_$c")))
-    val bounds = src
+    // a staged file can legitimately be EMPTY (a sampled range
+    // exchange may produce a 0-row partition) — it has no bounds row;
+    // record it statless, the conservative always-kept shape
+    src
       .groupBy(col("_metadata.file_name").as("__f"))
       .agg(aggs.head, aggs.tail: _*)
       .collect()
@@ -535,11 +605,39 @@ object TxLog {
           else Some(s"$c\t${r.getLong(1 + 2 * i)}\t${r.getLong(2 + 2 * i)}")
         })
       .toMap
-    // a staged file can legitimately be EMPTY (a sampled range
-    // exchange may produce a 0-row partition) — it has no bounds row;
-    // record it statless, the conservative always-kept shape
-    bounds
   }
+
+  /** Stage + commit with FILE STATISTICS: each add line carries the
+    * staged file's min/max of every column in `statsCols` — the
+    * log-resident zone maps that let [[pruneSnapshot]] and every
+    * [[FilePrune]] caller skip files at PLAN time, the way
+    * Delta/Iceberg store per-file column bounds. Integral columns
+    * record exact long `<col>\t<min>\t<max>` triples, string columns
+    * `s:` markers; a column of any other type stays statless (its
+    * bounds could never prune). The bounds come from a post-stage read
+    * here; a production writer takes them from the parquet footer it
+    * just wrote, for free. Older/statless add lines parse fine
+    * everywhere (the name is always field 1). */
+  def appendWithStats(spark: SparkSession, df: DataFrame, dir: String,
+      statsCol: String): Int =
+    appendWithStats(spark, df, dir, Seq(statsCol))
+
+  /** Multi-column form: one add line carries bounds PER stats column,
+    * so [[pruneSnapshot]] skips on any of them — the layout payoff of
+    * [[optimize]]'s z-order clustering. The table's DECLARED stats
+    * columns union with the request (a caller asking for extra bounds
+    * never drops the table's own), and a declared-partitioned table's
+    * lines carry both `p:` markers and bounds. */
+  def appendWithStats(spark: SparkSession, df: DataFrame, dir: String,
+      statsCols: Seq[String]): Int =
+    claimAppend(df, dir, stageBatch(df, dir, extraStats = statsCols))
+
+  /** Claim a staged batch as a blind append ([[claimAppendRetrying]]). */
+  private def claimAppend(df: DataFrame, dir: String,
+      batch: (Seq[String], Seq[String]),
+      txn: Option[(String, Long)] = None): Int =
+    claimAppendRetrying(df.sparkSession, dir, batch._1, batch._2,
+      df.schema, txn)
 
   /** Minimal %xx escaping for partition values stored in log lines:
     * the characters that would break the line grammar (tab, newline,
@@ -681,7 +779,6 @@ object TxLog {
       LessThanOrEqual(c, Literal(hi)))), files.size)
   }
 
-  /** CREATE (version 0) — refuses on an existing table. */
   /** IN-LOG SCHEMA (Delta's metaData action): data commits record the
     * table's UNION schema as an (escaped JSON) `schema` line whenever a
     * write changes it — new columns append, existing field types win.
@@ -749,9 +846,9 @@ object TxLog {
       org.apache.spark.sql.types.DataType.fromJson(j)
         .asInstanceOf[org.apache.spark.sql.types.StructType])
 
+  /** CREATE (version 0) — refuses on an existing table. */
   def create(df: DataFrame, dir: String): Int =
-    claimVersion(dir, 0,
-      stage(df, dir).map(f => s"add\t$f") ++ schemaLine(df, dir))
+    claimVersion(dir, 0, stageBatch(df, dir)._2 ++ schemaLine(df, dir))
 
   /** IN-PLACE conversion of an existing plain-parquet directory into a
     * txlog table (Delta's `CONVERT TO DELTA`): version 0 REFERENCES
@@ -787,8 +884,8 @@ object TxLog {
     require(files.nonEmpty, s"$dir holds no parquet files to convert")
     val schema = spark.read.option("mergeSchema", "true")
       .parquet(files.map(f => s"$dir/$f"): _*).schema
-    val adds = enrichLines(spark, dir,
-      files.map(f => s"add\t$f"), statsCols)
+    val adds = addLines(spark, dir, NoLayout, files.map(_ -> Map.empty),
+      extraStats = statsCols)
     claimVersion(dir, 0, adds ++ schemaLineOf(schema, dir) ++
       (if (statsCols.isEmpty) Seq.empty
        else Seq(s"property\t${escapeVal(StatsColsProp)}\t" +
@@ -825,7 +922,7 @@ object TxLog {
     if (fresh.isEmpty) return (cur, 0, 0L)
     val df = spark.read.option("mergeSchema", "true")
       .parquet(fresh: _*)
-    val (staged, lines) = stageLinesEnforced(spark, df, dir)
+    val (staged, lines) = stageBatch(df, dir)
     try {
       // footer-grain count of the staged copy — the rows this load adds
       val rows =
@@ -835,10 +932,7 @@ object TxLog {
         lines ++ fresh.map(p => s"copysrc\t${escapeVal(p)}") ++
           schemaLine(df, dir))
       (v, fresh.size, rows)
-    } catch { case e: Throwable =>
-      staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
-      throw e
-    }
+    } catch { case e: Throwable => unstage(dir, staged); throw e }
   }
 
   /** CREATE an EMPTY table (the catalog's `CREATE TABLE` surface):
@@ -948,18 +1042,8 @@ object TxLog {
     * DECLARED partition columns ([[PartitionColsProp]]) routes through
     * the partition-pure staging automatically — the layout is table
     * metadata every writer inherits, not a per-write convention. */
-  def append(df: DataFrame, dir: String): Int = {
-    val declared = partitionColumns(dir)
-    if (declared.nonEmpty)
-      return appendPartitioned(df.sparkSession, df, dir, declared)
-    val staged = stageEnforced(df, dir)
-    // declared-stats markers are content properties of the staged
-    // files — computed once, reused across claim-retry attempts
-    val lines = withDeclaredStats(df.sparkSession, dir,
-      staged.map(f => s"add\t$f"))
-    claimAppendRetrying(df.sparkSession, dir, staged,
-      () => lines ++ schemaLine(df, dir))
-  }
+  def append(df: DataFrame, dir: String): Int =
+    claimAppend(df, dir, stageBatch(df, dir))
 
   /** REPLACE (SaveMode.Overwrite through the connector): one atomic
     * commit swaps the whole live set for `df`'s files — the previous
@@ -967,50 +1051,25 @@ object TxLog {
     * INSERT OVERWRITE, not a destructive rewrite). Creates the table
     * when it doesn't exist yet. */
   def replace(df: DataFrame, dir: String): Int = {
-    val declared = partitionColumns(dir)
-    if (declared.nonEmpty)
-      return replacePartitioned(df.sparkSession, df, dir, declared)
     val cur = currentVersion(dir)
     if (cur < 0) create(df, dir)
     else {
       val removes = snapshot(dir, Some(cur))
       claimVersion(dir, cur + 1,
-        removes.map(f => s"remove\t$f") ++
-          withDeclaredStats(df.sparkSession, dir,
-            stageEnforced(df, dir).map(f => s"add\t$f")) ++
+        removes.map(f => s"remove\t$f") ++ stageBatch(df, dir)._2 ++
           schemaLine(df, dir, exact = true))
     }
   }
 
   /** APPEND gated by a CHECK constraint (the Delta table-constraint
     * shape): if any incoming row violates `constraint`, NOTHING
-    * commits — the violating batch is rejected atomically (staged
-    * files stay unreferenced orphans, exactly the crash case vacuum
-    * ignores and TxLogSpec proves invisible). The check runs on the
-    * batch BEFORE staging is referenced, one aggregate pass. */
+    * commits — the violating batch is rejected atomically and its
+    * staged files deleted. The check runs on the staged re-read, in
+    * the same pass as the table's own constraints ([[stageBatch]]). */
   def appendChecked(df: DataFrame, dir: String,
-      constraint: org.apache.spark.sql.Column): Int = {
-    // stage-first like every writer: the frame executes once, the
-    // check runs on the deterministic staged re-read; a declared-
-    // partitioned table's batch stages partition-pure with markers
-    val (staged, lines) = stageLinesEnforced(df.sparkSession, df, dir)
-    if (staged.nonEmpty) {
-      val stagedDf = logicalizeStaged(
-        // staged files come from ONE write — identical schemas, no
-        // footer-merge job needed
-        df.sparkSession.read
-          .parquet(staged.map(f => s"$dir/$f"): _*), dir)
-      val bad = stagedDf.filter(!constraint || constraint.isNull)
-        .limit(1).count()
-      if (bad > 0) {
-        staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
-        throw new IllegalArgumentException(
-          s"CHECK constraint violated by the incoming batch: $constraint")
-      }
-    }
-    claimAppendRetrying(df.sparkSession, dir, staged,
-      () => lines ++ schemaLine(df, dir))
-  }
+      constraint: org.apache.spark.sql.Column): Int =
+    claimAppend(df, dir, stageBatch(df, dir, checks = Seq(constraint ->
+      s"CHECK constraint violated by the incoming batch: $constraint")))
 
   /** LOG-RESIDENT CHECK constraints (Delta's `ALTER TABLE ... ADD
     * CONSTRAINT`): the constraint is table METADATA — a
@@ -1060,46 +1119,6 @@ object TxLog {
     if (currentVersion(dir) < 0) Map.empty
     else state(dir, asOf).cons.toMap
 
-  /** Stage `df`, then validate the STAGED parquet against the table's
-    * active constraints — the incoming frame executes exactly ONCE
-    * (ADVICE r10: the old validate-then-stage order ran the frame
-    * twice, so a nondeterministic source could pass validation yet
-    * stage different, violating rows, and through the streaming sink a
-    * stateful plan executed twice per batch). One aggregate pass over
-    * the staged files for ALL constraints (disjunction of violations);
-    * on violation the staged files are deleted and the batch rejected
-    * — nothing was committed, nothing re-runs. */
-  private def stageEnforced(df: DataFrame, dir: String): Seq[String] = {
-    val staged = stage(df, dir)
-    validateStaged(df.sparkSession, dir, staged)
-    staged
-  }
-
-  /** Reject (delete + throw) `staged` files holding any row violating
-    * an active constraint — a deterministic re-read of exactly what
-    * would commit. */
-  private def validateStaged(spark: SparkSession, dir: String,
-      staged: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.expr
-    if (currentVersion(dir) < 0 || staged.isEmpty) return
-    val cs = state(dir, None).cons
-    if (cs.isEmpty) return
-    val violated = cs.values.map { sql =>
-      val c = expr(sql); !c || c.isNull
-    }.reduce(_ || _)
-    // constraint texts bind LOGICAL names; staged files store physical
-    // staged files come from ONE write — identical schemas
-    val bad = logicalizeStaged(spark.read
-        .parquet(staged.map(f => s"$dir/$f"): _*), dir)
-      .filter(violated).limit(1).count() > 0
-    if (bad) {
-      staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
-      throw new IllegalArgumentException(
-        s"CHECK constraint violated by the incoming batch " +
-          s"(active constraints: ${cs.keys.mkString(", ")})")
-    }
-  }
-
   /** PARTITIONED APPEND (Delta's `partitionValues`, Iceberg's identity
     * partitioning): stage `df` so every staged file is partition-value
     * PURE, and record each file's partition values as `p:<col>=<value>`
@@ -1112,14 +1131,12 @@ object TxLog {
     * columns, so the REAL columns stay in the data files (Iceberg's
     * choice — reads stay plain scans, no value re-attachment) while the
     * shadow copies become the directory layout the values are recovered
-    * from. One distributed write; no per-partition driver loop. */
+    * from ([[stageBatch]]). One distributed write; no per-partition
+    * driver loop. `partCols` overrides the table's declared ones. */
   def appendPartitioned(spark: SparkSession, df: DataFrame, dir: String,
-      partCols: Seq[String]): Int = {
-    val (names, adds0) = stagePartitioned(spark, df, dir, partCols)
-    val adds = withDeclaredStats(spark, dir, adds0)
-    claimAppendRetrying(spark, dir, names,
-      () => adds ++ schemaLine(df, dir))
-  }
+      partCols: Seq[String]): Int =
+    claimAppend(df, dir,
+      stageBatch(df, dir, Some(layoutOf(dir).copy(partCols = partCols))))
 
   /** The reserved table property carrying DECLARATIVE partition columns
     * (`CREATE TABLE ... PARTITIONED BY` — VERDICT r12 #1): once set,
@@ -1133,9 +1150,7 @@ object TxLog {
   /** The table's DECLARED partition columns (empty when unpartitioned
     * or the table does not exist yet). */
   def partitionColumns(dir: String): Seq[String] =
-    if (currentVersion(dir) < 0) Seq.empty
-    else tableProperties(dir).get(PartitionColsProp).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty).map(unescapeVal)
+    tableProperties(dir).get(PartitionColsProp).toSeq.flatMap(decodeCols)
 
   private[graft] def encodePartitionCols(cols: Seq[String]): String =
     cols.map(escapeVal).mkString(",")
@@ -1157,32 +1172,7 @@ object TxLog {
   /** The table's DECLARED data-skipping columns (empty when unset or
     * the table does not exist yet). */
   def statsColumns(dir: String): Seq[String] =
-    if (currentVersion(dir) < 0) Seq.empty
-    else tableProperties(dir).get(StatsColsProp).toSeq
-      .flatMap(_.split(',')).filter(_.nonEmpty).map(unescapeVal)
-
-  /** Enrich finished add lines with zone-map markers for the table's
-    * DECLARED stats columns — the single seam every line-producing
-    * writer funnels through. Columns absent from the staged schema are
-    * skipped (a narrow pre-evolution batch stays writable); statless
-    * files remain the conservative always-kept shape. */
-  private def withDeclaredStats(spark: SparkSession, dir: String,
-      lines: Seq[String]): Seq[String] =
-    enrichLines(spark, dir, lines, statsColumns(dir))
-
-  /** The explicit-columns form — for the CTAS/RTAS staging leg, where
-    * the stats columns come from the NEW definition's properties (not
-    * yet committed to the log this writer stages into). */
-  private[graft] def enrichLines(spark: SparkSession, dir: String,
-      lines: Seq[String], cols: Seq[String]): Seq[String] = {
-    if (cols.isEmpty || lines.isEmpty) return lines
-    val files = lines.map(l => parseAdd(l)._1)
-    val markers = statMarkersFor(spark, dir, files, cols)
-    lines.map { l =>
-      val base = new File(parseAdd(l)._1).getName
-      (l +: markers.getOrElse(base, Seq.empty)).mkString("\t")
-    }
-  }
+    tableProperties(dir).get(StatsColsProp).toSeq.flatMap(decodeCols)
 
   /** Decode a comma-joined escaped column list (the encoding of
     * [[PartitionColsProp]] / [[StatsColsProp]] values). */
@@ -1214,18 +1204,16 @@ object TxLog {
   }
 
   def columnMapping(dir: String, asOf: Option[Int] = None): ColMap =
-    if (currentVersion(dir) < 0) ColMap(Map.empty, Set.empty)
-    else {
-      val props = tableProperties(dir, asOf)
-      ColMap(
-        props.get(ColumnMappingProp).toSeq.flatMap(_.split(','))
-          .filter(_.nonEmpty).map { kv =>
-            val i = kv.indexOf('=')
-            unescapeVal(kv.substring(0, i)) -> unescapeVal(kv.substring(i + 1))
-          }.toMap,
-        props.get(RetiredColsProp).toSeq.flatMap(_.split(','))
-          .filter(_.nonEmpty).map(unescapeVal).toSet)
-    }
+    colMapOf(tableProperties(dir, asOf))
+
+  private def colMapOf(props: scala.collection.Map[String, String]): ColMap =
+    ColMap(
+      props.get(ColumnMappingProp).toSeq.flatMap(_.split(','))
+        .filter(_.nonEmpty).map { kv =>
+          val i = kv.indexOf('=')
+          unescapeVal(kv.substring(0, i)) -> unescapeVal(kv.substring(i + 1))
+        }.toMap,
+      props.get(RetiredColsProp).toSeq.flatMap(decodeCols).toSet)
 
   /** The property/unproperty lines recording a mapping transition —
     * emitted inside the SAME commit as the schema change they belong
@@ -1338,14 +1326,12 @@ object TxLog {
     * retired/mapped physical storage: committing it would alias a
     * dead column's bytes (the remedy is ALTER TABLE ADD COLUMN, which
     * allocates a fresh physical name). */
-  private def toPhysicalDf(df: DataFrame, dir: String): DataFrame = {
-    val cm = columnMapping(dir)
+  private def toPhysicalDf(df: DataFrame, lay: Layout): DataFrame = {
+    val cm = lay.mapping
     if (!cm.active) return df
     import org.apache.spark.sql.functions.col
-    val logical = tableSchema(dir).map(_.fieldNames.toSet)
-      .getOrElse(Set.empty)
     val taken = cm.retired ++ cm.toPhys.values
-    df.columns.filterNot(logical).find(taken) match {
+    df.columns.filterNot(lay.logical).find(taken) match {
       case Some(c) => throw new IllegalArgumentException(
         s"new column '$c' collides with a renamed or dropped column's " +
           "physical storage name — ALTER TABLE ADD COLUMN first (it " +
@@ -1386,28 +1372,13 @@ object TxLog {
   /** PHYSICAL → LOGICAL alias-only rename for a re-read of freshly
     * STAGED files (they hold exactly the written columns — no retired
     * ghosts to project away, no missing columns to backfill). */
-  private def logicalizeStaged(df: DataFrame, dir: String): DataFrame = {
-    val cm = columnMapping(dir)
+  private def logicalizeStaged(df: DataFrame, lay: Layout): DataFrame = {
+    val cm = lay.mapping
     if (cm.toPhys.isEmpty) return df
     import org.apache.spark.sql.functions.col
     val rev = cm.toPhys.map(_.swap)
     df.select(df.columns.map(c =>
       col(c).as(rev.getOrElse(c, c))).toIndexedSeq: _*)
-  }
-
-  /** REPLACE the whole live set with `df` staged PARTITION-PURE — the
-    * overwrite path of a declaratively partitioned table (one atomic
-    * commit, old state stays time-travelable, new files carry `p:`
-    * markers). Creates the table when absent. */
-  def replacePartitioned(spark: SparkSession, df: DataFrame, dir: String,
-      partCols: Seq[String]): Int = {
-    val cur = currentVersion(dir)
-    val (_, adds0) = stagePartitioned(spark, df, dir, partCols)
-    val adds = withDeclaredStats(spark, dir, adds0)
-    if (cur < 0) claimVersion(dir, 0, adds ++ schemaLine(df, dir))
-    else claimVersion(dir, cur + 1,
-      snapshot(dir, Some(cur)).map(f => s"remove\t$f") ++ adds ++
-        schemaLine(df, dir, exact = true))
   }
 
   /** `INSERT OVERWRITE ... WHERE`-scoped replace (Delta's
@@ -1425,36 +1396,21 @@ object TxLog {
     val cur = currentVersion(dir)
     require(cur >= 0, s"$dir is not a TxLog table")
     val st = state(dir, Some(cur))
-    val (dataStaged, dataLines) = stageLinesEnforced(spark, data, dir)
+    val (dataStaged, dataLines) = stageBatch(data, dir, Some(layoutOf(st)),
+      checks = Seq(pred -> ("replaceWhere: the incoming batch holds rows " +
+        s"outside the overwritten predicate $pred")))
     try {
-      if (dataStaged.nonEmpty) {
-        val stagedDf = logicalizeStaged(
-          // staged files come from ONE write — identical schemas
-          spark.read
-            .parquet(dataStaged.map(f => s"$dir/$f"): _*), dir)
-        val bad = stagedDf.filter(!pred || pred.isNull).limit(1).count()
-        if (bad > 0) throw new IllegalArgumentException(
-          s"replaceWhere: the incoming batch holds rows outside the " +
-            s"overwritten predicate $pred")
-      }
       val (proven, candidates) = classifyByPredicate(st, pred)
       val affected = affectedFiles(spark, dir, candidates,
         df => df.filter(pred))
-      val keepLines =
-        if (affected.isEmpty) Seq.empty[String]
-        else {
-          val keep = readFiles(spark, dir, affected,
-              dvFrameFrom(spark, dir, st.dv.toMap))
-            .filter(!pred || pred.isNull)
-          if (keep.isEmpty) Seq.empty[String]
-          else stageLinesEnforced(spark, keep, dir)._2
-        }
       claimVersion(dir, cur + 1,
         (proven ++ affected).map(f => s"remove\t$f") ++
-          keepLines ++ dataLines ++ schemaLine(data, dir))
+          stageSurvivors(spark, dir, st, affected)(
+            _.filter(!pred || pred.isNull)) ++
+          dataLines ++ schemaLine(data, dir))
     } catch { case e: Throwable =>
-      // a refused batch (or lost claim race) leaves no orphans behind
-      dataStaged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      // a lost claim race leaves no orphans behind
+      unstage(dir, dataStaged)
       throw e
     }
   }
@@ -1471,7 +1427,8 @@ object TxLog {
     * from the dynamic-partition rendering itself. */
   def replaceDynamicPartitions(spark: SparkSession, data: DataFrame,
       dir: String): Int = {
-    val partCols = partitionColumns(dir)
+    val lay = layoutOf(dir)
+    val partCols = lay.partCols
     require(partCols.nonEmpty,
       "dynamic partition overwrite needs a declared-partitioned table " +
         s"(CREATE TABLE ... PARTITIONED BY): $dir declares none")
@@ -1484,8 +1441,7 @@ object TxLog {
       s"dynamic partition overwrite is undecidable: ${unmarked.size} " +
         "live files carry no partition markers (written before the " +
         "layout was declared) — run OPTIMIZE first to re-layout them")
-    val (staged, lines0) = stagePartitioned(spark, data, dir, partCols)
-    val lines = withDeclaredStats(spark, dir, lines0)
+    val (staged, lines) = stageBatch(data, dir, Some(lay))
     try {
       def tuple(m: Map[String, String]): Seq[String] =
         partCols.map(c => m.getOrElse(c, ""))
@@ -1495,32 +1451,21 @@ object TxLog {
       claimVersion(dir, cur + 1,
         victims.map(f => s"remove\t$f") ++ lines ++
           schemaLine(data, dir))
-    } catch { case e: Throwable =>
-      staged.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
-      throw e
-    }
+    } catch { case e: Throwable => unstage(dir, staged); throw e }
   }
 
   /** Staging for the catalog's ATOMIC CREATE/REPLACE TABLE (the
-    * StagedTable write leg): partition-pure when the new definition
-    * declares partition columns; returns (names, finished add lines).
-    * NOT constraint-checked — a REPLACE installs a whole new
-    * definition, and the old table's constraints die with it in
-    * [[commitDefinition]]. */
-  private[graft] def stageForDefinition(spark: SparkSession, df: DataFrame,
-      dir: String, partCols: Seq[String],
-      statsCols: Seq[String] = Seq.empty): (Seq[String], Seq[String]) = {
-    // the OLD table's column mapping must NOT apply: this data is the
-    // NEW definition's, and commitDefinition clears the mapping in the
-    // same commit that references these files
-    val (names, lines) =
-      if (partCols.isEmpty) {
-        val n = stage(df, dir, useMapping = false)
-        (n, n.map(f => s"add\t$f"))
-      } else stagePartitioned(spark, df, dir, partCols,
-        checkConstraints = false, useMapping = false)
-    (names, enrichLines(spark, dir, lines, statsCols))
-  }
+    * StagedTable write leg), under the NEW definition's layout:
+    * partition-pure when it declares partition columns, zone maps for
+    * its stats columns; returns (names, finished add lines). The OLD
+    * table's column mapping and CHECK constraints do not apply — a
+    * REPLACE installs a whole new definition, and [[commitDefinition]]
+    * clears both in the same commit that references these files. */
+  private[graft] def stageForDefinition(df: DataFrame, dir: String,
+      partCols: Seq[String], statsCols: Seq[String])
+      : (Seq[String], Seq[String]) =
+    stageBatch(df, dir,
+      Some(NoLayout.copy(partCols = partCols, statsCols = statsCols)))
 
   /** ONE atomic commit installing a whole table DEFINITION —
     * `CREATE [OR REPLACE] TABLE [AS SELECT]` through the catalog's
@@ -1556,67 +1501,6 @@ object TxLog {
           addLines ++ propLines :+ schemaL)
     }
   }
-
-  /** Partition-pure staging shared by [[appendPartitioned]] and
-    * [[replacePartitioned]]: returns (staged names, finished add lines
-    * with `p:` markers). Constraint-checked like every staging path. */
-  private def stagePartitioned(spark: SparkSession, df: DataFrame,
-      dir: String, partCols: Seq[String],
-      checkConstraints: Boolean = true,
-      arrange: (DataFrame, Seq[String]) => DataFrame = (d, _) => d,
-      useMapping: Boolean = true)
-      : (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.functions.col
-    require(partCols.nonEmpty, "partCols must be non-empty")
-    new File(dir).mkdirs()
-    val tmp = Files.createTempDirectory(Paths.get(dir), ".stagep-")
-    val shadows = partCols.map(c => s"__p_$c")
-    // physical storage names on a mapped table (partition columns are
-    // rename-proof, so the shadow references below still bind)
-    val mapped = if (useMapping) toPhysicalDf(df, dir) else df
-    val dup = partCols.zip(shadows).foldLeft(mapped) {
-      case (d, (c, s)) => d.withColumn(s, col(c).cast("string"))
-    }
-    // `arrange` lets OPTIMIZE inject its layout (range-partition by
-    // shadow values + cluster key, sorted within) BEFORE the dynamic
-    // partitionBy writer; a child already sorted on the shadow prefix
-    // satisfies the writer's required ordering, so the secondary
-    // cluster order survives into the files
-    arrange(dup, shadows)
-      .write.partitionBy(shadows: _*).mode("overwrite").parquet(tmp.toString)
-    // walk the partition directory tree: each leaf parquet file sits
-    // under one __p_c=<escaped value> path per partition column
-    def leaves(d: File, vals: Map[String, String])
-        : Seq[(File, Map[String, String])] =
-      Option(d.listFiles()).getOrElse(Array.empty).toSeq.flatMap {
-        case f if f.isDirectory && f.getName.contains("=") =>
-          val Array(k, v) = f.getName.split("=", 2)
-          leaves(f, vals + (k.stripPrefix("__p_") -> sparkUnescape(v)))
-        case f if f.isFile && f.getName.endsWith(".parquet")
-            && !f.getName.startsWith(".") => Seq(f -> vals)
-        case _ => Seq.empty
-      }
-    val found = leaves(tmp.toFile, Map.empty).sortBy(_._1.getPath)
-    val named = found.zipWithIndex.map { case ((f, vals), i) =>
-      val name = s"part-${java.util.UUID.randomUUID().toString.take(8)}-$i.parquet"
-      Files.move(f.toPath, Paths.get(dir, name), StandardCopyOption.ATOMIC_MOVE)
-      (name, vals)
-    }
-    drop(tmp.toString) // staging litter (empty partition dirs, _SUCCESS)
-    // stage-first constraint check, same one-execution contract as
-    // [[stageEnforced]] (the partitionBy writer is its own staging path)
-    if (checkConstraints) validateStaged(spark, dir, named.map(_._1))
-    val adds = named.map { case (name, vals) =>
-      val markers = partCols.map(c =>
-        s"p:${escapeVal(c)}=${escapeVal(vals.getOrElse(c, ""))}")
-      (s"add\t$name" +: markers).mkString("\t")
-    }
-    (named.map(_._1), adds)
-  }
-
-  /** Undo Spark's partition-path escaping (`%xx`, uppercase hex — the
-    * Hive-compatible `escapePathName` scheme). */
-  private def sparkUnescape(s: String): String = unescapeVal(s)
 
   /** Live files whose partition values match every (col → value) pair
     * in `filter` — plus any file with no recorded value for a filtered
@@ -1671,17 +1555,25 @@ object TxLog {
     val affected = affectedFiles(spark, dir, candidates,
       df => df.filter(pred))
     if (affected.isEmpty && proven.isEmpty) return cur
-    val adds =
-      if (affected.isEmpty) Seq.empty[String]
-      else {
-        val keep = readFiles(spark, dir, affected,
-            dvFrameFrom(spark, dir, st.dv.toMap))
-          .filter(!pred || pred.isNull)
-        if (keep.isEmpty) Seq.empty[String]
-        else stageLinesEnforced(spark, keep, dir)._2
-      }
-    commitLines(dir, cur, adds, proven ++ affected)
+    commitLines(dir, cur,
+      stageSurvivors(spark, dir, st, affected)(_.filter(!pred || pred.isNull)),
+      proven ++ affected)
   }
+
+  /** The copy-on-write survivor leg of [[deleteWhere]], [[upsert]] and
+    * [[replaceWhere]]: read the `affected` files with deletion vectors
+    * applied, keep the rows `keep` selects, and stage them — or
+    * nothing when none survive. Returns the add lines. */
+  private def stageSurvivors(spark: SparkSession, dir: String,
+      st: LogState, affected: Seq[String])(
+      keep: DataFrame => DataFrame): Seq[String] =
+    if (affected.isEmpty) Seq.empty
+    else {
+      val kept = keep(readFiles(spark, dir, affected,
+        dvFrameFrom(spark, dir, st.dv.toMap)))
+      if (kept.isEmpty) Seq.empty
+      else stageBatch(kept, dir, Some(layoutOf(st)))._2
+    }
 
   /** UPDATE ... SET ... WHERE: copy-on-write — every live file holding
     * a row where `pred` is TRUE is rewritten with `sets` applied to
@@ -1731,8 +1623,7 @@ object TxLog {
       }
     }: _*)
     commitLines(dir, cur,
-      stageLinesEnforced(spark, rewritten, dir)._2,
-      affected)
+      stageBatch(rewritten, dir, Some(layoutOf(st)))._2, affected)
   }
 
   /** Affected-file probe for external executors
@@ -2069,48 +1960,13 @@ object TxLog {
     }
   }
 
-  /** Stage `df` and validate it against active CHECK constraints (the
-    * [[stageEnforced]] contract) — the SQL DML executor's writer-side
-    * entry. */
-  private[graft] def stageChecked(df: DataFrame, dir: String): Seq[String] =
-    stageEnforced(df, dir)
-
-  /** [[stageChecked]] returning FINISHED add lines (partition markers
-    * included on a declared-partitioned table) — the SQL MERGE
-    * executor's staging leg ([[graft.plans.TxLogDml]]). */
-  private[graft] def stageCheckedLines(spark: SparkSession,
-      df: DataFrame, dir: String): Seq[String] =
-    stageLinesEnforced(spark, df, dir)._2
-
-  /** Stage `df` under the table's DECLARED layout — partition-pure
-    * files with finished `p:`-marked add lines when partition columns
-    * are declared, plain staging otherwise; constraint-checked either
-    * way. EVERY rewriting writer (DELETE/UPDATE survivors, upsert,
-    * MERGE) stages through this: without it a rewrite silently demotes
-    * a partitioned table's files to unprunable (no markers →
-    * conservative keep on every partition predicate), and on a 100 TB
-    * table one DELETE would grow the unprunable set forever. A rewrite
-    * that CHANGES a partition column's value (UPDATE SET part = ...)
-    * lands rows in their new partition files for free. */
-  private[graft] def stageLinesEnforced(spark: SparkSession,
-      df: DataFrame, dir: String): (Seq[String], Seq[String]) = {
-    val declared = partitionColumns(dir)
-    val (names, lines) =
-      if (declared.nonEmpty) stagePartitioned(spark, df, dir, declared)
-      else {
-        val n = stageEnforced(df, dir)
-        (n, n.map(f => s"add\t$f"))
-      }
-    (names, withDeclaredStats(spark, dir, lines))
-  }
-
   /** Commit with PRE-BUILT add lines (marker-carrying) — the
     * rewriting writers' claim leg. Retries across pure blind appends
     * ([[claimOverAppendsRetrying]]). */
   private[graft] def commitLines(dir: String, expected: Int,
-      addLines: Seq[String], removes: Seq[String]): Int =
+      adds: Seq[String], removes: Seq[String]): Int =
     claimOverAppendsRetrying(dir, expected,
-      removes.map(f => s"remove\t$f") ++ addLines)
+      removes.map(f => s"remove\t$f") ++ adds)
 
   /** Is version `v` a PURE BLIND APPEND — new data files and their
     * bookkeeping only (add/txn/copysrc lines, a widened union schema),
@@ -2157,13 +2013,6 @@ object TxLog {
     throw new IllegalStateException("unreachable")
   }
 
-  /** DV-aware scan of `files` as of the vectors in `dv`: rows whose
-    * (file, position) is deleted never reach the caller. On a
-    * column-mapped table the result projects PHYSICAL storage names
-    * back onto the logical schema at `asOf` ([[projectToLogical]]) —
-    * the one seam that makes every consumer (scans, DML probes, time
-    * travel) see renamed columns under their schema names and dropped
-    * columns not at all. */
   /** Parquet scan of table-resident LIVE files under the RECORDED
     * (physical-name) schema when the log carries one. Commits may
     * EVOLVE the schema (add columns) — the union schema is the table
@@ -2189,6 +2038,13 @@ object TxLog {
         .parquet(files.map(f => s"$dir/$f"): _*)
     }
 
+  /** DV-aware scan of `files` as of the vectors in `dv`: rows whose
+    * (file, position) is deleted never reach the caller. On a
+    * column-mapped table the result projects PHYSICAL storage names
+    * back onto the logical schema at `asOf` ([[projectToLogical]]) —
+    * the one seam that makes every consumer (scans, DML probes, time
+    * travel) see renamed columns under their schema names and dropped
+    * columns not at all. */
   private def readFiles(spark: SparkSession, dir: String,
       files: Seq[String], dv: Option[DataFrame],
       asOf: Option[Int] = None): DataFrame = {
@@ -2221,35 +2077,27 @@ object TxLog {
     * LOG protocol is identical either way. */
   def upsert(spark: SparkSession, dir: String, source: DataFrame,
       keyCol: String): Int = {
-    // survivors were validated when first written; only the source is
-    // new. Stage the source FIRST: the frame executes exactly once, and
+    // Stage the source FIRST: the frame executes exactly once, and
     // the key probe below reads the deterministic staged parquet — a
     // nondeterministic source cannot stage different rows than the ones
     // whose keys drove the rewrite (ADVICE r10).
     val cur = currentVersion(dir)
     val st = state(dir, Some(cur))
-    val (srcStaged, srcLines) = stageLinesEnforced(spark, source, dir)
+    val lay = layoutOf(st)
+    val (srcStaged, srcLines) = stageBatch(source, dir, Some(lay))
     val src =
       if (srcStaged.isEmpty) source.limit(0)
       else logicalizeStaged(spark.read // one write — identical schemas
-        .parquet(srcStaged.map(f => s"$dir/$f"): _*), dir)
+        .parquet(srcStaged.map(f => s"$dir/$f"): _*), lay)
     val keys = src.select(keyCol).distinct().persist()
     try {
       val affected = affectedFiles(spark, dir, st.live.keys.toSeq,
         df => df.join(keys, Seq(keyCol), "left_semi"))
-      val survivorLines =
-        if (affected.isEmpty) Seq.empty[String]
-        else {
-          val kept = readFiles(spark, dir, affected,
-              dvFrameFrom(spark, dir, st.dv.toMap))
-            .join(keys, Seq(keyCol), "left_anti")
-          if (kept.isEmpty) Seq.empty[String]
-          else stageLinesEnforced(spark, kept, dir)._2
-        }
       claimVersion(dir, cur + 1,
         affected.map(f => s"remove\t$f") ++
-          survivorLines ++ srcLines ++
-          schemaLine(source, dir))
+          stageSurvivors(spark, dir, st, affected)(
+            _.join(keys, Seq(keyCol), "left_anti")) ++
+          srcLines ++ schemaLine(source, dir))
     } finally { keys.unpersist(): Unit }
   }
 
@@ -2262,26 +2110,29 @@ object TxLog {
   def appendIdempotent(df: DataFrame, dir: String,
       app: String, txnId: Long): Int = {
     if (txnSeen(dir, app, txnId)) return -1
-    val (adds, lines) = stageLinesEnforced(df.sparkSession, df, dir)
-    claimTxnRetrying(df.sparkSession, dir, adds, app, txnId,
-      () => lines ++ schemaLine(df, dir))
+    claimAppend(df, dir, stageBatch(df, dir), Some(app -> txnId))
   }
 
   /** Driver-side commit of EXECUTOR-staged files as one idempotent
     * streaming epoch — the DSv2 streaming write's commit leg
     * ([[graft.sources.TxLogStreamingWrite]]): tasks already wrote the
     * parquet files straight into the table directory (invisible until
-    * referenced, like every staged file), so the driver only validates
-    * constraints against exactly those bytes and claims adds + schema +
-    * txn marker. A REPLAYED epoch (marker already in the log — the
-    * checkpoint-recovery path) deletes its re-staged files and returns
-    * -1: exactly-once by protocol, the appendIdempotent contract
-    * without a driver-side restage. */
+    * referenced, like every staged file), each with its partition
+    * values on a declaratively partitioned table (empty otherwise), so
+    * the driver only finishes their add lines ([[addLines]]: `p:`
+    * markers, constraints validated against exactly those bytes,
+    * declared-stats zone maps — streamed files prune exactly like batch
+    * ones) and claims adds + schema + txn marker. A REPLAYED epoch
+    * (marker already in the log — the checkpoint-recovery path) deletes
+    * its re-staged files and returns -1: exactly-once by protocol, the
+    * appendIdempotent contract without a driver-side restage. */
   def commitStagedIdempotent(spark: SparkSession, dir: String,
-      files: Seq[String], schema: org.apache.spark.sql.types.StructType,
+      files: Seq[(String, Map[String, String])],
+      schema: org.apache.spark.sql.types.StructType,
       app: String, txnId: Long): Int = {
+    val names = files.map(_._1)
     if (txnSeen(dir, app, txnId)) {
-      files.foreach(f => Files.deleteIfExists(Paths.get(dir, f)))
+      unstage(dir, names)
       return -1
     }
     // an ALL-EMPTY-PARTITION epoch stages nothing — claiming a version
@@ -2290,37 +2141,8 @@ object TxLog {
     // replayed empty epoch is indistinguishable from a committed one,
     // so skipping keeps the exactly-once contract
     if (files.isEmpty) return -1
-    validateStaged(spark, dir, files)
-    // declared-stats bounds per epoch batch (one distributed agg over
-    // the epoch's files) — streamed files prune exactly like batch ones
-    val lines = withDeclaredStats(spark, dir, files.map(f => s"add\t$f"))
-    claimTxnRetrying(spark, dir, files, app, txnId,
-      () => lines ++ schemaLineOf(schema, dir))
-  }
-
-  /** The PARTITIONED form of [[commitStagedIdempotent]] — the DSv2
-    * streaming write on a declaratively partitioned table: each staged
-    * file arrives with its (already partition-pure) values, committed
-    * as `p:` markers so streamed files prune exactly like batch ones. */
-  def commitStagedPartsIdempotent(spark: SparkSession, dir: String,
-      files: Seq[(String, Map[String, String])],
-      schema: org.apache.spark.sql.types.StructType,
-      app: String, txnId: Long): Int = {
-    if (txnSeen(dir, app, txnId)) {
-      files.foreach { case (f, _) =>
-        Files.deleteIfExists(Paths.get(dir, f)) }
-      return -1
-    }
-    if (files.isEmpty) return -1
-    validateStaged(spark, dir, files.map(_._1))
-    val lines = withDeclaredStats(spark, dir,
-      files.map { case (f, vals) =>
-        val markers = vals.toSeq.map { case (c, v) =>
-          s"p:${escapeVal(c)}=${escapeVal(v)}" }
-        (s"add\t$f" +: markers).mkString("\t")
-      })
-    claimTxnRetrying(spark, dir, files.map(_._1), app, txnId,
-      () => lines ++ schemaLineOf(schema, dir))
+    claimAppendRetrying(spark, dir, names,
+      addLines(spark, dir, layoutOf(dir), files), schema, Some(app -> txnId))
   }
 
   /** Has `(app, txnId)` already committed? Scanned from the replayed
@@ -2341,9 +2163,10 @@ object TxLog {
     * [[graft.functions.ZOrder2D]], range-partitioned into `nFiles` by
     * curve position and sorted within — so every output file covers a
     * small curve segment ≈ a small RECTANGLE in (x, y) space. The add
-    * lines then carry min/max triples for BOTH columns ([[statAddLines]]
-    * one-scan bounds), making [[pruneSnapshot]] zone maps effective on
-    * either dimension at once instead of only a leading sort key. */
+    * lines then carry min/max triples for BOTH columns (one-scan
+    * bounds, [[stageBatch]]), making [[pruneSnapshot]] zone maps
+    * effective on either dimension at once instead of only a leading
+    * sort key. */
   def optimize(spark: SparkSession, dir: String, nFiles: Int = 1,
       clusterBy: Seq[String] = Seq.empty): Int = {
     import org.apache.spark.sql.functions.{call_function, col, floor, lit, max, min}
@@ -2376,22 +2199,22 @@ object TxLog {
           scaled(cx, b.getDouble(0), b.getDouble(1)),
           scaled(cy, b.getDouble(2), b.getDouble(3))))
       }
-    val declared = partitionColumns(dir)
-    if (declared.nonEmpty) {
-      // a DECLARED-partitioned table compacts WITHIN partitions — the
-      // rewritten files stay partition-pure and keep their `p:` markers
-      // (a layout pass that demoted files to unprunable would undo the
-      // table's own point). One distributed job: range-partition on
-      // (partition shadows, curve position), sort within, and let the
-      // partitionBy writer split boundary tasks into pure files.
-      // `nFiles` bounds the TASK count; equal partition tuples land in
-      // one task, so the simple path compacts to one file per value.
-      // the curve column is computed on the LOGICAL frame here (before
-      // staging maps storage names) so ZORDER BY still binds after a
-      // RENAME COLUMN; `arrange` only orders by it and drops it
-      val srcZ = zOpt.fold(src)(z => src.withColumn("__gz", z))
-      val arrange: (DataFrame, Seq[String]) => DataFrame = (d, sh) => {
-        val keys = sh.map(col) ++ zOpt.map(_ => col("__gz")).toSeq
+    // a DECLARED-partitioned table compacts WITHIN partitions — the
+    // rewritten files stay partition-pure and keep their `p:` markers
+    // (a layout pass that demoted files to unprunable would undo the
+    // table's own point). One distributed job: range-partition on
+    // (partition shadows, curve position), sort within, and let the
+    // partitionBy writer split boundary tasks into pure files.
+    // `nFiles` bounds the TASK count; equal partition tuples land in
+    // one task, so the simple path compacts to one file per value.
+    // The curve column is computed on the LOGICAL frame here (before
+    // staging maps storage names) so ZORDER BY still binds after a
+    // RENAME COLUMN; `arrange` only orders by it and drops it.
+    val srcZ = zOpt.fold(src)(z => src.withColumn("__gz", z))
+    val arrange: (DataFrame, Seq[String]) => DataFrame = (d, sh) => {
+      val keys = sh.map(col) ++ zOpt.map(_ => col("__gz")).toSeq
+      if (keys.isEmpty) d.coalesce(nFiles)
+      else {
         val arranged = d
           .repartitionByRange(math.max(nFiles, 1), keys: _*)
           .sortWithinPartitions(keys: _*)
@@ -2399,53 +2222,14 @@ object TxLog {
         // projection, so the physical row order survives
         zOpt.fold(arranged)(_ => arranged.drop("__gz"))
       }
-      // constraint re-check skipped: bit-identical rows (nodc), same
-      // contract as the unpartitioned compaction path
-      val (staged, lines) = stagePartitioned(spark, srcZ, dir, declared,
-        checkConstraints = false, arrange = arrange)
-      val statM = statMarkersFor(spark, dir, staged,
-        (clusterBy ++ statsColumns(dir)).distinct)
-      val full = staged.zip(lines).map { case (n, l) =>
-        (l +: statM.getOrElse(n, Seq.empty)).mkString("\t") }
-      return claimVersion(dir, cur + 1,
-        live.map(f => s"remove\t$f") ++ full :+ "nodc")
     }
-    zOpt match {
-      case None =>
-        claimVersion(dir, cur + 1,
-          live.map(f => s"remove\t$f") ++
-            statAddLines(spark, dir, stage(src.coalesce(nFiles), dir),
-              statsColumns(dir)) :+ "nodc")
-      case Some(z) =>
-        // curve-ordered layout; the helper column never reaches the files
-        val clustered = src.withColumn("__z", z)
-          .repartitionByRange(nFiles, col("__z"))
-          .sortWithinPartitions(col("__z"))
-          .drop("__z")
-        val staged = stage(clustered, dir)
-        claimVersion(dir, cur + 1,
-          live.map(f => s"remove\t$f") ++
-            statAddLines(spark, dir, staged,
-              (clusterBy ++ statsColumns(dir)).distinct) :+ "nodc")
-    }
+    // constraint re-check skipped: the rows are bit-identical (nodc)
+    val lay = layoutOf(st).copy(constraints = Seq.empty)
+    claimVersion(dir, cur + 1, live.map(f => s"remove\t$f") ++
+      stageBatch(srcZ, dir, Some(lay), extraStats = clusterBy,
+        arrange = arrange)._2 :+ "nodc")
   }
 
-  /** SHALLOW CLONE: a new table whose version 0 REFERENCES the source's
-    * live files by relative path — zero bytes copied (the add-line
-    * file field is joined under the clone's dir at read time, so
-    * `../src/part-x.parquet` resolves naturally). The clone then
-    * diverges independently: its deletes/appends/optimizes touch only
-    * its own log and its own staged files; a copy-on-write rewrite
-    * naturally "un-shares" whatever it touches. Caveat (same as
-    * Delta's): vacuuming the SOURCE can break clones that still
-    * reference its files — retention policy must span clones. That
-    * caveat covers `_dv/` SIDECARS too (ADVICE r9): the clone's
-    * translated `dvf` lines point at the source's sidecar parquet, and
-    * [[vacuum]] on the source reclaims sidecars by the SOURCE's
-    * retained versions alone — a clone still reading them fails with
-    * path-not-found at scan. Either retain past every clone's creation
-    * version or OPTIMIZE the clone first (materializing its vectors
-    * un-shares the sidecars). */
   /** RESTORE the table to its state at `toVersion`, as a NEW commit
     * (Delta's `RESTORE TABLE ... TO VERSION AS OF`): the live set, the
     * outstanding deletion vectors, and the recorded schema all snap
@@ -2505,6 +2289,22 @@ object TxLog {
         st.live.values.toSeq ++ dvLines ++ layoutSnap ++ schemaSnap)
   }
 
+  /** SHALLOW CLONE: a new table whose version 0 REFERENCES the source's
+    * live files by relative path — zero bytes copied (the add-line
+    * file field is joined under the clone's dir at read time, so
+    * `../src/part-x.parquet` resolves naturally). The clone then
+    * diverges independently: its deletes/appends/optimizes touch only
+    * its own log and its own staged files; a copy-on-write rewrite
+    * naturally "un-shares" whatever it touches. Caveat (same as
+    * Delta's): vacuuming the SOURCE can break clones that still
+    * reference its files — retention policy must span clones. That
+    * caveat covers `_dv/` SIDECARS too (ADVICE r9): the clone's
+    * translated `dvf` lines point at the source's sidecar parquet, and
+    * [[vacuum]] on the source reclaims sidecars by the SOURCE's
+    * retained versions alone — a clone still reading them fails with
+    * path-not-found at scan. Either retain past every clone's creation
+    * version or OPTIMIZE the clone first (materializing its vectors
+    * un-shares the sidecars). */
   def shallowClone(srcDir: String, dstDir: String): Int = {
     val srcSt = state(srcDir, None)
     // an UNDECIDED multi-table transaction resolves to nothing — a
@@ -3030,13 +2830,6 @@ object TxLog {
     claimed.map(_._2).toSeq
   }
 
-  /** Split out for the crash-window spec: create the shared tx file —
-    * THE atomic commit point. The first body line is a `!tables`
-    * header naming every participant (relative to `txRoot`) so
-    * [[vacuumTxn]] can discover reference holders without being handed
-    * the list; [[resolveLines]]' key-prefix match never sees it.
-    * Refuses if the transaction was already decided (published or
-    * aborted). */
   /** Crash-injection seam for the publish-failure spec (the claimOnly
     * counterpart): when set, the next [[publishTx]] throws BEFORE
     * touching the filesystem — the "disk full / txRoot gone at publish
@@ -3044,6 +2837,13 @@ object TxLog {
   private[graft] val failNextPublish =
     new java.util.concurrent.atomic.AtomicBoolean(false)
 
+  /** Split out for the crash-window spec: create the shared tx file —
+    * THE atomic commit point. The first body line is a `!tables`
+    * header naming every participant (relative to `txRoot`) so
+    * [[vacuumTxn]] can discover reference holders without being handed
+    * the list; [[resolveLines]]' key-prefix match never sees it.
+    * Refuses if the transaction was already decided (published or
+    * aborted). */
   private[graft] def publishTx(txRoot: String, txName: String,
       parts: Seq[(String, Seq[String])]): Unit = {
     if (failNextPublish.getAndSet(false))
@@ -3136,8 +2936,7 @@ object TxLog {
   def appendAll(txRoot: String,
       batches: Seq[(DataFrame, String)]): Seq[Int] =
     commitAllLines(txRoot, batches.map { case (df, dir) =>
-      dir -> (stageLinesEnforced(df.sparkSession, df, dir)._2 ++
-        schemaLine(df, dir))
+      dir -> (stageBatch(df, dir)._2 ++ schemaLine(df, dir))
     })
 
   /** Atomically REPLACE every table's live set (the FK-safe
@@ -3155,7 +2954,7 @@ object TxLog {
         if (cur < 0) Seq.empty
         else snapshot(dir, Some(cur)).map(f => s"remove\t$f")
       (dir,
-        removes ++ stageLinesEnforced(df.sparkSession, df, dir)._2 ++
+        removes ++ stageBatch(df, dir)._2 ++
           schemaLine(df, dir, exact = true),
         Some(cur))
     })

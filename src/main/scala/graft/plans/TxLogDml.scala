@@ -459,8 +459,8 @@ object TxLogDml {
           case None => orig.as(a.name)
         }
       }: _*)
-      TxLog.commitLines(dir, cur,
-        TxLog.stageCheckedLines(spark, rewritten, dir), affected)
+      TxLog.commitLines(dir, cur, TxLog.stageBatch(rewritten, dir)._2,
+        affected)
     } finally { hits.unpersist(): Unit }
   }
 
@@ -581,9 +581,9 @@ object TxLogDml {
                 .StringType)()))
             .join(srcDf, cond, "left_semi")
         }
-      // 2. rewrite the affected files
-      val rewrites: Seq[String] =
-        if (affected.isEmpty) Seq.empty
+      // 2. rewrite the affected files: (staged names, add lines)
+      val (rewritten, rewrites) =
+        if (affected.isEmpty) (Seq.empty[String], Seq.empty[String])
         else {
           val aff = alignedTarget(spark,
             TxLog.readLiveFiles(spark, dir, affected), tgtAttrs)
@@ -624,13 +624,14 @@ object TxLogDml {
               .filter(!coalesce(deleteCond, lit(false)))
               .select(values.values.toSeq.map { case (a, c) =>
                 c.cast(a.dataType).as(a.name) }: _*)
-            TxLog.stageCheckedLines(spark, survivors, dir)
+            TxLog.stageBatch(survivors, dir)
           } finally { joined.unpersist(): Unit }
         }
-      // 3. inserts: source rows unmatched anywhere in the target
+      // 3. inserts: source rows unmatched anywhere in the target; a
+      // refused insert batch takes the staged rewrites with it
       val inserts: Seq[String] =
         if (notMatched.isEmpty) Seq.empty
-        else {
+        else try {
           val unmatchedSrc =
             if (live.isEmpty) srcDf
             else srcDf.join(
@@ -658,8 +659,8 @@ object TxLogDml {
           val rows = unmatchedSrc.filter(keep)
             .select(values.values.toSeq.map { case (a, c) =>
               c.cast(a.dataType).as(a.name) }: _*)
-          TxLog.stageCheckedLines(spark, rows, dir)
-        }
+          TxLog.stageBatch(rows, dir)._2
+        } catch { case e: Throwable => TxLog.unstage(dir, rewritten); throw e }
       // 4. one atomic commit
       if (affected.isEmpty && inserts.isEmpty) cur
       else TxLog.commitLines(dir, cur, rewrites ++ inserts, affected)

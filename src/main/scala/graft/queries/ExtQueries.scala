@@ -5942,9 +5942,13 @@ object ExtQueries {
           "ADD CONSTRAINT qty_pos CHECK (l_quantity > 0)")
         val before = s.sql("SELECT count(*) FROM graft_lake.q454c")
           .head().getLong(0)
+        // only the CHECK refusal counts; any other failure propagates
         val refused = try {
           s.sql("INSERT INTO graft_lake.q454c VALUES (-1, -7.5)"); false
-        } catch { case _: Throwable => true }
+        } catch {
+          case e: IllegalArgumentException if String.valueOf(e.getMessage)
+              .startsWith("CHECK constraint violated") => true
+        }
         val unchanged = s.sql("SELECT count(*) FROM graft_lake.q454c")
           .head().getLong(0) == before
         s.sql("INSERT INTO graft_lake.q454c SELECT * FROM q454_later")

@@ -587,9 +587,8 @@ class TxLogStagedTable(dir: String, ident: String,
             override def insert(data: DataFrame, ignored: Boolean): Unit = {
               // stats columns come from the NEW definition's props —
               // the CTAS/RTAS batch skips like any later write's
-              val (n, lines) = TxLog.stageForDefinition(
-                data.sparkSession, data, dir, partCols,
-                props.get(TxLog.StatsColsProp).toSeq
+              val (n, lines) = TxLog.stageForDefinition(data, dir,
+                partCols, props.get(TxLog.StatsColsProp).toSeq
                   .flatMap(TxLog.decodeCols))
               names ++= n
               addLines ++= lines
@@ -677,12 +676,8 @@ class TxLogStreamingWrite(dir: String, writeSchema: StructType,
     val files = messages.collect {
       case TxLogWriteMessage(fs) => fs
     }.flatten.toSeq
-    if (TxLog.partitionColumns(dir).isEmpty)
-      TxLog.commitStagedIdempotent(SparkSession.active, dir,
-        files.map(_._1), writeSchema, queryId, epochId): Unit
-    else
-      TxLog.commitStagedPartsIdempotent(SparkSession.active, dir, files,
-        writeSchema, queryId, epochId): Unit
+    TxLog.commitStagedIdempotent(SparkSession.active, dir, files,
+      writeSchema, queryId, epochId): Unit
   }
 
   override def abort(epochId: Long,

@@ -88,6 +88,27 @@ class FilePruneSpec extends AnyFunSuite {
       "x = 1", col("x") === 1)
   }
 
+  test("TIMESTAMP, DOUBLE and DATE stats columns record no bounds, and " +
+      "every front still agrees") {
+    def at(s: String) = Timestamp.valueOf(s)
+    val batches = Seq(
+      Seq((1L, at("2024-01-01 00:00:00"), 1.0, Date.valueOf("2024-01-01"))),
+      Seq((2L, at("2024-01-02 12:00:00"), 2.5, Date.valueOf("2024-01-02"))))
+    val build: String => Unit = t => batches.foreach(b =>
+      TxLog.appendWithStats(spark, b.toDF("id", "ts", "x", "d"), t,
+        Seq("ts", "x", "d")): Unit)
+    fronts("nonintegral_stats", build,
+      "ts >= TIMESTAMP'2024-01-02 00:00:00' AND x > 2.0 AND " +
+        "d = DATE'2024-01-02'",
+      col("ts") >= lit(at("2024-01-02 00:00:00")) && col("x") > 2.0 &&
+        col("d") === lit(Date.valueOf("2024-01-02")))
+    val t = s"$base/nonintegral_stats"
+    val bounds = TxLog.fileStatsAll(t).values.flatMap(_.keys) ++
+      TxLog.fileStatsStrAll(t).values.flatMap(_.keys)
+    assert(TxLog.snapshot(t).size == 2 && bounds.isEmpty,
+      s"bounds recorded for $bounds")
+  }
+
   private val columns = Seq("i", "s", "d", "ts")
   private val dates = (1 to 4).map(k => Date.valueOf(s"2024-01-0$k"))
   private val stamps = (1 to 4).map(k => Timestamp.valueOf(s"2024-01-0$k 06:00:00"))

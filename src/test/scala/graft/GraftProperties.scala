@@ -539,10 +539,10 @@ object GraftProperties extends Properties("graft") {
             expectA += ia; expectB += ib: Unit
           case 1 => // aborted txn (claimed, decided as no-op)
             val parts = Seq(
-              a -> TxLog.stageChecked(
+              a -> TxLog.stage(
                 spark.range(ia, ia + 1).selectExpr("id"), a)
                 .map(f => s"add\t$f"),
-              b -> TxLog.stageChecked(
+              b -> TxLog.stage(
                 spark.range(ib, ib + 1).selectExpr("id"), b)
                 .map(f => s"add\t$f"))
             val (tx, _) = TxLog.claimOnly(s"$root/_txn", parts)
@@ -552,10 +552,10 @@ object GraftProperties extends Properties("graft") {
             expectA += ia: Unit
           case _ => // committed txn via replaceAll-style lines path
             TxLog.commitAllLines(s"$root/_txn", Seq(
-              a -> TxLog.stageChecked(
+              a -> TxLog.stage(
                 spark.range(ia, ia + 1).selectExpr("id"), a)
                 .map(f => s"add\t$f"),
-              b -> TxLog.stageChecked(
+              b -> TxLog.stage(
                 spark.range(ib, ib + 1).selectExpr("id"), b)
                 .map(f => s"add\t$f")))
             expectA += ia; expectB += ib: Unit
@@ -563,10 +563,10 @@ object GraftProperties extends Properties("graft") {
       }
       // one UNDECIDED txn on top: visible nowhere
       val pend = Seq(
-        a -> TxLog.stageChecked(
+        a -> TxLog.stage(
           spark.range(next, next + 1).selectExpr("id"), a)
           .map(f => s"add\t$f"),
-        b -> TxLog.stageChecked(
+        b -> TxLog.stage(
           spark.range(next + 1, next + 2).selectExpr("id"), b)
           .map(f => s"add\t$f"))
       TxLog.claimOnly(s"$root/_txn", pend): Unit
@@ -631,7 +631,7 @@ object GraftProperties extends Properties("graft") {
         // an undecided claim lands at version `versions` when in range
         val undecided = undecidedAt < versions
         if (undecided) {
-          val parts = Seq(t -> TxLog.stageChecked(
+          val parts = Seq(t -> TxLog.stage(
             spark.range(100L, 101L).selectExpr("id"), t)
             .map(f => s"add\t$f"))
           TxLog.claimOnly(s"$root/_txn", parts): Unit

@@ -7,11 +7,12 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-shape guards, in the style of DocsSpec: the engine ships four
   * mains, builds every session in one factory, keeps every memo and
-  * every exit-time cleanup in `core/Memo.scala`, and prunes txlog files
-  * from log metadata in one walk, `core/FilePrune.scala`. A one-off probe main, a
-  * hand-built session whose config drifts from the one every result was
-  * checked under, or a private memo with its own staleness rule is a red
-  * test instead of a review finding. */
+  * every exit-time cleanup in `core/Memo.scala`, prunes txlog files
+  * from log metadata in one walk, `core/FilePrune.scala`, and stages
+  * txlog batches through one temp dir in `core/TxLog.scala`. A one-off
+  * probe main, a hand-built session whose config drifts from the one
+  * every result was checked under, or a private memo with its own
+  * staleness rule is a red test instead of a review finding. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala")
@@ -48,6 +49,16 @@ class SourceGuardSpec extends AnyFunSuite {
   test("txlog file-pruning walks appear only in core/FilePrune.scala") {
     assert(filesMatching("""\bdef\s+(eqSurvives|boundSurvives|survives)\b""".r)
       == Seq("graft/core/FilePrune.scala"))
+  }
+
+  test("staging temp dirs: Files.createTempDirectory only in " +
+      "core/Memo.scala and once in core/TxLog.scala") {
+    val uses = sources.map { case (f, text) =>
+      f -> """Files\s*\.\s*createTempDirectory\b""".r.findAllIn(text).size
+    }.filter(_._2 > 0).toMap
+    assert(uses.get("graft/core/TxLog.scala").contains(1) &&
+      (uses.keySet - "graft/core/TxLog.scala")
+        .subsetOf(Set("graft/core/Memo.scala")), uses)
   }
 
   test("memo maps and retire queues appear only in core/Memo.scala") {

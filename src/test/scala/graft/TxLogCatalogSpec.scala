@@ -386,7 +386,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(graft.sources.TxLogSourceIO.lastKept.get()
       < graft.sources.TxLogSourceIO.lastTotal.get(),
       "partition pruning must skip files of other partitions")
-    // INSERT OVERWRITE keeps the layout (replacePartitioned)
+    // INSERT OVERWRITE keeps the layout (replace stages under the declared layout)
     spark.sql("INSERT OVERWRITE lake.pt VALUES (9, 7, 90.0)")
     val pv2 = TxLog.partitionValues(dirOf("pt"))
     assert(pv2.values.forall(_.get("grp").contains("7")))

@@ -480,7 +480,7 @@ class TxLogSourceSpec extends AnyFunSuite {
     assert(sizes2.sum == 20L, s"restart must ship only v4..v5, got $sizes2")
     // an UNDECIDED multi-table transaction stalls the by-name offer at
     // the same version the path API stalls at (shared TxLogOffsets)
-    val staged = TxLog.stageChecked(
+    val staged = TxLog.stage(
       spark.range(100L, 105L).select(col("id")), t)
     val parts = Seq(t -> staged.map(f => s"add\t$f"))
     val (txName, _) = TxLog.claimOnly(s"$base/_txn", parts)

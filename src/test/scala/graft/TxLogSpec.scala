@@ -641,9 +641,9 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.create((0L to 6L).map(i => (i, s"d$i")).toDF("dk", "name"), dim)
     // stage both tables' new data, then CLAIM without publishing — the
     // exact window a writer crash leaves behind
-    val stagedF = TxLog.stageChecked(
+    val stagedF = TxLog.stage(
       (101L to 150L).map(i => (i, i % 7 + 10)).toDF("id", "dk"), fact)
-    val stagedD = TxLog.stageChecked(
+    val stagedD = TxLog.stage(
       (10L to 16L).map(i => (i, s"d$i")).toDF("dk", "name"), dim)
     val parts = Seq(fact -> stagedF.map(f => s"add\t$f"),
       dim -> stagedD.map(f => s"add\t$f"))
@@ -798,7 +798,7 @@ class TxLogSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("txclone_").toString
     val t = s"$root/t"
     TxLog.create((1L to 5L).map(i => (i, i)).toDF("id", "v"), t)
-    val staged = TxLog.stageChecked(
+    val staged = TxLog.stage(
       (6L to 9L).map(i => (i, i)).toDF("id", "v"), t)
     val parts = Seq(t -> staged.map(f => s"add\t$f"))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
@@ -874,7 +874,7 @@ class TxLogSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("txvacund_").toString
     val t = s"$root/t"
     TxLog.create((1L to 10L).map(i => (i, i)).toDF("id", "v"), t)
-    val staged = TxLog.stageChecked(
+    val staged = TxLog.stage(
       (11L to 20L).map(i => (i, i)).toDF("id", "v"), t)
     val parts = Seq(t -> staged.map(f => s"add\t$f"))
     val (txName, _) = TxLog.claimOnly(s"$root/_txn", parts)
@@ -898,9 +898,9 @@ class TxLogSpec extends AnyFunSuite {
     val (t, other) = (s"$root/t", s"$root/other")
     TxLog.create(spark.range(5L).selectExpr("id"), t)
     TxLog.create(spark.range(3L).selectExpr("id"), other)
-    val stagedT = TxLog.stageChecked(
+    val stagedT = TxLog.stage(
       spark.range(100L, 110L).selectExpr("id"), t)
-    val stagedO = TxLog.stageChecked(
+    val stagedO = TxLog.stage(
       spark.range(200L, 202L).selectExpr("id"), other)
     val parts = Seq(t -> stagedT.map(f => s"add\t$f"),
       other -> stagedO.map(f => s"add\t$f"))
@@ -1101,7 +1101,8 @@ class TxLogSpec extends AnyFunSuite {
     // and a later NON-empty epoch with the same id still commits (the
     // skipped epoch recorded no marker)
     val staged = TxLog.stage(Seq((500L, 0L)).toDF("id", "grp"), t)
-    val r2 = TxLog.commitStagedIdempotent(spark, t, staged,
+    val r2 = TxLog.commitStagedIdempotent(spark, t,
+      staged.map(_ -> Map.empty[String, String]),
       TxLog.read(spark, t).schema, "appX", 7L)
     assert(r2 == v + 1)
     TxLog.drop(t)
@@ -1336,7 +1337,8 @@ class TxLogSpec extends AnyFunSuite {
     // table dir, invisible until the commit references it)
     val staged = TxLog.stage(
       spark.range(7L).select(col("id"), (col("id") * 3).as("v")), t)
-    val v = TxLog.commitStagedIdempotent(spark, t, staged, schema,
+    val v = TxLog.commitStagedIdempotent(spark, t,
+      staged.map(_ -> Map.empty[String, String]), schema,
       "stats-spec", 1L)
     assert(v >= 0)
     val zm = TxLog.fileStatsAll(t)
