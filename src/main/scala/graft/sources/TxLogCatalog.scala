@@ -303,8 +303,8 @@ object TxLogCatalog {
 }
 
 /** The DSv2 [[Table]] over one transaction-log directory. Batch read
-  * goes through a [[V1Scan]] wrapping the DV-correct [[TxLog.read]]
-  * plan with column pruning pushed ([[TxLogV1ScanBuilder]]) and
+  * goes through a [[V1Scan]] wrapping the DV-correct [[TxLog.scan]]
+  * ([[TxLogRelation]]) with column pruning pushed ([[TxLogV1ScanBuilder]]) and
   * LOG-RESIDENT statistics reported ([[SupportsReportStatistics]]:
   * `sizeInBytes` from the live files' lengths — file-grain log
   * metadata, no footer IO — so Catalyst can cost catalog-routed joins
@@ -429,8 +429,8 @@ class TxLogTable(val dir: String, ident: String,
     // planner only takes the AppendDataExecV1 fallback for tables that
     // declare it (the JDBC-v2 pattern). MICRO_BATCH_READ makes
     // `spark.readStream.table("lake.t")` first-class (VERDICT r11 #2):
-    // the scan's [[TxLogMicroBatchStream]] shares the DSv1 source's
-    // offset/admission logic through [[TxLogOffsets]].
+    // the scan's [[TxLogMicroBatchStream]] mixes in the same
+    // offset/admission trait as the DSv1 source, [[TxLogOffsets]].
     // STREAMING_WRITE completes the by-name streaming symmetry
     // (writeStream.toTable): executor tasks write parquet straight
     // into the table dir, the driver commits them as one idempotent
@@ -833,7 +833,7 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
 
     override def toV1TableScan[T <: BaseRelation with TableScan](
         context: SQLContext): T =
-      new TxLogRelation(context, dir, asOf, required = Some(required),
+      new TxLogRelation(context, dir, asOf, required,
         pushed = pushed).asInstanceOf[T]
 
     /** `readStream.table("lake.t")` — the engine routes here when the
@@ -875,7 +875,7 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
 
 /** The DSv2 [[MicroBatchStream]] behind `readStream.table("lake.t")`
   * (VERDICT r11 #2): offsets are log versions (exactly the DSv1
-  * source's contract — [[TxLogOffsets]] is the single shared
+  * source's contract — both mix in [[TxLogOffsets]], the one
   * implementation of admission control, AvailableNow draining, and the
   * undecided-transaction stall), and each batch's row reading delegates
   * to Spark's own vectorized [[ParquetScan]] over the versions' added
@@ -885,51 +885,13 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
   * owns offset checkpointing (it passes the recovered start into
   * `latestOffset`), so no hand-rolled checkpoint parsing is needed on
   * this path. */
-class TxLogMicroBatchStream(dir: String, readSchema: StructType,
-    startingVersion: Int, ignoreChanges: Boolean,
-    maxVersionsPerTrigger: Option[Int])
+class TxLogMicroBatchStream(protected val dir: String,
+    readSchema: StructType, protected val startingVersion: Int,
+    ignoreChanges: Boolean, protected val maxVersionsPerTrigger: Option[Int])
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream
-    with org.apache.spark.sql.connector.read.streaming
-      .SupportsAdmissionControl
-    with org.apache.spark.sql.connector.read.streaming
-      .SupportsTriggerAvailableNow {
+    with TxLogOffsets {
   import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit}
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-  import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-
-  @volatile private var availableNowTarget: Int = Int.MaxValue
-
-  private def versionOf(o: OffsetV2): Int = o match {
-    case LongOffset(v) => v.toInt
-    case other => other.json().trim.toInt
-  }
-
-  override def initialOffset(): OffsetV2 =
-    LongOffset((startingVersion - 1).toLong)
-
-  override def deserializeOffset(json: String): OffsetV2 =
-    LongOffset(json.trim.toLong)
-
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.map(n => ReadLimit.maxFiles(math.max(n, 1)))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowTarget = TxLog.currentVersion(dir)
-  }
-
-  override def reportLatestOffset(): OffsetV2 = {
-    val v = TxLog.currentVersion(dir)
-    if (v < math.max(startingVersion, 0)) null else LongOffset(v.toLong)
-  }
-
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    val base = if (start == null) startingVersion - 1 else versionOf(start)
-    TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
-      case Some(v) => LongOffset(v.toLong)
-      case None => start
-    }
-  }
 
   /** Unused on the admission-control path (the engine calls the
     * two-argument overload), but part of the base interface. */

@@ -26,8 +26,9 @@ import org.apache.spark.sql.types.StructType
   *   - `timestampAsOf` → [[TxLog.versionAt]] resolution (epoch millis
   *     or `yyyy-MM-dd HH:mm:ss[.fff]`), Delta's option names.
   *
-  * Architecture (Delta's batch-read shape): the snapshot's live-file
-  * list becomes a custom [[FileIndex]] under a [[HadoopFsRelation]]
+  * Architecture (Delta's batch-read shape): one log replay resolves the
+  * snapshot ([[TxLog.resolve]]), whose live-file list becomes a custom
+  * [[FileIndex]] under a [[HadoopFsRelation]]
   * with the stock parquet [[ParquetFileFormat]] — so the scan IS a
   * native vectorized parquet scan with column pruning, predicate
   * pushdown, and whole-stage codegen, and the connector's work is pure
@@ -42,7 +43,7 @@ import org.apache.spark.sql.types.StructType
   *
   * A snapshot carrying outstanding DELETION VECTORS (or an emptied or
   * column-mapped table) falls back to [[TxLogRelation]], which wraps the
-  * merge-on-read [[TxLog.read]] plan and prunes through the same walk —
+  * merge-on-read [[TxLog.scan]] and prunes through the same walk —
   * correct on every snapshot, while the common DV-free path keeps the
   * native scan.
   *
@@ -120,16 +121,22 @@ class TxLogDataSource extends RelationProvider
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
     val dir = TxLogDataSource.localPath(parameters("path"))
-    val base = schema.getOrElse(
-      TxLog.read(sqlContext.sparkSession, dir).schema)
-    // STREAMING CDF (option("readChangeFeed", "true")): batches are
-    // row-level changes, so the schema carries the two meta columns
-    val cdf = parameters.get("readChangeFeed").exists(_.trim.toBoolean)
-    ("txlog", if (!cdf) base
-      else base.add("_change_type", org.apache.spark.sql.types.StringType,
-          nullable = false)
-        .add("_commit_version", org.apache.spark.sql.types.LongType,
-          nullable = false))
+    ("txlog", streamSchema(sqlContext.sparkSession,
+      TxLog.resolve(dir), schema, parameters))
+  }
+
+  /** The stream's declared schema: `schema`, else the snapshot's; a
+    * change-feed stream (option("readChangeFeed", "true")) batches
+    * row-level changes, so it carries the two meta columns too. */
+  private def streamSchema(spark: SparkSession, snap: TxLog.Snapshot,
+      schema: Option[StructType], parameters: Map[String, String])
+      : StructType = {
+    val base = schema.getOrElse(TxLog.scan(spark, snap, snap.files).schema)
+    if (!parameters.get("readChangeFeed").exists(_.trim.toBoolean)) base
+    else base.add("_change_type", org.apache.spark.sql.types.StringType,
+        nullable = false)
+      .add("_commit_version", org.apache.spark.sql.types.LongType,
+        nullable = false)
   }
 
   override def createSource(sqlContext: SQLContext, metadataPath: String,
@@ -137,13 +144,14 @@ class TxLogDataSource extends RelationProvider
       parameters: Map[String, String])
       : org.apache.spark.sql.execution.streaming.Source = {
     val dir = TxLogDataSource.localPath(parameters("path"))
+    val snap = TxLog.resolve(dir)
     // a RENAME/DROP COLUMN shifts column identity mid-stream — batches
     // before and after would disagree on what a name means. Delta
     // blocks streaming reads across column-mapping changes too.
-    require(!TxLog.columnMapping(dir).active,
+    require(!snap.mapping.active,
       s"streaming reads of $dir are unavailable after a RENAME or " +
         "DROP COLUMN (column mapping active) — read snapshots in batch")
-    val (_, st) = sourceSchema(sqlContext, schema, providerName, parameters)
+    val st = streamSchema(sqlContext.sparkSession, snap, schema, parameters)
     new TxLogStreamSource(sqlContext, dir, st,
       parameters.get("startingVersion").map(_.trim.toInt).getOrElse(0),
       parameters.get("ignoreChanges").exists(_.trim.toBoolean),
@@ -184,31 +192,29 @@ class TxLogDataSource extends RelationProvider
       .orElse(parameters.get("timestampAsOf").map(ts =>
         TxLog.versionAt(dir, TxLogDataSource.parseInstant(ts))))
     val spark = sqlContext.sparkSession
-    val version = asOf.getOrElse(TxLog.currentVersion(dir))
-    val files = TxLog.fileMetas(dir, Some(version))
-    val live = files.map(_._1)
+    val snap = TxLog.resolve(dir, asOf)
     // `pinned` records whether the USER time-traveled (versionAsOf /
     // timestampAsOf) — the DML rule must refuse mutations through a
     // pinned relation, and `version == currentVersion` cannot tell
     // "pinned to what happens to be latest" from "default latest"
     // (review r11 #2.4)
-    if (live.isEmpty || TxLog.hasDeletionVectors(dir, Some(version)) ||
+    if (snap.files.isEmpty || snap.dv.nonEmpty ||
         // column mapping: files store PHYSICAL names — the row relation
-        // wraps TxLog.read's logical projection; a HadoopFsRelation
-        // over the raw files would surface storage names
-        TxLog.columnMapping(dir, Some(version)).active)
-      new TxLogRelation(sqlContext, dir, Some(version),
-        pinned = asOf.isDefined)
+        // wraps the scan's logical projection; a HadoopFsRelation over
+        // the raw files would surface storage names
+        snap.mapping.active)
+      new TxLogRelation(sqlContext, dir, Some(snap.version),
+        TxLog.scan(spark, snap, snap.files).schema, pinned = asOf.isDefined)
     else {
       // union schema over the live files (commits may evolve the schema
       // — q380): the log RECORDS it (schema lines), so serve it without
       // the footer-merge Spark job; legacy tables without a schema line
       // keep the mergeSchema inference
-      val dataSchema = TxLog.tableSchema(dir, Some(version)).getOrElse(
-        spark.read.option("mergeSchema", "true")
-          .parquet(live.map(f => s"$dir/$f"): _*).schema)
+      val dataSchema = snap.schema.getOrElse(
+        TxLog.scan(spark, snap, snap.files).schema)
       HadoopFsRelation(
-        location = new TxLogFileIndex(dir, files, pinned = asOf.isDefined),
+        location = new TxLogFileIndex(dir, snap.metas,
+          pinned = asOf.isDefined),
         partitionSchema = new StructType(),
         dataSchema = dataSchema,
         bucketSpec = None,
@@ -256,10 +262,81 @@ class TxLogDataSource extends RelationProvider
   }
 }
 
-/** The offset/admission logic SHARED between the DSv1 streaming source
-  * ([[TxLogStreamSource]] — the path API) and the DSv2
+/** The offset/admission logic of both txlog stream sources, mixed into
+  * the DSv1 [[TxLogStreamSource]] (the path API) and the DSv2
   * [[TxLogMicroBatchStream]] (the catalog / `readStream.table` API):
-  * one implementation, two connector generations (VERDICT r11 #2). */
+  * one implementation, two connector generations (VERDICT r11 #2).
+  * Offsets are log versions.
+  *
+  * ADMISSION CONTROL follows the KafkaSource pattern: a DSv1 Source may
+  * implement the connector-level SupportsAdmissionControl /
+  * SupportsTriggerAvailableNow interfaces — MicroBatchExecution
+  * dispatches on the INTERFACE, not the source generation, so the
+  * engine passes the checkpointed start offset and the read limit into
+  * [[latestOffset]] and drives Trigger.AvailableNow through
+  * [[prepareForTriggerAvailableNow]]. AvailableNow +
+  * maxVersionsPerTrigger therefore DRAINS the whole backlog in capped
+  * batches, and the engine-provided start offset makes a capped offer
+  * below the checkpoint structurally impossible. */
+private[graft] trait TxLogOffsets extends org.apache.spark.sql.connector
+    .read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
+  import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+
+  protected def dir: String
+  protected def startingVersion: Int
+  protected def maxVersionsPerTrigger: Option[Int]
+
+  /** Drain target snapshotted by [[prepareForTriggerAvailableNow]]:
+    * Trigger.AvailableNow stops at the table state observed at query
+    * start, even while new commits land. MaxValue = no snapshot
+    * (processing-time / one-shot triggers). */
+  @volatile private var availableNowTarget: Int = Int.MaxValue
+
+  protected def versionOf(o: Offset): Int = o match {
+    case LongOffset(v) => v.toInt
+    case other => other.json().trim.toInt
+  }
+
+  override def initialOffset(): Offset =
+    LongOffset((startingVersion - 1).toLong)
+
+  override def deserializeOffset(json: String): Offset =
+    LongOffset(json.trim.toLong)
+
+  /** The declared per-trigger limit: versions map onto
+    * [[ReadLimit.maxFiles]] (a txlog version IS a file batch — the
+    * same grain Delta's maxFilesPerTrigger caps). */
+  override def getDefaultReadLimit: ReadLimit =
+    maxVersionsPerTrigger.map(n => ReadLimit.maxFiles(math.max(n, 1)))
+      .getOrElse(ReadLimit.allAvailable())
+
+  override def prepareForTriggerAvailableNow(): Unit = {
+    availableNowTarget = TxLog.currentVersion(dir)
+  }
+
+  /** True latest (uncapped) for engine metrics/backlog reporting. */
+  override def reportLatestOffset(): Offset = {
+    val v = TxLog.currentVersion(dir)
+    if (v < math.max(startingVersion, 0)) null else LongOffset(v.toLong)
+  }
+
+  /** The next batch's end offset: at most `limit` versions past the
+    * engine-provided `start` (which IS the checkpointed offset on a
+    * restart — no below-checkpoint offer is possible), clamped to the
+    * AvailableNow drain target when one is snapshotted. Returning
+    * `start` unchanged means "no new data". */
+  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
+    // a FRESH stream has no checkpointed offset — the engine passes
+    // null, not initialOffset() (the KafkaSource contract)
+    val base = if (start == null) startingVersion - 1 else versionOf(start)
+    TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
+      case Some(v) => LongOffset(v.toLong)
+      case None => start
+    }
+  }
+}
+
 private[graft] object TxLogOffsets {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
 
@@ -293,20 +370,21 @@ private[graft] object TxLogOffsets {
     if (cur <= base) None else Some(cur)
   }
 
-  /** The files ADDED by versions (from, to], with the append-only
-    * guard: a version that deletes rows fails the stream unless
-    * `ignoreChanges` opted into re-emission (Delta's semantics). */
+  /** The files ADDED by versions (from, to], each version's entry read
+    * once, with the append-only guard: a version that deletes rows
+    * fails the stream unless `ignoreChanges` opted into re-emission
+    * (Delta's semantics). */
   def addedFiles(dir: String, from: Int, to: Int,
       ignoreChanges: Boolean): Seq[String] =
     (from + 1 to to).flatMap { v =>
-      val (adds, _) = try TxLog.changes(dir, v) catch {
+      val (adds, deletes) = try TxLog.streamedChange(dir, v) catch {
         case _: java.nio.file.NoSuchFileException =>
           throw new IllegalStateException(
             s"streaming read needs raw log entries, but version $v of " +
               s"$dir was truncated below a checkpoint — start the stream " +
               "at a retained version (startingVersion)")
       }
-      if (!ignoreChanges && TxLog.versionDeletes(dir, v))
+      if (!ignoreChanges && deletes)
         throw new IllegalStateException(
           s"version $v of $dir deletes rows (OPTIMIZE/DELETE/UPDATE/DV); " +
             "streaming reads are append-only — set ignoreChanges=true " +
@@ -333,86 +411,24 @@ object TxLogDataSource {
 }
 
 /** The table's commit log as a streaming [[Source]]: offset = highest
-  * committed version; `getBatch((a, b])` reads exactly the files the
-  * versions a+1..b ADDED (one mergeSchema parquet scan over that file
-  * list). Versions are immutable once committed, so replays after a
-  * checkpoint recovery return identical batches — the exactly-once
+  * committed version ([[TxLogOffsets]]); `getBatch((a, b])` reads
+  * exactly the files the versions a+1..b ADDED (one parquet scan over
+  * that file list under the declared schema). Versions are immutable
+  * once committed, so replays after a checkpoint recovery return
+  * identical batches — the exactly-once
   * property falls out of the log protocol. Raw entries must be
   * retained for the streamed range: history truncated below a
   * checkpoint refuses with the version number rather than silently
   * skipping it. */
-class TxLogStreamSource(sqlContext: SQLContext, dir: String,
-    declaredSchema: StructType, startingVersion: Int, ignoreChanges: Boolean,
-    readChangeFeed: Boolean = false, maxVersionsPerTrigger: Option[Int] = None)
+class TxLogStreamSource(sqlContext: SQLContext, protected val dir: String,
+    declaredSchema: StructType, protected val startingVersion: Int,
+    ignoreChanges: Boolean, readChangeFeed: Boolean = false,
+    protected val maxVersionsPerTrigger: Option[Int] = None)
     extends org.apache.spark.sql.execution.streaming.Source
-    with org.apache.spark.sql.connector.read.streaming
-      .SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit, ReadMaxFiles}
+    with TxLogOffsets {
   import org.apache.spark.sql.execution.streaming.Offset
-  import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
   override def schema: StructType = declaredSchema
-
-  // ---- ADMISSION CONTROL (the KafkaSource pattern: a DSv1 Source
-  // implementing the connector-level SupportsAdmissionControl /
-  // SupportsTriggerAvailableNow interfaces — MicroBatchExecution
-  // dispatches on the INTERFACE, not the source generation, so the
-  // engine passes the checkpointed start offset and the read limit
-  // into latestOffset and drives Trigger.AvailableNow through
-  // prepareForTriggerAvailableNow). This closes the documented DSv1
-  // gap (NOTES r10): AvailableNow + maxVersionsPerTrigger now DRAINS
-  // the whole backlog in capped batches instead of stopping at the
-  // first capped offer, and the engine-provided start offset makes a
-  // capped offer below the checkpoint structurally impossible. ----
-
-  /** Drain target snapshotted by [[prepareForTriggerAvailableNow]]:
-    * Trigger.AvailableNow stops at the table state observed at query
-    * start, even while new commits land. MaxValue = no snapshot
-    * (processing-time / one-shot triggers). */
-  @volatile private var availableNowTarget: Int = Int.MaxValue
-
-  private def versionOf(o: OffsetV2): Int = o match {
-    case LongOffset(v) => v.toInt
-    case other => other.json().trim.toInt
-  }
-
-  override def initialOffset(): OffsetV2 =
-    LongOffset((startingVersion - 1).toLong)
-
-  override def deserializeOffset(json: String): OffsetV2 =
-    LongOffset(json.trim.toLong)
-
-  /** The declared per-trigger limit: versions map onto
-    * [[ReadLimit.maxFiles]] (a txlog version IS a file batch — the
-    * same grain Delta's maxFilesPerTrigger caps). */
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.map(n => ReadLimit.maxFiles(math.max(n, 1)))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowTarget = TxLog.currentVersion(dir)
-  }
-
-  /** True latest (uncapped) for engine metrics/backlog reporting. */
-  override def reportLatestOffset(): OffsetV2 = {
-    val v = TxLog.currentVersion(dir)
-    if (v < math.max(startingVersion, 0)) null else LongOffset(v.toLong)
-  }
-
-  /** The next batch's end offset: at most `limit` versions past the
-    * engine-provided `start` (which IS the checkpointed offset on a
-    * restart — no below-checkpoint offer is possible), clamped to the
-    * AvailableNow drain target when one is snapshotted. Returning
-    * `start` unchanged means "no new data". */
-  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
-    // a FRESH stream has no checkpointed offset — the engine passes
-    // null, not initialOffset() (the KafkaSource contract)
-    val base = if (start == null) startingVersion - 1 else versionOf(start)
-    TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
-      case Some(v) => LongOffset(v.toLong)
-      case None => start
-    }
-  }
 
   /** The bare v1 offer path: never called, because the engine tests for
     * `SupportsAdmissionControl` before `Source` and calls [[latestOffset]]
@@ -431,41 +447,33 @@ class TxLogStreamSource(sqlContext: SQLContext, dir: String,
     require(!TxLog.columnMapping(dir, Some(to)).active,
       s"stream of $dir hit a RENAME/DROP COLUMN at or before version " +
         s"$to — restart consumers against the new schema in batch mode")
-    val spark0 = sqlContext.sparkSession
+    val spark = sqlContext.sparkSession
     // CDF mode: the batch IS the change feed of the version interval —
     // deletes are first-class rows, so the append-only guard and
     // ignoreChanges do not apply here
     if (readChangeFeed) {
       val batch =
         if (from + 1 > to)
-          spark0.createDataFrame(
-            spark0.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          spark.createDataFrame(
+            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             declaredSchema)
-        else TxLog.changeFeed(spark0, dir, math.max(from + 1, 0), to)
+        else TxLog.changeFeed(spark, dir, math.max(from + 1, 0), to)
           .select(declaredSchema.fieldNames
             .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      return org.apache.spark.sql.GraftSqlBridge.streamingFrame(spark0, batch)
+      return org.apache.spark.sql.GraftSqlBridge.streamingFrame(spark, batch)
     }
     val added = TxLogOffsets.addedFiles(dir, from, to, ignoreChanges)
-    val spark = sqlContext.sparkSession
+    // the declared schema IS the union schema (evolution is
+    // add-nullable-only): an explicit-schema read null-fills absent
+    // columns per file without mergeSchema's per-batch footer-merge
+    // Spark job. The files in range predate any RENAME/DROP COLUMN (the
+    // guard above), so they store the declared names.
     val batch =
       if (added.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], declaredSchema)
-      else if (!TxLog.columnMapping(dir).active)
-        // the declared schema IS the union schema (evolution is
-        // add-nullable-only): an explicit-schema read null-fills absent
-        // columns per file without mergeSchema's per-batch footer-merge
-        // Spark job
-        spark.read.schema(declaredSchema)
-          .parquet(added.map(f => s"$dir/$f"): _*)
-          .select(declaredSchema.fieldNames
-            .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
-      else
-        spark.read.option("mergeSchema", "true")
-          .parquet(added.map(f => s"$dir/$f"): _*)
-          .select(declaredSchema.fieldNames
-            .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+      else spark.read.schema(declaredSchema)
+        .parquet(added.map(f => s"$dir/$f"): _*)
     // the engine asserts getBatch frames carry isStreaming=true
     org.apache.spark.sql.GraftSqlBridge.streamingFrame(spark, batch)
   }
@@ -583,13 +591,13 @@ class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
   }
 }
 
-/** The merge-on-read relation: wraps the DV-correct [[TxLog.read]] plan
-  * (parquet scan anti-joined against the deletion-vector frame, physical
-  * names projected back to logical). It serves two readers:
+/** The merge-on-read relation: wraps [[TxLog.scan]] (parquet scan
+  * anti-joined against the deletion-vector frame, physical names
+  * projected back to logical). It serves two readers:
   *   - the path connector's fallback for DV-bearing, emptied or
   *     COLUMN-MAPPED snapshots, as a [[PrunedFilteredScan]];
   *   - the catalog's V1 scan ([[TxLogV1ScanBuilder]]), as a [[TableScan]]
-  *     over the pushed columns `required` and filters `pushed`.
+  *     over the pushed columns (`schema`) and filters `pushed`.
   * Filters do double duty: they prune FILES through [[FilePrune]] and
   * re-apply on the wrapped frame so Catalyst pushes them into the parquet
   * scan. Spark still re-evaluates every row above (the DSv1 contract), so
@@ -597,14 +605,12 @@ class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
   * skipped pushdown, never correctness. [[TxLogSourceIO]] records
   * kept/total. */
 class TxLogRelation private[graft] (override val sqlContext: SQLContext,
-    val dir: String, val asOf: Option[Int], val pinned: Boolean = false,
-    required: Option[StructType] = None, pushed: Array[Filter] = Array.empty)
+    val dir: String, val asOf: Option[Int], override val schema: StructType,
+    val pinned: Boolean = false, pushed: Array[Filter] = Array.empty)
     extends BaseRelation with PrunedFilteredScan with TableScan {
   import org.apache.spark.sql.functions.{col, lit}
 
   private def spark: SparkSession = sqlContext.sparkSession
-  override lazy val schema: StructType =
-    required.getOrElse(TxLog.read(spark, dir, asOf).schema)
 
   // rows come straight out of the wrapped plan's execution — already
   // InternalRow, no Row re-conversion
@@ -614,23 +620,19 @@ class TxLogRelation private[graft] (override val sqlContext: SQLContext,
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {
-    // pin the version once: the prune decision and the read must see the
-    // SAME snapshot — a commit landing between them would intersect a
-    // stale kept-list with a new live set (review r12 #1: a concurrent
-    // OPTIMIZE made a matching scan return 0 rows)
-    val version = asOf.getOrElse(TxLog.currentVersion(dir))
-    val files = TxLog.fileMetas(dir, Some(version))
+    // ONE snapshot serves the prune decision and the read: a commit
+    // landing between them would intersect a stale kept-list with a new
+    // live set (review r12 #1: a concurrent OPTIMIZE made a matching
+    // scan return 0 rows)
+    val snap = TxLog.resolve(dir, asOf)
     val preds = filters.flatMap(f =>
       scala.util.Try(f -> TxLogFilterColumns.toColumn(f)).toOption)
-    val kept = FilePrune.surviving(files,
+    val kept = FilePrune.surviving(snap.metas,
       preds.toSeq.map(p => GraftSqlBridge.exprOf(p._2)),
       schema.fields.map(f => f.name -> f.dataType).toMap)
     TxLogSourceIO.lastKept.set(kept.size)
-    TxLogSourceIO.lastTotal.set(files.size)
-    val base =
-      if (kept.size == files.size) TxLog.read(spark, dir, Some(version))
-      else if (kept.isEmpty) TxLog.read(spark, dir, Some(version)).limit(0)
-      else TxLog.readPruned(spark, dir, kept, Some(version))
+    TxLogSourceIO.lastTotal.set(snap.files.size)
+    val base = TxLog.scan(spark, snap, kept)
     // the recorded union schema can name a column NO live file carries
     // anymore (the last file holding it was deleted whole, without a
     // rewrite) — such filters stay with Spark, and the column reads as

@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-shape guards, in the style of DocsSpec: the engine ships four
   * mains, builds every session in one factory, keeps every memo and
   * every exit-time cleanup in `core/Memo.scala`, prunes txlog files
-  * from log metadata in one walk, `core/FilePrune.scala`, and stages
-  * txlog batches through one temp dir in `core/TxLog.scala`. A one-off
+  * from log metadata in one walk, `core/FilePrune.scala`, stages
+  * txlog batches through one temp dir in `core/TxLog.scala` and binds
+  * the txlog row identity in one scan there. A one-off
   * probe main, a hand-built session whose config drifts from the one
   * every result was checked under, or a private memo with its own
   * staleness rule is a red test instead of a review finding. */
@@ -59,6 +60,14 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(uses.get("graft/core/TxLog.scala").contains(1) &&
       (uses.keySet - "graft/core/TxLog.scala")
         .subsetOf(Set("graft/core/Memo.scala")), uses)
+  }
+
+  test("the row identity binds in one txlog scan: \"_metadata.row_index\" " +
+      "appears in src/main once, in core/TxLog.scala") {
+    val uses = sources.map { case (f, text) =>
+      f -> "\"_metadata\\.row_index\"".r.findAllIn(text).size
+    }.filter(_._2 > 0).toMap
+    assert(uses == Map("graft/core/TxLog.scala" -> 1), uses)
   }
 
   test("memo maps and retire queues appear only in core/Memo.scala") {

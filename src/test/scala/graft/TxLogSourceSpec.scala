@@ -695,4 +695,25 @@ class TxLogSourceSpec extends AnyFunSuite {
       TxLog.drop(t)
     }
   }
+
+  test("getBatch over versions that predate a RENAME COLUMN reads the " +
+      "rows a batch read of those versions returns") {
+    val t = freshTable()
+    TxLog.create((0L until 5L).map(i => (i, i * 10)).toDF("id", "v"), t) // v0
+    TxLog.append((5L until 8L).map(i => (i, i * 10)).toDF("id", "v"), t) // v1
+    val src = new graft.sources.TxLogDataSource().createSource(
+      spark.sqlContext, "unused", None, "txlog", Map("path" -> t))
+    TxLog.renameColumn(t, "v", "w") // v2: the mapping lands after the range
+    val batch = src.getBatch(None,
+      org.apache.spark.sql.execution.streaming.runtime.LongOffset(1L))
+    // a streaming-tagged frame cannot be collected as a batch query; its
+    // rows sit in the LogicalRDD getBatch returns
+    val got = batch.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.map(row => (row.getLong(0), row.getLong(1))).collect().toSet
+    }
+    val want = TxLog.read(spark, t, Some(1)).as[(Long, Long)].collect().toSet
+    assert(got == want && got.size == 8, s"$got vs $want")
+    TxLog.drop(t)
+  }
 }

@@ -106,6 +106,34 @@ class TxLogSpec extends AnyFunSuite {
       live.filter(col("grp") === 2).count() == 0)
   }
 
+  test("a copy-on-write rewrite commits no zero-row file: a deleteWhere " +
+      "that removes every row of its affected files commits no add line, " +
+      "and task 0's empty file beside real survivors is left out") {
+    def table(): (String, String, String) = {
+      val t = java.nio.file.Files.createTempDirectory("txlog_").toString
+      TxLog.drop(t)
+      // one file each; the bigger one is the rewrite scan's partition 0
+      TxLog.create((0L until 200L).map(i => (i, i % 5)).toDF("id", "grp")
+        .coalesce(1), t)
+      TxLog.append((200L until 210L).map(i => (i, 9L)).toDF("id", "grp")
+        .coalesce(1), t)
+      val Seq(big, small) = TxLog.snapshot(t)
+      (t, big, small)
+    }
+    val (t, big, _) = table()
+    val v = TxLog.deleteWhere(spark, t, col("id") < 200)
+    assert(TxLog.changes(t, v) == (Seq.empty, Seq(big)))
+    assert(TxLog.read(spark, t).count() == 10)
+    val (t2, _, _) = table()
+    val v2 = TxLog.deleteWhere(spark, t2, col("id") < 200 || col("id") === 205)
+    val (adds, removes) = TxLog.changes(t2, v2)
+    assert(removes.size == 2)
+    val rows = adds.map(f => spark.read.parquet(s"$t2/$f").count())
+    assert(rows == Seq(9L), s"committed survivor files' row counts: $rows")
+    assert(TxLog.read(spark, t2).count() == 9)
+    TxLog.drop(t); TxLog.drop(t2)
+  }
+
   test("deletion vectors: deletes commit positions not rewrites, union " +
       "across versions, and OPTIMIZE materializes (purges) them") {
     val t = freshTable()
