@@ -108,26 +108,34 @@ object TxLog {
     * is visible to our check (it reads the latest state), and one
     * racing for OUR slot makes the atomic claim fail — the retry then
     * sees its marker. On detection the duplicate staging is deleted
-    * and the replay contract (-1) holds. */
-  private def claimAppendRetrying(spark: SparkSession, dir: String,
+    * and the replay contract (-1) holds.
+    *
+    * The first attempt claims against `first`, the snapshot the caller
+    * staged under; each lost claim re-resolves once and takes the
+    * claim target, the marker check, the schema line and the
+    * re-validation layout from that one snapshot. */
+  private def claimAppendRetrying(spark: SparkSession, first: Snapshot,
       staged: Seq[String], lines: Seq[String],
       schema: org.apache.spark.sql.types.StructType,
       txn: Option[(String, Long)] = None, maxRetries: Int = 20): Int = {
+    val dir = first.dir
+    var snap = first
     var attempt = 0
     while (true) {
-      val v = currentVersion(dir) + 1
-      if (txn.exists { case (app, id) => txnSeen(dir, app, id) }) {
+      if (txn.exists { case (app, id) => snap.hasTxn(app, id) }) {
         unstage(dir, staged)
         return -1
       }
       appendRaceHook()
-      try return claimVersion(dir, v, lines ++ schemaLine(schema, dir) ++
-        txn.map { case (app, id) => s"txn\t$app\t$id" })
+      try return claimVersion(dir, snap.version + 1,
+        lines ++ schemaLine(schema, snap) ++
+          txn.map { case (app, id) => s"txn\t$app\t$id" })
       catch {
         case e: java.util.ConcurrentModificationException =>
           attempt += 1
           if (attempt > maxRetries) throw e
-          validateStaged(spark, dir, staged, layoutOf(dir))
+          snap = head(dir)
+          validateStaged(spark, dir, staged, snap.layout)
       }
     }
     throw new IllegalStateException("unreachable")
@@ -178,9 +186,8 @@ object TxLog {
   /** The fully-replayed log state at one version: live files (keyed by
     * the file field, valued by the VERBATIM add line so stats fields
     * survive checkpointing), outstanding deletion-vector sources, and
-    * seen txn marker lines. One fold serves every reader — a
-    * [[Snapshot]], [[fileStats]], [[deletionVectors]], [[txnSeen]] —
-    * and is what a CHECKPOINT serializes. */
+    * seen txn marker lines. One fold serves every reader through the
+    * [[Snapshot]] it backs, and is what a CHECKPOINT serializes. */
   private final class LogState {
     val live = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val dv = scala.collection.mutable.LinkedHashMap
@@ -264,14 +271,24 @@ object TxLog {
 
     /** The state as checkpoint lines (round-trips through [[apply]]). */
     def serialize: Seq[String] =
-      live.values.toSeq ++
-        dv.toSeq.flatMap { case (f, (inline, sidecars)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t$f\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++ sidecars.map(sc => s"dvf\t$f\t$sc")
-        } ++ txns.toSeq ++
-        cons.toSeq.map { case (n, sql) =>
-          s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
+      live.values.toSeq ++ dvLines() ++ txns.toSeq ++ definitionLines
+
+    /** The outstanding vectors as `dv`/`dvf` lines, table-file and
+      * sidecar paths mapped through `file` and `sidecar` (a clone's
+      * relocation). */
+    def dvLines(file: String => String = identity,
+        sidecar: String => String = identity): Seq[String] =
+      dv.toSeq.flatMap { case (f, (inline, sidecars)) =>
+        (if (inline.nonEmpty)
+          Seq(s"dv\t${file(f)}\t${inline.toSeq.sorted.mkString(",")}")
+        else Seq.empty) ++ sidecars.map(sc => s"dvf\t${file(f)}\t${sidecar(sc)}")
+      }
+
+    /** The table definition a clone copies: CHECK constraints,
+      * properties, the COPY INTO ledger, features and the schema. */
+    def definitionLines: Seq[String] =
+      cons.toSeq.map { case (n, sql) =>
+        s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
         props.toSeq.map { case (k, v) =>
           s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
         copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
@@ -327,16 +344,13 @@ object TxLog {
       onPending: () => Unit = () => ()): Seq[String] =
     resolveLines(dir, fileLines(versionFile(dir, v)), onPending)
 
-  /** The replayed log state at `asOf` (default latest). */
-  private def state(dir: String, asOf: Option[Int]): LogState =
-    resolve(dir, asOf).st
-
   /** Resolve `asOf` (default latest) to ONE [[Snapshot]]: the log
-    * replayed once. Every read and DML operation resolves one and takes
-    * its file list, vectors, schema and layout from it — so no two of
-    * them can straddle a commit. */
-  private[graft] def resolve(dir: String,
-      asOf: Option[Int] = None): Snapshot = {
+    * replayed once. Every txlog operation — reads, DML, writers,
+    * metadata verbs, the catalog table — resolves one and reads all of
+    * its table metadata from it, so no two facts it acts on can
+    * straddle a commit. Throws on a directory with no committed version
+    * and on a version outside `[0, current]`. */
+  def resolve(dir: String, asOf: Option[Int] = None): Snapshot = {
     val cur = currentVersion(dir)
     require(cur >= 0, s"$dir is not a TxLog table (no committed versions)")
     val v = asOf.getOrElse(cur)
@@ -344,6 +358,13 @@ object TxLog {
       s"version $v does not exist (table is at version $cur)")
     new Snapshot(dir, v, fold(dir, v))
   }
+
+  /** The latest snapshot, or — for a directory with no committed
+    * version yet — the empty table at version -1: what a writer that
+    * may CREATE the table stages and claims against. */
+  private def head(dir: String): Snapshot =
+    if (currentVersion(dir) < 0) new Snapshot(dir, -1, new LogState)
+    else resolve(dir)
 
   /** Log replays run so far — read around one call, it is that call's
     * replay count (the [[graft.sources.TxLogSourceIO]] pattern). */
@@ -362,29 +383,77 @@ object TxLog {
     }
     (start to v).foreach(i =>
       st.apply(entryLines(dir, i, () => st.pendingXref = true)))
-    // PROTOCOL GATE: a table declaring a reader feature this engine
-    // does not implement refuses WHOLE — readers and writers both fold
-    // through here, so neither can silently misread or corrupt it.
-    // "Ignore unknown line types" covers additive bookkeeping only;
-    // `feature` lines mark the changes where ignoring IS misreading.
-    val unknown = st.features.toSet -- SupportedReaderFeatures
+    requireSupported(dir, st.features)
+    st
+  }
+
+  /** PROTOCOL GATE: a table declaring a reader feature this engine
+    * does not implement refuses WHOLE — readers, writers and vacuum all
+    * replay through [[fold]] or [[walk]], which both call this, so none
+    * can silently misread or corrupt it. "Ignore unknown line types"
+    * covers additive bookkeeping only; `feature` lines mark the changes
+    * where ignoring IS misreading. */
+  private def requireSupported(dir: String, features: Iterable[String]): Unit = {
+    val unknown = features.toSet -- SupportedReaderFeatures
     if (unknown.nonEmpty) throw new UnsupportedOperationException(
       s"$dir requires table feature(s) ${unknown.toSeq.sorted
         .mkString(", ")} that this engine version does not implement — " +
         "upgrade the engine to use this table")
-    st
   }
 
-  /** The replayed log at one resolved version: the live files with
-    * their [[FilePrune]] metas, the outstanding deletion vectors, the
-    * recorded schema, the column mapping and the [[Layout]] — what
-    * [[scan]] reads under and what the DML writers classify, probe,
-    * stage and commit against. */
-  private[graft] final class Snapshot private[TxLog] (val dir: String,
+  /** THE forward walk over versions `from..to`: one [[fold]] at
+    * `from - 1`, then one raw entry per version — the state at every
+    * readable version for O(range) entry reads, where a fold per
+    * version costs O(range × interval). In element `(v, entry, st)` the
+    * CALLER applies `entry`, v's raw entry, to `st` (the state at
+    * `v - 1` until then, so it can see both sides of v); None means the
+    * walk re-seeded `st` at v's checkpoint. A RETIRED version (raw
+    * entries truncated below a checkpoint: unreadable to [[resolve]]
+    * too) gets no element. Entries pass the [[requireSupported]] gate
+    * and track pending xrefs, so the last state answers the
+    * undecided-transaction refusal. */
+  private def walk(dir: String, from: Int, to: Int)
+      : Iterator[(Int, Option[Seq[String]], LogState)] = {
+    val logged = Option(logDir(dir).list()).getOrElse(Array.empty[String]).toSet
+    def raw(v: Int) = logged(f"$v%08d.txt")
+    def checkpointed(v: Int) = logged(f"$v%08d.checkpoint")
+    // `from - 1` is readable when, walking down, a checkpoint comes
+    // before any missing raw entry (or neither does: a replay from 0)
+    var st: LogState =
+      if ((from - 1 to 0 by -1).find(v => checkpointed(v) || !raw(v))
+          .forall(checkpointed)) fold(dir, from - 1)
+      else null
+    (from to to).iterator.flatMap { v =>
+      if (st != null && raw(v)) {
+        val at = st
+        val lines = entryLines(dir, v, () => at.pendingXref = true)
+        requireSupported(dir, lines.collect {
+          case l if l.startsWith("feature\t") =>
+            unescapeVal(l.substring("feature\t".length)) })
+        Some((v, Some(lines), at))
+      } else if (checkpointed(v)) { st = fold(dir, v); Some((v, None, st)) }
+      else { st = null; None }
+    }
+  }
+
+  /** The replayed log at one resolved version — the only way txlog
+    * code reads table metadata: the live files with their
+    * [[FilePrune]] metas (partition values and zone maps), the
+    * outstanding deletion vectors, the recorded schema, the column
+    * mapping and the [[Layout]] (declared partition and stats columns,
+    * CHECK constraints), the table properties, declared features, the
+    * `COPY INTO` ledger and the txn markers. [[scan]] reads under it;
+    * writers and DML classify, probe, stage and commit against it. */
+  final class Snapshot private[TxLog] (val dir: String,
       val version: Int, private[TxLog] val st: LogState) {
     /** Live files, in log order. */
     lazy val files: Seq[String] = st.live.keys.toSeq
-    lazy val metas: Seq[(String, FilePrune.FileMeta)] = metasOf(st)
+    /** Live files with their recorded partition values and zone maps. */
+    lazy val metas: Seq[(String, FilePrune.FileMeta)] =
+      st.live.toSeq.map { case (f, l) =>
+        val (_, pv, zm, sm) = parseAdd(l)
+        f -> FilePrune.FileMeta(pv, zm, sm)
+      }
     /** Outstanding deletion-vector sources per live file: inline
       * positions (`dv` lines) and sidecar paths (`dvf` lines). */
     lazy val dv: Map[String, (Set[Long], Seq[String])] = st.dv.toMap
@@ -394,6 +463,20 @@ object TxLog {
         .asInstanceOf[org.apache.spark.sql.types.StructType])
     lazy val layout: Layout = layoutOf(st)
     def mapping: ColMap = layout.mapping
+    /** TBLPROPERTIES, the engine-reserved layout keys included. */
+    lazy val properties: Map[String, String] = st.props.toMap
+    /** REQUIRED reader features the table declares. */
+    lazy val features: Set[String] = st.features.toSet
+    /** Source files already ingested by [[copyInto]] — canonical paths. */
+    lazy val copied: Set[String] = st.copied.toSet
+    /** Has `(app, txnId)` committed at or below this version? Txn
+      * markers ride checkpoints, so replay detection survives log
+      * truncation below one. */
+    def hasTxn(app: String, txnId: Long): Boolean =
+      st.txns.contains(s"txn\t$app\t$txnId")
+    /** True when the replay crossed an undecided multi-table
+      * transaction: checkpoint, vacuum and clones refuse over it. */
+    def pendingXref: Boolean = st.pendingXref
   }
 
   /** Reader features this engine implements (the [[LogState.features]]
@@ -408,16 +491,16 @@ object TxLog {
     * [[changes]]-based CDF and pre-checkpoint time travel keep working
     * as long as they are retained. */
   def checkpoint(dir: String, asOf: Option[Int] = None): Int = {
-    val v = asOf.getOrElse(currentVersion(dir))
-    val st = state(dir, Some(v))
+    val snap = resolve(dir, asOf)
+    val v = snap.version
     // a checkpoint over a PENDING multi-table transaction would bake
     // the pre-publish view in permanently (the tx's lines land later,
     // but replay would start above them) — refuse; maybeCheckpoint's
     // best-effort catch skips it and a later commit checkpoints fine
-    require(!st.pendingXref,
+    require(!snap.pendingXref,
       s"cannot checkpoint $dir at $v: a multi-table transaction in " +
         "range has not published yet")
-    val body = st.serialize
+    val body = snap.st.serialize
     val tmp = Files.createTempFile(logDir(dir).toPath, s".ckpt-$v-", ".tmp")
     Files.write(tmp, body.mkString("", "\n", "\n").getBytes("UTF-8"))
     try Files.createLink(checkpointFile(dir, v), tmp)
@@ -440,7 +523,7 @@ object TxLog {
   /** Live data files at `asOf` (default: latest), by checkpointed log
     * replay. */
   def snapshot(dir: String, asOf: Option[Int] = None): Seq[String] =
-    state(dir, asOf).live.keys.toSeq
+    resolve(dir, asOf).files
 
   /** Commit `adds`/`removes` as version `expected + 1`; exactly one
     * writer per version (see [[claimVersion]]). */
@@ -454,9 +537,9 @@ object TxLog {
     * directory (INVISIBLE until a commit references them); returns
     * their names. See [[stageBatch]]. */
   def stage(df: DataFrame, dir: String): Seq[String] =
-    stageBatch(df, dir)._1
+    stageBatch(df, dir, head(dir).layout)._1
 
-  /** What a staged batch writes under, read from ONE log fold: the
+  /** What a staged batch writes under, read from a [[Snapshot]]: the
     * declared partition and stats columns, the column mapping, the
     * recorded (logical) column names and the active CHECK constraints
     * (name, SQL). A CREATE/REPLACE definition stages under its NEW
@@ -468,9 +551,6 @@ object TxLog {
   private val NoLayout =
     Layout(Seq.empty, Seq.empty, ColMap(Map.empty, Set.empty), Set.empty,
       Seq.empty)
-
-  private def layoutOf(dir: String): Layout =
-    if (currentVersion(dir) < 0) NoLayout else layoutOf(state(dir, None))
 
   private def layoutOf(st: LogState): Layout =
     Layout(st.props.get(PartitionColsProp).toSeq.flatMap(decodeCols),
@@ -500,20 +580,19 @@ object TxLog {
     *   2. Move each file into the table dir under a unique name.
     *   3. [[addLines]]: `p:` markers, CHECK validation, zone maps.
     *
-    * `layout` defaults to the table's own, read once for the batch.
+    * `lay` is the layout of the snapshot the writer commits against.
     * `checks` are extra (condition, message) pairs every staged row
     * must satisfy, validated in the same pass as the constraints.
     * `dropEmpty` leaves out written files with no rows (Spark writes
     * task 0's file even when it is empty), judged from their parquet
     * footers — no Spark job. Returns (staged names, add lines). */
-  private[graft] def stageBatch(df: DataFrame, dir: String,
-      layout: Option[Layout] = None, extraStats: Seq[String] = Seq.empty,
+  private[graft] def stageBatch(df: DataFrame, dir: String, lay: Layout,
+      extraStats: Seq[String] = Seq.empty,
       checks: Seq[(org.apache.spark.sql.Column, String)] = Seq.empty,
       arrange: (DataFrame, Seq[String]) => DataFrame = (d, _) => d,
       dropEmpty: Boolean = false)
       : (Seq[String], Seq[String]) = {
     import org.apache.spark.sql.functions.col
-    val lay = layout.getOrElse(layoutOf(dir))
     new File(dir).mkdirs()
     val tmp = Files.createTempDirectory(Paths.get(dir), ".stage-")
     val shadows = lay.partCols.map(c => s"__p_$c")
@@ -686,14 +765,18 @@ object TxLog {
     * lines carry both `p:` markers and bounds. */
   def appendWithStats(spark: SparkSession, df: DataFrame, dir: String,
       statsCols: Seq[String]): Int =
-    claimAppend(df, dir, stageBatch(df, dir, extraStats = statsCols))
+    claimAppend(df, head(dir), extraStats = statsCols)
 
-  /** Claim a staged batch as a blind append ([[claimAppendRetrying]]). */
-  private def claimAppend(df: DataFrame, dir: String,
-      batch: (Seq[String], Seq[String]),
-      txn: Option[(String, Long)] = None): Int =
-    claimAppendRetrying(df.sparkSession, dir, batch._1, batch._2,
-      df.schema, txn)
+  /** Stage `df` under `snap`'s layout (or `lay`) and claim it as a
+    * blind append ([[claimAppendRetrying]]). */
+  private def claimAppend(df: DataFrame, snap: Snapshot,
+      txn: Option[(String, Long)] = None, lay: Option[Layout] = None,
+      extraStats: Seq[String] = Seq.empty,
+      checks: Seq[(org.apache.spark.sql.Column, String)] = Seq.empty): Int = {
+    val (staged, lines) = stageBatch(df, snap.dir,
+      lay.getOrElse(snap.layout), extraStats, checks)
+    claimAppendRetrying(df.sparkSession, snap, staged, lines, df.schema, txn)
+  }
 
   /** Minimal %xx escaping for partition values stored in log lines:
     * the characters that would break the line grammar (tab, newline,
@@ -770,58 +853,6 @@ object TxLog {
     (fs(1), parts.result(), stats.result(), strStats.result())
   }
 
-  /** Per-file [min, max] of `statsCol` from the log's add lines (files
-    * committed without stats are absent — callers must keep them). */
-  def fileStats(dir: String, statsCol: String,
-      asOf: Option[Int] = None): Map[String, (Long, Long)] =
-    state(dir, asOf).live.values.flatMap { l =>
-      val (f, _, stats, _) = parseAdd(l)
-      stats.get(statsCol).map(f -> _)
-    }.toMap
-
-  /** ALL per-file zone maps at once: file → (col → [min, max]) from
-    * the log's add lines (pruning reads them through [[fileMetas]]). */
-  def fileStatsAll(dir: String,
-      asOf: Option[Int] = None): Map[String, Map[String, (Long, Long)]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, _, stats, _) = parseAdd(l)
-      f -> stats
-    }.toMap
-
-  /** The live files at `asOf` with their recorded pruning metadata
-    * ([[FilePrune.FileMeta]]), in log order, from ONE log fold — the
-    * input of every [[FilePrune]] caller. */
-  private[graft] def fileMetas(dir: String, asOf: Option[Int] = None)
-      : Seq[(String, FilePrune.FileMeta)] =
-    metasOf(state(dir, asOf))
-
-  private def metasOf(st: LogState): Seq[(String, FilePrune.FileMeta)] =
-    st.live.toSeq.map { case (f, l) =>
-      val (_, pv, zm, sm) = parseAdd(l)
-      f -> FilePrune.FileMeta(pv, zm, sm)
-    }
-
-  /** ALL per-file STRING zone maps (binary UTF8 [min, max]) — the
-    * string-column counterpart of [[fileStatsAll]], written by
-    * [[appendWithStats]] for string-typed stats columns as `s:` markers
-    * on the add line. */
-  def fileStatsStrAll(dir: String,
-      asOf: Option[Int] = None): Map[String, Map[String, (String, String)]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, _, _, strStats) = parseAdd(l)
-      f -> strStats
-    }.toMap
-
-  /** Per-file PARTITION VALUES from the log's add lines (Delta's
-    * `partitionValues`): pure log metadata, no data IO. Files
-    * committed without partition markers are absent. */
-  def partitionValues(dir: String,
-      asOf: Option[Int] = None): Map[String, Map[String, String]] =
-    state(dir, asOf).live.values.map { l =>
-      val (f, parts, _, _) = parseAdd(l)
-      f -> parts
-    }.toMap
-
   /** Live files whose `statsCol` range intersects [lo, hi] — plus any
     * file with no recorded stats (skipping must be conservative).
     * Returns (kept, total live) so callers can assert real pruning. */
@@ -830,7 +861,7 @@ object TxLog {
     import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
     import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, LessThanOrEqual, Literal}
     val c = UnresolvedAttribute.quoted(statsCol)
-    val files = fileMetas(dir, asOf)
+    val files = resolve(dir, asOf).metas
     (FilePrune.surviving(files, Seq(GreaterThanOrEqual(c, Literal(lo)),
       LessThanOrEqual(c, Literal(hi)))), files.size)
   }
@@ -852,15 +883,10 @@ object TxLog {
     * tables that have one (or are new), so a stale narrower-than-union
     * line can never appear. */
   private def schemaLine(schema: org.apache.spark.sql.types.StructType,
-      dir: String, exact: Boolean = false): Seq[String] =
-    if (currentVersion(dir) < 0) Seq(s"schema\t${escapeVal(schema.json)}")
-    else schemaLineAt(schema, resolve(dir), exact)
-
-  /** [[schemaLine]] for a commit claimed right above `snap`. */
-  private def schemaLineAt(schema: org.apache.spark.sql.types.StructType,
       snap: Snapshot, exact: Boolean = false): Seq[String] = {
     import org.apache.spark.sql.types.{DataType, StructType}
     snap.schema match {
+      case None if snap.version < 0 => Seq(exactSchemaLine(schema)) // new table
       case None => Seq.empty // legacy table — stay on the fallback path
       case Some(prior) =>
         // replace() swaps the WHOLE live set: the new schema is exactly
@@ -889,19 +915,19 @@ object TxLog {
               schema.fields.filterNot(f => have(f.name)))
           }
         if (next == prior) Seq.empty
-        else Seq(s"schema\t${escapeVal(next.json)}")
+        else Seq(exactSchemaLine(next))
     }
   }
 
-  /** The recorded table schema at `asOf`, when the log carries one. */
-  def tableSchema(dir: String,
-      asOf: Option[Int] = None): Option[org.apache.spark.sql.types.StructType] =
-    if (currentVersion(dir) < 0) None else resolve(dir, asOf).schema
+  /** The `schema` line recording exactly `schema`. */
+  private def exactSchemaLine(
+      schema: org.apache.spark.sql.types.StructType): String =
+    s"schema\t${escapeVal(schema.json)}"
 
   /** CREATE (version 0) — refuses on an existing table. */
   def create(df: DataFrame, dir: String): Int =
     claimVersion(dir, 0,
-      stageBatch(df, dir)._2 ++ schemaLine(df.schema, dir))
+      stageBatch(df, dir, NoLayout)._2 :+ exactSchemaLine(df.schema))
 
   /** IN-PLACE conversion of an existing plain-parquet directory into a
     * txlog table (Delta's `CONVERT TO DELTA`): version 0 REFERENCES
@@ -939,16 +965,11 @@ object TxLog {
       .parquet(files.map(f => s"$dir/$f"): _*).schema
     val adds = addLines(spark, dir, NoLayout, files.map(_ -> Map.empty),
       extraStats = statsCols)
-    claimVersion(dir, 0, adds ++ schemaLine(schema, dir) ++
+    claimVersion(dir, 0, (adds :+ exactSchemaLine(schema)) ++
       (if (statsCols.isEmpty) Seq.empty
        else Seq(s"property\t${escapeVal(StatsColsProp)}\t" +
          escapeVal(statsCols.map(escapeVal).mkString(",")))))
   }
-
-  /** Source files already ingested by [[copyInto]] — canonical paths. */
-  def copiedSources(dir: String): Set[String] =
-    if (currentVersion(dir) < 0) Set.empty
-    else state(dir, None).copied.toSet
 
   /** IDEMPOTENT FILE LOADING (Delta's `COPY INTO`): ingest the parquet
     * files under `src` that this table has NOT loaded yet — each commit
@@ -962,28 +983,26 @@ object TxLog {
     * (current, 0, 0) when nothing is new. */
   def copyInto(spark: SparkSession, dir: String, src: String)
       : (Int, Int, Long) = {
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
+    val snap = resolve(dir)
     val d = new File(src)
     require(d.isDirectory, s"COPY INTO source $src is not a directory")
     val all = Option(d.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet") &&
         !f.getName.startsWith(".") && !f.getName.startsWith("_"))
       .sortBy(_.getName)
-    val seen = state(dir, Some(cur)).copied.toSet
-    val fresh = all.map(_.getCanonicalPath).filterNot(seen).toSeq
-    if (fresh.isEmpty) return (cur, 0, 0L)
+    val fresh = all.map(_.getCanonicalPath).filterNot(snap.copied).toSeq
+    if (fresh.isEmpty) return (snap.version, 0, 0L)
     val df = spark.read.option("mergeSchema", "true")
       .parquet(fresh: _*)
-    val (staged, lines) = stageBatch(df, dir)
+    val (staged, lines) = stageBatch(df, dir, snap.layout)
     try {
       // footer-grain count of the staged copy — the rows this load adds
       val rows =
         if (staged.isEmpty) 0L
         else spark.read.parquet(staged.map(f => s"$dir/$f"): _*).count()
-      val v = claimVersion(dir, cur + 1,
+      val v = claimVersion(dir, snap.version + 1,
         lines ++ fresh.map(p => s"copysrc\t${escapeVal(p)}") ++
-          schemaLine(df.schema, dir))
+          schemaLine(df.schema, snap))
       (v, fresh.size, rows)
     } catch { case e: Throwable => unstage(dir, staged); throw e }
   }
@@ -998,16 +1017,10 @@ object TxLog {
       schema: org.apache.spark.sql.types.StructType,
       properties: Map[String, String] = Map.empty): Int = {
     require(currentVersion(dir) < 0, s"$dir already has a version 0")
-    claimVersion(dir, 0, s"schema\t${escapeVal(schema.json)}" +:
+    claimVersion(dir, 0, exactSchemaLine(schema) +:
       properties.toSeq.map { case (k, v) =>
         s"property\t${escapeVal(k)}\t${escapeVal(v)}" })
   }
-
-  /** Current TBLPROPERTIES (log metadata). */
-  def tableProperties(dir: String,
-      asOf: Option[Int] = None): Map[String, String] =
-    if (currentVersion(dir) < 0) Map.empty
-    else state(dir, asOf).props.toMap
 
   /** `ALTER TABLE ... SET/UNSET TBLPROPERTIES` — one metadata-only
     * commit; empty inputs no-op without burning a version. */
@@ -1023,16 +1036,21 @@ object TxLog {
   def alterMetadata(dir: String, set: Map[String, String] = Map.empty,
       unset: Seq[String] = Seq.empty,
       newSchema: Option[org.apache.spark.sql.types.StructType] = None)
-      : Int = {
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
+      : Int =
+    alterMetadataAt(resolve(dir), set, unset, newSchema)
+
+  /** [[alterMetadata]] validated against, and claimed right above,
+    * `snap` — the catalog's ALTER TABLE resolves once and commits here. */
+  private[graft] def alterMetadataAt(snap: Snapshot,
+      set: Map[String, String], unset: Seq[String],
+      newSchema: Option[org.apache.spark.sql.types.StructType]): Int = {
     (set.keys ++ unset).foreach(k => require(
       k != ColumnMappingProp && k != RetiredColsProp,
       s"$k is engine-managed (RENAME/DROP COLUMN maintain it) and " +
         "cannot be set or unset directly"))
     var mapLines = Seq.empty[String]
     newSchema.foreach { next =>
-      tableSchema(dir).foreach { prior =>
+      snap.schema.foreach { prior =>
         prior.fields.foreach { f =>
           require(next.fields.contains(f),
             s"schema evolution is widen-only: field '${f.name}' of the " +
@@ -1052,7 +1070,7 @@ object TxLog {
         // physical storage must bind to a FRESH physical name — binding
         // it to the colliding one would resurrect a dropped column's
         // bytes (or alias a renamed column's) from pre-existing files
-        val cm = columnMapping(dir)
+        val cm = snap.mapping
         if (cm.active && added.nonEmpty) {
           val used = scala.collection.mutable.Set.empty[String]
           used ++= cm.retired ++= cm.toPhys.values ++=
@@ -1073,10 +1091,9 @@ object TxLog {
     val lines = set.toSeq.map { case (k, v) =>
         s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
       unset.map(k => s"unproperty\t${escapeVal(k)}") ++
-      mapLines ++
-      newSchema.map(s => s"schema\t${escapeVal(s.json)}")
-    if (lines.isEmpty) return cur
-    claimVersion(dir, cur + 1, lines)
+      mapLines ++ newSchema.map(exactSchemaLine)
+    if (lines.isEmpty) return snap.version
+    claimVersion(snap.dir, snap.version + 1, lines)
   }
 
   /** SCHEMA EVOLUTION as its own commit (`ALTER TABLE ... ADD COLUMN`
@@ -1096,7 +1113,7 @@ object TxLog {
     * the partition-pure staging automatically — the layout is table
     * metadata every writer inherits, not a per-write convention. */
   def append(df: DataFrame, dir: String): Int =
-    claimAppend(df, dir, stageBatch(df, dir))
+    claimAppend(df, head(dir))
 
   /** REPLACE (SaveMode.Overwrite through the connector): one atomic
     * commit swaps the whole live set for `df`'s files — the previous
@@ -1104,14 +1121,12 @@ object TxLog {
     * INSERT OVERWRITE, not a destructive rewrite). Creates the table
     * when it doesn't exist yet. */
   def replace(df: DataFrame, dir: String): Int = {
-    val cur = currentVersion(dir)
-    if (cur < 0) create(df, dir)
-    else {
-      val removes = snapshot(dir, Some(cur))
-      claimVersion(dir, cur + 1,
-        removes.map(f => s"remove\t$f") ++ stageBatch(df, dir)._2 ++
-          schemaLine(df.schema, dir, exact = true))
-    }
+    val snap = head(dir)
+    if (snap.version < 0) create(df, dir)
+    else claimVersion(dir, snap.version + 1,
+      snap.files.map(f => s"remove\t$f") ++
+        stageBatch(df, dir, snap.layout)._2 ++
+        schemaLine(df.schema, snap, exact = true))
   }
 
   /** APPEND gated by a CHECK constraint (the Delta table-constraint
@@ -1121,8 +1136,8 @@ object TxLog {
     * the same pass as the table's own constraints ([[stageBatch]]). */
   def appendChecked(df: DataFrame, dir: String,
       constraint: org.apache.spark.sql.Column): Int =
-    claimAppend(df, dir, stageBatch(df, dir, checks = Seq(constraint ->
-      s"CHECK constraint violated by the incoming batch: $constraint")))
+    claimAppend(df, head(dir), checks = Seq(constraint ->
+      s"CHECK constraint violated by the incoming batch: $constraint"))
 
   /** LOG-RESIDENT CHECK constraints (Delta's `ALTER TABLE ... ADD
     * CONSTRAINT`): the constraint is table METADATA — a
@@ -1144,35 +1159,30 @@ object TxLog {
   def addConstraint(spark: SparkSession, dir: String,
       name: String, constraintSql: String): Int = {
     import org.apache.spark.sql.functions.expr
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
-    require(!state(dir, None).cons.contains(name),
+    val snap = resolve(dir)
+    require(!snap.st.cons.contains(name),
       s"constraint '$name' already exists")
     val c = expr(constraintSql)
-    if (snapshot(dir).nonEmpty) {
-      val bad = read(spark, dir).filter(!c || c.isNull).limit(1).count()
+    if (snap.files.nonEmpty) {
+      val bad = scan(spark, snap, snap.files).filter(!c || c.isNull)
+        .limit(1).count()
       if (bad > 0) throw new IllegalArgumentException(
         s"cannot add CHECK constraint '$name' ($constraintSql): " +
           "existing rows violate it")
     }
-    claimVersion(dir, cur + 1,
+    claimVersion(dir, snap.version + 1,
       Seq(s"constraint\t${escapeVal(name)}\t${escapeVal(constraintSql)}"))
   }
 
   /** Drop an active constraint (a metadata-only commit). */
   def dropConstraint(dir: String, name: String): Int = {
-    val cur = currentVersion(dir)
-    require(state(dir, None).cons.contains(name),
-      s"no active constraint '$name'")
-    claimVersion(dir, cur + 1, Seq(s"unconstraint\t${escapeVal(name)}"))
+    val snap = resolve(dir)
+    require(snap.st.cons.contains(name), s"no active constraint '$name'")
+    claimVersion(dir, snap.version + 1,
+      Seq(s"unconstraint\t${escapeVal(name)}"))
   }
 
-  /** Active CHECK constraints at `asOf` (default latest). */
-  def constraints(dir: String, asOf: Option[Int] = None): Map[String, String] =
-    if (currentVersion(dir) < 0) Map.empty
-    else state(dir, asOf).cons.toMap
-
-  /** PARTITIONED APPEND (Delta's `partitionValues`, Iceberg's identity
+  /** PARTITIONED APPEND (Delta's partition values, Iceberg's identity
     * partitioning): stage `df` so every staged file is partition-value
     * PURE, and record each file's partition values as `p:<col>=<value>`
     * markers on its add line — pure log metadata that lets
@@ -1187,9 +1197,10 @@ object TxLog {
     * from ([[stageBatch]]). One distributed write; no per-partition
     * driver loop. `partCols` overrides the table's declared ones. */
   def appendPartitioned(spark: SparkSession, df: DataFrame, dir: String,
-      partCols: Seq[String]): Int =
-    claimAppend(df, dir,
-      stageBatch(df, dir, Some(layoutOf(dir).copy(partCols = partCols))))
+      partCols: Seq[String]): Int = {
+    val snap = head(dir)
+    claimAppend(df, snap, lay = Some(snap.layout.copy(partCols = partCols)))
+  }
 
   /** The reserved table property carrying DECLARATIVE partition columns
     * (`CREATE TABLE ... PARTITIONED BY` — VERDICT r12 #1): once set,
@@ -1199,11 +1210,6 @@ object TxLog {
     * Stored as escaped names joined by commas; carried through
     * checkpoints and clones like any property. */
   val PartitionColsProp: String = "graft.partition.columns"
-
-  /** The table's DECLARED partition columns (empty when unpartitioned
-    * or the table does not exist yet). */
-  def partitionColumns(dir: String): Seq[String] =
-    tableProperties(dir).get(PartitionColsProp).toSeq.flatMap(decodeCols)
 
   private[graft] def encodePartitionCols(cols: Seq[String]): String =
     cols.map(escapeVal).mkString(",")
@@ -1222,17 +1228,12 @@ object TxLog {
     * only reach the driver) — opt-in via the property. */
   val StatsColsProp: String = "graft.stats.columns"
 
-  /** The table's DECLARED data-skipping columns (empty when unset or
-    * the table does not exist yet). */
-  def statsColumns(dir: String): Seq[String] =
-    tableProperties(dir).get(StatsColsProp).toSeq.flatMap(decodeCols)
-
   /** Decode a comma-joined escaped column list (the encoding of
     * [[PartitionColsProp]] / [[StatsColsProp]] values). */
   private[graft] def decodeCols(v: String): Seq[String] =
     v.split(',').toSeq.filter(_.nonEmpty).map(unescapeVal)
 
-  /** COLUMN MAPPING (Delta's `columnMapping` name mode): the reserved
+  /** COLUMN MAPPING (Delta's column-mapping name mode): the reserved
     * property carrying `logical=physical` pairs for columns whose
     * in-file storage name differs from the schema name — what makes
     * `ALTER TABLE ... RENAME COLUMN` a METADATA-ONLY commit instead of
@@ -1255,9 +1256,6 @@ object TxLog {
     def active: Boolean = toPhys.nonEmpty || retired.nonEmpty
     def phys(c: String): String = toPhys.getOrElse(c, c)
   }
-
-  def columnMapping(dir: String, asOf: Option[Int] = None): ColMap =
-    colMapOf(tableProperties(dir, asOf))
 
   private def colMapOf(props: scala.collection.Map[String, String]): ColMap =
     ColMap(
@@ -1286,14 +1284,9 @@ object TxLog {
   /** The `feature` declaration line for `name`, or nothing when the
     * table already declares it (features are monotone — once declared,
     * every reader must implement it forever). */
-  private def featureLine(dir: String, name: String): Seq[String] =
-    if (state(dir, None).features.contains(name)) Seq.empty
+  private def featureLine(snap: Snapshot, name: String): Seq[String] =
+    if (snap.features.contains(name)) Seq.empty
     else Seq(s"feature\t${escapeVal(name)}")
-
-  /** REQUIRED reader features declared by the table. */
-  def tableFeatures(dir: String): Set[String] =
-    if (currentVersion(dir) < 0) Set.empty
-    else state(dir, None).features.toSet
 
   /** Columns whose NAME is load-bearing metadata cannot be renamed or
     * dropped: partition columns (their `p:` markers and declared
@@ -1301,15 +1294,15 @@ object TxLog {
     * selects by name), and any column a CHECK constraint's SQL text
     * references (the text would silently stop binding). The remedy is
     * always to change that declaration first. */
-  private def guardMappable(dir: String, col: String, verb: String): Unit = {
-    require(!partitionColumns(dir).contains(col),
+  private def guardMappable(lay: Layout, col: String, verb: String): Unit = {
+    require(!lay.partCols.contains(col),
       s"cannot $verb '$col': it is a declared partition column")
-    require(!statsColumns(dir).contains(col),
+    require(!lay.statsCols.contains(col),
       s"cannot $verb '$col': it is a declared data-skipping column — " +
         s"ALTER ... SET TBLPROPERTIES('$StatsColsProp') without it first")
     val pat = java.util.regex.Pattern.compile(
       "(?i)(?<![\\w`])" + java.util.regex.Pattern.quote(col) + "(?![\\w`])")
-    val refs = constraints(dir).collect {
+    val refs = lay.constraints.collect {
       case (n, sql) if pat.matcher(sql).find() => n }
     require(refs.isEmpty,
       s"cannot $verb '$col': referenced by CHECK constraint(s) " +
@@ -1324,9 +1317,8 @@ object TxLog {
     * again). Old files keep pruning conservatively on markers recorded
     * under the old name until an OPTIMIZE re-records them. */
   def renameColumn(dir: String, from: String, to: String): Int = {
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
-    val schema = tableSchema(dir).getOrElse(
+    val snap = resolve(dir)
+    val schema = snap.schema.getOrElse(
       throw new UnsupportedOperationException(
         s"RENAME COLUMN needs a recorded in-log schema on $dir — " +
           "legacy tables record one on their next write"))
@@ -1335,16 +1327,16 @@ object TxLog {
       s"column '$to' already exists")
     require(!to.contains('=') && !to.contains(','),
       "a mapped column name cannot contain '=' or ','")
-    guardMappable(dir, from, "rename")
-    val cm = columnMapping(dir)
+    guardMappable(snap.layout, from, "rename")
+    val cm = snap.mapping
     val phys = cm.phys(from)
     val m2 = (cm.toPhys - from) ++
       (if (phys == to) Map.empty[String, String] else Map(to -> phys))
     val next = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       if (f.name == from) f.copy(name = to) else f))
-    claimVersion(dir, cur + 1,
-      featureLine(dir, "column-mapping") ++ mappingLines(m2, cm.retired) :+
-        s"schema\t${escapeVal(next.json)}")
+    claimVersion(dir, snap.version + 1,
+      featureLine(snap, "column-mapping") ++ mappingLines(m2, cm.retired) :+
+        exactSchemaLine(next))
   }
 
   /** `ALTER TABLE ... DROP COLUMN c` — ONE metadata commit: the schema
@@ -1355,22 +1347,21 @@ object TxLog {
     * Delta's drop-column semantics — the 100 TB alternative to a
     * full-table rewrite. */
   def dropColumn(dir: String, name: String): Int = {
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
-    val schema = tableSchema(dir).getOrElse(
+    val snap = resolve(dir)
+    val schema = snap.schema.getOrElse(
       throw new UnsupportedOperationException(
         s"DROP COLUMN needs a recorded in-log schema on $dir — " +
           "legacy tables record one on their next write"))
     require(schema.fieldNames.contains(name), s"no such column: '$name'")
     require(schema.fields.length > 1, "cannot drop the only column")
-    guardMappable(dir, name, "drop")
-    val cm = columnMapping(dir)
+    guardMappable(snap.layout, name, "drop")
+    val cm = snap.mapping
     val next = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(_.name == name))
-    claimVersion(dir, cur + 1,
-      featureLine(dir, "column-mapping") ++
+    claimVersion(dir, snap.version + 1,
+      featureLine(snap, "column-mapping") ++
         mappingLines(cm.toPhys - name, cm.retired + cm.phys(name)) :+
-        s"schema\t${escapeVal(next.json)}")
+        exactSchemaLine(next))
   }
 
   /** LOGICAL → PHYSICAL rename of an outgoing frame — the single seam
@@ -1419,7 +1410,7 @@ object TxLog {
   def replaceWhere(spark: SparkSession, dir: String, data: DataFrame,
       pred: org.apache.spark.sql.Column): Int = {
     val snap = resolve(dir)
-    val (dataStaged, dataLines) = stageBatch(data, dir, Some(snap.layout),
+    val (dataStaged, dataLines) = stageBatch(data, dir, snap.layout,
       checks = Seq(pred -> ("replaceWhere: the incoming batch holds rows " +
         s"outside the overwritten predicate $pred")))
     try {
@@ -1429,7 +1420,7 @@ object TxLog {
         (proven ++ affected).map(f => s"remove\t$f") ++
           stageSurvivors(spark, snap, affected)(
             _.filter(!pred || pred.isNull)) ++
-          dataLines ++ schemaLineAt(data.schema, snap))
+          dataLines ++ schemaLine(data.schema, snap))
     } catch { case e: Throwable =>
       // a lost claim race leaves no orphans behind
       unstage(dir, dataStaged)
@@ -1449,30 +1440,28 @@ object TxLog {
     * from the dynamic-partition rendering itself. */
   def replaceDynamicPartitions(spark: SparkSession, data: DataFrame,
       dir: String): Int = {
-    val lay = layoutOf(dir)
-    val partCols = lay.partCols
+    val snap = head(dir)
+    val partCols = snap.layout.partCols
     require(partCols.nonEmpty,
       "dynamic partition overwrite needs a declared-partitioned table " +
         s"(CREATE TABLE ... PARTITIONED BY): $dir declares none")
-    val cur = currentVersion(dir)
-    val pv = partitionValues(dir, Some(cur))
-    val live = snapshot(dir, Some(cur))
-    val unmarked = live.filterNot(f =>
-      partCols.forall(c => pv.getOrElse(f, Map.empty).contains(c)))
+    val unmarked = snap.metas.filterNot { case (_, m) =>
+      partCols.forall(m.pv.contains) }
     require(unmarked.isEmpty,
       s"dynamic partition overwrite is undecidable: ${unmarked.size} " +
         "live files carry no partition markers (written before the " +
         "layout was declared) — run OPTIMIZE first to re-layout them")
-    val (staged, lines) = stageBatch(data, dir, Some(lay))
+    val (staged, lines) = stageBatch(data, dir, snap.layout)
     try {
       def tuple(m: Map[String, String]): Seq[String] =
         partCols.map(c => m.getOrElse(c, ""))
       val incoming: Set[Seq[String]] =
         lines.map(l => tuple(parseAdd(l)._2)).toSet
-      val victims = live.filter(f => incoming.contains(tuple(pv(f))))
-      claimVersion(dir, cur + 1,
+      val victims = snap.metas.collect {
+        case (f, m) if incoming.contains(tuple(m.pv)) => f }
+      claimVersion(dir, snap.version + 1,
         victims.map(f => s"remove\t$f") ++ lines ++
-          schemaLine(data.schema, dir))
+          schemaLine(data.schema, snap))
     } catch { case e: Throwable => unstage(dir, staged); throw e }
   }
 
@@ -1487,7 +1476,7 @@ object TxLog {
       partCols: Seq[String], statsCols: Seq[String])
       : (Seq[String], Seq[String]) =
     stageBatch(df, dir,
-      Some(NoLayout.copy(partCols = partCols, statsCols = statsCols)))
+      NoLayout.copy(partCols = partCols, statsCols = statsCols))
 
   /** ONE atomic commit installing a whole table DEFINITION —
     * `CREATE [OR REPLACE] TABLE [AS SELECT]` through the catalog's
@@ -1504,11 +1493,11 @@ object TxLog {
       props: Map[String, String], expectedVersion: Int): Int = {
     val propLines = props.toSeq.map { case (k, v) =>
       s"property\t${escapeVal(k)}\t${escapeVal(v)}" }
-    val schemaL = s"schema\t${escapeVal(schema.json)}"
+    val schemaL = exactSchemaLine(schema)
     if (expectedVersion < 0)
       claimVersion(dir, 0, addLines ++ propLines :+ schemaL)
     else {
-      val st = state(dir, Some(expectedVersion))
+      val st = resolve(dir, Some(expectedVersion)).st
       val removes = st.live.keys.toSeq.map(f => s"remove\t$f")
       val unprops = st.props.keys.filterNot(props.contains)
         .map(k => s"unproperty\t${escapeVal(k)}").toSeq
@@ -1530,7 +1519,7 @@ object TxLog {
     * or footer IO. Returns (kept, total live). */
   def prunePartitions(dir: String, filter: Map[String, String],
       asOf: Option[Int] = None): (Seq[String], Int) = {
-    val files = fileMetas(dir, asOf)
+    val files = resolve(dir, asOf).metas
     (partitionKept(files, filter), files.size)
   }
 
@@ -1593,7 +1582,7 @@ object TxLog {
       affected: Seq[String])(keep: DataFrame => DataFrame): Seq[String] =
     if (affected.isEmpty) Seq.empty
     else stageBatch(keep(scan(spark, snap, affected)), snap.dir,
-      Some(snap.layout), dropEmpty = true)._2
+      snap.layout, dropEmpty = true)._2
 
   /** UPDATE ... SET ... WHERE: copy-on-write — every live file holding
     * a row where `pred` is TRUE is rewritten with `sets` applied to
@@ -1610,9 +1599,9 @@ object TxLog {
     // non-matching predicate used to silently no-op through the
     // affected.isEmpty early return (review r11 #7)
     val setMap = sets.toMap
-    val tableSchema = snap.schema
+    val logical = snap.schema
       .getOrElse(scan(spark, snap, snap.files).schema)
-    val tableCols = tableSchema.fieldNames.toSet
+    val tableCols = logical.fieldNames.toSet
     require(setMap.keySet.subsetOf(tableCols),
       s"unknown UPDATE columns: ${setMap.keySet -- tableCols}")
     // metadata pruning narrows the probe; PROVEN-all-match files skip
@@ -1627,7 +1616,7 @@ object TxLog {
     // later append) must still apply — null-backfill it before the
     // rewrite, else the assignment silently vanishes (review r11 #2.3)
     val src = (setMap.keySet -- src0.columns).foldLeft(src0) { (d, c) =>
-      d.withColumn(c, lit(null).cast(tableSchema(c).dataType))
+      d.withColumn(c, lit(null).cast(logical(c).dataType))
     }
     val fire = coalesce(pred, lit(false))
     val rewritten = src.select(src.columns.toIndexedSeq.map { c =>
@@ -1639,7 +1628,7 @@ object TxLog {
       }
     }: _*)
     commitLines(dir, snap.version,
-      stageBatch(rewritten, dir, Some(snap.layout))._2, affected)
+      stageBatch(rewritten, dir, snap.layout)._2, affected)
   }
 
   /** Read the table at `asOf` (default latest) — explicit file list, so
@@ -1743,11 +1732,6 @@ object TxLog {
         spark.read.parquet(s"$dir/$sample").limit(0)
     }
 
-  /** True iff any live file carries outstanding deletion vectors at
-    * `asOf` — log-metadata only, no Spark needed. */
-  def hasDeletionVectors(dir: String, asOf: Option[Int] = None): Boolean =
-    state(dir, asOf).dv.nonEmpty
-
   /** Accumulated DELETION VECTORS at `asOf`: file → deleted row
     * positions, with sidecar files resolved through `spark`. Driver
     * materialization by design — a POSITIONS-level view for tests and
@@ -1758,7 +1742,7 @@ object TxLog {
   private[graft] def deletionVectors(spark: SparkSession, dir: String,
       asOf: Option[Int] = None): Map[String, Set[Long]] = {
     import org.apache.spark.sql.functions.col
-    val src = state(dir, asOf).dv.toMap
+    val src = resolve(dir, asOf).dv
     if (src.isEmpty) return Map.empty
     val fromSidecars: Map[String, Set[Long]] = {
       val wanted = src.toSeq.flatMap { case (f, (_, sidecars)) =>
@@ -1995,7 +1979,7 @@ object TxLog {
     // nondeterministic source cannot stage different rows than the ones
     // whose keys drove the rewrite (ADVICE r10).
     val snap = resolve(dir)
-    val (srcStaged, srcLines) = stageBatch(source, dir, Some(snap.layout))
+    val (srcStaged, srcLines) = stageBatch(source, dir, snap.layout)
     val src =
       if (srcStaged.isEmpty) source.limit(0)
       else logicalizeStaged(spark.read // one write — identical schemas
@@ -2008,7 +1992,7 @@ object TxLog {
         affected.map(f => s"remove\t$f") ++
           stageSurvivors(spark, snap, affected)(
             _.join(keys, Seq(keyCol), "left_anti")) ++
-          srcLines ++ schemaLineAt(source.schema, snap))
+          srcLines ++ schemaLine(source.schema, snap))
     } finally { keys.unpersist(): Unit }
   }
 
@@ -2020,8 +2004,9 @@ object TxLog {
     * batch was recognized as a replay. */
   def appendIdempotent(df: DataFrame, dir: String,
       app: String, txnId: Long): Int = {
-    if (txnSeen(dir, app, txnId)) return -1
-    claimAppend(df, dir, stageBatch(df, dir), Some(app -> txnId))
+    val snap = head(dir)
+    if (snap.hasTxn(app, txnId)) return -1
+    claimAppend(df, snap, Some(app -> txnId))
   }
 
   /** Driver-side commit of EXECUTOR-staged files as one idempotent
@@ -2042,7 +2027,8 @@ object TxLog {
       schema: org.apache.spark.sql.types.StructType,
       app: String, txnId: Long): Int = {
     val names = files.map(_._1)
-    if (txnSeen(dir, app, txnId)) {
+    val snap = head(dir)
+    if (snap.hasTxn(app, txnId)) {
       unstage(dir, names)
       return -1
     }
@@ -2052,16 +2038,9 @@ object TxLog {
     // replayed empty epoch is indistinguishable from a committed one,
     // so skipping keeps the exactly-once contract
     if (files.isEmpty) return -1
-    claimAppendRetrying(spark, dir, names,
-      addLines(spark, dir, layoutOf(dir), files), schema, Some(app -> txnId))
+    claimAppendRetrying(spark, snap, names,
+      addLines(spark, dir, snap.layout, files), schema, Some(app -> txnId))
   }
-
-  /** Has `(app, txnId)` already committed? Scanned from the replayed
-    * txn marker lines — checkpoints carry them forward, so replay
-    * detection survives log truncation below a checkpoint. */
-  def txnSeen(dir: String, app: String, txnId: Long): Boolean =
-    currentVersion(dir) >= 0 &&
-      state(dir, None).txns.contains(s"txn\t$app\t$txnId")
 
   /** OPTIMIZE: rewrite the current live set into `nFiles` compacted
     * files as a new version — bit-identical rows, new layout; older
@@ -2137,7 +2116,7 @@ object TxLog {
     val lay = snap.layout.copy(constraints = Seq.empty)
     claimVersion(dir, snap.version + 1,
       snap.files.map(f => s"remove\t$f") ++
-        stageBatch(srcZ, dir, Some(lay), extraStats = clusterBy,
+        stageBatch(srcZ, dir, lay, extraStats = clusterBy,
           arrange = arrange)._2 :+ "nodc")
   }
 
@@ -2155,10 +2134,8 @@ object TxLog {
     * reclaimed any target file or DV sidecar — restorability is
     * bounded by the retention window, same as Delta. */
   def restore(dir: String, toVersion: Int): Int = {
-    val cur = currentVersion(dir)
-    require(toVersion >= 0 && toVersion <= cur,
-      s"version $toVersion does not exist (table is at version $cur)")
-    val st = state(dir, Some(toVersion))
+    val st = resolve(dir, Some(toVersion)).st
+    val now = resolve(dir)
     val missing = st.live.keys.filter(f => !new File(dir, f).isFile)
     require(missing.isEmpty,
       s"cannot restore to version $toVersion: data files already " +
@@ -2171,12 +2148,7 @@ object TxLog {
     // remove EVERYTHING live now, re-add the target verbatim: removes
     // apply before adds within a commit, so files live at both
     // versions come back with the TARGET's add line and vectors
-    val dvLines = st.dv.toSeq.flatMap { case (f, (inline, sidecars)) =>
-      (if (inline.nonEmpty)
-        Seq(s"dv\t$f\t${inline.toSeq.sorted.mkString(",")}")
-      else Seq.empty) ++ sidecars.map(sc => s"dvf\t$f\t$sc")
-    }
-    val curSt = state(dir, Some(cur))
+    val curSt = now.st
     val schemaSnap = st.schemaJson.toSeq
       .filter(j => !curSt.schemaJson.contains(j))
       .map(j => s"schema\t${escapeVal(j)}")
@@ -2195,9 +2167,9 @@ object TxLog {
         case _ => Seq.empty
       }
     }
-    claimVersion(dir, cur + 1,
-      snapshot(dir, Some(cur)).map(f => s"remove\t$f") ++
-        st.live.values.toSeq ++ dvLines ++ layoutSnap ++ schemaSnap)
+    claimVersion(dir, now.version + 1,
+      now.files.map(f => s"remove\t$f") ++
+        st.live.values.toSeq ++ st.dvLines() ++ layoutSnap ++ schemaSnap)
   }
 
   /** SHALLOW CLONE: a new table whose version 0 REFERENCES the source's
@@ -2217,49 +2189,46 @@ object TxLog {
     * version or OPTIMIZE the clone first (materializing its vectors
     * un-shares the sidecars). */
   def shallowClone(srcDir: String, dstDir: String): Int = {
-    val srcSt = state(srcDir, None)
-    // an UNDECIDED multi-table transaction resolves to nothing — a
-    // clone taken inside that window would PERMANENTLY omit the
-    // transaction's rows once it publishes (review r12 #2: vacuum and
-    // checkpoint both refuse over this window; the clone persists the
-    // weak view, so it must too)
-    require(!srcSt.pendingXref,
-      s"cannot clone $srcDir: a multi-table transaction in range has " +
-        "not been decided yet (publish or TxLog.abortTx it first)")
-    val srcLive = srcSt.live.keys.toSeq
-    val srcDvs = srcSt.dv.toMap
+    val src = cloneSource(srcDir)
     val rel = Paths.get(dstDir).toAbsolutePath
       .relativize(Paths.get(srcDir).toAbsolutePath)
     new File(dstDir).mkdirs()
     def tr(f: String) = s"$rel${File.separator}$f"
-    // outstanding source DVs carry over, keys AND sidecar paths
-    // translated — a clone of a merge-on-read table must not resurrect
-    // deleted rows (pure log rewrite, no data IO). The source's
-    // METADATA clones too: recorded schema (a clone of an EMPTY or
-    // schema-evolved table must stay self-describing), CHECK
-    // constraints, and TBLPROPERTIES — Delta's clone semantics.
-    // marker fields (p: partition values, zone triples, s: string
-    // bounds) carry VERBATIM — the clone must prune exactly like the
-    // source, and a clone whose files lost their markers would refuse
-    // dynamic partition overwrite and scan everything forever
-    val lines = srcSt.live.toSeq.sortBy(_._1).map { case (f, l) =>
-      (Seq("add", tr(f)) ++ l.split('\t').drop(2)).mkString("\t") } ++
-      srcDvs.toSeq.filter { case (f, _) => srcLive.contains(f) }
-        .sortBy(_._1).flatMap { case (f, (inline, sidecars)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t${tr(f)}\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++
-            sidecars.map(sc => s"dvf\t${tr(f)}\t${tr(sc)}")
-        } ++
-      srcSt.cons.toSeq.map { case (n, sql) =>
-        s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
-      srcSt.props.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-      // the COPY INTO ledger clones too: re-running the same COPY INTO
-      // against the clone must not double-load what the source ingested
-      srcSt.copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
-      srcSt.features.toSeq.map(f => s"feature\t${escapeVal(f)}") ++
-      srcSt.schemaJson.map(j => s"schema\t${escapeVal(j)}")
+    claimClone(src, dstDir, tr, tr)
+  }
+
+  /** The state a clone copies: the source's latest snapshot. An
+    * UNDECIDED multi-table transaction resolves to nothing — a clone
+    * taken inside that window would PERMANENTLY omit the transaction's
+    * rows once it publishes (review r12 #2: vacuum and checkpoint both
+    * refuse over this window; the clone persists the weak view, so it
+    * must too). */
+  private def cloneSource(srcDir: String): LogState = {
+    val snap = resolve(srcDir)
+    require(!snap.pendingXref,
+      s"cannot clone $srcDir: a multi-table transaction in range has " +
+        "not been decided yet (publish or TxLog.abortTx it first)")
+    snap.st
+  }
+
+  /** Claim a clone's version 0 from `src`, table-file and sidecar paths
+    * relocated through `file` and `sidecar`. Marker fields (p:
+    * partition values, zone triples, s: string bounds) carry VERBATIM —
+    * the clone must prune exactly like the source, and a clone whose
+    * files lost their markers would refuse dynamic partition overwrite
+    * and scan everything forever. Outstanding DVs carry over — a clone
+    * of a merge-on-read table must not resurrect deleted rows (pure log
+    * rewrite, no data IO). The source's DEFINITION clones too: recorded
+    * schema (a clone of an EMPTY or schema-evolved table must stay
+    * self-describing), CHECK constraints, TBLPROPERTIES and features —
+    * Delta's clone semantics — and the COPY INTO ledger (re-running the
+    * same COPY INTO against the clone must not double-load what the
+    * source ingested). */
+  private def claimClone(src: LogState, dstDir: String,
+      file: String => String, sidecar: String => String): Int = {
+    val lines = src.live.toSeq.sortBy(_._1).map { case (f, l) =>
+        (Seq("add", file(f)) ++ l.split('\t').drop(2)).mkString("\t") } ++
+      src.dvLines(file, sidecar) ++ src.definitionLines
     try claimVersion(dstDir, 0, lines)
     catch {
       case _: java.util.ConcurrentModificationException =>
@@ -2279,25 +2248,20 @@ object TxLog {
     * semantics). Sources that are themselves shallow clones flatten:
     * `../src/part-x.parquet` references copy in as local basenames. */
   def deepClone(srcDir: String, dstDir: String): Int = {
-    val srcSt = state(srcDir, None)
-    require(!srcSt.pendingXref,
-      s"cannot clone $srcDir: a multi-table transaction in range has " +
-        "not been decided yet (publish or TxLog.abortTx it first)")
-    val live = srcSt.live.toSeq.sortBy(_._1)
+    val srcSt = cloneSource(srcDir)
+    val live = srcSt.live.keys.toSeq
     def base(f: String) = new File(f).getName
-    live.groupBy(e => base(e._1)).find(_._2.size > 1).foreach { case (n, _) =>
+    live.groupBy(base).find(_._2.size > 1).foreach { case (n, _) =>
       throw new IllegalStateException(
         s"deep clone needs unique live-file basenames, duplicated: $n") }
-    val sidecars = srcSt.dv.toSeq
-      .filter { case (f, _) => srcSt.live.contains(f) }
-      .flatMap(_._2._2).distinct
+    val sidecars = srcSt.dv.values.flatMap(_._2).toSeq.distinct
     sidecars.groupBy(base).find(_._2.size > 1).foreach { case (n, _) =>
       throw new IllegalStateException(
         s"deep clone needs unique DV-sidecar basenames, duplicated: $n") }
     new File(dstDir).mkdirs()
     // copies land BEFORE the claim: until version 0 exists the
     // destination is just files, and a crash leaves reclaimable litter
-    live.foreach { case (f, _) =>
+    live.foreach { f =>
       Files.copy(Paths.get(srcDir, f).normalize(),
         Paths.get(dstDir, base(f)),
         java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit }
@@ -2323,29 +2287,7 @@ object TxLog {
       } finally walk.close()
       sc -> to
     }.toMap
-    val lines = live.map { case (f, l) =>
-      (Seq("add", base(f)) ++ l.split('\t').drop(2)).mkString("\t") } ++
-      srcSt.dv.toSeq.filter { case (f, _) => srcSt.live.contains(f) }
-        .sortBy(_._1).flatMap { case (f, (inline, scs)) =>
-          (if (inline.nonEmpty)
-            Seq(s"dv\t${base(f)}\t${inline.toSeq.sorted.mkString(",")}")
-          else Seq.empty) ++ scs.map(sc => s"dvf\t${base(f)}\t${scMap(sc)}")
-        } ++
-      srcSt.cons.toSeq.map { case (n, sql) =>
-        s"constraint\t${escapeVal(n)}\t${escapeVal(sql)}" } ++
-      srcSt.props.toSeq.map { case (k, v) =>
-        s"property\t${escapeVal(k)}\t${escapeVal(v)}" } ++
-      // the COPY INTO ledger clones too: re-running the same COPY INTO
-      // against the clone must not double-load what the source ingested
-      srcSt.copied.toSeq.map(s => s"copysrc\t${escapeVal(s)}") ++
-      srcSt.features.toSeq.map(f => s"feature\t${escapeVal(f)}") ++
-      srcSt.schemaJson.map(j => s"schema\t${escapeVal(j)}")
-    try claimVersion(dstDir, 0, lines)
-    catch {
-      case _: java.util.ConcurrentModificationException =>
-        throw new java.util.ConcurrentModificationException(
-          s"$dstDir already has a version 0")
-    }
+    claimClone(srcSt, dstDir, base, scMap)
   }
 
   /** TRUNCATE: one atomic pure-remove commit emptying the CURRENT
@@ -2354,11 +2296,9 @@ object TxLog {
     * destructive wipe). Schema, properties, and constraints survive:
     * truncate moves data, not the definition. */
   def truncate(dir: String): Int = {
-    val cur = currentVersion(dir)
-    require(cur >= 0, s"$dir is not a TxLog table")
-    val live = snapshot(dir, Some(cur))
-    if (live.isEmpty) return cur
-    claimVersion(dir, cur + 1, live.map(f => s"remove\t$f"))
+    val snap = resolve(dir)
+    if (snap.files.isEmpty) return snap.version
+    claimVersion(dir, snap.version + 1, snap.files.map(f => s"remove\t$f"))
   }
 
   /** Drop data files no longer live at the CURRENT version and not
@@ -2372,29 +2312,40 @@ object TxLog {
     * judged by THIS table's versions only — data files AND `_dv/`
     * sidecars still referenced by a shallow clone's translated lines
     * are invisible here, so retention policy must span clones (see
-    * [[shallowClone]]). */
+    * [[shallowClone]]).
+    *
+    * The retained versions' states come from ONE forward [[walk]] from
+    * `retainAfter` (clamped into `[0, current]`, so the current version
+    * always protects its files): one fold just below it, then one raw
+    * entry at a time. */
   def vacuum(dir: String, retainAfter: Int,
       minAgeMs: Long = DefaultVacuumMinAgeMs,
       dryRun: Boolean = false): Seq[String] = {
     val cur = currentVersion(dir)
+    require(cur >= 0, s"$dir is not a TxLog table (no committed versions)")
+    // A RETIRED version gets no state from the walk: unreadable for time
+    // travel, it protects nothing of its own (a file of its still live
+    // later is protected by that later version). The walk ends at `cur`,
+    // always readable: truncation only removes raw entries BELOW a
+    // checkpoint.
+    val protectedFiles = scala.collection.mutable.Set.empty[String]
+    val keptSidecars = scala.collection.mutable.Set.empty[String]
+    val atCur = walk(dir, math.min(math.max(0, retainAfter), cur), cur)
+      .map { case (_, entry, st) =>
+        entry.foreach(st.apply)
+        protectedFiles ++= st.live.keys
+        keptSidecars ++= st.dv.values.flatMap(_._2).map(new File(_).getName)
+        st
+      }.reduce((_, st) => st)
     // An UNDECIDED multi-table transaction's staged files resolve to
     // NOTHING (the xref is a hole until publish), so protectedFiles
     // would miss them and a zero-min-age vacuum would delete data a
     // later publishTx commits references to (ADVICE r11 #4). Refuse —
     // mirroring checkpoint's pendingXref guard; deciding the
     // transaction (publish or abortTx) unblocks vacuum.
-    require(!state(dir, Some(cur)).pendingXref,
+    require(!atCur.pendingXref,
       s"cannot vacuum $dir: a multi-table transaction in range has " +
         "not been decided yet (publish or TxLog.abortTx it first)")
-    // A version whose raw entries were truncated below a checkpoint is
-    // RETIRED — unreadable for time travel, so it protects nothing of
-    // its own (any file of its still live later is protected by the
-    // later, readable version).
-    val states = (math.max(0, retainAfter) to cur).flatMap { v =>
-      try Some(state(dir, Some(v)))
-      catch { case _: java.nio.file.NoSuchFileException => None }
-    }
-    val protectedFiles = states.flatMap(_.live.keys).toSet
     val horizon = System.currentTimeMillis() - minAgeMs
     val onDisk = Option(new File(dir).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet")
@@ -2409,8 +2360,6 @@ object TxLog {
     // entries; a lost commit race orphaned it entirely) — without this
     // the _dv/ dir grows monotonically on a merge-on-read table. The
     // mtime guard protects a racing writer's just-written sidecar.
-    val keptSidecars = states
-      .flatMap(_.dv.values.flatMap(_._2)).map(new File(_).getName).toSet
     val dvVictims = Option(new File(dir, "_dv").listFiles())
       .getOrElse(Array.empty)
       .filter(d => d.isDirectory && d.lastModified() <= horizon
@@ -2543,37 +2492,40 @@ object TxLog {
     def tagged(df: DataFrame, tpe: String, v: Int): DataFrame =
       df.withColumn("_change_type", lit(tpe))
         .withColumn("_commit_version", lit(v.toLong))
-    // ONE replay, to fromVersion - 1, then carried forward one raw entry
-    // at a time to the current version: each version's "as live at v-1"
-    // vector view is the fold BEFORE applying v (a replay per version
-    // was O(versions²) driver IO on long ranges — ADVICE r10), and the
-    // end state is the snapshot every frame reads under, so all of the
-    // feed's frames share one schema
-    val st = fold(dir, fromVersion - 1)
+    // ONE forward walk from fromVersion to the current version: each
+    // version's "as live at v-1" vector view is the state BEFORE applying
+    // v (a replay per version was O(versions²) driver IO on long ranges
+    // — ADVICE r10), and the end state is the snapshot every frame reads
+    // under, so all of the feed's frames share one schema
+    def truncated(v: Int) = new IllegalStateException(
+      s"change feed needs raw log entries, but version $v of $dir " +
+        "was truncated below a checkpoint — narrow the range to " +
+        "retained versions")
+    (fromVersion to cur).find(v => !Files.exists(versionFile(dir, v)))
+      .foreach(v => throw truncated(v))
     var mappedAtTo = false
-    val entries = (fromVersion to cur).flatMap { v =>
-      if (!Files.exists(versionFile(dir, v)))
-        throw new IllegalStateException(
-          s"change feed needs raw log entries, but version $v of $dir " +
-            "was truncated below a checkpoint — narrow the range to " +
-            "retained versions")
-      val lines = entryLines(dir, v)
-      val priorDv =
-        if (lines.exists(_.startsWith("remove\t"))) st.dv.toMap
-        else Map.empty[String, (Set[Long], Seq[String])]
-      st.apply(lines)
-      if (v == toVersion) mappedAtTo = colMapOf(st.props).active
-      if (v > toVersion || lines.contains("nodc")) None
-      else Some((v, lines, priorDv))
-    }
+    val walked = walk(dir, fromVersion, cur).map {
+      // every raw entry exists, so the walk re-seeds only where the
+      // state just below the range is retired
+      case (v, None, _) => throw truncated(v - 1)
+      case (v, Some(lines), st) =>
+        val priorDv =
+          if (lines.exists(_.startsWith("remove\t"))) st.dv.toMap
+          else Map.empty[String, (Set[Long], Seq[String])]
+        st.apply(lines)
+        if (v == toVersion) mappedAtTo = colMapOf(st.props).active
+        (v, lines, priorDv, st)
+    }.toSeq
     // a RENAME/DROP COLUMN inside or before the range would make the
     // feed's frames disagree on column identity across versions —
     // Delta blocks CDF reads across column-mapping schema changes too
     require(!mappedAtTo,
       s"the change feed of $dir is unavailable after a RENAME or DROP " +
         "COLUMN (column mapping active) — read snapshots in batch instead")
-    val snap = new Snapshot(dir, cur, st)
-    val frames = entries.flatMap { case (v, lines, priorDv) =>
+    val snap = new Snapshot(dir, cur, walked.last._4)
+    val frames = walked.filter { case (v, lines, _, _) =>
+      v <= toVersion && !lines.contains("nodc")
+    }.flatMap { case (v, lines, priorDv, _) =>
       // this version's own adds and vectors, keyed by target file
       val own = new LogState
       own.apply(lines)
@@ -2822,7 +2774,14 @@ object TxLog {
   def appendAll(txRoot: String,
       batches: Seq[(DataFrame, String)]): Seq[Int] =
     commitAllLines(txRoot, batches.map { case (df, dir) =>
-      dir -> (stageBatch(df, dir)._2 ++ schemaLine(df.schema, dir))
+      val snap = head(dir)
+      val staged = stageBatch(df, dir, snap.layout)._2
+      appendRaceHook()
+      // the claim is blind, so the schema line must build on the newest
+      // recorded schema: a widening commit that landed while this batch
+      // staged re-resolves here instead of being overwritten
+      val fresh = if (currentVersion(dir) == snap.version) snap else head(dir)
+      dir -> (staged ++ schemaLine(df.schema, fresh))
     })
 
   /** Atomically REPLACE every table's live set (the FK-safe
@@ -2835,14 +2794,12 @@ object TxLog {
   def replaceAll(txRoot: String,
       batches: Seq[(DataFrame, String)]): Seq[Int] =
     commitAllImpl(txRoot, batches.map { case (df, dir) =>
-      val cur = currentVersion(dir)
-      val removes =
-        if (cur < 0) Seq.empty
-        else snapshot(dir, Some(cur)).map(f => s"remove\t$f")
+      val snap = head(dir)
       (dir,
-        removes ++ stageBatch(df, dir)._2 ++
-          schemaLine(df.schema, dir, exact = true),
-        Some(cur))
+        snap.files.map(f => s"remove\t$f") ++
+          stageBatch(df, dir, snap.layout)._2 ++
+          schemaLine(df.schema, snap, exact = true),
+        Some(snap.version))
     })
 
   /** Reclaim DECIDED multi-table transaction files under `txRoot` that

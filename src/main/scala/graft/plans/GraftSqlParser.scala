@@ -427,7 +427,7 @@ case class RestoreTimestampCommand(nameParts: Seq[String], ts: String)
   * at-a-glance health row — format, location, current version, live
   * file count and bytes, declared partition columns, outstanding
   * deletion vectors, constraint and property counts. Pure log
-  * metadata: one fold, no data IO. */
+  * metadata: the whole row comes from one snapshot, no data IO. */
 case class DescribeDetailCommand(nameParts: Seq[String])
     extends LeafRunnableCommand {
   import org.apache.spark.sql.types.{BooleanType, StringType}
@@ -444,17 +444,16 @@ case class DescribeDetailCommand(nameParts: Seq[String])
     AttributeReference("num_properties", LongType, nullable = false)())
   override def run(spark: SparkSession): Seq[Row] = {
     val dir = MaintenanceTarget.dirOf(spark, nameParts)
-    val live = TxLog.snapshot(dir)
-    val bytes = live.map(f => new java.io.File(dir, f).length()).sum
+    val snap = TxLog.resolve(dir)
+    val bytes = snap.files.map(f => new java.io.File(dir, f).length()).sum
     // the reserved partition-layout key is surfaced in its own column,
     // not counted with the user's TBLPROPERTIES
-    val props = TxLog.tableProperties(dir)
-    Seq(Row("txlog", dir, TxLog.currentVersion(dir).toLong,
-      live.size.toLong, bytes,
-      TxLog.partitionColumns(dir).mkString(","),
-      TxLog.hasDeletionVectors(dir),
-      TxLog.constraints(dir).size.toLong,
-      (props - TxLog.PartitionColsProp - TxLog.ColumnMappingProp
+    Seq(Row("txlog", dir, snap.version.toLong,
+      snap.files.size.toLong, bytes,
+      snap.layout.partCols.mkString(","),
+      snap.dv.nonEmpty,
+      snap.layout.constraints.size.toLong,
+      (snap.properties - TxLog.PartitionColsProp - TxLog.ColumnMappingProp
         - TxLog.RetiredColsProp).size.toLong))
   }
 }

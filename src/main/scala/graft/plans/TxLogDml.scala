@@ -457,7 +457,7 @@ object TxLogDml {
         }
       }: _*)
       TxLog.commitLines(dir, snap.version,
-        TxLog.stageBatch(rewritten, dir, Some(snap.layout))._2, affected)
+        TxLog.stageBatch(rewritten, dir, snap.layout)._2, affected)
     } finally { hits.unpersist(): Unit }
   }
 
@@ -619,7 +619,7 @@ object TxLogDml {
               .filter(!coalesce(deleteCond, lit(false)))
               .select(values.values.toSeq.map { case (a, c) =>
                 c.cast(a.dataType).as(a.name) }: _*)
-            TxLog.stageBatch(survivors, dir, Some(snap.layout))
+            TxLog.stageBatch(survivors, dir, snap.layout)
           } finally { joined.unpersist(): Unit }
         }
       // 3. inserts: source rows unmatched anywhere in the target; a
@@ -654,7 +654,7 @@ object TxLogDml {
           val rows = unmatchedSrc.filter(keep)
             .select(values.values.toSeq.map { case (a, c) =>
               c.cast(a.dataType).as(a.name) }: _*)
-          TxLog.stageBatch(rows, dir, Some(snap.layout))._2
+          TxLog.stageBatch(rows, dir, snap.layout)._2
         } catch { case e: Throwable => TxLog.unstage(dir, rewritten); throw e }
       // 4. one atomic commit
       if (affected.isEmpty && inserts.isEmpty) snap.version

@@ -3328,7 +3328,7 @@ object ExtQueries {
         require(TxLog.snapshot(t, Some(0)).toSet ==
           TxLog.snapshot(t, Some(2)).toSet,
           "merge-on-read delete must not rewrite any data file")
-        require(TxLog.hasDeletionVectors(t),
+        require(TxLog.resolve(t).dv.nonEmpty,
           "no deletion vectors were committed")
         Seq(0, 1, 2).map { v =>
           TxLog.read(s, t, Some(v))
@@ -4648,7 +4648,7 @@ object ExtQueries {
         s.sql("DELETE FROM graft_lake.q433c WHERE o_orderkey % 2 = 0")
         import s.implicits._
         Seq(("clone", c), ("main", t)).map { case (probe, d) =>
-          val props = TxLog.tableProperties(d)
+          val props = TxLog.resolve(d).properties
           val agg = TxLog.read(s, d)
             .agg(count(lit(1)), Stable.dsum(col("o_totalprice"))).head()
           (probe, props.getOrElse("tier", "?"), props.getOrElse("pii", "?"),
@@ -4784,8 +4784,8 @@ object ExtQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .toTable("graft_lake.q435pt")
         q.awaitTermination()
-        val allMarked = TxLog.partitionValues(t).values
-          .forall(_.get("l_returnflag").nonEmpty)
+        val allMarked = TxLog.resolve(t).metas
+          .forall(_._2.pv.contains("l_returnflag"))
         // the partition-predicate scan: collect the aggregate FIRST
         // (execution populates the pruning counters), then read them
         val arow = s.sql(
@@ -4946,7 +4946,7 @@ object ExtQueries {
                    WHERE c.c_custkey = t.o_custkey
                      AND c.c_mktsegment <> 'BUILDING')""")
         val versions = TxLog.currentVersion(t).toLong
-        val dvDelete = TxLog.hasDeletionVectors(t)
+        val dvDelete = TxLog.resolve(t).dv.nonEmpty
         s.sql("SELECT * FROM graft_lake.q438m")
           .agg(count(lit(1)).as("n_rows"),
             Stable.dsum(col("o_totalprice")).as("revenue"))
@@ -5123,21 +5123,19 @@ object ExtQueries {
         val deleteMetadataOnly = delLines.nonEmpty &&
           delLines.forall(_.startsWith("remove\t"))
         // 2. partition-predicate UPDATE: victims confined to 'A' files
-        val pvBefore = TxLog.partitionValues(t)
+        val pvBefore = TxLog.resolve(t).metas.toMap
         s.sql("""UPDATE graft_lake.q441p SET l_extendedprice = 0.0
                  WHERE l_returnflag = 'A'""")
         val updScoped = {
           val removed = lines(TxLog.currentVersion(t))
             .filter(_.startsWith("remove\t")).map(_.split('\t')(1))
           removed.nonEmpty && removed.forall(f =>
-            pvBefore.getOrElse(f, Map.empty)
-              .get("l_returnflag").contains("A"))
+            pvBefore.get(f).exists(_.pv.get("l_returnflag").contains("A")))
         }
         // 3. OPTIMIZE compacts within partitions — markers survive
         s.sql("OPTIMIZE graft_lake.q441p")
-        val pvAfter = TxLog.partitionValues(t)
-        val optimizeMarked = TxLog.snapshot(t).forall(f =>
-          pvAfter.getOrElse(f, Map.empty).contains("l_returnflag"))
+        val optimizeMarked = TxLog.resolve(t).metas
+          .forall(_._2.pv.contains("l_returnflag"))
         // the pruned scan still serves the surviving content exactly
         s.sql("SELECT * FROM graft_lake.q441p")
           .agg(count(lit(1)).as("n_rows"),
@@ -5191,13 +5189,13 @@ object ExtQueries {
         TxLog.append(li, t)
         li.createOrReplaceTempView("q442_src")
         def removedOnly(v: Int, part: String): Boolean = {
-          val pv = TxLog.partitionValues(t, Some(v - 1))
+          val pv = TxLog.resolve(t, Some(v - 1)).metas.toMap
           val removed = new String(java.nio.file.Files.readAllBytes(
             java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")), "UTF-8")
             .linesIterator.filter(_.startsWith("remove\t"))
             .map(_.split('\t')(1)).toSeq
           removed.nonEmpty && removed.forall(f =>
-            pv.getOrElse(f, Map.empty).get("l_returnflag").contains(part))
+            pv.get(f).exists(_.pv.get("l_returnflag").contains(part)))
         }
         // 1. static scope: replace partition N with negated prices
         // (negation is IEEE-exact — no cross-engine rounding hazard)
@@ -5282,9 +5280,8 @@ object ExtQueries {
         // so its files are provably outside the probe below
         s.sql("INSERT INTO graft_lake.q443s SELECT * FROM q443_hi")
         // every live file carries o_orderkey bounds, no caller asked
-        val zm = TxLog.fileStatsAll(t)
-        val allMarked = TxLog.snapshot(t).forall(f =>
-          zm.getOrElse(f, Map.empty).contains("o_orderkey"))
+        val allMarked = TxLog.resolve(t).metas
+          .forall(_._2.zm.contains("o_orderkey"))
         // selective range scan: execution populates the counters
         val loRows = s.sql(
           s"SELECT count(*) FROM graft_lake.q443s WHERE o_orderkey <= $mid")
@@ -5293,9 +5290,8 @@ object ExtQueries {
           graft.sources.TxLogSourceIO.lastTotal.get()
         // the DELETE's survivor rewrite must keep the table prunable
         s.sql("DELETE FROM graft_lake.q443s WHERE o_orderkey % 10 = 7")
-        val zm2 = TxLog.fileStatsAll(t)
-        val rewriteMarked = TxLog.snapshot(t).forall(f =>
-          zm2.getOrElse(f, Map.empty).contains("o_orderkey"))
+        val rewriteMarked = TxLog.resolve(t).metas
+          .forall(_._2.zm.contains("o_orderkey"))
         s.sql("SELECT * FROM graft_lake.q443s")
           .agg(count(lit(1)).as("n_rows"),
             Stable.dsum(col("o_totalprice")).as("revenue"))
@@ -5338,9 +5334,8 @@ object ExtQueries {
           .filter(f => f.getName.endsWith(".parquet")).map(_.getName).toSet
         s.sql(s"CONVERT TO TXLOG parquet.`$p` STATS (o_orderkey)")
         val inPlace = TxLog.snapshot(p).toSet == original
-        val zm = TxLog.fileStatsAll(p)
-        val statsMarked = TxLog.snapshot(p).forall(f =>
-          zm.getOrElse(f, Map.empty).contains("o_orderkey"))
+        val statsMarked = TxLog.resolve(p).metas
+          .forall(_._2.zm.contains("o_orderkey"))
         val origRows = TxLog.read(s, p).count()
         // the converted directory is a first-class DML target
         s.sql(s"DELETE FROM txlog.`$p` WHERE o_orderkey % 7 = 0")
@@ -5509,15 +5504,15 @@ object ExtQueries {
         val emptied =
           s.sql("SELECT count(*) FROM graft_lake.q447t")
             .head().getLong(0) == 0L
-        val defSurvived = TxLog.partitionColumns(t) == Seq("l_returnflag")
+        val defSurvived =
+          TxLog.resolve(t).layout.partCols == Seq("l_returnflag")
         val ttRows = TxLog.read(s, t, Some(preVersion)).count()
         // the table reloads under its declared layout
         li.filter(col("l_returnflag") =!= "R")
           .createOrReplaceTempView("q447_reload")
         s.sql("INSERT INTO graft_lake.q447t SELECT * FROM q447_reload")
-        val pv = TxLog.partitionValues(t)
-        val reloadMarked = TxLog.snapshot(t).forall(f =>
-          pv.getOrElse(f, Map.empty).contains("l_returnflag"))
+        val reloadMarked = TxLog.resolve(t).metas
+          .forall(_._2.pv.contains("l_returnflag"))
         s.sql("SELECT * FROM graft_lake.q447t")
           .agg(count(lit(1)).as("n_rows"),
             Stable.dsum(col("l_extendedprice")).as("revenue"))

@@ -94,9 +94,10 @@ class TxLogCatalog extends TableCatalog
   }
 
   /** CREATE TABLE: version 0 carries only the schema line — an empty
-    * but fully-typed table ([[TxLog.tableSchema]] serves reads until
-    * data lands). `PARTITIONED BY (c1, c2)` (identity transforms only)
-    * persists as the reserved [[TxLog.PartitionColsProp]] property
+    * but fully-typed table (the recorded schema, [[TxLog.Snapshot]]'s
+    * `schema`, serves reads until data lands). `PARTITIONED BY (c1, c2)`
+    * (identity transforms only) persists as the reserved
+    * [[TxLog.PartitionColsProp]] property
     * (VERDICT r12 #1): from then on EVERY writer — SQL INSERT, the
     * Scala API, `writeStream.toTable` — stages partition-pure files
     * with `p:` markers, and every catalog scan prunes on partition
@@ -136,15 +137,15 @@ class TxLogCatalog extends TableCatalog
     * bridging to the in-log schema line ([[TxLog.evolveSchema]]);
     * reads null-backfill the new column immediately. Other ALTER verbs
     * stay on the log protocol (constraints) or are data operations in
-    * disguise (drop/retype under live files → `replace`). */
+    * disguise (drop/retype under live files → `replace`). The statement
+    * resolves one snapshot, validates against it and commits right
+    * above it. */
   override def alterTable(ident: Identifier,
       changes: TableChange*): Table = {
     val dir = tableDir(ident)
     if (!exists(dir))
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(
         Seq(catalogName) ++ ident.namespace() :+ ident.name())
-    val prior = TxLog.tableSchema(dir).getOrElse(
-      TxLog.read(SparkSession.active, dir).schema)
     // RENAME/DROP COLUMN are their own single-change commits — the
     // mapping transition and the schema change must land atomically
     // ([[TxLog.renameColumn]]/[[TxLog.dropColumn]], metadata-only:
@@ -168,6 +169,9 @@ class TxLogCatalog extends TableCatalog
           "RENAME/DROP COLUMN must be the statement's only change")
       case _ => ()
     }
+    val snap = TxLog.resolve(dir)
+    val prior = snap.schema.getOrElse(
+      TxLog.scan(SparkSession.active, snap, snap.files).schema)
     // property changes batch into ONE metadata commit; column adds
     // evolve the schema in another (each verb = one auditable version)
     val setProps = scala.collection.mutable.LinkedHashMap.empty[String, String]
@@ -201,7 +205,7 @@ class TxLogCatalog extends TableCatalog
     }
     // ONE metadata commit for the whole statement — a failure between
     // two commits would leave a half-applied ALTER (review r12 #5)
-    TxLog.alterMetadata(dir, setProps.toMap, unsetProps.toSeq,
+    TxLog.alterMetadataAt(snap, setProps.toMap, unsetProps.toSeq,
       if (next != prior) Some(next) else None): Unit
     new TxLogTable(dir, ident.toString)
   }
@@ -323,6 +327,14 @@ class TxLogTable(val dir: String, ident: String,
 
   override def name(): String = ident
 
+  /** The log replayed once for this loaded table, on first use: the
+    * schema, properties, partitioning, partition listing and streaming
+    * guards all read it. Scan statistics and execution do not — they
+    * resolve when Spark asks for them and when [[TxLogRelation]]
+    * scans, so a DataFrame reused after later commits is costed and
+    * read at the newest version. */
+  private lazy val snap = TxLog.resolve(dir, asOf)
+
   /** `TRUNCATE TABLE lake.t` (Spark's V2 TruncateTableExec): one
     * atomic pure-remove commit — zero data IO, pre-truncate state
     * stays time-travelable, definition survives. */
@@ -338,20 +350,19 @@ class TxLogTable(val dir: String, ident: String,
     // the recorded in-log schema serves planning without building the
     // full read plan (a mergeSchema footer walk over every live file
     // per loadTable — review r11 #8); pre-schema-line logs fall back
-    TxLog.tableSchema(dir, asOf).getOrElse {
-      TxLog.read(SparkSession.active, dir, asOf).schema
-    }
+    snap.schema.getOrElse(
+      TxLog.scan(SparkSession.active, snap, snap.files).schema)
   }
 
   /** Persisted TBLPROPERTIES (`SHOW TBLPROPERTIES lake.t` reads these)
     * plus the provider marker. */
   override def properties(): java.util.Map[String, String] =
-    (TxLog.tableProperties(dir, asOf) + ("provider" -> "txlog")).asJava
+    (snap.properties + ("provider" -> "txlog")).asJava
 
   /** Declared partition columns as identity transforms (`DESCRIBE`
     * shows them; Spark validates INSERT column counts against them). */
   override def partitioning(): Array[Transform] =
-    TxLog.partitionColumns(dir).map(c =>
+    snap.layout.partCols.map(c =>
       org.apache.spark.sql.connector.expressions.Expressions.identity(c))
       .toArray
 
@@ -363,7 +374,7 @@ class TxLogTable(val dir: String, ident: String,
   // (metadata-only) partition-aligned DELETE, never through ALTER.
 
   override def partitionSchema(): StructType =
-    StructType(TxLog.partitionColumns(dir).map(c => schema(c)))
+    StructType(snap.layout.partCols.map(c => schema(c)))
 
   override def createPartition(id: org.apache.spark.sql.catalyst.InternalRow,
       props: java.util.Map[String, String]): Unit =
@@ -391,7 +402,7 @@ class TxLogTable(val dir: String, ident: String,
       id: org.apache.spark.sql.catalyst.InternalRow)
       : Array[org.apache.spark.sql.catalyst.InternalRow] = {
     import org.apache.spark.sql.catalyst.InternalRow
-    val partCols = TxLog.partitionColumns(dir)
+    val partCols = snap.layout.partCols
     require(names.forall(partCols.contains),
       s"unknown partition columns: ${names.filterNot(partCols.contains)
         .mkString(", ")}")
@@ -408,8 +419,7 @@ class TxLogTable(val dir: String, ident: String,
     // distinct FULLY-marked tuples; files written before the layout
     // was declared carry no markers and belong to no listable
     // partition (OPTIMIZE re-layouts them)
-    val tuples = TxLog.partitionValues(dir, asOf).values
-      .map(m => partCols.map(m.get))
+    val tuples = snap.metas.map { case (_, m) => partCols.map(m.pv.get) }
       .filter(_.forall(_.isDefined)).toSet
     val rows = tuples.toSeq.map { t =>
       InternalRow.fromSeq(t.zip(ps.fields).map {
@@ -450,7 +460,7 @@ class TxLogTable(val dir: String, ident: String,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION).asJava
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new TxLogV1ScanBuilder(dir, schema, asOf, options)
+      : ScanBuilder = new TxLogV1ScanBuilder(snap, schema, asOf, options)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
     require(asOf.isEmpty,
@@ -510,7 +520,7 @@ class TxLogTable(val dir: String, ident: String,
           // executor tasks write the frame's column names VERBATIM —
           // on a mapped table that would store logical names the reads
           // no longer bind; refuse until the writer maps them
-          require(!TxLog.columnMapping(dir).active,
+          require(!snap.mapping.active,
             s"streaming writes to $dir are unavailable after a RENAME " +
               "or DROP COLUMN (column mapping active) — use batch appends")
           new TxLogStreamingWrite(dir, info.schema(), info.queryId())
@@ -663,7 +673,7 @@ class TxLogStreamingWrite(dir: String, writeSchema: StructType,
     // records them as `p:` markers, so streamed files prune exactly
     // like batch-written ones (VERDICT r12 #1: every writer inherits
     // the table's layout)
-    val partCols = TxLog.partitionColumns(dir)
+    val partCols = TxLog.resolve(dir).layout.partCols
     partCols.foreach(c => require(writeSchema.fieldNames.contains(c),
       s"streaming write is missing declared partition column '$c'"))
     new TxLogStreamWriterFactory(dir,
@@ -793,13 +803,16 @@ class TxLogDataWriter(dir: String, stem: String,
   * log-resident stats. The scan is a [[TxLogRelation]] over the
   * merge-on-read plan (a catalog read of a DV-bearing table must stay on
   * it anyway), pruning files on the pushed filters; Spark still
-  * re-evaluates every row. */
-class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
+  * re-evaluates every row. The streaming guard reads the loaded
+  * table's snapshot `snap`; the statistics and the relation resolve
+  * their own. */
+class TxLogV1ScanBuilder(snap: TxLog.Snapshot, fullSchema: StructType,
     asOf: Option[Int] = None,
     options: CaseInsensitiveStringMap = CaseInsensitiveStringMap.empty())
     extends ScanBuilder with SupportsPushDownRequiredColumns
     with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = tableSchema
+  private val dir = snap.dir
+  private var required: StructType = fullSchema
   private var pushed: Array[org.apache.spark.sql.sources.Filter] =
     Array.empty
 
@@ -808,7 +821,7 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
     // zero-column parquet read degenerates to full-width rows
     required =
       if (requiredSchema.fields.isEmpty)
-        StructType(tableSchema.fields.take(1))
+        StructType(fullSchema.fields.take(1))
       else requiredSchema
   }
 
@@ -853,7 +866,7 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
           ".format(\"txlog\").option(\"readChangeFeed\", \"true\").load(dir)")
       // same block as the DSv1 source: a RENAME/DROP COLUMN shifts
       // column identity mid-stream (Delta blocks this too)
-      require(!TxLog.columnMapping(dir).active,
+      require(!snap.mapping.active,
         s"streaming reads of $dir are unavailable after a RENAME or " +
           "DROP COLUMN (column mapping active) — read snapshots in batch")
       new TxLogMicroBatchStream(dir, required,
@@ -862,9 +875,11 @@ class TxLogV1ScanBuilder(dir: String, tableSchema: StructType,
         Option(options.get("maxVersionsPerTrigger")).map(_.trim.toInt))
     }
 
-    /** Log-resident size: the snapshot's files' on-disk lengths.
-      * Catalyst costs this relation like any file source — small
-      * txlog dims broadcast in catalog-routed joins. */
+    /** Log-resident size: the files live when Spark asks — not the
+      * loaded snapshot's, which a reused DataFrame keeps across later
+      * commits — at their on-disk lengths. Spark reads it only where it
+      * costs the relation before scan pushdown: the pushed-down plan
+      * wraps this V1 scan in a `V1ScanWrapper`, which reports none. */
     override def estimateStatistics(): Statistics = new Statistics {
       override val sizeInBytes: OptionalLong = OptionalLong.of(
         TxLog.snapshot(dir, asOf).map(f => new File(dir, f).length()).sum)

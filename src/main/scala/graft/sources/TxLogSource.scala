@@ -444,7 +444,7 @@ class TxLogStreamSource(sqlContext: SQLContext, protected val dir: String,
     // a RENAME/DROP COLUMN landing mid-stream (after createSource's
     // guard passed) would silently null-backfill renamed columns in
     // later batches — fail the stream instead, like Delta
-    require(!TxLog.columnMapping(dir, Some(to)).active,
+    require(!TxLog.resolve(dir, Some(to)).mapping.active,
       s"stream of $dir hit a RENAME/DROP COLUMN at or before version " +
         s"$to — restart consumers against the new schema in batch mode")
     val spark = sqlContext.sparkSession

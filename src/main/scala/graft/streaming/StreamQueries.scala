@@ -777,7 +777,7 @@ object StreamQueries {
           TxLog.snapshot(table, Some(vDel)).toSet,
           "GDPR delete rewrote data files — DV contract broken")
         TxLog.optimize(s, table)
-        require(!TxLog.hasDeletionVectors(table),
+        require(TxLog.resolve(table).dv.isEmpty,
           "optimize left deletion vectors behind")
         require(TxLog.snapshot(table).size == 1,
           "optimize did not compact to one file")

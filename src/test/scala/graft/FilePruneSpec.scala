@@ -103,8 +103,8 @@ class FilePruneSpec extends AnyFunSuite {
       col("ts") >= lit(at("2024-01-02 00:00:00")) && col("x") > 2.0 &&
         col("d") === lit(Date.valueOf("2024-01-02")))
     val t = s"$base/nonintegral_stats"
-    val bounds = TxLog.fileStatsAll(t).values.flatMap(_.keys) ++
-      TxLog.fileStatsStrAll(t).values.flatMap(_.keys)
+    val bounds = TxLog.resolve(t).metas.flatMap { case (_, m) =>
+      m.zm.keys ++ m.sm.keys }
     assert(TxLog.snapshot(t).size == 2 && bounds.isEmpty,
       s"bounds recorded for $bounds")
   }

@@ -729,7 +729,7 @@ object GraftProperties extends Properties("graft") {
         case AddCol(i) =>
           val c = pool(i)
           if (!cols.contains(c)) {
-            val sch = TxLog.tableSchema(t).get
+            val sch = TxLog.resolve(t).schema.get
               .add(c, org.apache.spark.sql.types.LongType)
             TxLog.evolveSchema(t, sch): Unit
             cols = cols :+ c

@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * mains, builds every session in one factory, keeps every memo and
   * every exit-time cleanup in `core/Memo.scala`, prunes txlog files
   * from log metadata in one walk, `core/FilePrune.scala`, stages
-  * txlog batches through one temp dir in `core/TxLog.scala` and binds
-  * the txlog row identity in one scan there. A one-off
+  * txlog batches through one temp dir in `core/TxLog.scala`, binds
+  * the txlog row identity in one scan there and replays the log only
+  * through its snapshot and forward walk. A one-off
   * probe main, a hand-built session whose config drifts from the one
   * every result was checked under, or a private memo with its own
   * staleness rule is a red test instead of a review finding. */
@@ -68,6 +69,22 @@ class SourceGuardSpec extends AnyFunSuite {
       f -> "\"_metadata\\.row_index\"".r.findAllIn(text).size
     }.filter(_._2 > 0).toMap
     assert(uses == Map("graft/core/TxLog.scala" -> 1), uses)
+  }
+
+  test("txlog metadata has one entry: the log fold runs only behind " +
+      "TxLog.resolve and the forward walk; no per-dir state helper") {
+    assert(filesMatching("""\bdef\s+state\s*\(|\bdef\s+layoutOf\s*\(\s*dir\b""".r)
+      .isEmpty)
+    assert(filesMatching("""\bfold\(dir\b""".r) == Seq("graft/core/TxLog.scala"))
+    // each `fold(dir` sits in the TxLog member it belongs to: the
+    // definition itself, resolve, and walk (a def nested inside a
+    // member is part of that member)
+    val text = sources.toMap.apply("graft/core/TxLog.scala")
+    val defs = """(?m)^  (?:private(?:\[\w+\])?\s+)?def\s+(\w+)""".r
+      .findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+    val owners = """\bfold\(dir\b""".r.findAllMatchIn(text)
+      .map(m => defs.filter(_._1 < m.start).last._2).toSeq
+    assert(owners.distinct.sorted == Seq("fold", "resolve", "walk"), owners)
   }
 
   test("memo maps and retire queues appear only in core/Memo.scala") {

@@ -174,7 +174,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(opt.getLong(0) == nBefore && opt.getLong(1) < nBefore,
       s"compaction must shrink the file count, got $opt")
     // zone maps landed for both curve columns
-    assert(graft.core.TxLog.fileStatsAll(d).values.exists(_.contains("x")))
+    assert(graft.core.TxLog.resolve(d).metas.exists(_._2.zm.contains("x")))
     val hist = spark.sql("DESCRIBE HISTORY lake.maint")
     assert(hist.count() == 7L) // 6 appends (v0..v5) + optimize (v6)
     assert(hist.select("version").head().getLong(0) == 6L, "newest first")
@@ -367,18 +367,17 @@ class TxLogCatalogSpec extends AnyFunSuite {
       "literals included) before zone maps") {
     spark.sql("CREATE TABLE lake.pt (id BIGINT, grp BIGINT, v DOUBLE) " +
       "USING txlog PARTITIONED BY (grp)")
-    assert(TxLog.partitionColumns(dirOf("pt")) == Seq("grp"))
+    assert(TxLog.resolve(dirOf("pt")).layout.partCols == Seq("grp"))
     // SQL INSERT lands partition-pure files with p: markers
     spark.sql(
       "INSERT INTO lake.pt VALUES (1, 0, 1.0), (2, 1, 2.0), (3, 0, 3.0)")
-    val pv1 = TxLog.partitionValues(dirOf("pt"))
-    assert(pv1.nonEmpty && pv1.values.forall(_.get("grp").nonEmpty),
+    val pv1 = TxLog.resolve(dirOf("pt")).metas.map(_._2.pv)
+    assert(pv1.nonEmpty && pv1.forall(_.contains("grp")),
       s"every SQL-inserted file must carry its grp marker, got $pv1")
     // the Scala append inherits the declared layout too
     TxLog.append(Seq((4L, 2L, 4.0), (5L, 0L, 5.0)).toDF("id", "grp", "v"),
       dirOf("pt"))
-    assert(TxLog.partitionValues(dirOf("pt")).values
-      .forall(_.get("grp").nonEmpty))
+    assert(TxLog.resolve(dirOf("pt")).metas.forall(_._2.pv.contains("grp")))
     // partition-predicate SELECT by name: files of other partitions
     // never scanned — the counter pins real pruning, an INT literal
     assert(spark.sql("SELECT CAST(sum(v) AS BIGINT) FROM lake.pt " +
@@ -388,8 +387,8 @@ class TxLogCatalogSpec extends AnyFunSuite {
       "partition pruning must skip files of other partitions")
     // INSERT OVERWRITE keeps the layout (replace stages under the declared layout)
     spark.sql("INSERT OVERWRITE lake.pt VALUES (9, 7, 90.0)")
-    val pv2 = TxLog.partitionValues(dirOf("pt"))
-    assert(pv2.values.forall(_.get("grp").contains("7")))
+    assert(TxLog.resolve(dirOf("pt")).metas
+      .forall(_._2.pv.get("grp").contains("7")))
     // non-identity transforms refuse
     intercept[Exception] {
       spark.sql("CREATE TABLE lake.ptb (id BIGINT) USING txlog " +
@@ -444,7 +443,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
       .map(_.getLong(0)).toSeq == Seq(2L, 3L, 4L, 5L))
     // committed as deletion vectors, one O(matches) version
     assert(TxLog.currentVersion(dirOf("cdel")) == vBefore + 1)
-    assert(TxLog.hasDeletionVectors(dirOf("cdel")))
+    assert(TxLog.resolve(dirOf("cdel")).dv.nonEmpty)
     // NOT EXISTS (anti-join shape) through the same executor: rows
     // whose k has no ref row die — k=20 (id 2) and k=40 (id 4)
     spark.sql("""DELETE FROM lake.cdel t WHERE NOT EXISTS (
@@ -514,7 +513,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(rows.map(r => (r.getLong(0), r.getDouble(1),
       if (r.isNullAt(2)) null else r.getString(2))).toSeq ==
       Seq((1L, 10.0, null), (2L, 21.0, "u2"), (3L, 30.0, "u3")))
-    assert(TxLog.tableSchema(dirOf("mev")).get.fieldNames.toSeq
+    assert(TxLog.resolve(dirOf("mev")).schema.get.fieldNames.toSeq
       == Seq("id", "v", "tag"))
     spark.sql("DROP TABLE lake.mev")
   }
@@ -594,9 +593,9 @@ class TxLogCatalogSpec extends AnyFunSuite {
     // properties (self-describing even when empty)
     spark.sql("ALTER TABLE lake.rst SET TBLPROPERTIES ('tier' = 'gold')")
     spark.sql("CREATE TABLE lake.rstc2 SHALLOW CLONE lake.rst")
-    assert(TxLog.tableProperties(dirOf("rstc2")).get("tier")
+    assert(TxLog.resolve(dirOf("rstc2")).properties.get("tier")
       .contains("gold"), "clone must carry TBLPROPERTIES")
-    assert(TxLog.tableSchema(dirOf("rstc2")).isDefined,
+    assert(TxLog.resolve(dirOf("rstc2")).schema.isDefined,
       "clone must carry the recorded schema")
     spark.sql("DROP TABLE lake.rstc2")
     // maintenance verbs on a BARE path — same alphabet as the catalog
@@ -658,9 +657,9 @@ class TxLogCatalogSpec extends AnyFunSuite {
       == Seq("k", "w"))
     assert(spark.sql("SELECT CAST(sum(w) AS BIGINT) FROM lake.cor")
       .head().getLong(0) == 60L)
-    assert(TxLog.tableProperties(dir) == Map("new" -> "q"),
+    assert(TxLog.resolve(dir).properties == Map("new" -> "q"),
       "REPLACE installs the new properties and drops the old")
-    assert(TxLog.constraints(dir).isEmpty,
+    assert(TxLog.resolve(dir).layout.constraints.toMap.isEmpty,
       "old CHECK constraints die with the old definition")
     // history preserved: the pre-replace content still time-travels
     assert(TxLog.read(spark, dir, Some(vBefore)).count() == 3L)
@@ -706,7 +705,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
     val ck = TxLog.checkpoint(dir)
     (0 until ck).foreach(v => java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(dir, "_log", f"$v%08d.txt")))
-    assert(TxLog.tableProperties(dir).get("retention").contains("30d"),
+    assert(TxLog.resolve(dir).properties.get("retention").contains("30d"),
       "properties must survive raw-log truncation via the checkpoint")
     spark.sql("DROP TABLE lake.props")
   }
@@ -734,18 +733,18 @@ class TxLogCatalogSpec extends AnyFunSuite {
     TxLog.append(spark.range(60L).select(col("id"),
       concat(lit("g"), (col("id") % 3).cast("string")).as("grp"),
       (col("id") * 1.0).as("v")), t) // v1
-    val before = TxLog.partitionValues(t)
+    val before = TxLog.resolve(t).metas.toMap
     val keepers = before.collect {
-      case (f, m) if !m.get("grp").contains("g1") => f }.toSet
+      case (f, m) if !m.pv.get("grp").contains("g1") => f }.toSet
     spark.sql("""INSERT OVERWRITE lake.ow PARTITION (grp = 'g1')
                  SELECT id, v FROM (VALUES (900, 9.0), (901, 9.5))
                  AS t(id, v)""")
     assert(TxLog.currentVersion(t) == 2,
       "the scoped overwrite must be ONE atomic version")
-    val after = TxLog.partitionValues(t)
+    val after = TxLog.resolve(t).metas.toMap
     assert(keepers.subsetOf(after.keySet),
       "untouched partitions' files must survive BY IDENTITY")
-    assert(after.values.forall(_.contains("grp")),
+    assert(after.values.forall(_.pv.contains("grp")),
       "the replacement files must carry markers")
     val g1 = spark.sql("SELECT id FROM lake.ow WHERE grp = 'g1'")
       .collect().map(_.getLong(0)).toSet
@@ -821,8 +820,8 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(TxLog.currentVersion(t) == preVersion + 1)
     assert(TxLog.snapshot(t).isEmpty)
     // the definition survives truncation
-    assert(TxLog.partitionColumns(t) == Seq("grp"))
-    assert(TxLog.statsColumns(t) == Seq("id"))
+    assert(TxLog.resolve(t).layout.partCols == Seq("grp"))
+    assert(TxLog.resolve(t).layout.statsCols == Seq("id"))
     // the pre-truncate state stays time-travelable
     assert(TxLog.read(spark, t, Some(preVersion)).count() == 40L)
     // and the table is immediately writable under its declared layout
@@ -830,9 +829,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
       lit("x").as("grp")), t)
     assert(spark.sql("SELECT count(*) FROM lake.trc").head().getLong(0)
       == 5L)
-    val pv = TxLog.partitionValues(t)
-    assert(TxLog.snapshot(t).forall(f =>
-      pv.getOrElse(f, Map.empty).contains("grp")))
+    assert(TxLog.resolve(t).metas.forall(_._2.pv.contains("grp")))
     spark.sql("DROP TABLE lake.trc")
   }
 
@@ -852,16 +849,13 @@ class TxLogCatalogSpec extends AnyFunSuite {
     assert(TxLog.read(spark, dst).count() == expect,
       "deep clone must serve the DV-filtered content")
     // markers carried: the clone prunes like the source
-    val pv = TxLog.partitionValues(dst)
-    assert(TxLog.snapshot(dst).forall(f =>
-      pv.getOrElse(f, Map.empty).contains("grp")),
+    assert(TxLog.resolve(dst).metas.forall(_._2.pv.contains("grp")),
       "deep clone lost partition markers")
     // a SHALLOW clone keeps marker fields too (they ride the
     // translated add lines verbatim)
     spark.sql("CREATE TABLE lake.sclone SHALLOW CLONE lake.dsrc")
-    val spv = TxLog.partitionValues(dirOf("sclone"))
-    assert(TxLog.snapshot(dirOf("sclone")).forall(f =>
-      spv.getOrElse(f, Map.empty).contains("grp")),
+    assert(TxLog.resolve(dirOf("sclone")).metas
+      .forall(_._2.pv.contains("grp")),
       "shallow clone lost partition markers")
     // source rewrite + aggressive vacuum: the deep clone's copies are
     // its own — reads survive what would break a shallow clone
@@ -892,14 +886,12 @@ class TxLogCatalogSpec extends AnyFunSuite {
     spark.sql(s"CONVERT TO TXLOG parquet.`$p` STATS (id)")
     assert(TxLog.snapshot(p).toSet == orig,
       "conversion must reference the very files, not copies")
-    assert(TxLog.statsColumns(p) == Seq("id"))
-    assert(TxLog.fileStatsAll(p).values.forall(_.contains("id")))
+    assert(TxLog.resolve(p).layout.statsCols == Seq("id"))
+    assert(TxLog.resolve(p).metas.forall(_._2.zm.contains("id")))
     // the STATS declaration persists: a LATER append marks its files
     TxLog.append(spark.range(100L, 110L)
       .select(col("id"), (col("id") % 5).as("g")), p)
-    val zm = TxLog.fileStatsAll(p)
-    assert(TxLog.snapshot(p).forall(f =>
-      zm.getOrElse(f, Map.empty).contains("id")))
+    assert(TxLog.resolve(p).metas.forall(_._2.zm.contains("id")))
     spark.sql(s"DELETE FROM txlog.`$p` WHERE id >= 100")
     assert(TxLog.read(spark, p).count() == 50L)
     assert(TxLog.read(spark, p, Some(0)).count() == 50L,
@@ -973,7 +965,7 @@ class TxLogCatalogSpec extends AnyFunSuite {
       v1.count() == 3L)
     // rename BACK to the physical name collapses the mapping entry
     spark.sql("ALTER TABLE lake.ren RENAME COLUMN amount TO val")
-    assert(!TxLog.columnMapping(dirOf("ren")).active,
+    assert(!TxLog.resolve(dirOf("ren")).mapping.active,
       "a→b→a must be identity again")
     spark.sql("DROP TABLE lake.ren")
   }
@@ -1056,5 +1048,20 @@ class TxLogCatalogSpec extends AnyFunSuite {
         TxLog.currentVersion(dirOf("cmg"))).collect()
     }.getMessage.contains("RENAME"))
     spark.sql("DROP TABLE lake.cmg")
+  }
+
+  test("a loaded catalog table reports scan statistics at the newest " +
+      "version, not at its load-time snapshot") {
+    TxLog.create((1L to 10L).map(i => (i, i)).toDF("id", "v"), dirOf("st1"))
+    // one table object, as an analyzed plan keeps it across commits
+    val table = new graft.sources.TxLogTable(dirOf("st1"), "lake.st1")
+    def size = table.newScanBuilder(
+        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+      .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
+      .estimateStatistics().sizeInBytes().getAsLong
+    val before = size
+    TxLog.append((11L to 5000L).map(i => (i, i)).toDF("id", "v"), dirOf("st1"))
+    assert(size > before, s"stale statistics: $before after a growing append")
+    spark.sql("DROP TABLE lake.st1")
   }
 }

@@ -562,9 +562,9 @@ class TxLogSourceSpec extends AnyFunSuite {
       .toTable("graft_plake.pdst")
     q.awaitTermination()
     val dst = s"$base/pdst"
-    val pv = TxLog.partitionValues(dst)
+    val pv = TxLog.resolve(dst).metas.map(_._2.pv)
     assert(pv.size >= 4, s"one partition-pure file per grp value, got $pv")
-    assert(pv.values.forall(m => m.get("grp").exists(Set("0","1","2","3"))),
+    assert(pv.forall(m => m.get("grp").exists(Set("0","1","2","3"))),
       s"markers must carry the cast-to-string grp values, got $pv")
     // each file holds exactly its partition's rows
     assert(spark.sql("SELECT count(*) FROM graft_plake.pdst " +

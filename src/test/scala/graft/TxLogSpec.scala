@@ -151,7 +151,7 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.optimize(spark, t)
     assert(TxLog.deletionVectors(spark, t).isEmpty,
       "optimize left vectors behind")
-    assert(!TxLog.hasDeletionVectors(t))
+    assert(!TxLog.resolve(t).dv.nonEmpty)
     assert(TxLog.read(spark, t).count() == 72)
     // copy-on-write delete composed on top must not resurrect DV'd rows
     val t2 = freshTable()
@@ -192,6 +192,29 @@ class TxLogSpec extends AnyFunSuite {
     assert(TxLog.read(spark, t, Some(1)).count() == 80) // current still reads
     victims.foreach(f =>
       assert(!new java.io.File(t, f).exists(), s"victim $f still on disk"))
+  }
+
+  test("vacuum over retired versions: a version truncated below a " +
+      "checkpoint protects nothing; a checkpoint between retired " +
+      "stretches still protects its files") {
+    val t = freshTable() // v0
+    def replaceWith(lo: Long) =
+      TxLog.replace((lo until lo + 10L).map(i => (i, i % 5)).toDF("id", "grp"), t)
+    replaceWith(100L); TxLog.checkpoint(t, Some(1)) // v1, checkpointed
+    replaceWith(200L)                               // v2
+    replaceWith(300L); TxLog.checkpoint(t, Some(3)) // v3, checkpointed
+    replaceWith(400L)                               // v4
+    val files = (0 to 4).map(v => TxLog.snapshot(t, Some(v)).toSet)
+    // retire v0 and v2: their raw entries go, v1 and v3 keep reading
+    // from their checkpoints
+    Seq(0, 2).foreach(v => java.nio.file.Files.delete(
+      java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")))
+    val victims = TxLog.vacuum(t, retainAfter = 0, minAgeMs = 0).toSet
+    assert(victims == files(0) ++ files(2),
+      "exactly the retired versions' files go")
+    Seq(1, 3, 4).foreach(v => assert(
+      TxLog.read(spark, t, Some(v)).count() == 10L, s"v$v must still read"))
+    TxLog.drop(t)
   }
 
   test("vacuum never deletes young unreferenced files — the mtime guard " +
@@ -256,14 +279,16 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.appendWithStats(spark,
       (600L until 700L).toDF("id").withColumn("grp", lit(9L))
         .repartitionByRange(4, col("id")), t, "id") // v2: 4 ranged files
-    val statsBefore = TxLog.fileStats(t, "id")
+    def idStats = TxLog.resolve(t).metas.flatMap { case (f, m) =>
+      m.zm.get("id").map(f -> _) }.toMap
+    val statsBefore = idStats
     assert(statsBefore.size == 4
       && statsBefore.values.map(_._1).min == 600L
       && statsBefore.values.map(_._2).max == 699L)
     TxLog.checkpoint(t) // explicit checkpoint at v2
     (0 to 1).foreach(i => java.nio.file.Files.delete(
       java.nio.file.Paths.get(t, "_log", f"$i%08d.txt")))
-    assert(TxLog.fileStats(t, "id") == statsBefore,
+    assert(idStats == statsBefore,
       "stats add-lines must ride the checkpoint verbatim")
     assert(TxLog.appendIdempotent(
       Seq((501L, 0L)).toDF("id", "grp"), t, "app", 7L) == -1,
@@ -327,8 +352,9 @@ class TxLogSpec extends AnyFunSuite {
       (col("id") / 64).cast("long").as("x"), (col("id") % 64).as("y"))
     TxLog.create(grid.repartitionByRange(8, col("x")), t)
     TxLog.optimize(spark, t, nFiles = 8, clusterBy = Seq("x", "y"))
-    val statsX = TxLog.fileStats(t, "x")
-    val statsY = TxLog.fileStats(t, "y")
+    val metas = TxLog.resolve(t).metas.map(_._2)
+    val statsX = metas.flatMap(_.zm.get("x"))
+    val statsY = metas.flatMap(_.zm.get("y"))
     assert(statsX.size == 8 && statsY.size == 8,
       s"both cluster columns need bounds on all 8 files: " +
         s"${statsX.size}/${statsY.size}")
@@ -364,10 +390,10 @@ class TxLogSpec extends AnyFunSuite {
     // (dynamic partition writers emit a file per task × value)
     TxLog.appendPartitioned(spark,
       rows.filter(col("id") >= 10).coalesce(1), t, Seq("grp")) // v1
-    val pv = TxLog.partitionValues(t)
-    assert(pv.values.count(_.nonEmpty) == 3,
+    val pv = TxLog.resolve(t).metas.map(_._2.pv)
+    assert(pv.count(_.nonEmpty) == 3,
       s"expected 3 partition-valued files, got $pv")
-    assert(pv.values.filter(_.nonEmpty).map(_("grp")).toSet ==
+    assert(pv.filter(_.nonEmpty).map(_("grp")).toSet ==
       Set("g0", "g1", "g2"))
     val (kept, total) = TxLog.prunePartitions(t, Map("grp" -> "g1"))
     // g1's file + the statless v0 file (conservative), never g0/g2
@@ -396,7 +422,7 @@ class TxLogSpec extends AnyFunSuite {
       spark.range(2L).select(col("id"),
         concat(lit("a=b%c "), col("id").cast("string")).as("k")),
       t, Seq("k"))
-    val vals = TxLog.partitionValues(t).values.filter(_.nonEmpty)
+    val vals = TxLog.resolve(t).metas.map(_._2.pv).filter(_.nonEmpty)
       .map(_("k")).toSet
     assert(vals == Set("a=b%c 0", "a=b%c 1"), s"got $vals")
     assert(TxLog.readWhere(spark, t, Map("k" -> "a=b%c 1")).count() == 1L)
@@ -419,7 +445,7 @@ class TxLogSpec extends AnyFunSuite {
         s"${log.take(200)}")
     assert(log.length < 4096,
       s"log entry must be file-grain metadata, got ${log.length} bytes")
-    assert(TxLog.hasDeletionVectors(t))
+    assert(TxLog.resolve(t).dv.nonEmpty)
     assert(TxLog.read(spark, t).count() == 120000L)
     // a second DV generation unions with the first at read time
     TxLog.deleteWhereDV(spark, t, col("grp") === 3)
@@ -519,12 +545,12 @@ class TxLogSpec extends AnyFunSuite {
     val t = java.nio.file.Files.createTempDirectory("txschema_").toString
     TxLog.drop(t)
     TxLog.create(Seq((1L, "a")).toDF("id", "name"), t)
-    assert(TxLog.tableSchema(t).get.fieldNames.toSeq == Seq("id", "name"))
+    assert(TxLog.resolve(t).schema.get.fieldNames.toSeq == Seq("id", "name"))
     TxLog.append(Seq((2L, "b", 3.5)).toDF("id", "name", "score"), t)
-    assert(TxLog.tableSchema(t).get.fieldNames.toSeq ==
+    assert(TxLog.resolve(t).schema.get.fieldNames.toSeq ==
       Seq("id", "name", "score"), "append unions new columns")
     // time travel sees the v0 schema
-    assert(TxLog.tableSchema(t, Some(0)).get.fieldNames.toSeq ==
+    assert(TxLog.resolve(t, Some(0)).schema.get.fieldNames.toSeq ==
       Seq("id", "name"))
     // empty the table, vacuum EVERYTHING — the removed-file walk is dead
     TxLog.deleteWhere(spark, t, lit(true))
@@ -535,12 +561,12 @@ class TxLogSpec extends AnyFunSuite {
       "the recorded schema serves where footers cannot")
     // replace snaps the schema EXACTLY — replaced-away columns go
     TxLog.replace(Seq(9L).toDF("id"), t)
-    assert(TxLog.tableSchema(t).get.fieldNames.toSeq == Seq("id"))
+    assert(TxLog.resolve(t).schema.get.fieldNames.toSeq == Seq("id"))
     // and the schema line survives checkpoint truncation
     val ck = TxLog.checkpoint(t)
     (0 until ck).foreach(v => java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")))
-    assert(TxLog.tableSchema(t).get.fieldNames.toSeq == Seq("id"))
+    assert(TxLog.resolve(t).schema.get.fieldNames.toSeq == Seq("id"))
     TxLog.drop(t)
   }
 
@@ -556,27 +582,27 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.appendWithStats(spark,
       hostile.zipWithIndex.map { case (s, i) => (i.toLong, s) }
         .toDF("id", "name").coalesce(1), t, Seq("name", "id"))
-    val st = TxLog.fileStatsStrAll(t)
+    val st = TxLog.resolve(t).metas
     assert(st.size == 1)
-    val (lo, hi) = st.head._2("name")
+    val (lo, hi) = st.head._2.sm("name")
     assert(lo == hostile.min && hi == hostile.max,
       s"binary bounds must round-trip verbatim, got [$lo, $hi]")
     // the long stats coexist on the same add line
-    assert(TxLog.fileStats(t, "id").head._2 == (0L, 4L))
+    assert(TxLog.resolve(t).metas.head._2.zm("id") == ((0L, 4L)))
     // EMPTY-STRING bounds must survive too: a trailing empty segment is
     // dropped by plain split, silently losing the marker (ADVICE r10)
     val t2 = java.nio.file.Files.createTempDirectory("txstr2_").toString
     TxLog.drop(t2)
     TxLog.appendWithStats(spark,
       Seq((1L, "")).toDF("id", "name").coalesce(1), t2, Seq("name"))
-    assert(TxLog.fileStatsStrAll(t2).head._2("name") == (("", "")))
+    assert(TxLog.resolve(t2).metas.head._2.sm("name") == (("", "")))
     TxLog.drop(t2)
     // survives checkpoint serialize/apply (add lines carried verbatim)
     TxLog.append(Seq((9L, "mm")).toDF("id", "name"), t)
     TxLog.checkpoint(t)
     java.nio.file.Files.delete(
       java.nio.file.Paths.get(t, "_log", f"${0}%08d.txt"))
-    assert(TxLog.fileStatsStrAll(t).values.exists(_.get("name")
+    assert(TxLog.resolve(t).metas.exists(_._2.sm.get("name")
       .contains((hostile.min, hostile.max))))
     TxLog.drop(t)
   }
@@ -591,7 +617,7 @@ class TxLogSpec extends AnyFunSuite {
       TxLog.addConstraint(spark, t, "impossible", "id > 100")
     }
     TxLog.addConstraint(spark, t, "pos_id", "id > 0")
-    assert(TxLog.constraints(t) == Map("pos_id" -> "id > 0"))
+    assert(TxLog.resolve(t).layout.constraints.toMap == Map("pos_id" -> "id > 0"))
     val vBefore = TxLog.currentVersion(t)
     // every writer path rejects a violating batch atomically
     intercept[IllegalArgumentException] {
@@ -619,13 +645,13 @@ class TxLogSpec extends AnyFunSuite {
     val ck = TxLog.checkpoint(t)
     (0 until ck).foreach(v => java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(t, "_log", f"$v%08d.txt")))
-    assert(TxLog.constraints(t) == Map("pos_id" -> "id > 0"))
+    assert(TxLog.resolve(t).layout.constraints.toMap == Map("pos_id" -> "id > 0"))
     intercept[IllegalArgumentException] {
       TxLog.append(Seq((-4L, 0L)).toDF("id", "grp"), t)
     }
     // drop re-allows; a metadata-only commit
     TxLog.dropConstraint(t, "pos_id")
-    assert(TxLog.constraints(t).isEmpty)
+    assert(TxLog.resolve(t).layout.constraints.toMap.isEmpty)
     TxLog.append(Seq((-5L, 0L)).toDF("id", "grp"), t)
     assert(TxLog.read(spark, t).count() == 53L)
     TxLog.drop(t)
@@ -987,6 +1013,28 @@ class TxLogSpec extends AnyFunSuite {
     TxLog.drop(root)
   }
 
+  test("appendAll keeps a schema widening that lands while its batch " +
+      "stages: the blind claim builds on the newest schema") {
+    val root = java.nio.file.Files.createTempDirectory("txall_race_").toString
+    val t = s"$root/t"
+    TxLog.create(Seq((1L, 1L)).toDF("id", "grp"), t)
+    // between the version read and the claim, another writer's append
+    // adds a column; the batch adds one of its own, so it records a
+    // schema line
+    TxLog.appendRaceHook = () => {
+      TxLog.appendRaceHook = () => ()
+      TxLog.append(Seq((2L, 2L, "x")).toDF("id", "grp", "tag"), t): Unit
+    }
+    try TxLog.appendAll(s"$root/_txn",
+      Seq(Seq((3L, 3L, 0.5)).toDF("id", "grp", "score") -> t))
+    finally TxLog.appendRaceHook = () => ()
+    assert(TxLog.resolve(t).schema.get.fieldNames.toSeq ==
+      Seq("id", "grp", "tag", "score"),
+      "the racing append's column must survive")
+    assert(TxLog.read(spark, t).count() == 3L)
+    TxLog.drop(root)
+  }
+
   test("appendAll / replaceAll: the fact+dims load and the FK-safe " +
       "reset both land as one cross-table instant") {
     val root = java.nio.file.Files.createTempDirectory("txall_").toString
@@ -997,7 +1045,7 @@ class TxLogSpec extends AnyFunSuite {
       (0L to 4L).map(i => (i, s"d$i")).toDF("dk", "name") -> d))
     assert(TxLog.read(spark, f).count() == 50L)
     assert(TxLog.read(spark, d).count() == 5L)
-    assert(TxLog.tableSchema(f).get.fieldNames.toSeq == Seq("id", "dk"))
+    assert(TxLog.resolve(f).schema.get.fieldNames.toSeq == Seq("id", "dk"))
     // replaceAll swaps both live sets in one instant; the old states
     // stay time-travelable per table
     TxLog.replaceAll(s"$root/_txn", Seq(
@@ -1087,15 +1135,15 @@ class TxLogSpec extends AnyFunSuite {
       "and clones (ADVICE r12: trailing-split loss)") {
     val t = freshTable()
     TxLog.alterProperties(t, Map("empty.prop" -> "", "k" -> "v"))
-    assert(TxLog.tableProperties(t) ==
+    assert(TxLog.resolve(t).properties ==
       Map("empty.prop" -> "", "k" -> "v"))
     TxLog.checkpoint(t)
-    assert(TxLog.tableProperties(t)("empty.prop") == "",
+    assert(TxLog.resolve(t).properties("empty.prop") == "",
       "checkpoint round-trip must keep the empty value")
     val c = java.nio.file.Files.createTempDirectory("txprop_clone_").toString
     TxLog.drop(c)
     TxLog.shallowClone(t, c)
-    assert(TxLog.tableProperties(c)("empty.prop") == "")
+    assert(TxLog.resolve(c).properties("empty.prop") == "")
     Seq(t, c).foreach(TxLog.drop)
   }
 
@@ -1104,7 +1152,7 @@ class TxLogSpec extends AnyFunSuite {
       "declares non-null)") {
     import org.apache.spark.sql.types._
     val t = freshTable()
-    val prior = TxLog.tableSchema(t).get
+    val prior = TxLog.resolve(t).schema.get
     val bad = StructType(prior.fields :+
       StructField("strict", LongType, nullable = false))
     val e = intercept[IllegalArgumentException] {
@@ -1114,7 +1162,7 @@ class TxLogSpec extends AnyFunSuite {
     // the nullable form still works
     TxLog.evolveSchema(t, StructType(prior.fields :+
       StructField("loose", LongType, nullable = true)))
-    assert(TxLog.tableSchema(t).get.fieldNames.contains("loose"))
+    assert(TxLog.resolve(t).schema.get.fieldNames.contains("loose"))
     TxLog.drop(t)
   }
 
@@ -1176,9 +1224,8 @@ class TxLogSpec extends AnyFunSuite {
       "files marked: DELETE/UPDATE survivors, upsert, OPTIMIZE") {
     val t = freshPartitioned()
     def allMarked(): Unit = {
-      val pv = TxLog.partitionValues(t)
-      val bare = TxLog.snapshot(t).filterNot(f =>
-        pv.getOrElse(f, Map.empty).contains("grp"))
+      val bare = TxLog.resolve(t).metas.collect {
+        case (f, m) if !m.pv.contains("grp") => f }
       assert(bare.isEmpty, s"unmarked live files after a rewrite: $bare")
     }
     allMarked()
@@ -1234,13 +1281,13 @@ class TxLogSpec extends AnyFunSuite {
   test("a partition-predicate UPDATE touches only that partition's " +
       "files, and rewriting a partition column re-homes the rows") {
     val t = freshPartitioned()
-    val pvBefore = TxLog.partitionValues(t)
+    val pvBefore = TxLog.resolve(t).metas.toMap
     val v = TxLog.updateWhere(spark, t, col("grp") === "g1",
       Seq("amt" -> lit(-1L)))
     val removed = logLines(t, v).filter(_.startsWith("remove\t"))
       .map(_.split('\t')(1))
     assert(removed.nonEmpty &&
-      removed.forall(f => pvBefore(f).get("grp").contains("g1")),
+      removed.forall(f => pvBefore(f).pv.get("grp").contains("g1")),
       s"UPDATE rewrote files outside its partition: $removed")
     assert(TxLog.read(spark, t)
       .filter(col("grp") === "g1" && col("amt") =!= -1L).count() == 0L)
@@ -1262,20 +1309,16 @@ class TxLogSpec extends AnyFunSuite {
       (col("id") * 10).as("amt")), t)
     val before = TxLog.read(spark, t).count()
     TxLog.optimize(spark, t, nFiles = 3)
-    val pv = TxLog.partitionValues(t)
-    assert(TxLog.snapshot(t).forall(f =>
-      pv.getOrElse(f, Map.empty).contains("grp")),
+    assert(TxLog.resolve(t).metas.forall(_._2.pv.contains("grp")),
       "compaction demoted files to unprunable")
     assert(TxLog.read(spark, t).count() == before)
     // zorder on a partitioned table: one job, add lines carry BOTH
     // marker kinds — partition value + cluster-column zone bounds
     TxLog.optimize(spark, t, nFiles = 6, clusterBy = Seq("id", "amt"))
-    val pv2 = TxLog.partitionValues(t)
-    val zm = TxLog.fileStatsAll(t)
-    val live = TxLog.snapshot(t)
-    assert(live.forall(f => pv2.getOrElse(f, Map.empty).contains("grp")),
+    val live = TxLog.resolve(t).metas.map(_._2)
+    assert(live.forall(_.pv.contains("grp")),
       "zorder dropped partition markers")
-    assert(live.forall(f => zm.getOrElse(f, Map.empty).contains("id")),
+    assert(live.forall(_.zm.contains("id")),
       "zorder dropped cluster bounds")
     assert(TxLog.read(spark, t).count() == before)
     // change feed skips both layout-only versions (nodc)
@@ -1316,9 +1359,8 @@ class TxLogSpec extends AnyFunSuite {
         "id BIGINT, grp STRING, amt BIGINT"),
       Map(TxLog.StatsColsProp -> "id"))
     def allMarked(tag: String): Unit = {
-      val zm = TxLog.fileStatsAll(t)
-      val bare = TxLog.snapshot(t).filterNot(f =>
-        zm.getOrElse(f, Map.empty).contains("id"))
+      val bare = TxLog.resolve(t).metas.collect {
+        case (f, m) if !m.zm.contains("id") => f }
       assert(bare.isEmpty, s"$tag left statless live files: $bare")
     }
     TxLog.append(spark.range(100L).select(col("id"),
@@ -1350,7 +1392,7 @@ class TxLogSpec extends AnyFunSuite {
       Map(TxLog.StatsColsProp -> "ghost"))
     TxLog.append(Seq((1L, 2L)).toDF("id", "v"), t)
     assert(TxLog.read(spark, t).count() == 1L)
-    assert(TxLog.fileStatsAll(t).values.forall(!_.contains("ghost")))
+    assert(TxLog.resolve(t).metas.forall(!_._2.zm.contains("ghost")))
     TxLog.drop(t)
   }
 
@@ -1369,8 +1411,8 @@ class TxLogSpec extends AnyFunSuite {
       staged.map(_ -> Map.empty[String, String]), schema,
       "stats-spec", 1L)
     assert(v >= 0)
-    val zm = TxLog.fileStatsAll(t)
-    assert(staged.forall(f => zm.getOrElse(f, Map.empty).contains("id")),
+    val zm = TxLog.resolve(t).metas.toMap
+    assert(staged.forall(f => zm.get(f).exists(_.zm.contains("id"))),
       s"epoch files statless: $zm")
     TxLog.drop(t)
   }
@@ -1384,11 +1426,9 @@ class TxLogSpec extends AnyFunSuite {
         (col("id") * 10).as("amt")), t, Seq("id"))
     val adds = logLines(t, v).filter(_.startsWith("add\t"))
       .map(_.split('\t')(1))
-    val pv = TxLog.partitionValues(t)
-    val zm = TxLog.fileStatsAll(t)
+    val metas = TxLog.resolve(t).metas.toMap
     assert(adds.nonEmpty && adds.forall(f =>
-      pv.getOrElse(f, Map.empty).contains("grp") &&
-        zm.getOrElse(f, Map.empty).contains("id")),
+      metas.get(f).exists(m => m.pv.contains("grp") && m.zm.contains("id"))),
       "appendWithStats lost markers or bounds on a partitioned table")
     val v2 = TxLog.appendIdempotent(
       spark.range(960L, 990L).select(col("id"),
@@ -1396,9 +1436,9 @@ class TxLogSpec extends AnyFunSuite {
         (col("id") * 10).as("amt")), t, "spec-app", 42L)
     val adds2 = logLines(t, v2).filter(_.startsWith("add\t"))
       .map(_.split('\t')(1))
-    val pv2 = TxLog.partitionValues(t)
+    val metas2 = TxLog.resolve(t).metas.toMap
     assert(adds2.nonEmpty && adds2.forall(f =>
-      pv2.getOrElse(f, Map.empty).contains("grp")),
+      metas2.get(f).exists(_.pv.contains("grp"))),
       "appendIdempotent lost markers on a partitioned table")
     assert(TxLog.appendIdempotent(
       spark.range(5L).select(col("id"), lit("g0").as("grp"),
@@ -1444,10 +1484,10 @@ class TxLogSpec extends AnyFunSuite {
         org.apache.spark.sql.types.StructField("grp",
           org.apache.spark.sql.types.LongType))))
     assert(TxLog.copyInto(spark, d, src)._2 == 3)
-    val sch = TxLog.tableSchema(d).get
+    val sch = TxLog.resolve(d).schema.get
     TxLog.commitDefinition(d, Seq.empty, sch, Map.empty,
       TxLog.currentVersion(d))
-    assert(TxLog.copiedSources(d).isEmpty,
+    assert(TxLog.resolve(d).copied.isEmpty,
       "REPLACE must clear the COPY INTO ledger")
     assert(TxLog.copyInto(spark, d, src)._2 == 3,
       "a replaced table re-ingests: its new content owes nothing " +
@@ -1493,11 +1533,11 @@ class TxLogSpec extends AnyFunSuite {
       "an UNKNOWN required feature refuses the whole table") {
     val t = freshTable()
     TxLog.renameColumn(t, "grp", "bucket")
-    assert(TxLog.tableFeatures(t) == Set("column-mapping"))
+    assert(TxLog.resolve(t).features == Set("column-mapping"))
     assert(TxLog.read(spark, t).columns.contains("bucket"))
     // declaration survives checkpointing (serialize/apply round-trip)
     TxLog.checkpoint(t)
-    assert(TxLog.tableFeatures(t) == Set("column-mapping"))
+    assert(TxLog.resolve(t).features == Set("column-mapping"))
     // a feature from the future: hand-write the next version's entry
     // exactly as a newer engine would (readers ignore unknown LINE
     // types, but must refuse unknown FEATURES — that is the gate)
@@ -1511,6 +1551,19 @@ class TxLogSpec extends AnyFunSuite {
     assert(e.getMessage.contains("quantum-vacuum") &&
       e.getMessage.contains("upgrade"),
       s"refusal must name the missing feature: ${e.getMessage}")
+    // vacuum refuses too, and deletes nothing: an unreferenced file the
+    // unknown feature's lines may reference must survive. Both the fold
+    // below the window (retainAfter = v) and the entries walked past it
+    // (retainAfter = 0) pass the gate.
+    val stray = new java.io.File(t, "stray.parquet")
+    java.nio.file.Files.write(stray.toPath, Array[Byte](1))
+    for (retainAfter <- Seq(0, v)) {
+      val ev = intercept[UnsupportedOperationException] {
+        TxLog.vacuum(t, retainAfter, minAgeMs = 0)
+      }
+      assert(ev.getMessage.contains("quantum-vacuum"), ev.getMessage)
+      assert(stray.exists(), s"vacuum($retainAfter) deleted a file")
+    }
     TxLog.drop(t)
   }
 
@@ -1524,7 +1577,7 @@ class TxLogSpec extends AnyFunSuite {
     // ... the same struct built from a column carries a nullable one
     val nullable = Seq((2L, Option(2L))).toDF("id", "a")
       .select(col("id"), struct(col("a")).as("s"))
-    assert(nullable.schema("s").dataType != TxLog.tableSchema(t).get("s").dataType)
+    assert(nullable.schema("s").dataType != TxLog.resolve(t).schema.get("s").dataType)
     TxLog.append(nullable, t)
     assert(TxLog.read(spark, t).select("s.a").as[Long].collect().sorted
       .toSeq == Seq(1L, 2L))

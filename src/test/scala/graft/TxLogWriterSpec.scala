@@ -169,9 +169,9 @@ class TxLogWriterSpec extends AnyFunSuite {
       // resolved version content: a multi-table commit's lines live
       // in its shared tx file
       val adds = (before + 1 to after).flatMap(v => TxLog.changes(t, v)._1)
-      val (pv, zm) = (TxLog.partitionValues(t), TxLog.fileStatsAll(t))
-      val unmarked = adds.filter(f => !zm(f).contains("id") ||
-        pv(f).contains("grp") != w.marked)
+      val metas = TxLog.resolve(t).metas.toMap
+      val unmarked = adds.filter(f => !metas(f).zm.contains("id") ||
+        metas(f).pv.contains("grp") != w.marked)
       val problems = Seq(
         Option.when(after == before)("committed nothing"),
         Option.when(adds.isEmpty)("committed no add line"),
