@@ -8,8 +8,8 @@ import org.apache.spark.unsafe.types.UTF8String
 /** The one metadata-pruning walk of the txlog layer: can a live file
   * hold a row where a predicate is TRUE, judged from its log-recorded
   * metadata alone? Every front calls it — the path connector's
-  * [[graft.sources.TxLogFileIndex]] (resolved data filters), the V1
-  * [[graft.sources.TxLogRelation]] (pushed `sources.Filter`s converted
+  * [[graft.sources.TxLogFileIndex]] (resolved data filters), the
+  * merge-on-read [[graft.sources.TxLogRelation]] (pushed `sources.Filter`s converted
   * to Columns) and the DML writers ([[TxLog]]'s `classifyByPredicate`,
   * `pruneSnapshot`, `prunePartitions`) — so the fronts cannot drift.
   *

@@ -25,7 +25,4 @@ object Stable {
     * (rollup/cube over pre-aggregated groups) before one final cast. */
   def dsumDec(c: Column, scale: Int = 2): Column =
     sum(c.cast(DecimalType(18, scale)))
-
-  def davg(c: Column, scale: Int = 2): Column =
-    sum(c.cast(DecimalType(18, scale))).cast("double") / count(lit(1))
 }

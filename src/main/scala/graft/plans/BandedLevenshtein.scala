@@ -61,14 +61,16 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // AsOf.joinBackward/joinForward still self-inject on already-built
     // sessions (the driver's case) via experimental.extraStrategies.
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    // txlog catalog reads by name: the relation a path read builds.
+    // Injected before the DML rule, so a MERGE source is converted
+    // before the statement becomes a command
+    e.injectResolutionRule(s => new TxLogReadRule(s))
     // SQL DML (DELETE/UPDATE/MERGE) over txlog catalog tables — must be
     // a RESOLUTION rule so it converts the statements before the
     // built-in row-level rewrite rules reject the table (Delta's shape).
     e.injectResolutionRule(s => new TxLogDmlRule(s))
-    // streaming CDF by name: readStream.option("readChangeFeed").table
-    // rewrites onto the DSv1 CDF source (the catalog scan cannot widen
-    // the relation's output with the meta columns)
-    e.injectResolutionRule(s => new TxLogStreamCdfRule(s))
+    // streams by name (change feed or not) onto the DSv1 txlog source
+    e.injectResolutionRule(s => new TxLogStreamRule(s))
     // txlog.`/path` relations for SELECT and DML — must run in the
     // HINT batch, before ResolveSQLOnFile refuses the non-file provider
     e.injectHintResolutionRule(s => new TxLogPathRule(s))

@@ -40,6 +40,18 @@ object ExtQueries {
   private def shardDir(dir: String): String =
     Scratch.dir("shards", dir)
 
+  /** The lakehouse demos' shared catalog: registers `graft_lake` over
+    * the per-corpus scratch base and returns the base. */
+  private def lakeCatalog(s: org.apache.spark.sql.SparkSession,
+      dir: String): String = {
+    val base = Scratch.dir("lakecat", dir)
+    new java.io.File(base).mkdirs()
+    s.conf.set("spark.sql.catalog.graft_lake",
+      classOf[graft.sources.TxLogCatalog].getName)
+    s.conf.set("spark.sql.catalog.graft_lake.base", base)
+    base
+  }
+
   /** (small-files dir, compacted dir) for q292 — deterministic per
     * corpus dir, overwritten each run; package-visible so
     * CompactionSpec can pin the physical file counts. */
@@ -4089,13 +4101,9 @@ object ExtQueries {
     QuerySpec("q421_txlog_sql_dml",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q421m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
         TxLog.create(orders.filter(col("o_orderkey") % 3 =!= 0)
           .select(col("o_orderkey"), col("o_totalprice"),
@@ -4215,13 +4223,9 @@ object ExtQueries {
     QuerySpec("q424_txlog_maintenance_sql",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q424m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         (0 to 2).foreach(m => TxLog.append(
@@ -4263,9 +4267,9 @@ object ExtQueries {
     // q425 — STREAMING READS BY NAME (`readStream.table("lake.t")`,
     // VERDICT r11 #2): the SQL-addressable and streaming surfaces now
     // compose — the analyzer resolves the catalog table to a streaming
-    // relation whose V1 fallback is the SAME hardened DSv1 source the
-    // path API uses (TxLogStreamingRule), so admission control carries
-    // over verbatim: a 4-version backlog at maxVersionsPerTrigger=2
+    // relation, and graft.plans.TxLogStreamRule rewrites it onto the
+    // SAME hardened DSv1 source the path API uses, so admission control
+    // carries over verbatim: a 4-version backlog at maxVersionsPerTrigger=2
     // under Trigger.AvailableNow drains as exactly 2 bounded batches
     // (pinned through the exactly-once sink's version counter — one
     // destination commit per micro-batch), stopping at the start-time
@@ -4274,15 +4278,11 @@ object ExtQueries {
     QuerySpec("q425_stream_table_by_name",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q425src"
         val dst = Scratch.dir("q425dst", dir)
         val cp = Scratch.dir("q425cp", dir)
         Seq(t, dst, cp).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         (0 to 3).foreach(m =>
@@ -4390,13 +4390,9 @@ object ExtQueries {
     QuerySpec("q427_txlog_add_column",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q427m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         TxLog.create(orders.filter(col("o_orderkey") % 2 === 0), t) // v0
@@ -4436,13 +4432,9 @@ object ExtQueries {
     QuerySpec("q428_table_changes_sql",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q428m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         TxLog.create(orders.filter(col("o_orderkey") % 2 === 0), t) // v0
@@ -4478,13 +4470,9 @@ object ExtQueries {
     QuerySpec("q429_txlog_dml_subquery",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q429m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
         TxLog.create(orders.filter(col("o_orderkey") % 3 =!= 0)
           .select(col("o_orderkey"), col("o_custkey"),
@@ -4532,15 +4520,11 @@ object ExtQueries {
     QuerySpec("q431_stream_write_table",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val src = Scratch.dir("q431src", dir)
         val cp = Scratch.dir("q431cp", dir)
         val dst = s"$base/q431d"
         Seq(src, cp, dst).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         (0 to 3).foreach(m =>
@@ -4579,14 +4563,10 @@ object ExtQueries {
     QuerySpec("q432_txlog_restore_clone_sql",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q432m"
         val c = s"$base/q432c"
         Seq(t, c).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         TxLog.create(orders.filter(col("o_orderkey") % 2 === 0), t) // v0
@@ -4628,14 +4608,10 @@ object ExtQueries {
     QuerySpec("q433_txlog_properties_sql",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q433m"
         val c = s"$base/q433c"
         Seq(t, c).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q433m
                  (o_orderkey BIGINT, o_totalprice DOUBLE) USING txlog
                  TBLPROPERTIES ('tier' = 'bronze', 'pii' = 'false')""")
@@ -4683,15 +4659,11 @@ object ExtQueries {
     QuerySpec("q434_lakehouse_docs_pipeline",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val src = Scratch.dir("q434src", dir)
         val cp = Scratch.dir("q434cp", dir)
         val dst = s"$base/q434docs"
         Seq(src, cp, dst).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val docs = Tables.load(s, dir, "documents")
           .select(col("doc_id"), col("source"), col("lang"),
             col("n_chars"), col("text"))
@@ -4754,15 +4726,11 @@ object ExtQueries {
     QuerySpec("q435_declarative_partitioning",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q435pt"
         val src = Scratch.dir("q435src", dir)
         val cp = Scratch.dir("q435cp", dir)
         Seq(t, src, cp).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q435pt (
                    l_orderkey BIGINT, l_returnflag STRING,
                    l_extendedprice DOUBLE)
@@ -4820,14 +4788,10 @@ object ExtQueries {
     QuerySpec("q436_stream_cdf_by_name",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q436m"
         val cp = Scratch.dir("q436cp", dir)
         Seq(t, cp).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice"))
         TxLog.create(orders.filter(col("o_orderkey") % 2 === 0), t) // v0
@@ -4871,13 +4835,9 @@ object ExtQueries {
     QuerySpec("q437_create_or_replace",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q437r"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         Tables.load(s, dir, "orders").createOrReplaceTempView("q437_o")
         // atomic CTAS: schema + rows at version 0
         s.sql("""CREATE TABLE graft_lake.q437r USING txlog AS
@@ -4919,13 +4879,9 @@ object ExtQueries {
     QuerySpec("q438_dml_correlated_delete",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q438m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
         TxLog.create(orders
           .select(col("o_orderkey"), col("o_custkey"),
@@ -4982,13 +4938,9 @@ object ExtQueries {
     QuerySpec("q439_merge_schema_evolution",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q439m"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
         TxLog.create(orders.filter(col("o_orderkey") % 2 === 0)
           .select(col("o_orderkey"), col("o_totalprice")), t) // v0
@@ -5046,13 +4998,9 @@ object ExtQueries {
     QuerySpec("q440_describe_detail",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q440d"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q440d (
                    o_orderkey BIGINT, flag STRING, o_totalprice DOUBLE)
                  USING txlog PARTITIONED BY (flag)
@@ -5098,13 +5046,9 @@ object ExtQueries {
     QuerySpec("q441_partition_aligned_dml",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q441p"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q441p (
                    l_orderkey BIGINT, l_returnflag STRING,
                    l_extendedprice DOUBLE)
@@ -5172,13 +5116,9 @@ object ExtQueries {
     QuerySpec("q442_insert_overwrite",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q442o"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q442o (
                    l_orderkey BIGINT, l_returnflag STRING,
                    l_extendedprice DOUBLE)
@@ -5256,13 +5196,9 @@ object ExtQueries {
     QuerySpec("q443_declarative_stats",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q443s"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         val orders = Tables.load(s, dir, "orders")
           .select(col("o_orderkey"), col("o_totalprice").cast("double"))
         // deterministic split point both engines compute identically
@@ -5369,13 +5305,9 @@ object ExtQueries {
     QuerySpec("q445_show_partitions",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q445p"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q445p (
                    l_orderkey BIGINT, l_returnflag STRING)
                  USING txlog PARTITIONED BY (l_returnflag)""")
@@ -5417,13 +5349,9 @@ object ExtQueries {
       (s, dir) => {
         import graft.core.TxLog
         import s.implicits._
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q446c"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q446c (
                    c_custkey BIGINT, c_acctbal DOUBLE) USING txlog""")
         TxLog.append(Tables.load(s, dir, "customer")
@@ -5477,13 +5405,9 @@ object ExtQueries {
     QuerySpec("q447_truncate_table",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q447t"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q447t (
                    l_orderkey BIGINT, l_returnflag STRING,
                    l_extendedprice DOUBLE)
@@ -5541,14 +5465,10 @@ object ExtQueries {
     QuerySpec("q448_deep_clone",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val src = s"$base/q448s"
         val dst = s"$base/q448d"
         Seq(src, dst).foreach(TxLog.drop)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q448s (
                    o_orderkey BIGINT, o_totalprice DOUBLE)
                  USING txlog""")
@@ -5613,13 +5533,9 @@ object ExtQueries {
     QuerySpec("q449_retention_ops",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q449r"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q449r (
                    o_orderkey BIGINT, o_totalprice DOUBLE) USING txlog""")
         val orders = Tables.load(s, dir, "orders")
@@ -5682,15 +5598,11 @@ object ExtQueries {
     QuerySpec("q450_copy_into",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q450c"
         val src = s"$base/q450src"
         TxLog.drop(t)
         TxLog.drop(src) // plain directory; drop clears the tree too
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q450c (
                    l_orderkey BIGINT, l_quantity DOUBLE) USING txlog""")
         val li = Tables.load(s, dir, "lineitem")
@@ -5738,13 +5650,9 @@ object ExtQueries {
     QuerySpec("q451_rename_column",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q451r"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q451r (
                    c_custkey BIGINT, c_acctbal DOUBLE) USING txlog""")
         val cust = Tables.load(s, dir, "customer")
@@ -5803,13 +5711,9 @@ object ExtQueries {
     QuerySpec("q452_drop_column",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q452d"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q452d (
                    o_orderkey BIGINT, o_totalprice DOUBLE,
                    o_orderstatus STRING) USING txlog""")
@@ -5917,13 +5821,9 @@ object ExtQueries {
     QuerySpec("q454_sql_constraints",
       (s, dir) => {
         import graft.core.TxLog
-        val base = Scratch.dir("lakecat", dir)
+        val base = lakeCatalog(s, dir)
         val t = s"$base/q454c"
         TxLog.drop(t)
-        new java.io.File(base).mkdirs()
-        s.conf.set("spark.sql.catalog.graft_lake",
-          classOf[graft.sources.TxLogCatalog].getName)
-        s.conf.set("spark.sql.catalog.graft_lake.base", base)
         s.sql("""CREATE TABLE graft_lake.q454c (
                    l_orderkey BIGINT, l_quantity DOUBLE) USING txlog""")
         val li = Tables.load(s, dir, "lineitem")

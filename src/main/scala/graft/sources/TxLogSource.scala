@@ -7,11 +7,11 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{GraftSqlBridge, Row, SQLContext}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider, TableScan}
+import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, PrunedFilteredScan, RelationProvider}
 import org.apache.spark.sql.types.StructType
 
 /** `spark.read.format("txlog")` — the transaction-log table format
@@ -45,7 +45,10 @@ import org.apache.spark.sql.types.StructType
   * column-mapped table) falls back to [[TxLogRelation]], which wraps the
   * merge-on-read [[TxLog.scan]] and prunes through the same walk —
   * correct on every snapshot, while the common DV-free path keeps the
-  * native scan.
+  * native scan. Both come from [[TxLogDataSource.relation]], which
+  * catalog reads by name ([[graft.plans.TxLogReadRule]]) and
+  * `txlog.`/path`` ([[graft.plans.TxLogPathRule]]) share with this
+  * reader.
   *
   * WRITE path (`CreatableRelationProvider`):
   * `df.write.format("txlog").mode(m).save(dir)` maps onto the
@@ -191,36 +194,13 @@ class TxLogDataSource extends RelationProvider
     val asOf: Option[Int] = parameters.get("versionAsOf").map(_.trim.toInt)
       .orElse(parameters.get("timestampAsOf").map(ts =>
         TxLog.versionAt(dir, TxLogDataSource.parseInstant(ts))))
-    val spark = sqlContext.sparkSession
-    val snap = TxLog.resolve(dir, asOf)
     // `pinned` records whether the USER time-traveled (versionAsOf /
     // timestampAsOf) — the DML rule must refuse mutations through a
     // pinned relation, and `version == currentVersion` cannot tell
     // "pinned to what happens to be latest" from "default latest"
     // (review r11 #2.4)
-    if (snap.files.isEmpty || snap.dv.nonEmpty ||
-        // column mapping: files store PHYSICAL names — the row relation
-        // wraps the scan's logical projection; a HadoopFsRelation over
-        // the raw files would surface storage names
-        snap.mapping.active)
-      new TxLogRelation(sqlContext, dir, Some(snap.version),
-        TxLog.scan(spark, snap, snap.files).schema, pinned = asOf.isDefined)
-    else {
-      // union schema over the live files (commits may evolve the schema
-      // — q380): the log RECORDS it (schema lines), so serve it without
-      // the footer-merge Spark job; legacy tables without a schema line
-      // keep the mergeSchema inference
-      val dataSchema = snap.schema.getOrElse(
-        TxLog.scan(spark, snap, snap.files).schema)
-      HadoopFsRelation(
-        location = new TxLogFileIndex(dir, snap.metas,
-          pinned = asOf.isDefined),
-        partitionSchema = new StructType(),
-        dataSchema = dataSchema,
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map("mergeSchema" -> "true"))(spark)
-    }
+    TxLogDataSource.relation(sqlContext, TxLog.resolve(dir, asOf),
+      pinned = asOf.isDefined)
   }
 
   override def createRelation(sqlContext: SQLContext,
@@ -262,81 +242,8 @@ class TxLogDataSource extends RelationProvider
   }
 }
 
-/** The offset/admission logic of both txlog stream sources, mixed into
-  * the DSv1 [[TxLogStreamSource]] (the path API) and the DSv2
-  * [[TxLogMicroBatchStream]] (the catalog / `readStream.table` API):
-  * one implementation, two connector generations (VERDICT r11 #2).
-  * Offsets are log versions.
-  *
-  * ADMISSION CONTROL follows the KafkaSource pattern: a DSv1 Source may
-  * implement the connector-level SupportsAdmissionControl /
-  * SupportsTriggerAvailableNow interfaces — MicroBatchExecution
-  * dispatches on the INTERFACE, not the source generation, so the
-  * engine passes the checkpointed start offset and the read limit into
-  * [[latestOffset]] and drives Trigger.AvailableNow through
-  * [[prepareForTriggerAvailableNow]]. AvailableNow +
-  * maxVersionsPerTrigger therefore DRAINS the whole backlog in capped
-  * batches, and the engine-provided start offset makes a capped offer
-  * below the checkpoint structurally impossible. */
-private[graft] trait TxLogOffsets extends org.apache.spark.sql.connector
-    .read.streaming.SupportsTriggerAvailableNow {
-  import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
-  import org.apache.spark.sql.execution.streaming.runtime.LongOffset
-
-  protected def dir: String
-  protected def startingVersion: Int
-  protected def maxVersionsPerTrigger: Option[Int]
-
-  /** Drain target snapshotted by [[prepareForTriggerAvailableNow]]:
-    * Trigger.AvailableNow stops at the table state observed at query
-    * start, even while new commits land. MaxValue = no snapshot
-    * (processing-time / one-shot triggers). */
-  @volatile private var availableNowTarget: Int = Int.MaxValue
-
-  protected def versionOf(o: Offset): Int = o match {
-    case LongOffset(v) => v.toInt
-    case other => other.json().trim.toInt
-  }
-
-  override def initialOffset(): Offset =
-    LongOffset((startingVersion - 1).toLong)
-
-  override def deserializeOffset(json: String): Offset =
-    LongOffset(json.trim.toLong)
-
-  /** The declared per-trigger limit: versions map onto
-    * [[ReadLimit.maxFiles]] (a txlog version IS a file batch — the
-    * same grain Delta's maxFilesPerTrigger caps). */
-  override def getDefaultReadLimit: ReadLimit =
-    maxVersionsPerTrigger.map(n => ReadLimit.maxFiles(math.max(n, 1)))
-      .getOrElse(ReadLimit.allAvailable())
-
-  override def prepareForTriggerAvailableNow(): Unit = {
-    availableNowTarget = TxLog.currentVersion(dir)
-  }
-
-  /** True latest (uncapped) for engine metrics/backlog reporting. */
-  override def reportLatestOffset(): Offset = {
-    val v = TxLog.currentVersion(dir)
-    if (v < math.max(startingVersion, 0)) null else LongOffset(v.toLong)
-  }
-
-  /** The next batch's end offset: at most `limit` versions past the
-    * engine-provided `start` (which IS the checkpointed offset on a
-    * restart — no below-checkpoint offer is possible), clamped to the
-    * AvailableNow drain target when one is snapshotted. Returning
-    * `start` unchanged means "no new data". */
-  override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
-    // a FRESH stream has no checkpointed offset — the engine passes
-    // null, not initialOffset() (the KafkaSource contract)
-    val base = if (start == null) startingVersion - 1 else versionOf(start)
-    TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
-      case Some(v) => LongOffset(v.toLong)
-      case None => start
-    }
-  }
-}
-
+/** The offset arithmetic of [[TxLogStreamSource]]: offsets are log
+  * versions. */
 private[graft] object TxLogOffsets {
   import org.apache.spark.sql.connector.read.streaming.{ReadLimit, ReadMaxFiles}
 
@@ -408,10 +315,67 @@ object TxLogDataSource {
   private[graft] def parseInstant(ts: String): Long =
     ts.trim.toLongOption.getOrElse(
       java.sql.Timestamp.valueOf(ts.trim).getTime)
+
+  /** The one relation builder behind every txlog batch read — by path
+    * (`format("txlog").load`, `CREATE TABLE ... USING txlog`,
+    * `txlog.`/path``) and by catalog name ([[graft.plans.TxLogReadRule]]):
+    * a [[HadoopFsRelation]] over [[TxLogFileIndex]] for a DV-free
+    * snapshot, else the merge-on-read [[TxLogRelation]]. `pinned` marks
+    * a user time travel, which the DML rule refuses to mutate through. */
+  private[graft] def relation(sqlContext: SQLContext, snap: TxLog.Snapshot,
+      pinned: Boolean): BaseRelation = {
+    val spark = sqlContext.sparkSession
+    if (snap.files.isEmpty || snap.dv.nonEmpty ||
+        // column mapping: files store PHYSICAL names — the row relation
+        // wraps the scan's logical projection; a HadoopFsRelation over
+        // the raw files would surface storage names
+        snap.mapping.active)
+      new TxLogRelation(sqlContext, snap.dir, Some(snap.version),
+        TxLog.scan(spark, snap, snap.files).schema, pinned)
+    else {
+      // union schema over the live files (commits may evolve the schema
+      // — q380): the log RECORDS it (schema lines), so serve it without
+      // the footer-merge Spark job; legacy tables without a schema line
+      // keep the mergeSchema inference
+      val dataSchema = snap.schema.getOrElse(
+        TxLog.scan(spark, snap, snap.files).schema)
+      HadoopFsRelation(
+        location = new TxLogFileIndex(snap.dir, snap.metas, pinned),
+        partitionSchema = new StructType(),
+        dataSchema = dataSchema,
+        bucketSpec = None,
+        fileFormat = new ParquetFileFormat,
+        options = Map("mergeSchema" -> "true"))(spark)
+    }
+  }
+
+  /** [[relation]] as a batch plan node. `output` keeps the attribute ids
+    * of the node it replaces (a catalog read), matched by name; without
+    * it the attributes are fresh. */
+  private[graft] def logicalRelation(spark: SparkSession,
+      snap: TxLog.Snapshot, pinned: Boolean,
+      output: Option[Seq[AttributeReference]] = None): LogicalRelation = {
+    val rel = relation(spark.sqlContext, snap, pinned)
+    output match {
+      case None => LogicalRelation(rel, isStreaming = false)
+      case Some(attrs) =>
+        val fields = rel.schema.fields.toSeq
+        require(fields.map(_.name) == attrs.map(_.name),
+          s"txlog relation columns ${fields.map(_.name).mkString(", ")} " +
+            s"differ from the catalog table's ${attrs.map(_.name).mkString(", ")}")
+        LogicalRelation(rel, attrs.zip(fields).map { case (a, f) =>
+          AttributeReference(f.name, f.dataType, f.nullable, f.metadata)(
+            a.exprId, a.qualifier)
+        }, None, isStreaming = false, None)
+    }
+  }
 }
 
-/** The table's commit log as a streaming [[Source]]: offset = highest
-  * committed version ([[TxLogOffsets]]); `getBatch((a, b])` reads
+/** The table's commit log as a streaming [[Source]], the one txlog
+  * stream source: path streams reach it through
+  * [[TxLogDataSource.createSource]], and `readStream.table("lake.t")`
+  * (change feed or not) through [[graft.plans.TxLogStreamRule]].
+  * Offset = highest committed version ([[TxLogOffsets]]); `getBatch((a, b])` reads
   * exactly the files the versions a+1..b ADDED (one parquet scan over
   * that file list under the declared schema). Versions are immutable
   * once committed, so replays after a checkpoint recovery return
@@ -419,16 +383,78 @@ object TxLogDataSource {
   * property falls out of the log protocol. Raw entries must be
   * retained for the streamed range: history truncated below a
   * checkpoint refuses with the version number rather than silently
-  * skipping it. */
-class TxLogStreamSource(sqlContext: SQLContext, protected val dir: String,
-    declaredSchema: StructType, protected val startingVersion: Int,
+  * skipping it.
+  *
+  * ADMISSION CONTROL follows the KafkaSource pattern: a DSv1 Source may
+  * implement the connector-level SupportsAdmissionControl /
+  * SupportsTriggerAvailableNow interfaces — MicroBatchExecution
+  * dispatches on the INTERFACE, not the source generation, so the
+  * engine passes the checkpointed start offset and the read limit into
+  * [[latestOffset]] and drives Trigger.AvailableNow through
+  * [[prepareForTriggerAvailableNow]]. AvailableNow +
+  * maxVersionsPerTrigger therefore DRAINS the whole backlog in capped
+  * batches, and the engine-provided start offset makes a capped offer
+  * below the checkpoint structurally impossible. */
+class TxLogStreamSource(sqlContext: SQLContext, dir: String,
+    declaredSchema: StructType, startingVersion: Int,
     ignoreChanges: Boolean, readChangeFeed: Boolean = false,
-    protected val maxVersionsPerTrigger: Option[Int] = None)
+    maxVersionsPerTrigger: Option[Int] = None)
     extends org.apache.spark.sql.execution.streaming.Source
-    with TxLogOffsets {
+    with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
+  import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2, ReadLimit}
   import org.apache.spark.sql.execution.streaming.Offset
+  import org.apache.spark.sql.execution.streaming.runtime.LongOffset
+
+  /** Drain target snapshotted by [[prepareForTriggerAvailableNow]]:
+    * Trigger.AvailableNow stops at the table state observed at query
+    * start, even while new commits land. MaxValue = no snapshot
+    * (processing-time / one-shot triggers). */
+  @volatile private var availableNowTarget: Int = Int.MaxValue
+
+  private def versionOf(o: OffsetV2): Int = o match {
+    case LongOffset(v) => v.toInt
+    case other => other.json().trim.toInt
+  }
 
   override def schema: StructType = declaredSchema
+
+  override def initialOffset(): OffsetV2 =
+    LongOffset((startingVersion - 1).toLong)
+
+  override def deserializeOffset(json: String): OffsetV2 =
+    LongOffset(json.trim.toLong)
+
+  /** The declared per-trigger limit: versions map onto
+    * [[ReadLimit.maxFiles]] (a txlog version IS a file batch — the
+    * same grain Delta's maxFilesPerTrigger caps). */
+  override def getDefaultReadLimit: ReadLimit =
+    maxVersionsPerTrigger.map(n => ReadLimit.maxFiles(math.max(n, 1)))
+      .getOrElse(ReadLimit.allAvailable())
+
+  override def prepareForTriggerAvailableNow(): Unit = {
+    availableNowTarget = TxLog.currentVersion(dir)
+  }
+
+  /** True latest (uncapped) for engine metrics/backlog reporting. */
+  override def reportLatestOffset(): OffsetV2 = {
+    val v = TxLog.currentVersion(dir)
+    if (v < math.max(startingVersion, 0)) null else LongOffset(v.toLong)
+  }
+
+  /** The next batch's end offset: at most `limit` versions past the
+    * engine-provided `start` (which IS the checkpointed offset on a
+    * restart — no below-checkpoint offer is possible), clamped to the
+    * AvailableNow drain target when one is snapshotted. Returning
+    * `start` unchanged means "no new data". */
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 = {
+    // a FRESH stream has no checkpointed offset — the engine passes
+    // null, not initialOffset() (the KafkaSource contract)
+    val base = if (start == null) startingVersion - 1 else versionOf(start)
+    TxLogOffsets.nextOffset(dir, base, limit, availableNowTarget) match {
+      case Some(v) => LongOffset(v.toLong)
+      case None => start
+    }
+  }
 
   /** The bare v1 offer path: never called, because the engine tests for
     * `SupportsAdmissionControl` before `Source` and calls [[latestOffset]]
@@ -518,7 +544,7 @@ object TxLogSourceIO {
   * FROZEN at construction (file list and recorded metadata), so a
   * concurrent commit cannot tear this scan. */
 class TxLogFileIndex private[graft] (val dir: String,
-    files: Seq[(String, FilePrune.FileMeta)], val pinned: Boolean = false)
+    files: Seq[(String, FilePrune.FileMeta)], val pinned: Boolean)
     extends FileIndex {
 
   private val statuses: Seq[(String, FileStatus)] = files.map { case (f, _) =>
@@ -593,11 +619,9 @@ class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
 
 /** The merge-on-read relation: wraps [[TxLog.scan]] (parquet scan
   * anti-joined against the deletion-vector frame, physical names
-  * projected back to logical). It serves two readers:
-  *   - the path connector's fallback for DV-bearing, emptied or
-  *     COLUMN-MAPPED snapshots, as a [[PrunedFilteredScan]];
-  *   - the catalog's V1 scan ([[TxLogV1ScanBuilder]]), as a [[TableScan]]
-  *     over the pushed columns (`schema`) and filters `pushed`.
+  * projected back to logical) as a [[PrunedFilteredScan]] — the
+  * fallback [[TxLogDataSource.relation]] builds for DV-bearing, emptied
+  * or COLUMN-MAPPED snapshots, by path and by name alike.
   * Filters do double duty: they prune FILES through [[FilePrune]] and
   * re-apply on the wrapped frame so Catalyst pushes them into the parquet
   * scan. Spark still re-evaluates every row above (the DSv1 contract), so
@@ -606,8 +630,8 @@ class TxLogCdfRelation(override val sqlContext: SQLContext, dir: String,
   * kept/total. */
 class TxLogRelation private[graft] (override val sqlContext: SQLContext,
     val dir: String, val asOf: Option[Int], override val schema: StructType,
-    val pinned: Boolean = false, pushed: Array[Filter] = Array.empty)
-    extends BaseRelation with PrunedFilteredScan with TableScan {
+    val pinned: Boolean)
+    extends BaseRelation with PrunedFilteredScan {
   import org.apache.spark.sql.functions.{col, lit}
 
   private def spark: SparkSession = sqlContext.sparkSession
@@ -615,8 +639,6 @@ class TxLogRelation private[graft] (override val sqlContext: SQLContext,
   // rows come straight out of the wrapped plan's execution — already
   // InternalRow, no Row re-conversion
   override def needConversion: Boolean = false
-
-  override def buildScan(): RDD[Row] = buildScan(schema.fieldNames, pushed)
 
   override def buildScan(requiredColumns: Array[String],
       filters: Array[Filter]): RDD[Row] = {

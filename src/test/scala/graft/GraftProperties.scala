@@ -614,9 +614,10 @@ object GraftProperties extends Properties("graft") {
       got == brute
   }
 
-  // TxLogOffsets (shared by the DSv1 source and the DSv2
-  // MicroBatchStream): offers advance monotonically, never exceed the
-  // cap or the drain target, and never cross an undecided version.
+  // TxLogOffsets (the offset arithmetic of the one txlog stream source,
+  // which path and by-name streams share): offers advance monotonically,
+  // never exceed the cap or the drain target, and never cross an
+  // undecided version.
   property("TxLogOffsets.nextOffset: capped, monotone, and " +
       "undecided-stalling on arbitrary logs") =
     forAll(Gen.choose(2, 8), Gen.choose(1, 3), Gen.choose(0, 7)) {

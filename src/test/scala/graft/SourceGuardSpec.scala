@@ -10,8 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * every exit-time cleanup in `core/Memo.scala`, prunes txlog files
   * from log metadata in one walk, `core/FilePrune.scala`, stages
   * txlog batches through one temp dir in `core/TxLog.scala`, binds
-  * the txlog row identity in one scan there and replays the log only
-  * through its snapshot and forward walk. A one-off
+  * the txlog row identity in one scan there, replays the log only
+  * through its snapshot and forward walk, and builds every txlog read
+  * relation in one function. A one-off
   * probe main, a hand-built session whose config drifts from the one
   * every result was checked under, or a private memo with its own
   * staleness rule is a red test instead of a review finding. */
@@ -85,6 +86,30 @@ class SourceGuardSpec extends AnyFunSuite {
     val owners = """\bfold\(dir\b""".r.findAllMatchIn(text)
       .map(m => defs.filter(_._1 < m.start).last._2).toSeq
     assert(owners.distinct.sorted == Seq("fold", "resolve", "walk"), owners)
+  }
+
+  test("one txlog read connector: V1Scan and MicroBatchStream only in " +
+      "the blob source; every txlog batch relation comes from " +
+      "TxLogDataSource.relation") {
+    // comment lines may name what the code must not use
+    def code(text: String): String = text.linesIterator.filterNot { l =>
+      val t = l.trim
+      t.startsWith("//") || t.startsWith("*") || t.startsWith("/*")
+    }.mkString("\n")
+    val forks = sources.collect { case (f, text)
+        if """\b(V1Scan|MicroBatchStream)\b""".r
+          .findFirstIn(code(text)).isDefined => f }.sorted
+    assert(forks == Seq("graft/sources/BlobShardSource.scala"), forks)
+    assert(filesMatching("""TxLogDataSource\(\)\s*\.\s*createRelation\b""".r)
+      .isEmpty)
+    val builds = """\bnew\s+(?:graft\.sources\.)?(TxLogRelation|TxLogFileIndex)\s*\(""".r
+    assert(filesMatching(builds) == Seq("graft/sources/TxLogSource.scala"))
+    val text = sources.toMap.apply("graft/sources/TxLogSource.scala")
+    val defs = """(?m)^  (?:private(?:\[\w+\])?\s+)?(?:override\s+)?def\s+(\w+)""".r
+      .findAllMatchIn(text).map(m => m.start -> m.group(1)).toSeq
+    val owners = builds.findAllMatchIn(text)
+      .map(m => defs.filter(_._1 < m.start).last._2).toSeq
+    assert(owners == Seq("relation", "relation"), owners)
   }
 
   test("memo maps and retire queues appear only in core/Memo.scala") {

@@ -710,18 +710,80 @@ class TxLogCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE lake.props")
   }
 
+  /** The physical plan with adaptive execution unwrapped (its initial
+    * plan, before any stage runs). */
+  private def physical(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.execution.SparkPlan =
+    df.queryExecution.executedPlan.transform {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+    }
+
+  /** The txlog directories of the native parquet scans in `plan`. */
+  private def scannedDirs(plan: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[String] =
+    plan.collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec =>
+        s.relation.location match {
+          case fi: graft.sources.TxLogFileIndex => fi.dir
+          case other => other.toString
+        }
+    }
+
   test("catalog reads report log-resident statistics: a small catalog " +
       "table broadcasts in a join") {
-    TxLog.create((1L to 5L).map(i => (i, s"n$i")).toDF("k", "name"),
+    TxLog.create((1L to 10L).map(i => (i, s"n$i")).toDF("k", "name"),
       dirOf("dim"))
-    val fact = (1L to 1000L).map(i => (i % 5 + 1, i * 1.0)).toDF("k", "x")
-    fact.createOrReplaceTempView("cat_fact")
+    // the fact is a catalog table too: a local frame would be small
+    // enough to broadcast itself, and could not show which side does
+    TxLog.create((1L to 20000L).map(i => (i % 10 + 1, i * 1.0))
+      .toDF("k", "x"), dirOf("fact"))
     val joined = spark.sql(
-      "SELECT f.k, d.name, f.x FROM cat_fact f JOIN lake.dim d ON f.k = d.k")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin"),
-      s"a 5-row catalog table must broadcast, plan:\n$plan")
-    assert(joined.count() == 1000L)
+      "SELECT f.k, d.name, f.x FROM lake.fact f JOIN lake.dim d ON f.k = d.k")
+    val plan = physical(joined)
+    val broadcast = plan.collect {
+      case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec =>
+        scannedDirs(b)
+    }.flatten
+    assert(broadcast == Seq(dirOf("dim")),
+      s"the 10-row catalog dimension must broadcast, plan:\n$plan")
+    assert(joined.count() == 20000L)
+  }
+
+  test("a filtered read by name is costed at the live files' bytes") {
+    val d = dirOf("sized")
+    TxLog.create((1L to 10L).map(i => (i, i * 1.0)).toDF("id", "v"), d)
+    TxLog.append((11L to 20L).map(i => (i, i * 1.0)).toDF("id", "v"), d)
+    TxLog.deleteWhere(spark, d, col("id") <= 5)
+    val live = TxLog.resolve(d).files
+      .map(f => new java.io.File(d, f).length()).sum
+    val size = spark.table("lake.sized").filter(col("id") > 0)
+      .queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(size == BigInt(live), s"sizeInBytes $size, live bytes $live")
+  }
+
+  test("a read by name plans as the read by path: one parquet file scan " +
+      "for a DV-free table, the merge-on-read relation for a DV-bearing one") {
+    val d = dirOf("same")
+    TxLog.create((1L to 20L).map(i => (i, i * 1.0)).toDF("id", "v"), d)
+    def scans(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      physical(df).collectLeaves().map(_.simpleString(100)
+        .replaceAll("#\\d+L?", ""))
+    val byName = scans(spark.table("lake.same").filter(col("id") > 3))
+    val byPath = scans(spark.read.format("txlog").load(d)
+      .filter(col("id") > 3))
+    assert(byName.length == 1 && byName.head.startsWith("FileScan parquet") &&
+      byName == byPath, s"by name $byName, by path $byPath")
+    TxLog.deleteWhereDV(spark, d, col("id") === 4)
+    def rowRelations(df: org.apache.spark.sql.DataFrame): Seq[Boolean] =
+      physical(df).collectLeaves().map {
+        case r: org.apache.spark.sql.execution.RowDataSourceScanExec =>
+          r.relation.isInstanceOf[graft.sources.TxLogRelation]
+        case _ => false
+      }
+    assert(rowRelations(spark.table("lake.same")) == Seq(true))
+    assert(rowRelations(spark.read.format("txlog").load(d)) == Seq(true))
+    assert(spark.table("lake.same").count() == 19L)
   }
 
   test("INSERT OVERWRITE PARTITION replaces exactly that partition: " +
@@ -1050,18 +1112,57 @@ class TxLogCatalogSpec extends AnyFunSuite {
     spark.sql("DROP TABLE lake.cmg")
   }
 
-  test("a loaded catalog table reports scan statistics at the newest " +
-      "version, not at its load-time snapshot") {
+  test("a read by name takes its snapshot at analysis: a frame analyzed " +
+      "after a growing append reports the larger size") {
     TxLog.create((1L to 10L).map(i => (i, i)).toDF("id", "v"), dirOf("st1"))
-    // one table object, as an analyzed plan keeps it across commits
-    val table = new graft.sources.TxLogTable(dirOf("st1"), "lake.st1")
-    def size = table.newScanBuilder(
-        org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
-      .asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportStatistics]
-      .estimateStatistics().sizeInBytes().getAsLong
-    val before = size
+    def size(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.optimizedPlan.stats.sizeInBytes
+    val early = spark.table("lake.st1")
+    val before = size(early)
     TxLog.append((11L to 5000L).map(i => (i, i)).toDF("id", "v"), dirOf("st1"))
-    assert(size > before, s"stale statistics: $before after a growing append")
+    val after = size(spark.table("lake.st1"))
+    assert(after > before, s"stale statistics: $before after a growing append")
+    // the early frame keeps the version it was analyzed at, as a path
+    // read does
+    assert(early.count() == 10L && spark.table("lake.st1").count() == 5000L)
     spark.sql("DROP TABLE lake.st1")
+  }
+
+  test("a session without GraftExtensions refuses reads by name, batch " +
+      "and streaming, naming the extension") {
+    TxLog.create((1L to 3L).map(i => (i, i)).toDF("id", "v"), dirOf("bare"))
+    val shared = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // every builder route applies the context's spark.sql.extensions,
+    // so construct the session with an empty extension set directly
+    val bare = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getConstructors.find(_.getParameterCount == 6).get
+      .newInstance(shared.sparkContext, Some(shared.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions,
+        Map.empty[String, String], Map.empty[String, String])
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(!bare.sessionState.analyzer.extendedResolutionRules
+      .exists(_.isInstanceOf[graft.plans.TxLogReadRule]))
+    bare.conf.set("spark.sql.catalog.lake",
+      classOf[graft.sources.TxLogCatalog].getName)
+    bare.conf.set("spark.sql.catalog.lake.base", base)
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Seq.empty
+      else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val hint = "spark.sql.extensions=graft.plans.GraftExtensions"
+    // the table still resolves: its schema and DESCRIBE need no scan
+    assert(bare.table("lake.bare").schema.fieldNames.toSeq == Seq("id", "v"))
+    val be = intercept[Exception] { bare.table("lake.bare").collect() }
+    assert(msgs(be).exists(_.contains(hint)), msgs(be).mkString(" | "))
+    val ckpt = java.nio.file.Files.createTempDirectory("txcat_bare_").toString
+    val se = intercept[Exception] {
+      bare.readStream.table("lake.bare").writeStream.format("noop")
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination()
+    }
+    assert(msgs(se).exists(_.contains(hint)), msgs(se).mkString(" | "))
+    // the same table reads by path on the bare session
+    assert(bare.read.format("txlog").load(dirOf("bare")).count() == 3L)
+    spark.sql("DROP TABLE lake.bare")
   }
 }

@@ -439,7 +439,7 @@ class TxLogSourceSpec extends AnyFunSuite {
     TxLog.drop(t)
   }
 
-  test("readStream.table drives the DSv2 MicroBatchStream: capped " +
+  test("readStream.table drives the DSv1 txlog source: capped " +
       "AvailableNow drain by NAME, duplicate-free restart on the same " +
       "checkpoint, undecided transactions stall the offer") {
     val base = java.nio.file.Files.createTempDirectory("txmbs_").toString
@@ -472,14 +472,14 @@ class TxLogSourceSpec extends AnyFunSuite {
     assert(sizes.sum == 40L && sizes == Seq(20L, 20L),
       s"4 versions at cap 2 must drain by NAME as 2×2-version batches, " +
         s"got $sizes")
-    // restart on the same checkpoint: the engine hands the DSv2
+    // restart on the same checkpoint: the engine hands the source's
     // latestOffset the checkpointed offset — nothing re-emits
     (4 until 6).foreach(i => TxLog.append(
       spark.range(i * 10L, i * 10L + 10L).select(col("id")).coalesce(1), t))
     val sizes2 = drain()
     assert(sizes2.sum == 20L, s"restart must ship only v4..v5, got $sizes2")
     // an UNDECIDED multi-table transaction stalls the by-name offer at
-    // the same version the path API stalls at (shared TxLogOffsets)
+    // the same version the path API stalls at (one stream source)
     val staged = TxLog.stage(
       spark.range(100L, 105L).select(col("id")), t)
     val parts = Seq(t -> staged.map(f => s"add\t$f"))
