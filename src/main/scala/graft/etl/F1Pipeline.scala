@@ -24,8 +24,12 @@ import scala.util.control.NonFatal
   * tiebreak — deterministic on any cluster layout.
   *
   * Scale: every table is projection + filter + one keyed window — nothing
-  * materializes the wide frame, and at 100 TB each table build is a single
-  * shuffle on its dedup key.
+  * materializes the wide frame — and each build is one shuffle: a range
+  * exchange on the table's sort key, which is also its dedup key. The
+  * dedup window, PitStop's `pitsId` scan and the trailing `orderBy` all
+  * read that one exchange (DateDimension's `distinct` reads a descending
+  * one the same way). Laps keeps its hash exchange: its order is the
+  * ≤1000-row capped window's, not a corpus-scale sort.
   */
 object F1Pipeline {
 
@@ -36,16 +40,21 @@ object F1Pipeline {
     else wide.withColumn(ord, monotonically_increasing_id())
 
   /** Project `cols`, keep the first row per `keys` in (keys asc, file
-    * order) — the reference's sort-then-drop_duplicates shape. */
-  private def first(wide: DataFrame, cols: Seq[String], keys: Seq[String]): DataFrame = {
+    * order) — the reference's sort-then-drop_duplicates shape. `keys` are
+    * in the table's sort order: `ranged` range-partitions on them, so the
+    * dedup window and the table's `orderBy` reuse that one exchange. */
+  private def first(wide: DataFrame, cols: Seq[String], keys: Seq[String],
+      ranged: Boolean = true): DataFrame = {
     val df = withOrd(wide).select((cols :+ ord).map(col): _*)
-    Dedup.keepFirst(df, keys, keys.map(col(_).asc) :+ col(ord).asc).drop(ord)
+    Dedup.keepFirst(if (ranged) df.repartitionByRange(keys.map(col): _*) else df,
+      keys, keys.map(col(_).asc) :+ col(ord).asc).drop(ord)
   }
 
   /** DateDimension (`date_etl.py`): D1 distinct + O1 sort desc + F1 split. */
   def dateDimension(wide: DataFrame): DataFrame =
     wide.select(Scalars.parseDate(col("date")).as("date"))
-      .filter(col("date").isNotNull).distinct()
+      .filter(col("date").isNotNull)
+      .repartitionByRange(col("date").desc).distinct()
       .select(col("date") +: Scalars.calendar(col("date")): _*)
       .orderBy(col("date").desc)
 
@@ -138,7 +147,7 @@ object F1Pipeline {
     * F7/F5 parses, F12 position `\N`→0. */
   def qualification(wide: DataFrame): DataFrame =
     first(wide, Seq("raceId", "driverId", "quali_date", "quali_time",
-        "position"), Seq("driverId", "raceId"))
+        "position"), Seq("raceId", "driverId"))
       .select(col("raceId").as("race_id"), col("driverId").as("driver_id"),
         Scalars.parseDate(col("quali_date")).as("quali_date"),
         Scalars.parseTimeHms(col("quali_time")).as("quali_time"),
@@ -155,7 +164,7 @@ object F1Pipeline {
   def laps(wide: DataFrame, cap: Int = 1000): DataFrame =
     first(wide, Seq("raceId", "driverId", "laps", "lap", "time_laptimes",
         "position_laptimes", "milliseconds_laptimes"),
-      Seq("raceId", "driverId", "lap"))
+      Seq("raceId", "driverId", "lap"), ranged = false)
       .select(col("raceId"), col("driverId").as("driver_id"), col("laps"),
         col("lap"), Scalars.parseLapTime(col("time_laptimes")).as("time_laptimes"),
         col("position_laptimes"), col("milliseconds_laptimes"))
@@ -288,17 +297,13 @@ object F1Pipeline {
     * Then the first failure in write order is thrown, naming its table,
     * with the rest attached as suppressed; a fatal error is rethrown as
     * it is. No pool thread outlives the call, even if the caller is
-    * interrupted. The persists made while building (PrefixSum's input) are
-    * released after every write has returned, because the cache matches
-    * a CSV scan by plan, not content: a later run over a new file at the
-    * same path would otherwise read the old rows. */
+    * interrupted. */
   private def buildAndWrite(spark: org.apache.spark.sql.SparkSession,
       csvPath: String, refYear: Int)(write: (String, DataFrame) => Unit): Unit = {
-    val (tables, persisted) = graft.core.Cleanup.track(
-      buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear))
+    val tables =
+      buildAll(graft.core.Tables.csv(spark, csvPath, F1Schema.wide), refYear)
     val order = "PitStop" +: tables.keys.filter(_ != "PitStop").toSeq.sorted
-    try writeConcurrently(spark.sparkContext, order.map(t => t -> tables(t)), write)
-    finally persisted.foreach(_.unpersist())
+    writeConcurrently(spark.sparkContext, order.map(t => t -> tables(t)), write)
   }
 
   private def writeConcurrently(sc: org.apache.spark.SparkContext,
@@ -337,9 +342,9 @@ object F1Pipeline {
     named.headOption.foreach { e => named.tail.foreach(e.addSuppressed); throw e }
   }
 
-  /** Join every thread, even if the caller is interrupted meanwhile (the
-    * build's persists must outlive every write); the interrupt is
-    * restored once all have ended. */
+  /** Join every thread, even if the caller is interrupted meanwhile (no
+    * write may outlive the call); the interrupt is restored once all have
+    * ended. */
   private def joinAll(threads: Seq[Thread]): Unit = {
     var interrupted = false
     threads.foreach { t =>

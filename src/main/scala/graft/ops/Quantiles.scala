@@ -15,9 +15,9 @@ import org.apache.spark.sql.functions._
   *  1. reduce to VALUE GRAIN: `groupBy(group, value).count()` — one keyed
   *     shuffle, the only pass over the corpus;
   *  2. rank the value grain with the distributed [[PrefixSum]] over the
-  *     (group, value) total order (per-group rank = global cumsum − group
-  *     offset, the q219 trick — a group holding half the corpus still
-  *     ranks in parallel);
+  *     (group, value) total order — one range exchange and one ordered
+  *     scan (per-group rank = global cumsum − group offset, the q219
+  *     trick — a group holding half the corpus still ranks in parallel);
   *  3. each value-grain row covers the rank interval
   *     [cum−cnt+1, cum]; the rows covering the floor/ceil ranks of each
   *     requested percentile are selected by the crossing rule and
@@ -44,9 +44,8 @@ object Quantiles {
       countCol: Option[String] = None): DataFrame = {
     require(outs.nonEmpty, "at least one percentile requested")
     val keyCols = groupCols :+ valueCol
-    // 1. value grain — the only corpus-scale shuffle. PrefixSum.cumsum
-    // persists its input, so the grain computes once for its boundary
-    // and offset subqueries and its scan (and for `__qn` below)
+    // 1. value grain — the only corpus-scale aggregation; the scan's
+    // range exchange then moves one row per distinct (group, value)
     val vg = df.filter(col(valueCol).isNotNull)
       .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("__qcnt"))

@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * [[PrefixSum]]: `Window.orderBy` with no partition key is the operator
   * that never finishes at 100 TB).
   *
-  * It is PrefixSum's ordered scan with max as the monoid: an exclusive
-  * per-range window max, combined with the exclusive running max of the
-  * earlier ranges' maxima by `greatest` (which skips NULLs, so "no
-  * predecessor" stays NULL).
+  * It is PrefixSum's ordered scan ([[graft.plans.OrderedScan]]) with max
+  * as the aggregate and the frame ending before this row: NULL values are
+  * skipped, so "no predecessor" stays NULL.
   *
   * The canonical consumer is the 2-D skyline / Pareto frontier: sort by
   * x, a point survives iff its y beats every smaller-x point's y — i.e.
@@ -26,5 +25,6 @@ object RunningMax {
     * total order); `valueCol` must be orderable. */
   def cummaxExclusive(df: DataFrame, keyCols: Seq[String], valueCol: String,
       out: String): DataFrame =
-    PrefixSum.scan(df, keyCols, valueCol, out, max, -1L)(greatest(_, _))
+    PrefixSum.scan(df, keyCols, valueCol, out, "max", -1,
+      df.select(col(valueCol)).schema.head.dataType)
 }

@@ -212,16 +212,7 @@ object AsOf {
       leftKey: Seq[String], rightKey: Seq[String],
       leftTime: String, rightTime: String,
       rightTie: Seq[String], forward: Boolean): DataFrame = {
-    val cs = left.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    // Read-modify-write on the session's strategy list: guarded, because
-    // concurrent queries on one session (the driver does this) would
-    // otherwise race and could drop each other's injection.
-    AsOf.synchronized {
-      if (!cs.experimental.extraStrategies.contains(AsOfJoinStrategy))
-        cs.experimental.extraStrategies =
-          cs.experimental.extraStrategies :+ AsOfJoinStrategy
-    }
+    val cs = Strategies.ensure(left.sparkSession, AsOfJoinStrategy)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

@@ -50,17 +50,40 @@ object BandedLevenshteinRule extends Rule[LogicalPlan] {
   }
 }
 
+/** Planner strategies on a session that may lack [[GraftExtensions]]. */
+private[graft] object Strategies {
+
+  /** `spark` as the classic session, with `strategy` in its
+    * `experimental.extraStrategies`. The read-modify-write is guarded:
+    * concurrent queries on one session (the driver runs them) could
+    * otherwise drop each other's strategy. */
+  def ensure(spark: org.apache.spark.sql.SparkSession,
+      strategy: org.apache.spark.sql.execution.SparkStrategy)
+      : org.apache.spark.sql.classic.SparkSession = {
+    val cs = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    synchronized {
+      if (!cs.experimental.extraStrategies.contains(strategy))
+        cs.experimental.extraStrategies =
+          cs.experimental.extraStrategies :+ strategy
+    }
+    cs
+  }
+}
+
 /** Session-extension entry point (`spark.sql.extensions`) — registers
-  * the WHOLE engine: the optimizer rule, the as-of planner strategy,
-  * and (by composing [[graft.functions.GraftExtensions]]) every native
-  * function, so one configuration line is sufficient. */
+  * the WHOLE engine: the optimizer rule, the as-of and ordered-scan
+  * planner strategies, and (by composing
+  * [[graft.functions.GraftExtensions]]) every native function, so one
+  * configuration line is sufficient. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectOptimizerRule(_ => BandedLevenshteinRule)
-    // Sessions built WITH extensions get the as-of strategy from birth;
-    // AsOf.joinBackward/joinForward still self-inject on already-built
-    // sessions (the driver's case) via experimental.extraStrategies.
+    // Sessions built WITH extensions get the as-of and ordered-scan
+    // strategies from birth; their builders still self-inject on
+    // already-built sessions (the driver's case) through
+    // [[Strategies.ensure]].
     e.injectPlannerStrategy(_ => AsOfJoinStrategy)
+    e.injectPlannerStrategy(_ => OrderedScanStrategy)
     // txlog catalog reads by name: the relation a path read builds.
     // Injected before the DML rule, so a MERGE source is converted
     // before the statement becomes a command

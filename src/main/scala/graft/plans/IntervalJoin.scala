@@ -229,13 +229,7 @@ object Interval {
       rightLo: String, rightHi: String,
       leftTie: Seq[String] = Nil, rightTie: Seq[String] = Nil,
       leftOuter: Boolean = false): DataFrame = {
-    val cs = left.sparkSession
-      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    Interval.synchronized {
-      if (!cs.experimental.extraStrategies.contains(IntervalJoinStrategy))
-        cs.experimental.extraStrategies =
-          cs.experimental.extraStrategies :+ IntervalJoinStrategy
-    }
+    val cs = Strategies.ensure(left.sparkSession, IntervalJoinStrategy)
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String): Attribute =

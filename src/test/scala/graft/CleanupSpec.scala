@@ -37,7 +37,8 @@ class CleanupSpec extends AnyFunSuite {
 
   // q03: single chain-position persist; q50: persist + banded self-join;
   // q92: pqSubvectors + pqCodebook persists (two tracked frames);
-  // q113: PrefixSum-internal persist via the vocab-id path.
+  // q113: token-id query over the PrefixSum vocab ids (the scan itself
+  // persists nothing).
   for (q <- Seq("q03_dedup_composite", "q50_simhash_pairs",
       "q92_pq_encode", "q113_token_ids")) {
     test(s"$q: no persisted RDDs survive the query's action") {

@@ -14,8 +14,8 @@ import graft.ops.{PrefixSum, Quantiles, RunningMax}
 
 /** Building a query runs no Spark job: the ordered-scan operators
   * (`PrefixSum`, `RunningMax`, `Quantiles`) and the F1 star-schema build
-  * return plans whose range boundaries, offsets and global counts are
-  * scalar subqueries, evaluated only by the caller's action. Each case
+  * return plans whose range bounds, partition totals and global counts
+  * are computed only by the caller's action. Each case
   * counts the jobs started, under its own job tag, while the frame is
   * built, and then runs the frame once so a plan that builds but cannot
   * execute fails here too. */
@@ -81,9 +81,11 @@ class ConstructionSpec extends AnyFunSuite {
   }
 
   test("F1Pipeline.buildAll runs no job while built") {
-    val (jobs, tables) = jobsDuring(F1Pipeline.buildAll(
-      Tables.csv(spark, F1Fixture.csvPath, F1Schema.wide), refYear = 2026))
+    val (jobs, (tables, persisted)) = jobsDuring(graft.core.Cleanup.track(
+      F1Pipeline.buildAll(Tables.csv(spark, F1Fixture.csvPath, F1Schema.wide),
+        refYear = 2026)))
     assert(jobs === 0, "Spark jobs ran while the star schema was built")
+    assert(persisted.isEmpty, "the star schema build persisted frames")
     assert(tables("PitStop").collect().nonEmpty)
   }
 }

@@ -90,4 +90,28 @@ class ExtensionsSpec extends AnyFunSuite {
     }
     assert(kept == plainKept)
   }
+
+  test("a session built without GraftExtensions plans the ordered scan " +
+      "once a scan is built on it") {
+    val shared = TestSpark.spark
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    // every builder route applies the context's spark.sql.extensions,
+    // so construct the session with an empty extension set directly
+    val bare = classOf[org.apache.spark.sql.classic.SparkSession]
+      .getConstructors.find(_.getParameterCount == 6).get
+      .newInstance(shared.sparkContext, Some(shared.sharedState), None,
+        new org.apache.spark.sql.SparkSessionExtensions,
+        Map.empty[String, String], Map.empty[String, String])
+      .asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    def planned = bare.sessionState.planner.strategies
+      .contains(graft.plans.OrderedScanStrategy)
+    assert(!planned)
+    import bare.implicits._
+    val df = graft.ops.PrefixSum.cumsum(
+      (1L to 50L).map(i => (i, i)).toDF("k", "v"), "k", "v", "c")
+    assert(planned)
+    assert(df.queryExecution.executedPlan.toString.contains("OrderedScan"))
+    assert(df.orderBy("k").select("c").collect().map(_.getLong(0)).toSeq ==
+      (1L to 50L).scanLeft(0L)(_ + _).tail)
+  }
 }

@@ -77,17 +77,18 @@ class F1WriteSpec extends AnyFunSuite {
   private def poolThreads: Int = Thread.getAllStackTraces.keySet.toArray
     .count(_.asInstanceOf[Thread].getName.startsWith("F1Pipeline-write-"))
 
-  // The fixture rows at a path of their own: a frame that
-  // `F1Fixture.tables` cached for its own path would answer PitStop's
-  // persisted input and change the job count.
+  // The fixture rows at a path of their own: a frame another spec cached
+  // for `F1Fixture.csvPath` would answer some scans and change the job
+  // count.
   private def freshCsv: String = F1Fixture.writeCsv(F1Fixture.fixtureRows)
 
-  // Jobs one call runs on the fixture, counted at the commit before the
-  // writes ran concurrently (one table after another): concurrency adds
-  // no job.
-  private val runJobs = 64
-  private val firstDropJobs = 64
-  private val guardedDropJobs = 77
+  // Jobs one call runs on the fixture, the same as one table after
+  // another (concurrency adds no job). Each populated table builds on one
+  // shuffle: a range exchange's sample and map jobs (Laps: one hash map
+  // job) and the write, plus PitStop's totals job.
+  private val runJobs = 46
+  private val firstDropJobs = 46
+  private val guardedDropJobs = 61
 
   test("run and runIncremental write concurrently, under the caller's tag, with the same jobs") {
     val csv = freshCsv
@@ -114,18 +115,19 @@ class F1WriteSpec extends AnyFunSuite {
 
   test("run releases only the persists it made: a caller's cached frame of the same CSV stays cached") {
     val csv = freshCsv
-    val (mine, cached) = graft.core.Cleanup.track(F1Pipeline.buildAll(
-      graft.core.Tables.csv(spark, csv, graft.etl.F1Schema.wide), refYear = 2026))
+    // run itself persists nothing: the caller's cache is the only one
+    val cached = graft.core.Tables.csv(spark, csv, graft.etl.F1Schema.wide)
+      .persist()
     try {
-      mine.values.foreach(_.collect())
+      F1Pipeline.buildAll(cached, refYear = 2026).values.foreach(_.collect())
       val jobs = (1 to 2).map { _ =>
         val out = Files.createTempDirectory("f1write_cached").toString
         watched(F1Pipeline.run(spark, csv, out)).total
       }
       assert(jobs(0) == jobs(1), s"jobs per run over a cached CSV: $jobs")
-      assert(cached.nonEmpty && cached.forall(_.storageLevel !=
-        org.apache.spark.storage.StorageLevel.NONE), "the caller's cache")
-    } finally cached.foreach(_.unpersist())
+      assert(cached.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the caller's cache")
+    } finally cached.unpersist()
   }
 
   test("a failed write names its table; the others land and nothing is left running or cached") {

@@ -370,4 +370,31 @@ class PlanSpec extends AnyFunSuite {
     assert(scans.count(_.contains("graft_memo_annidx")) >= 3,
       s"serve path must read the 3 persisted artifacts:\n${scans.mkString("\n")}")
   }
+
+  test("F1 star schema: each populated table plans one shuffle exchange; " +
+      "PitStop's scan reads its range exchange") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val aqe = new AdaptiveSparkPlanHelper {}
+    def exchanges(p: SparkPlan) = aqe.collect(p) { case e: ShuffleExchangeExec => e }
+    val tables = graft.etl.F1Pipeline.buildAll(graft.core.Tables.csv(spark,
+      F1Fixture.csvPath, graft.etl.F1Schema.wide), refYear = 2026) - "CircuitLocation"
+    assert(tables.size == 15)
+    for ((t, df) <- tables) {
+      val p = df.queryExecution.executedPlan
+      assert(exchanges(p).size == 1, s"$t: not one shuffle exchange:\n$p")
+    }
+    val p = tables("PitStop").queryExecution.executedPlan
+    val scans = aqe.collect(p) { case s: graft.plans.OrderedScanExec => s }
+    assert(scans.size == 1, s"PitStop: no ordered scan:\n$p")
+    val read = exchanges(scans.head).map(_.outputPartitioning match {
+      case r: RangePartitioning =>
+        r.ordering.flatMap(_.child.references.map(_.name))
+      case other => Seq(other.toString)
+    })
+    assert(read == Seq(Seq("raceId", "driverId", "stop")),
+      s"PitStop's scan does not read the range exchange on its key:\n$p")
+  }
 }

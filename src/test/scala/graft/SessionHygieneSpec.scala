@@ -30,7 +30,7 @@ class SessionHygieneSpec extends AnyFunSuite {
       "q76_dedup_clusters",    // iterative CC on a session clone
       "q92_pq_encode",         // two tracked persists
       "q110_ann_recall",       // tracked search results
-      "q113_token_ids",        // PrefixSum-internal persist
+      "q113_token_ids",        // PrefixSum ordered scan
       "q115_stream_update",    // streaming clone + foreachBatch
       "q121_semdedup",         // salted within-cluster join
       "q122_triplet_mining",   // tracked ring persist

@@ -11,8 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * from log metadata in one walk, `core/FilePrune.scala`, stages
   * txlog batches through one temp dir in `core/TxLog.scala`, binds
   * the txlog row identity in one scan there, replays the log only
-  * through its snapshot and forward walk, and builds every txlog read
-  * relation in one function. A one-off
+  * through its snapshot and forward walk, builds every txlog read
+  * relation in one function, and plans the ordered scan as one
+  * operator. A one-off
   * probe main, a hand-built session whose config drifts from the one
   * every result was checked under, or a private memo with its own
   * staleness rule is a red test instead of a review finding. */
@@ -115,5 +116,20 @@ class SourceGuardSpec extends AnyFunSuite {
   test("memo maps and retire queues appear only in core/Memo.scala") {
     assert(filesMatching("""\b(TrieMap|ConcurrentLinkedQueue)\b""".r).toSet
       .subsetOf(Set("graft/core/Memo.scala")))
+  }
+
+  test("the ordered scan is one plan operator: no hash-sampled bounds, " +
+      "scalar subquery or persist in ops/PrefixSum.scala, and " +
+      "OrderedScanExec built only by its strategy") {
+    val prefix = sources.toMap.apply("graft/ops/PrefixSum.scala")
+    for (word <- Seq("xxhash64", ".scalar()", "persistTracked"))
+      assert(!prefix.contains(word), s"ops/PrefixSum.scala uses $word")
+    val builds = """(?<!class )\bOrderedScanExec\s*\(""".r
+    assert(filesMatching(builds) == Seq("graft/plans/OrderedScan.scala"))
+    val text = sources.toMap.apply("graft/plans/OrderedScan.scala")
+    val owners = builds.findAllMatchIn(text).map(m =>
+      """(?m)^object\s+(\w+)""".r.findAllMatchIn(text.take(m.start))
+        .map(_.group(1)).toSeq.lastOption).toSeq
+    assert(owners == Seq(Some("OrderedScanStrategy")), owners)
   }
 }
